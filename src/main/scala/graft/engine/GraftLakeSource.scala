@@ -2683,18 +2683,20 @@ private[engine] final class GraftLakeCdfReaderFactory(
   }
 }
 
-/** Manifest-resolved file index with sidecar skipping. Listing cost is
-  * one manifest read + one list per live data dir (metadata-bounded);
-  * the pruning decision per pushed filter is a sidecar read per
-  * (data dir, column), memoized per listing. The dirs-explicit
-  * constructor serves the STREAMING path: each micro-batch indexes
-  * only its delta dirs, and the same sidecar pruning applies — a
-  * filtered stream skips non-matching files per batch instead of
-  * reading every delta file. */
+/** Manifest-resolved file index with sidecar skipping. Each live data
+  * dir's listing comes from [[LakeMetaCache]] (one `getFileStatus` per
+  * dir per plan; the listing itself once per process, on the driver —
+  * never the Spark listing job `InMemoryFileIndex` runs over many
+  * roots); the pruning decision per pushed filter is one cached
+  * sidecar lookup per (data dir, column). The dirs-explicit
+  * constructor serves the STREAMING path and [[VersionedLake.readAt]]:
+  * each micro-batch indexes only its delta dirs, and the same sidecar
+  * pruning applies — a filtered stream skips non-matching files per
+  * batch instead of reading every delta file. */
 final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
     dataDirPaths: Seq[Path], sidecarPrune: Boolean = true)
   extends InMemoryFileIndex(spark, dataDirPaths, Map.empty, None,
-    org.apache.spark.sql.execution.datasources.NoopCache,
+    VersionedLake.listingCache(spark),
     // partitioned lakes: partition values decided from MANIFEST entry
     // names (an explicit PartitionSpec), never inferred from listings —
     // planning-time partition pruning + DPP then drop whole entries
@@ -2704,16 +2706,6 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
     this(spark, lakeDir,
       VersionedLake.liveDataDirs(spark, lakeDir, version).map(new Path(_)))
 
-  // manifest entries are `d-x` or `d-x/c=v/...` — the sidecar key is
-  // the ENTRY-relative path of a file's parent dir
-  private val entryDepth =
-    1 + GraftLakePartitions.of(spark, lakeDir).length
-
-  // One probe per index: sidecar lookups memoized for the INDEX's
-  // lifetime, not per listFiles call — a version's sidecars are
-  // immutable (data dirs are never mutated after publish), and a
-  // table may be planned many times; at 100k data dirs the difference
-  // is one sidecar read per (dir, col) ever vs per query.
   private val probe = new SidecarProbe(spark, lakeDir)
 
   private[engine] def admitAnyOf(p: Path, c: String,
@@ -2732,20 +2724,23 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
     val points = GraftLakeFileIndex.pointPredicates(dataFilters)
     if (ranges.isEmpty && points.isEmpty) base
     else {
-      def admit(p: Path): Boolean = {
-        val d = GraftLakePartitions.entryOfDepth(p.getParent, entryDepth)
-        val f = p.getName
-        ranges.forall { case (c, lo, hi) =>
-          probe.stats(d, c)
-            .get(f) // no recorded range for this file → cannot skip
-            .forall { case (mn, mx, _) => mx >= lo && mn <= hi }
-        } && points.forall { case (c, want) =>
-          probe.bloom(d, c)
-            .get(f)
-            .forall(bits => want.forall(bits.get))
-        }
-      }
-      base.map(pd => pd.copy(files = pd.files.filter(fs => admit(fs.getPath))))
+      // sidecars looked up once per (data dir, column), not per file
+      val admitIn = base.flatMap(_.files.map(_.getPath.getParent)).distinct
+        .map { parent =>
+          val d = probe.entryOf(parent)
+          val rs = ranges.map { case (c, lo, hi) =>
+            (probe.stats(d, c), lo, hi) }
+          val ps = points.map { case (c, want) => (probe.bloom(d, c), want) }
+          parent -> ((f: String) =>
+            rs.forall { case (stats, lo, hi) =>
+              stats.get(f) // no recorded range for this file → cannot skip
+                .forall { case (mn, mx, _) => mx >= lo && mn <= hi }
+            } && ps.forall { case (bloom, want) =>
+              bloom.get(f).forall(bits => want.forall(bits.get))
+            })
+        }.toMap
+      base.map(pd => pd.copy(files = pd.files.filter(fs =>
+        admitIn(fs.getPath.getParent)(fs.getPath.getName))))
     }
   }
 }
@@ -2753,17 +2748,12 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
 /** The per-file sidecar oracle shared by every pruning path (static
   * pushdown, join-driven runtime filtering, COW group filtering):
   * answers "might file `p` contain …?" from the stats + bloom
-  * sidecars, memoized per (dir, col) for the probe's lifetime, and
-  * conservative at every gap — no sidecar / no entry / unrenderable
-  * value → admit. Values arrive as catalyst internals (boxed
-  * numerics / UTF8String). */
+  * sidecars, parsed once per sidecar in [[LakeMetaCache]] (each lookup
+  * is one `getFileStatus`), and conservative at every gap — no sidecar
+  * / no entry / unrenderable value → admit. Values arrive as catalyst
+  * internals (boxed numerics / UTF8String). */
 private[engine] final class SidecarProbe(spark: SparkSession,
     lakeDir: String) {
-  private val statsCache = collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, (Double, Double, Long)]]
-  private val bloomCache = collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, java.util.BitSet]]
-
   private val partCols = GraftLakePartitions.of(spark, lakeDir)
   private val entryDepth = 1 + partCols.length
 
@@ -2805,14 +2795,12 @@ private[engine] final class SidecarProbe(spark: SparkSession,
     GraftLakePartitions.entryOfDepth(parent, entryDepth)
 
   def stats(d: String, c: String): Map[String, (Double, Double, Long)] =
-    statsCache.getOrElseUpdate((d, c),
-      aliasesOf(c).map(n => VersionedLake.fileStats(spark, lakeDir, d, n))
-        .reduce(_ ++ _))
+    aliasesOf(c).map(n => VersionedLake.fileStats(spark, lakeDir, d, n))
+      .reduce(_ ++ _)
 
   def bloom(d: String, c: String): Map[String, java.util.BitSet] =
-    bloomCache.getOrElseUpdate((d, c),
-      aliasesOf(c).map(n => VersionedLake.fileBloom(spark, lakeDir, d, n))
-        .reduce(_ ++ _))
+    aliasesOf(c).map(n => VersionedLake.fileBloom(spark, lakeDir, d, n))
+      .reduce(_ ++ _)
 
   /** Can file `p` contain ANY of `values` in column `c`? The runtime
     * pruning predicate — OR-of-points where the static path answers

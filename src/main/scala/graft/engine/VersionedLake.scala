@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned lake with snapshot isolation, time travel, and vacuum —
@@ -925,11 +925,15 @@ object VersionedLake {
     * still-readable version range, on a version that never existed or
     * was expired by [[vacuum]] (a raw FileNotFoundException would leave
     * the reader guessing whether the lake is corrupt or merely
-    * retention-trimmed). `mergeSchema` because commits may add columns
-    * over time (schema evolution): a snapshot whose live set spans the
-    * addition reads the union schema, nulls where old files lack the
-    * column. Footer-merge cost is per data dir in the snapshot, not per
-    * row — metadata-bounded like everything else here. */
+    * retention-trimmed). Commits may add columns over time (schema
+    * evolution): a snapshot whose live set spans the addition reads the
+    * union schema, nulls where old files lack the column.
+    *
+    * A plain lake's snapshot is a V1 parquet relation over a
+    * [[GraftLakeFileIndex]]: its data-dir listings come from
+    * [[LakeMetaCache]] (listed once per process on the driver, never as
+    * a Spark listing job), and a later filter on the frame prunes files
+    * through the stats and bloom sidecars like the `graftlake` scan. */
   def readAt(spark: SparkSession, dir: String, v: Int): DataFrame = {
     requireVersion(spark, dir, v)
     // a PARTITIONED lake's entries are partition leaf dirs whose files
@@ -942,29 +946,41 @@ object VersionedLake {
         GraftLakeMapping.enabled(spark, dir) || dvEnabled(spark, dir))
       return spark.read.format("graftlake")
         .option(GraftLakeDataSource.VersionAsOf, v).load(dir)
-    val dirs = readManifest(spark, dir, v)
+    val dirs = readManifest(spark, dir, v).map(d => s"$dir/$d")
+    val index = new GraftLakeFileIndex(spark, dir, dirs.map(new Path(_)))
+    // a live data dir that is gone (a damaged lake, or a vacuum racing
+    // this read) must fail the read, never answer without its rows;
+    // only a dir that listed no file can be gone
+    val f = fs(spark, dir)
+    val listed = index.allFiles().map(_.getPath.getParent.toString).toSet
+    dirs.map(new Path(_)).filterNot(p => listed(f.makeQualified(p).toString))
+      .find(!f.exists(_)).foreach(p => throw new java.io.FileNotFoundException(
+        s"data dir $p of version $v of $dir does not exist"))
+    val format =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     // A DECLARED schema (the manifest's own union of every commit's
     // columns, as of v — time travel keeps the era's declaration) makes
     // the footer-merge pass redundant: mergeSchema reads EVERY file's
     // footer in a distributed job per read, O(live files) at scale and
     // one extra Spark job per snapshot read at any scale. Undeclared
     // lakes (never committed with a schema) keep the footer merge —
-    // the union is unknowable without it.
-    manifestSchema(spark, dir, v) match {
-      case Some(declared) =>
-        // force nullability: the declaration keeps the WRITE schema's
-        // nullable=false, but older live files may predate a
-        // later-added column — the scan nulls it there, and a
-        // non-null read schema would license null-intolerant rewrites
-        // (IsNotNull folding) over values that CAN be null. Matches
-        // what the footer-merge path infers for evolved columns.
-        val readable = org.apache.spark.sql.types.StructType(
-          declared.fields.map(_.copy(nullable = true)))
-        spark.read.schema(readable).parquet(dirs.map(d => s"$dir/$d"): _*)
-      case None =>
-        spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(d => s"$dir/$d"): _*)
-    }
+    // the union is unknowable without it; with no file to merge, the
+    // plain read raises Spark's own "unable to infer" error.
+    val schema = manifestSchema(spark, dir, v)
+      .orElse(format.inferSchema(spark, Map("mergeSchema" -> "true"),
+        index.allFiles()))
+      .getOrElse(return spark.read.option("mergeSchema", "true")
+        .parquet(dirs: _*))
+    // force nullability, as every file relation does: the declaration
+    // keeps the WRITE schema's nullable=false, but older live files may
+    // predate a later-added column — the scan nulls it there, and a
+    // non-null read schema would license null-intolerant rewrites
+    // (IsNotNull folding) over values that CAN be null
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        index.partitionSchema,
+        org.apache.spark.sql.graft.ListingBridge.asNullable(schema),
+        None, format, Map.empty)(spark))
   }
 
   /** Read an arbitrary ENTRY set of version-agnostic lake dirs —
@@ -1064,6 +1080,40 @@ object VersionedLake {
     readManifest(spark, dir, v).map(d => s"$dir/$d")
   }
 
+  /** Leaf files of one data dir or partition leaf, as `InMemoryFileIndex`
+    * lists them, from [[LakeMetaCache]]: listed on the driver once per
+    * stamp — a published data dir never changes, so once per process.
+    * A missing dir lists as empty, as a missing root does in Spark. */
+  private[engine] def leafFiles(spark: SparkSession,
+      p: Path): Array[FileStatus] =
+    LakeMetaCache.stamp(p.getFileSystem(spark.sparkContext
+      .hadoopConfiguration), p).fold(Array.empty[FileStatus])(s =>
+      LakeMetaCache.memo(("ls", s))(org.apache.spark.sql.graft
+        .ListingBridge.leafFiles(spark, p).toArray))
+
+  /** The parquet files of data dir `d`, from [[leafFiles]]. */
+  private def dataFiles(spark: SparkSession, dir: String,
+      d: String): Seq[Path] =
+    leafFiles(spark, new Path(s"$dir/$d")).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** [[leafFiles]] as the `FileStatusCache` an `InMemoryFileIndex`
+    * consults before listing: it answers every root, so the index never
+    * lists by itself — in particular never as the Spark job it runs
+    * over `parallelPartitionDiscovery.threshold` roots. */
+  private[engine] def listingCache(spark: SparkSession)
+      : org.apache.spark.sql.execution.datasources.FileStatusCache =
+    new org.apache.spark.sql.execution.datasources.FileStatusCache {
+      override def getLeafFiles(p: Path) = Some(leafFiles(spark, p))
+      override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit =
+        ()
+      override def invalidateAll(): Unit = ()
+    }
+
+  /** Hit, miss and entry counts of the lake metadata cache
+    * ([[LakeMetaCache]]) since process start. */
+  def metaCacheStats: MetaCacheStats = LakeMetaCache.stats
+
   /** Sidecar lookups for the DSv2 file-pruning path — same parsers the
     * library probes use, so the two read paths cannot drift. */
   private[engine] def fileStats(spark: SparkSession, dir: String,
@@ -1141,12 +1191,11 @@ object VersionedLake {
       thresholdBytes: Long, statsCols: Seq[String] = Seq.empty,
       bloomCol: Option[String] = None, codec: String = "snappy")
       : Option[Int] = {
-    val f = fs(spark, dir)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     val live = readManifest(spark, dir, vs.last)
     def bytesOf(d: String): Long =
-      f.listStatus(new Path(s"$dir/$d")).toSeq
+      leafFiles(spark, new Path(s"$dir/$d")).toSeq
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val small = live.filter(d => bytesOf(d) < thresholdBytes)
     // COLUMN-MAPPING lakes: the coalescing rewrite must stamp the
@@ -1891,19 +1940,14 @@ object VersionedLake {
     }
   }
 
-  // published part files are immutable, so a footer's row count
-  // memoizes forever (bounded sweep like the other metadata memos)
-  private val fileRowsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Long]
-
   /** Total rows of one parquet file, from its footer — O(1 footer
-    * read), memoized per path (files are immutable once published).
+    * read), memoized per path ([[LakeMetaCache]]: part files are
+    * immutable once published and never reuse a name).
     * 0 on any read failure (callers treat 0 as "unknown": degrade to
     * the unadjusted estimate, never throw planning off). */
   private[engine] def parquetFileRows(
       conf: org.apache.hadoop.conf.Configuration, p: Path): Long =
-    fileRowsMemo.getOrElseUpdate(p.toString, {
-      if (fileRowsMemo.size > 65536) fileRowsMemo.clear()
+    LakeMetaCache.memo[Long](("rows", p.toString)) {
       try {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
@@ -1912,7 +1956,7 @@ object VersionedLake {
           reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         } finally reader.close()
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    })
+    }
 
   private val DvSidecarName = "^v(\\d+)-([0-9a-f]{12})$".r
 
@@ -1926,14 +1970,6 @@ object VersionedLake {
     * never-published version) cannot be confused with it, because
     * versions are claimed sequentially and vacuum removes only
     * prefixes. */
-  // a sidecar's manifest binding is IMMUTABLE once its manifest is
-  // readable (published manifests never change their marker) — memoize
-  // those outcomes so repeated plans pay one _deletes listing, not one
-  // manifest read per candidate. The vacuumed-manifest fallback is NOT
-  // memoized: its answer depends on the moving retention window.
-  private val dvBindMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Boolean]
-
   private[engine] def dvSidecars(spark: SparkSession, dir: String,
       v: Int): Seq[(Int, Path)] = {
     val f = fs(spark, dir)
@@ -1942,33 +1978,33 @@ object VersionedLake {
     f.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
       p.getName match {
         case DvSidecarName(n, uuid) if n.toInt <= v =>
-          val bound = dvBindMemo.get((dir, p.getName)).getOrElse {
-            // a transient manifest-read failure must FAIL THE SCAN,
-            // not skip the sidecar: treating it as "unbound" silently
-            // resurrects deleted rows. One retry absorbs the
-            // object-store hiccup; only the well-understood
-            // vacuumed-manifest FNF takes the fallback path.
-            def bindOnce(): Boolean =
-              dvUuidOf(readManifestLines(spark, dir, n.toInt))
-                .contains(uuid)
-            try {
-              val b =
-                try bindOnce()
-                catch {
-                  case _: java.io.FileNotFoundException => throw
-                    new java.io.FileNotFoundException(p.getName)
-                  case scala.util.control.NonFatal(_) => bindOnce()
-                }
-              if (dvBindMemo.size > 4096) dvBindMemo.clear() // bounded
-              dvBindMemo.put((dir, p.getName), b)
-              b
+          // a transient manifest-read failure must FAIL THE SCAN, not
+          // skip the sidecar: treating it as "unbound" silently
+          // resurrects deleted rows. One retry absorbs the object-store
+          // hiccup; only the well-understood vacuumed-manifest FNF
+          // takes the fallback path.
+          def bindOnce(): Boolean =
+            dvUuidOf(readManifestLines(spark, dir, n.toInt)).contains(uuid)
+          // a sidecar's manifest binding is IMMUTABLE once its manifest
+          // is readable (published manifests never change their marker)
+          // — memoized, so repeated plans pay one _deletes listing, not
+          // one manifest read per candidate. The vacuumed-manifest
+          // fallback is NOT: its answer depends on the moving retention
+          // window (a thrown compute caches nothing).
+          val bound =
+            try LakeMetaCache.memo[Boolean](("dvBind", dir, p.getName)) {
+              try bindOnce()
+              catch {
+                case _: java.io.FileNotFoundException => throw
+                  new java.io.FileNotFoundException(p.getName)
+                case scala.util.control.NonFatal(_) => bindOnce()
+              }
             } catch {
               case _: java.io.FileNotFoundException =>
                 // manifest gone: applies iff genuinely below retention
                 versionRange(spark, dir).exists { case (lo, _) =>
                   n.toInt < lo }
             }
-          }
           if (bound) Some((n.toInt, p)) else None
         case _ => None
       }
@@ -2020,14 +2056,6 @@ object VersionedLake {
     } else Seq(base)
   }
 
-  // per (lake, version, sidecar-set): one [[GraftLakeDvRef]] per
-  // (entry, file) carrying a vector — O(DV files) driver rows, NEVER
-  // positions. Sidecars are immutable and uuid-named, so the key is
-  // exact; evict wholesale rather than grow forever (a miss costs one
-  // small distributed aggregation).
-  private val dvRefsMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String), Map[String, GraftLakeDvRef]]
-
   /** The planning-side DV state: per vectored file, the sidecar part
     * files holding its positions and their count — `entry…/fileName`
     * (relative path under the lake root — file names alone are not
@@ -2037,14 +2065,15 @@ object VersionedLake {
     * their ref names ([[GraftLakeDvScan.loadPositions]]). Driver
     * memory is O(DV files) by construction — no pending-position
     * backlog can balloon it, so there is no warn-past-N escape hatch
-    * left to need. */
+    * left to need. Memoized per (lake, version, sidecar set) in
+    * [[LakeMetaCache]]: sidecars are immutable and uuid-named, so the
+    * key is exact (a miss costs one small distributed aggregation). */
   private[graft] def dvRefs(spark: SparkSession, dir: String,
       v: Int): Map[String, GraftLakeDvRef] = {
     val side = dvSidecars(spark, dir, v)
     if (side.isEmpty) return Map.empty
-    val key = (dir, v, side.map(_._2.getName).sorted.mkString(","))
-    if (dvRefsMemo.size > 256) dvRefsMemo.clear()
-    dvRefsMemo.getOrElseUpdate(key, {
+    LakeMetaCache.memo(("dvRefs", dir, v,
+      side.map(_._2.getName).sorted.mkString(","))) {
       import org.apache.spark.sql.functions.{col, count, lit}
       readDvParquet(spark, side.map(_._2.toString))
         .groupBy(col("entry"), col("file"),
@@ -2060,7 +2089,7 @@ object VersionedLake {
               r.getString(2))).toSeq.distinct.sorted,
             rs.map(_.getLong(3)).sum)
         }
-    })
+    }
   }
 
   private[engine] def dvFileKeys(spark: SparkSession, dir: String,
@@ -2080,17 +2109,14 @@ object VersionedLake {
 
   /** Total on-disk bytes of the DV sidecars applying at `v` — decides
     * whether an anti-join side is broadcast-safe. Sidecars are
-    * immutable and uuid-named, so per-sidecar sizes memoize forever
-    * (one getContentSummary each, EVER — not one per planning call). */
-  private val dvBytesMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Long]
-
+    * immutable and uuid-named, so per-sidecar sizes memoize in
+    * [[LakeMetaCache]] (one getContentSummary each, EVER — not one per
+    * planning call). */
   private[engine] def dvSidecarBytes(spark: SparkSession, dir: String,
       v: Int): Long = {
     val f = fs(spark, dir)
     dvSidecars(spark, dir, v).map { s =>
-      if (dvBytesMemo.size > 8192) dvBytesMemo.clear() // bounded
-      dvBytesMemo.getOrElseUpdate((dir, s._2.getName),
+      LakeMetaCache.memo[Long](("dvBytes", dir, s._2.getName))(
         f.getContentSummary(s._2).getLength)
     }.sum
   }
@@ -2160,7 +2186,6 @@ object VersionedLake {
       snapshot: Seq[String],
       rangeBound: Option[(String, Double, Double)],
       pointLookups: Seq[(String, Seq[Any])]): Seq[(String, Path)] = {
-    val f = fs(spark, dir)
     val dirs = rangeBound match {
       case Some((c, lo, hi)) =>
         if (lo <= hi) dirsIntersecting(spark, dir, snapshot, c, lo, hi)
@@ -2169,8 +2194,7 @@ object VersionedLake {
     }
     val probe = new SidecarProbe(spark, dir)
     dirs.flatMap { d =>
-      f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
+      dataFiles(spark, dir, d)
         .filter(p => pointLookups.forall { case (c, vs) =>
           probe.admitAnyOf(p, c, vs) })
         .map(p => (d, p))
@@ -3012,18 +3036,32 @@ object VersionedLake {
     * always read — a corrupt 1 KiB sidecar must not brick every read
     * of an otherwise-healthy version. */
   private def statsFor(spark: SparkSession, dir: String, d: String,
-      c: String): Map[String, (Double, Double, Long)] = {
+      c: String): Map[String, (Double, Double, Long)] =
+    sidecar(spark, dir, "stats", d) { a =>
+      if (a.length != 5) None
+      else scala.util.Try((a(2).toDouble, a(3).toDouble, a(4).toLong))
+        .toOption
+    }.getOrElse(c, Map.empty)
+
+  /** Every column's lines of one data dir's `_<kind>/<d>.<kind>` sidecar
+    * (tab-separated `file, column, value...`), as column → file → value,
+    * parsed once per sidecar stamp ([[LakeMetaCache]]). A line `parse`
+    * rejects is dropped; a missing sidecar is empty. */
+  private def sidecar[T](spark: SparkSession, dir: String, kind: String,
+      d: String)(parse: Array[String] => Option[T])
+      : Map[String, Map[String, T]] = {
     val f = fs(spark, dir)
-    val p = new Path(s"$dir/_stats/$d.stats")
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.split('\t')).filter(a => a.length == 5 && a(1) == c)
-        .flatMap(a => scala.util.Try(
-          a(0) -> ((a(2).toDouble, a(3).toDouble, a(4).toLong))).toOption)
-        .toMap
-      finally in.close()
+    val p = new Path(s"$dir/_$kind/$d.$kind")
+    LakeMetaCache.stamp(f, p).fold(Map.empty[String, Map[String, T]]) { s =>
+      LakeMetaCache.memo((kind, s)) {
+        val in = f.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .map(_.split('\t')).filter(_.length >= 2)
+          .flatMap(a => parse(a).map(v => (a(1), a(0), v))).toSeq
+          .groupBy(_._1).map { case (c, xs) =>
+            c -> xs.map(x => x._2 -> x._3).toMap }
+        finally in.close()
+      }
     }
   }
 
@@ -3092,7 +3130,6 @@ object VersionedLake {
   def statsAggregate(spark: SparkSession, dir: String, c: String)
       : (Long, Double, Double) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val f = fs(spark, dir)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     val tipV = vs.last
@@ -3114,16 +3151,17 @@ object VersionedLake {
       }
     def vecOf(d: String): Set[String] =
       dvLive.getOrElse(d, Set.empty)
-    val (meta, scan) = snapshot.partition { d =>
-      val stats = statsForNames(spark, dir, d, cNames)
-      val files = f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName)
+    // each dir's stats sidecar looked up once, for the split and the fold
+    val (meta, scan) = snapshot.map(d =>
+      d -> statsForNames(spark, dir, d, cNames)).partition { case (d, stats) =>
+      val files = dataFiles(spark, dir, d).map(_.getName)
       files.nonEmpty && files.forall(stats.contains)
     }
-    val fromMeta = meta.flatMap(d => statsForNames(spark, dir, d, cNames)
-      .collect { case (fn, s) if !vecOf(d)(fn) => s })
-    val scanPaths = scan.map(d => s"$dir/$d") ++
-      meta.flatMap(d => vecOf(d).toSeq.sorted.map(fn => s"$dir/$d/$fn"))
+    val fromMeta = meta.flatMap { case (d, stats) =>
+      stats.collect { case (fn, s) if !vecOf(d)(fn) => s } }
+    val scanPaths = scan.map { case (d, _) => s"$dir/$d" } ++
+      meta.flatMap { case (d, _) =>
+        vecOf(d).toSeq.sorted.map(fn => s"$dir/$d/$fn") }
     val scanAgg =
       if (scanPaths.isEmpty) None
       else {
@@ -3151,7 +3189,6 @@ object VersionedLake {
     * metadata with zero data scan. Production builders require this as
     * evidence; it is never a correctness precondition. */
   def statsCovered(spark: SparkSession, dir: String, c: String): Boolean = {
-    val f = fs(spark, dir)
     // a LIVE vector forces its files onto the scan path (their stats
     // over-count deleted rows); materialized/vector-free DV lakes are
     // metadata-served like any other
@@ -3163,9 +3200,7 @@ object VersionedLake {
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     vs.nonEmpty && readManifest(spark, dir, vs.last).forall { d =>
       val stats = statsForNames(spark, dir, d, cNames)
-      f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .forall(p => stats.contains(p.getName))
+      dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
   }
 
@@ -3191,11 +3226,9 @@ object VersionedLake {
     * overwrite-by-filter commit ([[GraftLakeWrite]]). */
   private[engine] def dirsIntersecting(spark: SparkSession, dir: String,
       dirs: Seq[String], c: String, lo: Double, hi: Double): Seq[String] = {
-    val f = fs(spark, dir)
     dirs.filter { d =>
       val stats = statsFor(spark, dir, d, c)
-      val files = f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName)
+      val files = dataFiles(spark, dir, d).map(_.getName)
       files.isEmpty ||
         files.exists(n => stats.get(n)
           .forall { case (mn, mx, _) => mx >= lo && mn <= hi })
@@ -3275,9 +3308,7 @@ object VersionedLake {
       statsFor(spark, dir, d, c).values.map(_._3).sum)
     val countsKnown = touched.forall { d =>
       val stats = statsFor(spark, dir, d, c)
-      fs(spark, dir).listStatus(new Path(s"$dir/$d")).toSeq
-        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .forall(p => stats.contains(p.getName))
+      dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
     val dvPending =
       if (!dv) 0L
@@ -3352,7 +3383,6 @@ object VersionedLake {
       values: Seq[Long], replacement: DataFrame,
       statsCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, dir)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     val tipV = vs.last
@@ -3364,8 +3394,7 @@ object VersionedLake {
         "OVERWRITE with a partition predicate (manifest-only swap)")
     def intersects(d: String): Boolean = {
       val stats = statsFor(spark, dir, d, c)
-      val files = f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.getName)
+      val files = dataFiles(spark, dir, d).map(_.getName)
       files.isEmpty ||
         files.exists(n => stats.get(n)
           .forall { case (mn, mx, _) => values.exists(v => v >= mn && v <= mx) })
@@ -3577,7 +3606,6 @@ object VersionedLake {
   def readSkipping(spark: SparkSession, dir: String, c: String,
       lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val f = fs(spark, dir)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     // alias-fold on mapped lakes (pre-rename files' ranges live under
@@ -3586,8 +3614,7 @@ object VersionedLake {
     // the range filter would silently drop their rows
     val cNames = aliasNamesOf(spark, dir, c)
     val files = readManifest(spark, dir, vs.last).flatMap { d =>
-      val all = f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
+      val all = dataFiles(spark, dir, d)
       val ranges = statsForNames(spark, dir, d, cNames)
       if (ranges.isEmpty) all
       else
@@ -3724,28 +3751,15 @@ object VersionedLake {
     * lines are dropped, not thrown — same degrade-to-read contract as
     * [[statsFor]] (a file without a parseable bloom is always read). */
   private def bloomFor(spark: SparkSession, dir: String, d: String,
-      c: String): Map[String, java.util.BitSet] = {
-    val f = fs(spark, dir)
-    val p = new Path(s"$dir/_bloom/$d.bloom")
-    if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.split('\t')).filter(a => a.length == 3 && a(1) == c)
-        .flatMap { a =>
-          scala.util.Try {
-            // exact-length contract (see writeBloomFor): anything else
-            // is a torn line, and a wrong-length bitmap must degrade
-            // to reading the file, never to a false skip
-            require(a(2).length == BloomBits / 4, "torn bloom line")
-            val bytes = a(2).sliding(2, 2)
-              .map(Integer.parseInt(_, 16).toByte).toArray
-            a(0) -> java.util.BitSet.valueOf(bytes)
-          }.toOption
-        }.toMap
-      finally in.close()
-    }
-  }
+      c: String): Map[String, java.util.BitSet] =
+    sidecar(spark, dir, "bloom", d) { a =>
+      // exact-length contract (see writeBloomFor): anything else is a
+      // torn line, and a wrong-length bitmap must degrade to reading
+      // the file, never to a false skip
+      if (a.length != 3 || a(2).length != BloomBits / 4) None
+      else scala.util.Try(java.util.BitSet.valueOf(a(2).sliding(2, 2)
+        .map(Integer.parseInt(_, 16).toByte).toArray)).toOption
+    }.getOrElse(c, Map.empty)
 
   /** Point-lookup over the latest snapshot reading ONLY files whose
     * bloom may contain `value` (files without a recorded bloom are
@@ -3763,7 +3777,6 @@ object VersionedLake {
   def readBloomProbe(spark: SparkSession, dir: String, c: String,
       value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val f = fs(spark, dir)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     val want = (0 until BloomHashes)
@@ -3773,8 +3786,7 @@ object VersionedLake {
     // bind `c` by field id or the equality filter silently drops them
     val cNames = aliasNamesOf(spark, dir, c)
     val files = readManifest(spark, dir, vs.last).flatMap { d =>
-      val all = f.listStatus(new Path(s"$dir/$d")).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
+      val all = dataFiles(spark, dir, d)
       val blooms = cNames.map(bloomFor(spark, dir, d, _))
         .reduce(_ ++ _)
       if (blooms.isEmpty) all
