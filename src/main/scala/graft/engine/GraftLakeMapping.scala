@@ -138,8 +138,12 @@ object GraftLakeMapping {
     * names are excluded by design: after a REPLACE they belong to a
     * different id universe, and merging them could probe an unrelated
     * column's sidecar history (the degradation is conservative — a
-    * missing alias admits the file, never skips it). Empty for
-    * unmapped lakes (probe cost: one memoized small read). */
+    * missing alias admits the file, never skips it). A name two ids
+    * have had in the epoch (a rename onto a former name, or a dropped
+    * name added again) keys sidecar lines that may describe either
+    * column, so those ids get no names: their sidecars go unused, the
+    * same conservative degradation. Empty for unmapped lakes (probe
+    * cost: one memoized small read). */
   def aliases(spark: SparkSession, dir: String): Map[String, Seq[String]] = {
     val epoch = currentEpoch(spark, dir)
     val byId = lines(spark, dir).collect {
@@ -148,7 +152,12 @@ object GraftLakeMapping {
         (a(1), a(2), if (a.length > 3) a(3).toLong else 0L)
     }.filter(_._3 == epoch)
       .groupBy(_._1).view.mapValues(_.map(_._2).distinct.toSeq).toMap
-    byId.values.flatMap(names => names.map(n => n -> names)).toMap
+    val shared = byId.values.toSeq.flatten.groupBy(identity)
+      .collect { case (n, ids) if ids.length > 1 => n }.toSet
+    byId.values.flatMap { names =>
+      val usable = if (names.exists(shared)) Seq.empty else names
+      names.map(n => n -> usable)
+    }.toMap
   }
 
   /** Overlay the table schema's field-id metadata onto a WRITE schema

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo,
   Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual,
   Literal}
 import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.read.LocalScan
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex,
   PartitionDirectory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -1993,8 +1995,9 @@ final class GraftLakeWrite(
 }
 
 /** ParquetScanBuilder that builds a [[GraftLakeParquetScan]] — same
-  * pushdown surface (columns, catalyst filters, aggregates), the built
-  * scan merely knows how to serve micro-batches too. */
+  * pushdown surface for columns and catalyst filters, the built scan
+  * merely knows how to serve micro-batches too; aggregates are pushed
+  * only when the stats sidecars answer them ([[pushAggregation]]). */
 final class GraftLakeScanBuilder(spark: SparkSession,
     fileIndex: PartitioningAwareFileIndex, schema: StructType,
     dataSchema: StructType, options: CaseInsensitiveStringMap,
@@ -2003,24 +2006,123 @@ final class GraftLakeScanBuilder(spark: SparkSession,
   extends org.apache.spark.sql.execution.datasources.v2.parquet
     .ParquetScanBuilder(spark, fileIndex, schema, dataSchema, options) {
 
-  /** Aggregate pushdown answers from parquet FOOTER stats — which
-    * still count DV-deleted rows. With any vector live, the aggregate
-    * must run over the DV-filtered scan instead — and never under a
-    * requested row-address column (positions are per row; that case
-    * cannot arise today because V2ScanRelationPushDown pushes
-    * aggregates BEFORE pruneColumns populates metaCols, so build()
-    * enforces the invariant where both facts are finally known). */
-  override def pushAggregation(
-      aggregation: org.apache.spark.sql.connector.expressions.aggregate
-        .Aggregation): Boolean =
-    if (dvRefs.nonEmpty || metaCols.nonEmpty) false
-    else {
-      val pushed = super.pushAggregation(aggregation)
-      aggPushed ||= pushed
-      pushed
-    }
+  /** `SELECT count(*), min(c), max(c)` answered from the stats
+    * sidecars while planning: [[build]] then returns a [[LocalScan]]
+    * holding the one answer row, planned as a `LocalTableScanExec`,
+    * so no data file is opened. Served when, decided before any IO
+    * ([[statsShape]]): the aggregates are COUNT(*) and MIN/MAX of
+    * top-level integral data columns, with no GROUP BY, no data
+    * filter (Spark offers the aggregate only once every filter is
+    * pushed fully, so partition filters are in), no change feed and
+    * no deletion vector (sidecar rows still count deleted ones). The
+    * snapshot is the files `fileIndex.listFiles(partitionFilters,
+    * Nil)` admits, folded by [[VersionedLake.foldStats]] — the fold
+    * `statsAggregate` uses; it must find a stats line for every file
+    * (for every MIN/MAX column) in sidecars carrying
+    * [[VersionedLake.StatsHeader]], and long bounds inside ±2^53,
+    * where the sidecar's doubles are exact, or the aggregate is
+    * refused and runs over the plain scan. No other aggregate is
+    * pushed. A pushed one never meets a requested row-address column
+    * (positions are per row; V2ScanRelationPushDown pushes aggregates
+    * BEFORE pruneColumns populates metaCols, so build() checks it
+    * where both facts are finally known). */
+  override def pushAggregation(aggregation: Aggregation): Boolean = {
+    statsRow = statsShape(aggregation).flatMap(foldSidecars(aggregation, _))
+    statsRow.nonEmpty
+  }
 
-  @volatile private var aggPushed = false
+  /** A served shape is answered whole: its row carries the aggregates'
+    * own result types, so Spark adds no final aggregate. */
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    statsShape(aggregation).nonEmpty
+
+  /** The pushed aggregation's schema and answer row, once
+    * [[pushAggregation]] served it from the sidecars. */
+  @volatile private var statsRow: Option[(Aggregation, StructType,
+    org.apache.spark.sql.catalyst.InternalRow)] = None
+
+  /** Per aggregate, None for COUNT(*) or the MIN/MAX column (with true
+    * for MAX) — or None overall when the shape is not served. No IO. */
+  private def statsShape(aggregation: Aggregation)
+      : Option[Seq[Option[(org.apache.spark.sql.types.StructField, Boolean)]]] = {
+    import org.apache.spark.sql.connector.expressions.{Expression,
+      NamedReference}
+    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar,
+      Max, Min}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType}
+    def integral(e: Expression) = e match {
+      case r: NamedReference if r.fieldNames.length == 1 =>
+        dataSchema.fields.find(_.name == r.fieldNames.head).filter(f =>
+          Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+      case _ => None
+    }
+    if (cdf || dvRefs.nonEmpty || metaCols.nonEmpty || dataFilters.nonEmpty ||
+        aggregation.groupByExpressions.nonEmpty) None
+    else {
+      val shape = aggregation.aggregateExpressions.toSeq.map {
+        case _: CountStar => Some(None)
+        case m: Min => integral(m.column).map(f => Some((f, false)))
+        case m: Max => integral(m.column).map(f => Some((f, true)))
+        case _ => None
+      }
+      if (shape.forall(_.nonEmpty)) Some(shape.flatten) else None
+    }
+  }
+
+  /** The answer row of a served `shape`, folded from the sidecars of
+    * the files the snapshot admits; None when a file has no line. */
+  private def foldSidecars(aggregation: Aggregation,
+      shape: Seq[Option[(org.apache.spark.sql.types.StructField, Boolean)]])
+      : Option[(Aggregation, StructType,
+        org.apache.spark.sql.catalyst.InternalRow)] = {
+    import org.apache.spark.sql.types._
+    val probe = fileIndex match {
+      case g: GraftLakeFileIndex => g.probe
+      case _ => return None
+    }
+    val byDir = fileIndex.listFiles(partitionFilters, Nil)
+      .flatMap(_.files).map(_.getPath)
+      .groupBy(p => probe.entryOf(p.getParent)).toSeq
+    /** Every file's line of one sidecar lookup per dir, or None at the
+      * first dir that lacks one: a missing sidecar is not cached, so a
+      * lake without stats pays one lookup per plan, not one per dir. */
+    def lines[T](lookup: String => Map[String, T]): Option[Seq[T]] =
+      Some(byDir.flatMap { case (d, ps) =>
+        val byFile = lookup(d)
+        ps.map(p => byFile.getOrElse(p.getName, return None))
+      })
+    // every dir past this carries the header, so its ranges are exact
+    val rows = lines(VersionedLake.fileStatsRows(spark, lakeDir, _))
+      .getOrElse(return None).sum
+    val bounds = shape.flatten.map(_._1).distinct.map { f =>
+      val ranges = lines(probe.stats(_, f.name)).getOrElse(return None)
+      // a stored double of magnitude 2^53 or more may be a rounded long
+      if (f.dataType == LongType && ranges.exists(r => r._1 <= r._2 &&
+          math.max(math.abs(r._1), math.abs(r._2)) >= (1L << 53)))
+        return None
+      f.name -> VersionedLake.foldStats(ranges)._2
+    }.toMap
+    val values = shape.map {
+      case None => rows
+      case Some((f, isMax)) =>
+        bounds(f.name).map[Any] { case (mn, mx) =>
+          val v = if (isMax) mx else mn
+          f.dataType match {
+            case ByteType => v.toByte
+            case ShortType => v.toShort
+            case IntegerType => v.toInt
+            case _ => v.toLong
+          }
+        }.orNull
+    }
+    val schema = StructType(shape.zipWithIndex.map {
+      case (None, i) => StructField(s"agg_func_$i", LongType, nullable = false)
+      case (Some((f, _)), i) => StructField(s"agg_func_$i", f.dataType)
+    })
+    Some((aggregation, schema,
+      org.apache.spark.sql.catalyst.InternalRow.fromSeq(values)))
+  }
 
   /** Row-address metadata columns (`__graft_file`/`__graft_pos`,
     * advertised on DV lakes via [[GraftLakeTable.metadataColumns]])
@@ -2040,11 +2142,12 @@ final class GraftLakeScanBuilder(spark: SparkSession,
   override def build()
       : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan = {
     if (metaCols.nonEmpty) {
-      // a footer-stat aggregate under a synthesized row-address
-      // column would answer per-FILE where the query asks per-ROW —
-      // fail loudly if Spark's pushdown ordering ever lets both in
-      require(!aggPushed, "aggregate pushdown cannot combine with " +
-        "row-address metadata columns (footer stats are per file, " +
+      // an aggregate answered from per-file stats under a synthesized
+      // row-address column would answer per-FILE where the query asks
+      // per-ROW — fail loudly if Spark's pushdown ordering ever lets
+      // both in
+      require(statsRow.isEmpty, "aggregate pushdown cannot combine " +
+        "with row-address metadata columns (stats are per file, " +
         "addresses are per row)")
       // row-address projection: single-file partitions + synthesized
       // address columns + DV application — the SAME wrapper the
@@ -2057,6 +2160,9 @@ final class GraftLakeScanBuilder(spark: SparkSession,
         "the change feed delivers _change_type events instead")
       return new GraftLakeDeltaScan(dvRefs, super.build(), lakeDir,
         metaCols)
+    }
+    statsRow.foreach { case (aggregation, schema, row) =>
+      return new GraftLakeStatsScan(super.build(), aggregation, schema, row)
     }
     def intOpt(k: String): Option[Int] =
       Option(options.get(k)).map(_.trim.toInt)
@@ -2091,6 +2197,25 @@ final class GraftLakeScanBuilder(spark: SparkSession,
       intOpt(GraftLakeDataSource.MaxFilesPerTrigger),
       skip, cdf, failOnLoss, dvRefs)
   }
+}
+
+/** An aggregate answered from the stats sidecars while planning
+  * ([[GraftLakeScanBuilder.pushAggregation]]): a [[LocalScan]] of its
+  * one row, which Spark plans as a `LocalTableScanExec`. It is a
+  * ParquetScan only because the builder's `build()` must return one;
+  * the pushed aggregation is part of its identity and its explain. */
+final class GraftLakeStatsScan(
+    base: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan,
+    aggregation: Aggregation, schema: StructType,
+    row: org.apache.spark.sql.catalyst.InternalRow)
+  extends org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
+    base.sparkSession, base.hadoopConf, base.fileIndex, base.dataSchema,
+    schema, base.readPartitionSchema, base.pushedFilters, base.options,
+    Some(aggregation), base.partitionFilters, base.dataFilters,
+    base.pushedVariantExtractions)
+  with LocalScan {
+  override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
+    Array(row)
 }
 
 /** ParquetScan + `toMicroBatchStream`: batch execution is byte-for-byte
@@ -2706,7 +2831,7 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
     this(spark, lakeDir,
       VersionedLake.liveDataDirs(spark, lakeDir, version).map(new Path(_)))
 
-  private val probe = new SidecarProbe(spark, lakeDir)
+  private[engine] val probe = new SidecarProbe(spark, lakeDir)
 
   private[engine] def admitAnyOf(p: Path, c: String,
       values: Seq[Any]): Boolean = probe.admitAnyOf(p, c, values)
@@ -2796,11 +2921,11 @@ private[engine] final class SidecarProbe(spark: SparkSession,
 
   def stats(d: String, c: String): Map[String, (Double, Double, Long)] =
     aliasesOf(c).map(n => VersionedLake.fileStats(spark, lakeDir, d, n))
-      .reduce(_ ++ _)
+      .foldLeft(Map.empty[String, (Double, Double, Long)])(_ ++ _)
 
   def bloom(d: String, c: String): Map[String, java.util.BitSet] =
     aliasesOf(c).map(n => VersionedLake.fileBloom(spark, lakeDir, d, n))
-      .reduce(_ ++ _)
+      .foldLeft(Map.empty[String, java.util.BitSet])(_ ++ _)
 
   /** Can file `p` contain ANY of `values` in column `c`? The runtime
     * pruning predicate — OR-of-points where the static path answers

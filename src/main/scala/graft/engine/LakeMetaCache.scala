@@ -16,10 +16,11 @@ final case class MetaCacheStats(hits: Long, misses: Long, entries: Int)
   * and re-created at the same path (tag-named `d-<tag>` dirs reuse
   * their names) stamps differently, so those entries cannot go stale
   * and nothing needs invalidating; the stamp replaces the existence
-  * probe the uncached reads made anyway. Footer and deletion-vector
-  * entries keep the keys of the per-feature memos they replaced: a part
-  * file's path, and a DV sidecar's name (version + uuid) within its
-  * lake. Least-recently-used entries drop once the entries' weights
+  * probe the uncached reads made anyway. Deletion-vector entries key on
+  * a DV sidecar's name, modification time and length from the
+  * `_deletes` listing, for the same reason (tag-derived uuids repeat).
+  * Footer entries key on a part file's path, a name never reused.
+  * Least-recently-used entries drop once the entries' weights
   * (approximate bytes) pass [[MaxWeight]]. */
 private[engine] object LakeMetaCache {
   val MaxWeight: Long = 64L << 20

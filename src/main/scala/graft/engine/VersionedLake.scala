@@ -1831,7 +1831,7 @@ object VersionedLake {
     val postV = dvSidecars(spark, dir, tipV).filter(_._1 > v)
     val affected: Seq[String] =
       if (postV.isEmpty) Seq.empty
-      else readDvParquet(spark, postV.map(_._2.toString))
+      else readDvParquet(spark, postV.map(_._2.getPath.toString))
         .select("entry").distinct().collect().map(_.getString(0))
         .filter(wantSet).sorted.toSeq
     val partCols = GraftLakePartitions.of(spark, dir)
@@ -1969,13 +1969,18 @@ object VersionedLake {
     * name whose manifest never existed (crashed attempt at a
     * never-published version) cannot be confused with it, because
     * versions are claimed sequentially and vacuum removes only
-    * prefixes. */
+    * prefixes. Each sidecar comes with its listing status: the DV
+    * entries of [[LakeMetaCache]] key on its name, modification time
+    * and length, because a tag-derived uuid ([[commitTagUuid]])
+    * repeats when a lake is deleted and re-created with the same
+    * tags. */
   private[engine] def dvSidecars(spark: SparkSession, dir: String,
-      v: Int): Seq[(Int, Path)] = {
+      v: Int): Seq[(Int, FileStatus)] = {
     val f = fs(spark, dir)
     val root = new Path(s"$dir/_deletes")
     if (!dvEnabled(spark, dir) || !f.exists(root)) return Seq.empty
-    f.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
+    f.listStatus(root).toSeq.flatMap { st =>
+      val p = st.getPath
       p.getName match {
         case DvSidecarName(n, uuid) if n.toInt <= v =>
           // a transient manifest-read failure must FAIL THE SCAN, not
@@ -1992,7 +1997,7 @@ object VersionedLake {
           // fallback is NOT: its answer depends on the moving retention
           // window (a thrown compute caches nothing).
           val bound =
-            try LakeMetaCache.memo[Boolean](("dvBind", dir, p.getName)) {
+            try LakeMetaCache.memo[Boolean](("dvBind", dir, dvStamp(st))) {
               try bindOnce()
               catch {
                 case _: java.io.FileNotFoundException => throw
@@ -2005,11 +2010,16 @@ object VersionedLake {
                 versionRange(spark, dir).exists { case (lo, _) =>
                   n.toInt < lo }
             }
-          if (bound) Some((n.toInt, p)) else None
+          if (bound) Some((n.toInt, st)) else None
         case _ => None
       }
     }.sortBy(_._1)
   }
+
+  /** A DV sidecar's cache key within its lake: name, modification time
+    * and length from the `_deletes` listing. */
+  private def dvStamp(st: FileStatus): (String, Long, Long) =
+    (st.getPath.getName, st.getModificationTime, st.getLen)
 
   /** The positions sidecar's FIXED layout (every writer emits exactly
     * this triple — [[GraftLakeDeltaOp.writePosPart]] and the metadata
@@ -2034,7 +2044,7 @@ object VersionedLake {
       v: Int): Option[DataFrame] = {
     val side = dvSidecars(spark, dir, v)
     if (side.isEmpty) None
-    else Some(readDvParquet(spark, side.map(_._2.toString))
+    else Some(readDvParquet(spark, side.map(_._2.getPath.toString))
       .select("entry", "file", "pos"))
   }
 
@@ -2065,17 +2075,17 @@ object VersionedLake {
     * their ref names ([[GraftLakeDvScan.loadPositions]]). Driver
     * memory is O(DV files) by construction — no pending-position
     * backlog can balloon it, so there is no warn-past-N escape hatch
-    * left to need. Memoized per (lake, version, sidecar set) in
-    * [[LakeMetaCache]]: sidecars are immutable and uuid-named, so the
-    * key is exact (a miss costs one small distributed aggregation). */
+    * left to need. Memoized per (lake, version, sidecar stamps) in
+    * [[LakeMetaCache]]: sidecars are immutable, and a re-created one
+    * stamps differently ([[dvSidecars]]), so the key is exact (a miss
+    * costs one small distributed aggregation). */
   private[graft] def dvRefs(spark: SparkSession, dir: String,
       v: Int): Map[String, GraftLakeDvRef] = {
     val side = dvSidecars(spark, dir, v)
     if (side.isEmpty) return Map.empty
-    LakeMetaCache.memo(("dvRefs", dir, v,
-      side.map(_._2.getName).sorted.mkString(","))) {
+    LakeMetaCache.memo(("dvRefs", dir, v, side.map(s => dvStamp(s._2)))) {
       import org.apache.spark.sql.functions.{col, count, lit}
-      readDvParquet(spark, side.map(_._2.toString))
+      readDvParquet(spark, side.map(_._2.getPath.toString))
         .groupBy(col("entry"), col("file"),
           col("_metadata.file_path").as("part"))
         .agg(count(lit(1)).as("n"))
@@ -2109,15 +2119,15 @@ object VersionedLake {
 
   /** Total on-disk bytes of the DV sidecars applying at `v` — decides
     * whether an anti-join side is broadcast-safe. Sidecars are
-    * immutable and uuid-named, so per-sidecar sizes memoize in
-    * [[LakeMetaCache]] (one getContentSummary each, EVER — not one per
-    * planning call). */
+    * immutable, so per-sidecar sizes memoize in [[LakeMetaCache]] under
+    * their listing stamp (one getContentSummary each, EVER — not one
+    * per planning call). */
   private[engine] def dvSidecarBytes(spark: SparkSession, dir: String,
       v: Int): Long = {
     val f = fs(spark, dir)
     dvSidecars(spark, dir, v).map { s =>
-      LakeMetaCache.memo[Long](("dvBytes", dir, s._2.getName))(
-        f.getContentSummary(s._2).getLength)
+      LakeMetaCache.memo[Long](("dvBytes", dir, dvStamp(s._2)))(
+        f.getContentSummary(s._2.getPath).getLength)
     }.sum
   }
 
@@ -2341,7 +2351,7 @@ object VersionedLake {
           .filter(_._1 > subtractedTo)
         if (interleaved.nonEmpty) {
           val nv = spark.read
-            .parquet(interleaved.map(_._2.toString): _*)
+            .parquet(interleaved.map(_._2.getPath.toString): _*)
             .select(col("entry").as("__dv_entry"),
               col("file").as("__dv_file"),
               col("pos").as("__dv_pos"))
@@ -2848,6 +2858,16 @@ object VersionedLake {
       (declaredBloom ++ bloomIndexCols(spark, dir))
         .distinct.filter(schema.fieldNames.contains))
 
+  /** First line of every stats sidecar written since an all-null column
+    * chunk stopped yielding the range 0/0 ([[statsLinesOfFile]]). An
+    * older sidecar may hold such a line, which no reader can tell from
+    * a real range that contains 0: range skipping stays correct on it
+    * (NULL satisfies no comparison), but the count/min/max fold
+    * ([[statsAggregate]], the SQL aggregate pushdown) takes no line
+    * from a sidecar without this header and scans its dir instead. One
+    * field, so every line parser drops it. */
+  private[engine] val StatsHeader = "#graft-stats:nonnull-ranges"
+
   /** Per-file footer-stats lines (`file \t col \t min \t max \t rows`)
     * — pure function of one parquet footer, safe to evaluate on
     * EXECUTORS (the batched multi-entry path ships it there). */
@@ -2861,15 +2881,26 @@ object VersionedLake {
       import scala.jdk.CollectionConverters._
       val rows = blocks.asScala.map(_.getRowCount).sum
       statsCols.flatMap { c =>
-        val stats = blocks.asScala.toSeq.flatMap(_.getColumns.asScala
-          .filter(_.getPath.toDotString == c).map(_.getStatistics))
-          .filter(s => s != null && !s.isEmpty)
+        val chunks = blocks.asScala.toSeq.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == c))
+        // an all-null chunk has no min/max: parquet reports
+        // hasNonNullValue=false and genericGetMin would return the
+        // unset 0, so only value-bearing chunks give a range
+        val stats = chunks.map(_.getStatistics)
+          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+        def allNull = chunks.nonEmpty && chunks.forall { ch =>
+          val s: org.apache.parquet.column.statistics.Statistics[_] =
+            ch.getStatistics
+          s != null && s.isNumNullsSet && s.getNumNulls == ch.getValueCount
+        }
         if (stats.isEmpty) {
-          // a ZERO-ROW file gets an explicit empty range (it can
-          // never intersect a probe and must not be conservatively
-          // rewritten/read); a file with rows but no usable stats
-          // gets NO line — conservative on every path
-          if (rows == 0L) Some(s"${file.getName}\t$c\tInfinity\t-Infinity\t0")
+          // a ZERO-ROW file, or one whose column is provably all null,
+          // gets an explicit empty range (it can never intersect a
+          // probe — NULL satisfies no comparison — and must not be
+          // conservatively rewritten/read); a file with rows but no
+          // usable stats gets NO line — conservative on every path
+          if (rows == 0L || allNull)
+            Some(s"${file.getName}\t$c\tInfinity\t-Infinity\t$rows")
           else None
         } else {
           def num(v: Any): Double = v match {
@@ -2901,7 +2932,8 @@ object VersionedLake {
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
       .flatMap(file => statsLinesOfFile(file, statsCols, conf))
     val statsOut = f.create(new Path(s"$dir/_stats/$dataDir.stats"), true)
-    try statsOut.write(lines.mkString("\n").getBytes("UTF-8"))
+    try statsOut.write((StatsHeader +: lines).mkString("\n")
+      .getBytes("UTF-8"))
     finally statsOut.close()
     ()
   }
@@ -2952,7 +2984,7 @@ object VersionedLake {
         }
       filesByEntry.foreach { case (e, _) =>
         val out = f.create(new Path(s"$dir/_stats/$e.stats"), true)
-        try out.write(grouped.getOrElse(e, Seq.empty)
+        try out.write((StatsHeader +: grouped.getOrElse(e, Seq.empty))
           .mkString("\n").getBytes("UTF-8"))
         finally out.close()
       }
@@ -3037,30 +3069,53 @@ object VersionedLake {
     * of an otherwise-healthy version. */
   private def statsFor(spark: SparkSession, dir: String, d: String,
       c: String): Map[String, (Double, Double, Long)] =
-    sidecar(spark, dir, "stats", d) { a =>
+    statsSidecar(spark, dir, d)._2.getOrElse(c, Map.empty)
+
+  /** Every column's [[statsFor]] lines of one data dir, after whether
+    * the sidecar opens with [[StatsHeader]] (false when it is missing). */
+  private def statsSidecar(spark: SparkSession, dir: String, d: String)
+      : (Boolean, Map[String, Map[String, (Double, Double, Long)]]) = {
+    val (header, cols) = sidecar(spark, dir, "stats", d) { a =>
       if (a.length != 5) None
       else scala.util.Try((a(2).toDouble, a(3).toDouble, a(4).toLong))
         .toOption
-    }.getOrElse(c, Map.empty)
+    }
+    (header.contains(StatsHeader), cols)
+  }
 
-  /** Every column's lines of one data dir's `_<kind>/<d>.<kind>` sidecar
-    * (tab-separated `file, column, value...`), as column → file → value,
-    * parsed once per sidecar stamp ([[LakeMetaCache]]). A line `parse`
-    * rejects is dropped; a missing sidecar is empty. */
+  /** Row count per file of one data dir, from whichever column's stats
+    * line records it, for the count fold: a file without any line, or
+    * in a sidecar without [[StatsHeader]], is absent. */
+  private[engine] def fileStatsRows(spark: SparkSession, dir: String,
+      d: String): Map[String, Long] = {
+    val (headed, cols) = statsSidecar(spark, dir, d)
+    if (!headed) Map.empty
+    else cols.values.flatten.map { case (f, r) => f -> r._3 }.toMap
+  }
+
+  /** One data dir's `_<kind>/<d>.<kind>` sidecar, parsed once per
+    * sidecar stamp ([[LakeMetaCache]]): its first line if that starts
+    * with `#` (a header), and its lines (tab-separated `file, column,
+    * value...`) as column → file → value. A line `parse` rejects is
+    * dropped; a missing sidecar is empty. */
   private def sidecar[T](spark: SparkSession, dir: String, kind: String,
       d: String)(parse: Array[String] => Option[T])
-      : Map[String, Map[String, T]] = {
+      : (Option[String], Map[String, Map[String, T]]) = {
     val f = fs(spark, dir)
     val p = new Path(s"$dir/_$kind/$d.$kind")
-    LakeMetaCache.stamp(f, p).fold(Map.empty[String, Map[String, T]]) { s =>
+    LakeMetaCache.stamp(f, p).fold(
+        (Option.empty[String], Map.empty[String, Map[String, T]])) { s =>
       LakeMetaCache.memo((kind, s)) {
         val in = f.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(_.split('\t')).filter(_.length >= 2)
-          .flatMap(a => parse(a).map(v => (a(1), a(0), v))).toSeq
-          .groupBy(_._1).map { case (c, xs) =>
-            c -> xs.map(x => x._2 -> x._3).toMap }
-        finally in.close()
+        try {
+          val ls = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+            .toSeq
+          (ls.headOption.filter(_.startsWith("#")),
+            ls.map(_.split('\t')).filter(_.length >= 2)
+              .flatMap(a => parse(a).map(v => (a(1), a(0), v)))
+              .groupBy(_._1).map { case (c, xs) =>
+                c -> xs.map(x => x._2 -> x._3).toMap })
+        } finally in.close()
       }
     }
   }
@@ -3072,14 +3127,23 @@ object VersionedLake {
     * and silently demote the dir to the scan path (or, worse, leave a
     * metadata fold that ignores the pre-rename files). `names` is the
     * alias set computed ONCE per operation ([[GraftLakeMapping
-    * .aliases]]); unmapped callers pass Seq(c). Per-file names are
-    * unique within a sidecar, so the merge cannot collide. */
+    * .aliases]]); unmapped callers pass Seq(c). A file carries one
+    * name per field id, and aliases leave out names two ids share, so
+    * the merge cannot collide. With `folding`, a sidecar without
+    * [[StatsHeader]] gives no line, so the count/min/max fold scans the
+    * dir. */
   private def statsForNames(spark: SparkSession, dir: String, d: String,
-      names: Seq[String]): Map[String, (Double, Double, Long)] =
-    names.map(statsFor(spark, dir, d, _)).reduce(_ ++ _)
+      names: Seq[String], folding: Boolean = false)
+      : Map[String, (Double, Double, Long)] = {
+    val (headed, cols) = statsSidecar(spark, dir, d)
+    if (folding && !headed) Map.empty
+    else names.map(cols.getOrElse(_, Map.empty))
+      .foldLeft(Map.empty[String, (Double, Double, Long)])(_ ++ _)
+  }
 
   /** Every name `c`'s field id has had in the current mapping era
-    * (Seq(c) on unmapped lakes) — compute ONCE per operation and
+    * (Seq(c) on unmapped lakes; none when another id shared one of
+    * them, so its sidecars go unused) — compute ONCE per operation and
     * thread through the sidecar lookups; per-dir registry reads would
     * be O(dirs) metadata RPCs. */
   private def aliasNamesOf(spark: SparkSession, dir: String,
@@ -3110,14 +3174,31 @@ object VersionedLake {
         s2.read.schema(sch)).parquet(files: _*))
     }
 
+  /** The count/min/max fold over per-file stats ranges
+    * `(min, max, rows)`, shared by [[statsAggregate]] and the SQL
+    * aggregate pushdown ([[GraftLakeScanBuilder]]): the row total, and
+    * the bounds over the ranges that hold a value — None when none
+    * does. A range with min > max (a zero-row file, or one whose
+    * column is all null) adds its rows but no bound. */
+  private[engine] def foldStats(ranges: Seq[(Double, Double, Long)])
+      : (Long, Option[(Double, Double)]) = {
+    val valued = ranges.filter(r => r._1 <= r._2)
+    (ranges.map(_._3).sum,
+      if (valued.isEmpty) None
+      else Some((valued.map(_._1).min, valued.map(_._2).max)))
+  }
+
   /** Metadata-only count/min/max over the latest snapshot — the
     * `SELECT count(*), min(c), max(c)` a log-structured lake answers
     * from its stats without touching a data byte. Dirs whose stats
-    * cover every part file contribute from METADATA (sum of row
-    * counts, min of mins, max of maxs); dirs without full coverage
-    * fall back to one aggregated scan, and the two halves combine —
-    * so the answer is always exact and the data read is proportional
-    * to the UNstatsed fraction only.
+    * cover every part file contribute from METADATA; dirs without
+    * full coverage, or whose sidecar lacks [[StatsHeader]] (it may
+    * hold a 0/0 range for an all-null file), fall back to one
+    * aggregated scan, and the scan's answer joins the file ranges in
+    * one [[foldStats]] — so the answer is always exact and the data
+    * read is proportional to the UNstatsed fraction only. SQL's `SELECT count(*), min(c), max(c)`
+    * over a `graftlake` table folds the same way when every file has
+    * stats, and is refused to a plain scan otherwise.
     *
     * DV lakes: a file carrying a LIVE deletion vector has footer/
     * sidecar stats that over-count its deleted rows (and a min/max a
@@ -3126,7 +3207,7 @@ object VersionedLake {
     * ([[dropDvRows]]). After a point delete the read cost is
     * O(vectored files), never O(lake); the clean fraction still
     * answers from metadata. Returns (rows, min, max); min/max are NaN
-    * for an empty snapshot. */
+    * when no row holds a value (an empty snapshot, or `c` all null). */
   def statsAggregate(spark: SparkSession, dir: String, c: String)
       : (Long, Double, Double) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
@@ -3151,11 +3232,13 @@ object VersionedLake {
       }
     def vecOf(d: String): Set[String] =
       dvLive.getOrElse(d, Set.empty)
-    // each dir's stats sidecar looked up once, for the split and the fold
+    // each dir's stats sidecar looked up once, for the split and the
+    // fold; a sidecar without the header gives no line, so its dir scans
     val (meta, scan) = snapshot.map(d =>
-      d -> statsForNames(spark, dir, d, cNames)).partition { case (d, stats) =>
-      val files = dataFiles(spark, dir, d).map(_.getName)
-      files.nonEmpty && files.forall(stats.contains)
+      d -> statsForNames(spark, dir, d, cNames, folding = true)).partition {
+      case (d, stats) =>
+        val files = dataFiles(spark, dir, d).map(_.getName)
+        files.nonEmpty && files.forall(stats.contains)
     }
     val fromMeta = meta.flatMap { case (d, stats) =>
       stats.collect { case (fn, s) if !vecOf(d)(fn) => s } }
@@ -3174,20 +3257,27 @@ object VersionedLake {
             max(col(c).cast("double")))
           .head())
       }
-    val rows = fromMeta.map(_._3).sum + scanAgg.map(_.getLong(0)).getOrElse(0L)
-    val nonEmpty = fromMeta.filter(_._3 > 0) // empty files carry (∞, −∞)
-    val mins = nonEmpty.map(_._1) ++
-      scanAgg.filter(!_.isNullAt(1)).map(_.getDouble(1))
-    val maxs = nonEmpty.map(_._2) ++
-      scanAgg.filter(!_.isNullAt(2)).map(_.getDouble(2))
-    if (mins.isEmpty) (rows, Double.NaN, Double.NaN)
-    else (rows, mins.min, maxs.max)
+    // the scanned fraction is one more range: (∞, −∞) when its `c`
+    // holds no value, like an empty or all-null file's sidecar line
+    val scanned = scanAgg.map(r => (
+      if (r.isNullAt(1)) Double.PositiveInfinity else r.getDouble(1),
+      if (r.isNullAt(2)) Double.NegativeInfinity else r.getDouble(2),
+      r.getLong(0)))
+    val (rows, bounds) = foldStats(fromMeta ++ scanned)
+    bounds.fold((rows, Double.NaN, Double.NaN)) { case (mn, mx) =>
+      (rows, mn, mx) }
   }
 
   /** True iff every part file of the latest snapshot has recorded
-    * stats for `c` — i.e. [[statsAggregate]] will answer from pure
-    * metadata with zero data scan. Production builders require this as
-    * evidence; it is never a correctness precondition. */
+    * stats for `c` and no deletion vector is live — i.e.
+    * [[statsAggregate]] will answer from pure metadata with zero data
+    * scan. Production builders require this as evidence; it is never
+    * a correctness precondition. A file whose `c` is all null counts
+    * as covered: its sidecar line records its rows and an empty range.
+    * A dir whose sidecar lacks [[StatsHeader]] (written by earlier
+    * versions of this engine, which record 0/0 for such a file) is not
+    * covered: [[statsAggregate]] scans it until a rewrite re-lifts its
+    * stats. */
   def statsCovered(spark: SparkSession, dir: String, c: String): Boolean = {
     // a LIVE vector forces its files onto the scan path (their stats
     // over-count deleted rows); materialized/vector-free DV lakes are
@@ -3199,7 +3289,7 @@ object VersionedLake {
     val cNames = aliasNamesOf(spark, dir, c)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     vs.nonEmpty && readManifest(spark, dir, vs.last).forall { d =>
-      val stats = statsForNames(spark, dir, d, cNames)
+      val stats = statsForNames(spark, dir, d, cNames, folding = true)
       dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
   }
@@ -3759,7 +3849,7 @@ object VersionedLake {
       if (a.length != 3 || a(2).length != BloomBits / 4) None
       else scala.util.Try(java.util.BitSet.valueOf(a(2).sliding(2, 2)
         .map(Integer.parseInt(_, 16).toByte).toArray)).toOption
-    }.getOrElse(c, Map.empty)
+    }._2.getOrElse(c, Map.empty)
 
   /** Point-lookup over the latest snapshot reading ONLY files whose
     * bloom may contain `value` (files without a recorded bloom are
@@ -3788,7 +3878,7 @@ object VersionedLake {
     val files = readManifest(spark, dir, vs.last).flatMap { d =>
       val all = dataFiles(spark, dir, d)
       val blooms = cNames.map(bloomFor(spark, dir, d, _))
-        .reduce(_ ++ _)
+        .foldLeft(Map.empty[String, java.util.BitSet])(_ ++ _)
       if (blooms.isEmpty) all
       else all.filter(p => blooms.get(p.getName)
         .forall(b => want.forall(b.get)))

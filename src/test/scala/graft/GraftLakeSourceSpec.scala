@@ -502,18 +502,34 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       s"pending append must survive the rewrite: got ${ids()}")
   }
 
-  test("count/min/max through the V2 path push down to parquet " +
-      "metadata (inherited aggregate pushdown)") {
-    import spark.implicits._
+  test("count/min/max through the V2 path answer from the stats " +
+      "sidecars: a local row, no data file read, exact values") {
     val dir = tempDir("glsrc-agg") + "/lake"
-    VersionedLake.commit(spark.range(0, 500).toDF("id"), dir)
-    VersionedLake.commit(spark.range(500, 800).toDF("id"), dir)
+    VersionedLake.commitWithStats(spark.range(0, 500).toDF("id"), dir,
+      Seq("id"))
+    VersionedLake.commitWithStats(spark.range(500, 800).toDF("id"), dir,
+      Seq("id"))
     val df = v2(dir).agg(count(lit(1)).as("n"), min(col("id")).as("mn"),
       max(col("id")).as("mx"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregation"),
-      s"aggregate not pushed to the parquet footer read:\n$plan")
-    val r = df.head()
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("LocalTableScan") &&
+      GraftLakeDataSource.filesRead(df) == 0,
+      s"aggregate not answered from the sidecars:\n$plan")
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(l)
+    val r = try {
+      val r = df.head()
+      org.apache.spark.graft.ListenerBusFlush.waitUntilEmpty(
+        spark.sparkContext, 120000)
+      r
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(read.get == 0, s"read ${read.get} rows")
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((800L, 0L, 799L)))
   }
 

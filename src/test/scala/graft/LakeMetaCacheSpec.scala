@@ -145,4 +145,42 @@ class LakeMetaCacheSpec extends AnyFunSuite {
     assert(VersionedLake.tip(spark, dir).contains(3))
     assert(reads() == expect(1000))
   }
+
+  test("deletion vectors of a lake deleted and re-created with the " +
+      "same commit tags apply to the new rows, not the cached old ones") {
+    val base = tempDir("lmc-dv")
+    val dir = s"$base/t"
+    spark.conf.set("spark.sql.catalog.lmc3", classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.lmc3.root", base)
+    /** A DV lake of ids off..off+99 whose tagged UPDATE sets v = 1 on
+      * `hit`: the tag names its vector `v2-<uuid of the tag>` (and its
+      * data dir `d-<uuid>`) in every build. */
+    def build(off: Long, hit: Seq[Long]): Unit = {
+      spark.sql("CREATE TABLE lmc3.t TBLPROPERTIES " +
+        "('deletion_vectors'='true') AS SELECT id, 0 AS v " +
+        s"FROM range($off, ${off + 100})")
+      spark.conf.set("spark.graft.lake.commitTag", "fix")
+      try spark.sql(
+        s"UPDATE lmc3.t SET v = 1 WHERE id IN (${hit.mkString(",")})")
+      finally spark.conf.unset("spark.graft.lake.commitTag")
+      ()
+    }
+    def check(off: Long, hit: Seq[Long]): Unit = {
+      assert(spark.sql("SELECT id, v FROM lmc3.t").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted ==
+        (off until off + 100).map(i => (i, if (hit.contains(i)) 1 else 0)))
+      assert(spark.sql("SELECT count(*), min(id), max(id) FROM lmc3.t")
+        .head().toSeq == Seq(100L, off, off + 99))
+      assert(VersionedLake.statsAggregate(spark, dir, "id") ==
+        ((100L, off.toDouble, off + 99.0)))
+    }
+    build(0, Seq(0L, 50L))
+    check(0, Seq(0L, 50L))
+    val vectors = new java.io.File(s"$dir/_deletes").list().toSeq
+    Lake.delete(spark, dir)
+    build(1000, Seq(1007L, 1099L))
+    assert(new java.io.File(s"$dir/_deletes").list().toSeq == vectors,
+      "the re-created lake's vector must reuse the first one's name")
+    check(1000, Seq(1007L, 1099L))
+  }
 }
