@@ -228,14 +228,10 @@ final class GraftLakeDeltaScan(
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    import org.apache.spark.sql.types._
     (readDataSchema.fields ++ readPartitionSchema.fields).collect {
-      case f if (f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType | StringType => true
-        case _ => false
-      }) => org.apache.spark.sql.connector.expressions.Expressions
-        .column(f.name)
+      case f if GraftLakeFileIndex.runtimeProbeable(f.dataType) =>
+        org.apache.spark.sql.connector.expressions.Expressions
+          .column(f.name)
     }
   }
 

@@ -201,16 +201,11 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
     * dirs loses pruning, never rows). */
   private lazy val groupFilterAttr
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    import org.apache.spark.sql.types._
     val sample = op.snapshotDirs.toSeq.sorted.take(16)
     val indexed = VersionedLake.indexedCols(base.sparkSession, lakeDir,
       sample).toSet
     val candidates = readDataSchema.fields.filter(f =>
-      indexed(f.name) && (f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType | StringType => true
-        case _ => false
-      }))
+      indexed(f.name) && GraftLakeFileIndex.runtimeProbeable(f.dataType))
     if (candidates.isEmpty) Array.empty
     else {
       def score(c: String): Double =

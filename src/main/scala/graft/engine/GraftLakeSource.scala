@@ -2,9 +2,9 @@ package graft.engine
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo,
-  Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual,
-  Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
+  LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.LocalScan
@@ -32,9 +32,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * exactly ONE seam replaced: the `FileIndex` resolves the snapshot
   * from the manifest log instead of listing the directory, and applies
   * the manifest's stats/bloom sidecars to the PUSHED data filters so a
-  * range or point probe through plain `spark.read` skips files the
-  * same way the library probes ([[VersionedLake.readSkipping]] /
-  * [[VersionedLake.readBloomProbe]]) do. That keeps the fast path
+  * range or point probe through plain `spark.read` skips files. It is
+  * the one admission rule: the library probes
+  * ([[VersionedLake.readSkipping]] / [[VersionedLake.readBloomProbe]])
+  * are filters over a [[VersionedLake.readAt]] snapshot, whose plain
+  * relation is built over this same index. That keeps the fast path
   * driver-side metadata (nothing size-of-data at plan time) and the
   * scan path 100% native — a reimplemented row-by-row reader would
   * have been a 10× regression at 100 TB.
@@ -265,7 +267,11 @@ object GraftLakeDataSource {
       else p.children().toSeq match {
         case (f: NamedReference) +: rest
           if f.fieldNames().length == 1 && rest.size <= maxValues &&
-            rest.forall(_.isInstanceOf[Literal[_]]) =>
+            rest.forall {
+              case l: Literal[_] =>
+                GraftLakeFileIndex.runtimeProbeable(l.dataType())
+              case _ => false
+            } =>
           Some((f.fieldNames()(0),
             rest.map(_.asInstanceOf[Literal[_]].value)))
         case _ => None
@@ -273,8 +279,8 @@ object GraftLakeDataSource {
     }
   }
 
-  /** Files the executed plan will actually read through the V2 scan —
-    * the post-pruning evidence q182 and the spec gate assert on
+  /** Lake files the executed plan will actually read — the post-pruning
+    * evidence q182 and the spec gates assert on
     * (`DataFrame.inputFiles` reports the index's full listing, BEFORE
     * per-scan filter pruning, so it cannot serve as this witness). */
   def filesRead(df: DataFrame): Int =
@@ -283,60 +289,55 @@ object GraftLakeDataSource {
   /** [[filesRead]] over an already-executed physical plan — the form a
     * QueryExecutionListener-captured COMMAND plan (MERGE/UPDATE/DELETE)
     * needs: commands have no DataFrame handle, but their captured plan
-    * still carries the V2 scans whose runtime filters were applied. */
+    * still carries the scans whose runtime filters were applied. */
   def filesReadPlan(plan: org.apache.spark.sql.execution.SparkPlan)
-      : Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      // AQE wraps executed stages (ResultQueryStage/BroadcastQueryStage
-      // in Spark 4) as LEAF nodes whose real plan hangs off `.plan` —
-      // without descending, an executed frame measures ZERO scans and
-      // a `< total` pruning gate passes vacuously
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
-    }
-    walk(plan).collect {
-      case b: BatchScanExec => b.scan match {
-        case f: FileScan => f.planInputPartitions().map {
-          case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
-            fp.files.length
-          case _ => 0
-        }.sum
-        case _ => 0
-      }
-    }.sum
-  }
+      : Int =
+    scannedFiles(plan).length
 
   /** [[filesRead]] but the file PATHS — the witness for assertions
     * about WHICH dirs/partitions a plan reads (`DataFrame.inputFiles`
     * is empty on non-FileTable V2 relations, so it cannot serve). */
-  def filesReadPaths(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
+  def filesReadPaths(df: DataFrame): Seq[String] =
+    scannedFiles(df.queryExecution.executedPlan)
+
+  /** The planned files of every lake scan in `plan`, one per file
+    * split, subqueries included: V2 `BatchScanExec` (the `graftlake`
+    * scan) and V1 `FileSourceScanExec` over a [[GraftLakeFileIndex]]
+    * (a plain lake's [[VersionedLake.readAt]] snapshot) — not the
+    * plain parquet reads a plan may join the lake with. */
+  private def scannedFiles(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[String] = {
+    import org.apache.spark.sql.connector.read.InputPartition
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.{FilePartition,
+      FileScanRDD}
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec,
+      FileScan}
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       // AQE wraps executed stages (ResultQueryStage/BroadcastQueryStage
       // in Spark 4) as LEAF nodes whose real plan hangs off `.plan` —
       // without descending, an executed frame measures ZERO scans and
       // a `< total` pruning gate passes vacuously
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
+      case q: QueryStageExec => walk(q.plan)
       case other => other +: (other.children ++ other.subqueries).flatMap(walk)
     }
-    walk(df.queryExecution.executedPlan).flatMap {
+    walk(plan).flatMap {
       case b: BatchScanExec => b.scan match {
-        case f: FileScan => f.planInputPartitions().toSeq.flatMap {
-          case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
-            fp.files.map(_.urlEncodedPath).toSeq
-          case _ => Seq.empty[String]
-        }
-        case _ => Seq.empty[String]
+        case f: FileScan => f.planInputPartitions().toSeq
+        case _ => Seq.empty[InputPartition]
       }
+      case s: FileSourceScanExec
+          if s.relation.location.isInstanceOf[GraftLakeFileIndex] =>
+        s.inputRDD match {
+          case r: FileScanRDD => r.filePartitions
+          case _ => Seq.empty[InputPartition]
+        }
+      case _ => Seq.empty[InputPartition]
+    }.flatMap {
+      case fp: FilePartition => fp.files.map(_.urlEncodedPath).toSeq
       case _ => Seq.empty[String]
     }
   }
@@ -2271,14 +2272,10 @@ final class GraftLakeParquetScan(
     * — conservative, never wrong. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    import org.apache.spark.sql.types._
     (readDataSchema.fields ++ readPartitionSchema.fields).collect {
-      case f if (f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType | FloatType |
-             DoubleType | StringType => true
-        case _ => false
-      }) => org.apache.spark.sql.connector.expressions.Expressions
-        .column(f.name)
+      case f if GraftLakeFileIndex.runtimeProbeable(f.dataType) =>
+        org.apache.spark.sql.connector.expressions.Expressions
+          .column(f.name)
     }
   }
 
@@ -2845,7 +2842,11 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
     // pruning (super's, above) stays: all rows of a pruned partition
     // provably fail the condition, so their dir is not replaced at all.
     if (!sidecarPrune) return base
+    // one window per column, the intersection of its bounds (`c >= lo
+    // AND c <= hi` is two), so each (dir, column) costs one lookup
     val ranges = GraftLakeFileIndex.rangePredicates(dataFilters)
+      .groupBy(_._1).toSeq.map { case (c, ws) =>
+        (c, ws.map(_._2).max, ws.map(_._3).min) }
     val points = GraftLakeFileIndex.pointPredicates(dataFilters)
     if (ranges.isEmpty && points.isEmpty) base
     else {
@@ -2875,8 +2876,7 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
   * answers "might file `p` contain …?" from the stats + bloom
   * sidecars, parsed once per sidecar in [[LakeMetaCache]] (each lookup
   * is one `getFileStatus`), and conservative at every gap — no sidecar
-  * / no entry / unrenderable value → admit. Values arrive as catalyst
-  * internals (boxed numerics / UTF8String). */
+  * / no entry / unrenderable value → admit. */
 private[engine] final class SidecarProbe(spark: SparkSession,
     lakeDir: String) {
   private val partCols = GraftLakePartitions.of(spark, lakeDir)
@@ -2920,16 +2920,19 @@ private[engine] final class SidecarProbe(spark: SparkSession,
     GraftLakePartitions.entryOfDepth(parent, entryDepth)
 
   def stats(d: String, c: String): Map[String, (Double, Double, Long)] =
-    aliasesOf(c).map(n => VersionedLake.fileStats(spark, lakeDir, d, n))
+    aliasesOf(c).map(n => VersionedLake.statsFor(spark, lakeDir, d, n))
       .foldLeft(Map.empty[String, (Double, Double, Long)])(_ ++ _)
 
   def bloom(d: String, c: String): Map[String, java.util.BitSet] =
-    aliasesOf(c).map(n => VersionedLake.fileBloom(spark, lakeDir, d, n))
+    aliasesOf(c).map(n => VersionedLake.bloomFor(spark, lakeDir, d, n))
       .foldLeft(Map.empty[String, java.util.BitSet])(_ ++ _)
 
   /** Can file `p` contain ANY of `values` in column `c`? The runtime
     * pruning predicate — OR-of-points where the static path answers
-    * single ranges/points. */
+    * single ranges/points. Values are either runtime IN-list values of
+    * a [[GraftLakeFileIndex.runtimeProbeable]] column, or a pushed V1
+    * filter's external values (a date is a `java.sql.Date` or
+    * `LocalDate` there, which renders to nothing and admits). */
   def admitAnyOf(p: Path, c: String, values: Seq[Any]): Boolean = {
     val d = entryOf(p.getParent)
     val f = p.getName
@@ -2973,50 +2976,81 @@ object GraftLakeFileIndex {
       case _ => None
     }
     filters.flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        num(l).map(v => (a.name, v, v))
-      case EqualTo(l: Literal, a: Attribute) =>
-        num(l).map(v => (a.name, v, v))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        num(l).map(v => (a.name, v, Double.PositiveInfinity))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        num(l).map(v => (a.name, v, Double.PositiveInfinity))
-      case LessThan(a: Attribute, l: Literal) =>
-        num(l).map(v => (a.name, Double.NegativeInfinity, v))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        num(l).map(v => (a.name, Double.NegativeInfinity, v))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        num(l).map(v => (a.name, Double.NegativeInfinity, v))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        num(l).map(v => (a.name, Double.NegativeInfinity, v))
-      case LessThan(l: Literal, a: Attribute) =>
-        num(l).map(v => (a.name, v, Double.PositiveInfinity))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        num(l).map(v => (a.name, v, Double.PositiveInfinity))
+      case EqualTo(Ranged(a), l: Literal) => num(l).map(v => (a, v, v))
+      case EqualTo(l: Literal, Ranged(a)) => num(l).map(v => (a, v, v))
+      case GreaterThan(Ranged(a), l: Literal) =>
+        num(l).map(v => (a, v, Double.PositiveInfinity))
+      case GreaterThanOrEqual(Ranged(a), l: Literal) =>
+        num(l).map(v => (a, v, Double.PositiveInfinity))
+      case LessThan(Ranged(a), l: Literal) =>
+        num(l).map(v => (a, Double.NegativeInfinity, v))
+      case LessThanOrEqual(Ranged(a), l: Literal) =>
+        num(l).map(v => (a, Double.NegativeInfinity, v))
+      case GreaterThan(l: Literal, Ranged(a)) =>
+        num(l).map(v => (a, Double.NegativeInfinity, v))
+      case GreaterThanOrEqual(l: Literal, Ranged(a)) =>
+        num(l).map(v => (a, Double.NegativeInfinity, v))
+      case LessThan(l: Literal, Ranged(a)) =>
+        num(l).map(v => (a, v, Double.PositiveInfinity))
+      case LessThanOrEqual(l: Literal, Ranged(a)) =>
+        num(l).map(v => (a, v, Double.PositiveInfinity))
       case _ => None
     }
   }
 
+  /** The column a range bound applies to: a bare attribute, or a
+    * bigint attribute cast to double — the shape a double bound on a
+    * bigint column plans as (Spark's `UnwrapCastInBinaryComparison`
+    * unwraps the narrower numeric casts to double, not long→double).
+    * The cast is monotone and the sidecar records its bounds as
+    * doubles, so the window test stays exact. */
+  private object Ranged {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    def unapply(e: Expression): Option[String] = e match {
+      case a: Attribute => Some(a.name)
+      case Cast(a: Attribute, DoubleType, _, _) if a.dataType == LongType =>
+        Some(a.name)
+      case _ => None
+    }
+  }
+
+  /** Column types a scan offers for runtime (join-driven) filtering:
+    * their catalyst values are boxed integrals, fractionals or strings,
+    * which [[SidecarProbe.admitAnyOf]] compares with the sidecars as
+    * they are. A date's or timestamp's value is a bare day or
+    * microsecond count, which the bloom's string rendering would not
+    * match, so those types are not offered. */
+  private[engine] def runtimeProbeable(
+      dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType | StringType => true
+      case _ => false
+    }
+  }
+
   /** Bloom probe positions per equality filter. The hashed rendering
-    * must match the commit side's `cast("string")`: integral and string
-    * literals round-trip exactly; fractional/other types are NOT probed
-    * (their `toString` may differ from Spark's cast) — conservative. */
+    * is Spark's own `cast(... as string)` of the literal, as on the
+    * commit side, and is taken only for an integral, string or date
+    * column: the literal holds a catalyst internal (a date is its day
+    * count), so the column's type — not the value's class — decides.
+    * Fractional columns (`-0.0` = `0.0` renders twice), timestamps
+    * (rendered in the session time zone) and every other type are NOT
+    * probed — conservative. */
   private[engine] def pointPredicates(filters: Seq[Expression])
       : Seq[(String, Seq[Int])] = {
-    def render(l: Literal): Option[String] = l.value match {
-      case i: java.lang.Integer => Some(i.toString)
-      case i: java.lang.Long => Some(i.toString)
-      case i: java.lang.Short => Some(i.toString)
-      case i: java.lang.Byte => Some(i.toString)
-      case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
-      case s: String => Some(s)
+    import org.apache.spark.sql.types._
+    def probe(a: Attribute, l: Literal) = a.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType |
+           DateType if l.value != null && l.dataType == a.dataType =>
+        Some((a.name, VersionedLake.bloomWantPositions(
+          Cast(l, StringType).eval().toString)))
       case _ => None
     }
     filters.flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        render(l).map(v => (a.name, VersionedLake.bloomWantPositions(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        render(l).map(v => (a.name, VersionedLake.bloomWantPositions(v)))
+      case EqualTo(a: Attribute, l: Literal) => probe(a, l)
+      case EqualTo(l: Literal, a: Attribute) => probe(a, l)
       case _ => None
     }
   }

@@ -1114,43 +1114,19 @@ object VersionedLake {
     * ([[LakeMetaCache]]) since process start. */
   def metaCacheStats: MetaCacheStats = LakeMetaCache.stats
 
-  /** Sidecar lookups for the DSv2 file-pruning path — same parsers the
-    * library probes use, so the two read paths cannot drift. */
-  private[engine] def fileStats(spark: SparkSession, dir: String,
-      dataDir: String, c: String): Map[String, (Double, Double, Long)] =
-    statsFor(spark, dir, dataDir, c)
-
-  private[engine] def fileBloom(spark: SparkSession, dir: String,
-      dataDir: String, c: String): Map[String, java.util.BitSet] =
-    bloomFor(spark, dir, dataDir, c)
-
   private[engine] def bloomWantPositions(value: String): Seq[Int] =
     (0 until BloomHashes).map(bloomPosLocal(value, _, BloomBits))
 
   /** Distinct sidecar-indexed columns across `dataDirs` (stats or
-    * bloom), first-seen order — driver-side, one small sidecar read
-    * per dir, bounded by the snapshot's dir count. Used to pick the
+    * bloom), from the cached sidecar parses ([[LakeMetaCache]]) —
+    * driver-side, bounded by the snapshot's dir count. Used to pick the
     * ONE attribute the COW scan advertises for runtime group filtering
     * (a multi-attribute set makes Spark build a struct-IN the V2
     * predicate translation rejects — single-column or nothing). */
   private[engine] def indexedCols(spark: SparkSession, dir: String,
-      dataDirs: Seq[String]): Seq[String] = {
-    val f = fs(spark, dir)
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    dataDirs.foreach { d =>
-      Seq(s"$dir/_stats/$d.stats", s"$dir/_bloom/$d.bloom").foreach { sp =>
-        val p = new Path(sp)
-        if (f.exists(p)) {
-          val in = f.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .map(_.split('\t')).filter(_.length >= 2)
-            .foreach(a => seen += a(1))
-          finally in.close()
-        }
-      }
-    }
-    seen.toSeq
-  }
+      dataDirs: Seq[String]): Seq[String] =
+    dataDirs.flatMap(d => statsSidecar(spark, dir, d)._2.keys ++
+      bloomSidecar(spark, dir, d).keys).distinct
 
   def readLatest(spark: SparkSession, dir: String): DataFrame = {
     val t = tip(spark, dir)
@@ -3067,8 +3043,8 @@ object VersionedLake {
     * thrown: the file it described simply loses its range and is
     * always read — a corrupt 1 KiB sidecar must not brick every read
     * of an otherwise-healthy version. */
-  private def statsFor(spark: SparkSession, dir: String, d: String,
-      c: String): Map[String, (Double, Double, Long)] =
+  private[engine] def statsFor(spark: SparkSession, dir: String,
+      d: String, c: String): Map[String, (Double, Double, Long)] =
     statsSidecar(spark, dir, d)._2.getOrElse(c, Map.empty)
 
   /** Every column's [[statsFor]] lines of one data dir, after whether
@@ -3129,14 +3105,12 @@ object VersionedLake {
     * alias set computed ONCE per operation ([[GraftLakeMapping
     * .aliases]]); unmapped callers pass Seq(c). A file carries one
     * name per field id, and aliases leave out names two ids share, so
-    * the merge cannot collide. With `folding`, a sidecar without
-    * [[StatsHeader]] gives no line, so the count/min/max fold scans the
-    * dir. */
+    * the merge cannot collide. A sidecar without [[StatsHeader]] gives
+    * no line, so the count/min/max fold scans the dir. */
   private def statsForNames(spark: SparkSession, dir: String, d: String,
-      names: Seq[String], folding: Boolean = false)
-      : Map[String, (Double, Double, Long)] = {
+      names: Seq[String]): Map[String, (Double, Double, Long)] = {
     val (headed, cols) = statsSidecar(spark, dir, d)
-    if (folding && !headed) Map.empty
+    if (!headed) Map.empty
     else names.map(cols.getOrElse(_, Map.empty))
       .foldLeft(Map.empty[String, (Double, Double, Long)])(_ ++ _)
   }
@@ -3154,10 +3128,11 @@ object VersionedLake {
   /** Read a specific FILE subset of the lake, BY FIELD ID when the
     * lake is column-mapped: a name-matched read nulls renamed columns
     * out of pre-rename files, which silently drops their rows past any
-    * later filter (or skews a min/max) — the library probes' analogue
-    * of the survivorReader discipline. Data columns only (these are
-    * leaf files; partition values live in dir names). Returns the
-    * session the read plans against so DV application joins on it. */
+    * later filter (or skews a min/max) — the survivorReader discipline
+    * for [[statsAggregate]]'s scanned fraction. Data columns only
+    * (these are leaf files; partition values live in dir names).
+    * Returns the session the read plans against so DV application
+    * joins on it. */
   private def readFilesIdMatched(spark: SparkSession, dir: String,
       tipV: Int, files: Seq[String]): (SparkSession, DataFrame) =
     if (!GraftLakeMapping.enabled(spark, dir))
@@ -3235,7 +3210,7 @@ object VersionedLake {
     // each dir's stats sidecar looked up once, for the split and the
     // fold; a sidecar without the header gives no line, so its dir scans
     val (meta, scan) = snapshot.map(d =>
-      d -> statsForNames(spark, dir, d, cNames, folding = true)).partition {
+      d -> statsForNames(spark, dir, d, cNames)).partition {
       case (d, stats) =>
         val files = dataFiles(spark, dir, d).map(_.getName)
         files.nonEmpty && files.forall(stats.contains)
@@ -3289,7 +3264,7 @@ object VersionedLake {
     val cNames = aliasNamesOf(spark, dir, c)
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     vs.nonEmpty && readManifest(spark, dir, vs.last).forall { d =>
-      val stats = statsForNames(spark, dir, d, cNames, folding = true)
+      val stats = statsForNames(spark, dir, d, cNames)
       dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
   }
@@ -3687,42 +3662,18 @@ object VersionedLake {
     committed
   }
 
-  /** Range probe served through the file-level stats: of the latest
-    * snapshot's part files, read ONLY those whose recorded [min, max]
-    * for `c` intersects [lo, hi] (files from dirs without stats are
-    * always read — skipping is an optimization, never a correctness
-    * gate, and the row filter is applied regardless). The pruning
-    * decision is driver-side metadata only. */
+  /** Range probe over the latest snapshot: [[readLatest]] filtered to
+    * `lo <= c <= hi`, with [[readLatest]]'s schema (partition columns
+    * included). The filter reaches the snapshot's file index, so a file
+    * whose recorded [min, max] for `c` misses [lo, hi] is not read — the
+    * one admission rule a `graftlake` SQL read uses
+    * ([[GraftLakeFileIndex]]); a file without a recorded range is
+    * always read. [[GraftLakeDataSource.filesRead]] on the result counts
+    * the files the scan reads. */
   def readSkipping(spark: SparkSession, dir: String, c: String,
       lo: Double, hi: Double): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    // alias-fold on mapped lakes (pre-rename files' ranges live under
-    // their own era's name); the admitted files then read BY FIELD ID
-    // — a name-matched read would null `c` out of pre-rename files and
-    // the range filter would silently drop their rows
-    val cNames = aliasNamesOf(spark, dir, c)
-    val files = readManifest(spark, dir, vs.last).flatMap { d =>
-      val all = dataFiles(spark, dir, d)
-      val ranges = statsForNames(spark, dir, d, cNames)
-      if (ranges.isEmpty) all
-      else
-        // a file with no recorded range for c cannot be skipped
-        all.filter(p => ranges.get(p.getName)
-          .forall { case (mn, mx, _) => mx >= lo && mn <= hi })
-    }
-    val snap =
-      if (files.isEmpty) readAt(spark, dir, vs.last).limit(0)
-      // deletion vectors apply to the raw file scan (identity when
-      // none are live) — skipping loses no vectors: a skipped file's
-      // positions cover rows the range filter would drop anyway
-      else {
-        val (prs, base) = readFilesIdMatched(spark, dir, vs.last,
-          files.map(_.toString))
-        dropDvRows(prs, dir, base, vs.last)
-      }
-    snap.filter(col(c) >= lo && col(c) <= hi)
+    readLatest(spark, dir).filter(col(c) >= lo && col(c) <= hi)
   }
 
   // ---- bloom file-skipping index ---------------------------------------
@@ -3840,8 +3791,13 @@ object VersionedLake {
   /** Bloom lines of one data dir for `c`: file → BitSet. Malformed
     * lines are dropped, not thrown — same degrade-to-read contract as
     * [[statsFor]] (a file without a parseable bloom is always read). */
-  private def bloomFor(spark: SparkSession, dir: String, d: String,
-      c: String): Map[String, java.util.BitSet] =
+  private[engine] def bloomFor(spark: SparkSession, dir: String,
+      d: String, c: String): Map[String, java.util.BitSet] =
+    bloomSidecar(spark, dir, d).getOrElse(c, Map.empty)
+
+  /** Every column's [[bloomFor]] lines of one data dir. */
+  private def bloomSidecar(spark: SparkSession, dir: String, d: String)
+      : Map[String, Map[String, java.util.BitSet]] =
     sidecar(spark, dir, "bloom", d) { a =>
       // exact-length contract (see writeBloomFor): anything else is a
       // torn line, and a wrong-length bitmap must degrade to reading
@@ -3849,56 +3805,26 @@ object VersionedLake {
       if (a.length != 3 || a(2).length != BloomBits / 4) None
       else scala.util.Try(java.util.BitSet.valueOf(a(2).sliding(2, 2)
         .map(Integer.parseInt(_, 16).toByte).toArray)).toOption
-    }._2.getOrElse(c, Map.empty)
+    }._2
 
-  /** Point-lookup over the latest snapshot reading ONLY files whose
-    * bloom may contain `value` (files without a recorded bloom are
-    * conservatively read — optimization, never a correctness gate).
-    * The file decision is driver-side metadata; the returned frame
-    * still applies the exact TYPED equality filter (`lit(value)`, not
-    * a string-cast comparison — the predicate must reach the parquet
-    * reader as a PushedFilter so row-group stats prune WITHIN the
-    * files the bloom admitted), so a bloom false positive costs IO,
-    * not wrong rows. `inputFiles` on the result is the skipping
-    * evidence, as with [[readSkipping]]. Bloom membership hashes the
-    * value's STRING rendering — pass the same type the column holds
-    * (a Long for a bigint key), whose `toString` matches the commit
-    * side's `cast("string")`. */
+  /** Point lookup over the latest snapshot: [[readLatest]] filtered to
+    * `c = value`, with [[readLatest]]'s schema. The equality is TYPED
+    * (`lit(value)`, not a string-cast comparison), so it reaches the
+    * parquet reader as a pushed filter and row-group stats prune within
+    * the files read, and it reaches the snapshot's file index, which
+    * skips files whose bloom cannot hold `value` by the one admission
+    * rule a `graftlake` SQL read uses ([[GraftLakeFileIndex]]); a file
+    * without a recorded bloom is always read, and a false positive
+    * costs IO, not wrong rows. Bloom membership hashes the value's
+    * STRING rendering, so only a key of an integral, string or date
+    * column prunes (a fractional or timestamp one reads every file) —
+    * pass the type the column holds (a Long for a bigint key).
+    * [[GraftLakeDataSource.filesRead]] on the result counts the files
+    * the scan reads. */
   def readBloomProbe(spark: SparkSession, dir: String, c: String,
       value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    val want = (0 until BloomHashes)
-      .map(bloomPosLocal(value.toString, _, BloomBits))
-    // alias-fold + id-matched read, as readSkipping: a pre-rename
-    // file's bloom lives under its own era's name, and its rows must
-    // bind `c` by field id or the equality filter silently drops them
-    val cNames = aliasNamesOf(spark, dir, c)
-    val files = readManifest(spark, dir, vs.last).flatMap { d =>
-      val all = dataFiles(spark, dir, d)
-      val blooms = cNames.map(bloomFor(spark, dir, d, _))
-        .foldLeft(Map.empty[String, java.util.BitSet])(_ ++ _)
-      if (blooms.isEmpty) all
-      else all.filter(p => blooms.get(p.getName)
-        .forall(b => want.forall(b.get)))
-    }
-    val snap =
-      if (files.isEmpty)
-        // empty WITHOUT referencing any file, so `inputFiles` honestly
-        // reports the zero reads the bloom decided on
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          readAt(spark, dir, vs.last).schema)
-      // deletion vectors apply to the probe scan too (identity when
-      // none are live) — a bloom admit of a vectored row must not
-      // resurrect it
-      else {
-        val (prs, base) = readFilesIdMatched(spark, dir, vs.last,
-          files.map(_.toString))
-        dropDvRows(prs, dir, base, vs.last)
-      }
-    snap.filter(col(c) === lit(value))
+    readLatest(spark, dir).filter(col(c) === lit(value))
   }
 
   /** Grace window for [[vacuum]]'s unreferenced-dir sweep. Every commit

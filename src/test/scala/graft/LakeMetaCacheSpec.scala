@@ -34,22 +34,6 @@ class LakeMetaCacheSpec extends AnyFunSuite {
     finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** Files the executed V1 scans of `df` read (their `numFiles`). */
-  private def v1FilesRead(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        walk(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        walk(q.plan)
-      case o => o +: o.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.sum
-  }
-
   test("snapshot reads of a 40-dir lake plan without a listing job, and " +
       "a second plan of the same version is served from the cache") {
     val base = tempDir("lmc-jobs")
@@ -96,7 +80,7 @@ class LakeMetaCacheSpec extends AnyFunSuite {
     val pruned = snapshot.filter(col("id").between(1250, 1420))
     assert(rows(pruned) ==
       rows(snapshot).filter(r => (1250L to 1420L).contains(r.head)))
-    val read = v1FilesRead(pruned)
+    val read = GraftLakeDataSource.filesRead(pruned)
     assert(read > 0 && read < snapshot.inputFiles.length,
       s"readAt(v).filter read $read of ${snapshot.inputFiles.length} files")
   }

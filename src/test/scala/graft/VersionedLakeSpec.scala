@@ -510,8 +510,8 @@ class VersionedLakeSpec extends AnyFunSuite {
         .repartitionByRange(4, col("id")).sortWithinPartitions(col("id")),
       dir, statsCols = Seq("id"))
     val probe = VersionedLake.readSkipping(spark, dir, "id", 120d, 180d)
-    assert(probe.inputFiles.length == 1,
-      s"expected one file, read ${probe.inputFiles.length}")
+    assert(GraftLakeDataSource.filesRead(probe) == 1,
+      s"expected one file, read ${GraftLakeDataSource.filesRead(probe)}")
     assert(probe.select("id").as[Long].collect().sorted.toSeq ==
       (120L to 180L))
     // outside every range: zero files, empty result, schema intact
@@ -526,7 +526,7 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(across.select("id").as[Long].collect().sorted.toSeq ==
       expect.select("id").as[Long].collect().sorted.toSeq)
     // skipped: the [0,99] file at least; unstatsed files never skipped
-    assert(across.inputFiles.length <
+    assert(GraftLakeDataSource.filesRead(across) <
       VersionedLake.readLatest(spark, dir).inputFiles.length)
   }
 
@@ -598,20 +598,21 @@ class VersionedLakeSpec extends AnyFunSuite {
     // every present key resolves to exactly its row, reading < total
     Seq(0L, 137L, 599L).foreach { id =>
       val p = VersionedLake.readBloomProbe(spark, dir, "id", id)
-      assert(p.inputFiles.length < total,
-        s"id $id read ${p.inputFiles.length}/$total")
+      assert(GraftLakeDataSource.filesRead(p) < total,
+        s"id $id read ${GraftLakeDataSource.filesRead(p)}/$total")
       assert(p.select("payload").as[String].collect().toSeq == Seq(s"v$id"))
     }
     // absent key: bloom-negative on every file → zero reads, zero rows
     val absent = VersionedLake.readBloomProbe(spark, dir, "id", 123456789L)
-    assert(absent.inputFiles.isEmpty, s"absent read ${absent.inputFiles.length}")
+    assert(GraftLakeDataSource.filesRead(absent) == 0,
+      s"absent read ${GraftLakeDataSource.filesRead(absent)}")
     assert(absent.isEmpty)
     // a second bloom commit appends; probes span both versions' files
     VersionedLake.commitWithBloom(
       Seq((1000L, "v1000")).toDF("id", "payload"), dir, keyCol = "id")
     val late = VersionedLake.readBloomProbe(spark, dir, "id", 1000L)
     assert(late.select("payload").as[String].collect().toSeq == Seq("v1000"))
-    assert(late.inputFiles.length <= 2)
+    assert(GraftLakeDataSource.filesRead(late) <= 2)
     // exhaustive no-lost-rows sweep: union of all probed ids == table
     val all = VersionedLake.readLatest(spark, dir)
     assert(all.count() == 601)
@@ -623,9 +624,10 @@ class VersionedLakeSpec extends AnyFunSuite {
     val pc = VersionedLake.readBloomProbe(spark, dir, "id", 137L)
     assert(pc.select("payload").as[String].collect().toSeq == Seq("v137"))
     if (afterTotal > 1)
-      assert(pc.inputFiles.length < afterTotal)
-    assert(VersionedLake.readBloomProbe(spark, dir, "id", 123456789L)
-      .inputFiles.isEmpty, "post-compaction absent key must read nothing")
+      assert(GraftLakeDataSource.filesRead(pc) < afterTotal)
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "id", 123456789L)) == 0,
+      "post-compaction absent key must read nothing")
     // and the commit also embedded parquet's NATIVE row-group bloom on
     // the key (the second skipping level, consulted by the pushed
     // equality filter inside admitted files)
@@ -659,10 +661,10 @@ class VersionedLakeSpec extends AnyFunSuite {
       spark.range(100, 200).toDF("id").coalesce(1), dir,
       statsCols = Seq("id"), bloomCol = Some("id"))
     // sanity: both index classes skip while intact
-    assert(VersionedLake.readSkipping(spark, dir, "id", 0, 50)
-      .inputFiles.length == 1)
-    assert(VersionedLake.readBloomProbe(spark, dir, "id", 150L)
-      .inputFiles.length == 1)
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readSkipping(spark, dir, "id", 0, 50)) == 1)
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "id", 150L)) == 1)
     // corrupt EVERY sidecar byte-wise (truncate + garbage lines)
     Seq("_stats", "_bloom").foreach { kind =>
       fs.listStatus(new Path(s"$dir/$kind")).foreach { st =>
@@ -839,21 +841,21 @@ class VersionedLakeSpec extends AnyFunSuite {
     val total = VersionedLake.readLatest(spark, dir).inputFiles.length
     Seq(("ak", "a137"), ("bk", "b159")).foreach { case (c, v) =>
       val p = VersionedLake.readBloomProbe(spark, dir, c, v)
-      assert(p.inputFiles.length < total,
-        s"$c lookup must prune (${p.inputFiles.length}/$total)")
+      assert(GraftLakeDataSource.filesRead(p) < total,
+        s"$c lookup must prune (${GraftLakeDataSource.filesRead(p)}/$total)")
       assert(p.count() >= 1, s"$c=$v must find its row(s)")
     }
     // absent keys prune to zero on EITHER column
-    assert(VersionedLake.readBloomProbe(spark, dir, "ak", "nope")
-      .inputFiles.isEmpty)
-    assert(VersionedLake.readBloomProbe(spark, dir, "bk", "nope")
-      .inputFiles.isEmpty)
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "ak", "nope")) == 0)
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "bk", "nope")) == 0)
     // a deleteRange rewrite re-indexes BOTH declared columns
     VersionedLake.deleteRange(spark, dir, "id", 0, 9, Seq("id"))
     Seq(("ak", "a137"), ("bk", "b159")).foreach { case (c, v) =>
       val p = VersionedLake.readBloomProbe(spark, dir, c, v)
       assert(p.count() >= 1, s"post-rewrite $c=$v lost rows")
-      assert(p.inputFiles.length <
+      assert(GraftLakeDataSource.filesRead(p) <
         VersionedLake.readLatest(spark, dir).inputFiles.length,
         s"post-rewrite $c lookup must still prune")
     }
@@ -869,11 +871,13 @@ class VersionedLakeSpec extends AnyFunSuite {
       spark.range(100, 200).toDF("id").coalesce(1), dir,
       statsCols = Seq("id"), bloomCol = Some("id"))
     // range index answers: the [0,50] probe reads only the first file
-    assert(VersionedLake.readSkipping(spark, dir, "id", 0, 50)
-      .inputFiles.length == 1, "range probe did not skip")
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readSkipping(spark, dir, "id", 0, 50)) == 1,
+      "range probe did not skip")
     // bloom index answers THE SAME commit: key 150 prunes to file 2
-    assert(VersionedLake.readBloomProbe(spark, dir, "id", 150L)
-      .inputFiles.length == 1, "bloom probe did not skip")
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "id", 150L)) == 1,
+      "bloom probe did not skip")
     // and the metadata aggregate is fully covered
     assert(VersionedLake.statsCovered(spark, dir, "id"))
     assert(VersionedLake.statsAggregate(spark, dir, "id") ==
@@ -886,8 +890,9 @@ class VersionedLakeSpec extends AnyFunSuite {
       "compaction dropped the stats sidecar")
     assert(VersionedLake.statsAggregate(spark, dir, "id") ==
       ((200L, 0.0, 199.0)))
-    assert(VersionedLake.readBloomProbe(spark, dir, "id", 987654L)
-      .inputFiles.isEmpty, "compaction dropped the bloom sidecar")
+    assert(GraftLakeDataSource.filesRead(
+      VersionedLake.readBloomProbe(spark, dir, "id", 987654L)) == 0,
+      "compaction dropped the bloom sidecar")
     assert(ids(VersionedLake.readBloomProbe(spark, dir, "id", 150L)) ==
       Seq(150L))
   }
