@@ -47,7 +47,7 @@ object Backfill {
         VersionedLake.readAt(spark, inDir, toV)
           .filter(col(partCol).isin(affected: _*)))
       val v = VersionedLake.replaceWhereIn(spark, outDir, partCol,
-        affected, recomputed, Seq(partCol))
+        affected, recomputed)
       (v, affected)
     }
   }

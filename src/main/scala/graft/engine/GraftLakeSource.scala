@@ -89,29 +89,10 @@ final class GraftLakeDataSource
         require(t.nonEmpty, s"no versions published at $lakeDir")
         t.get
       }
-    // snapshots may span schema-evolving commits — same mergeSchema
-    // semantics as VersionedLake.readAt
-    val merged = new java.util.HashMap[String, String](
-      options.asCaseSensitiveMap())
-    merged.put("mergeSchema", "true")
-    // column-mapping lakes: id-matching read/write confs ride the
-    // table OPTIONS (they reach the scan's and write's hadoop
-    // configuration — scoped to exactly these tables, never a session
-    // conf mutation)
-    if (GraftLakeMapping.enabled(spark, lakeDir))
-      GraftLakeMapping.confOptions.foreach { case (k, v) =>
-        merged.put(k, v) }
     val cdf = Option(options.get(GraftLakeDataSource.ReadChangeFeed))
       .exists(_.trim.equalsIgnoreCase("true"))
-    // schema from the version's OWN manifest when its writer declared
-    // one — the cold plan then skips the O(live files) footer-merge
-    // inference (library-committed versions without a declaration
-    // still infer)
-    val declared = schema.orElse(
-      VersionedLake.manifestSchema(spark, lakeDir, version))
-    new GraftLakeTable(lakeDir, spark,
-      new CaseInsensitiveStringMap(merged), Seq(lakeDir), declared,
-      lakeDir, version, cdf)
+    GraftLakeDataSource.snapshotTable(spark, lakeDir, version,
+      options.asCaseSensitiveMap(), schema, cdf)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -124,6 +105,49 @@ final class GraftLakeDataSource
 }
 
 object GraftLakeDataSource {
+  /** The table of snapshot `version` — over its live entries, or over
+    * `entries` alone (a subset of them) when given. `options` are the
+    * caller's read options; the snapshot ones are added here. */
+  private[engine] def snapshotTable(spark: SparkSession, lakeDir: String,
+      version: Int, options: java.util.Map[String, String],
+      schema: Option[StructType] = None, cdf: Boolean = false,
+      entries: Option[Seq[String]] = None): GraftLakeTable = {
+    // snapshots may span schema-evolving commits — same mergeSchema
+    // semantics as VersionedLake.readAt
+    val merged = new java.util.HashMap[String, String](options)
+    merged.put("mergeSchema", "true")
+    // column-mapping lakes: id-matching read/write confs ride the
+    // table OPTIONS (they reach the scan's and write's hadoop
+    // configuration — scoped to exactly these tables, never a session
+    // conf mutation)
+    if (GraftLakeMapping.enabled(spark, lakeDir))
+      GraftLakeMapping.confOptions.foreach { case (k, v) =>
+        merged.put(k, v) }
+    // schema from the version's OWN manifest when its writer declared
+    // one — the cold plan then skips the O(live files) footer-merge
+    // inference (library-committed versions without a declaration
+    // still infer)
+    val declared = schema.orElse(
+      VersionedLake.manifestSchema(spark, lakeDir, version))
+    new GraftLakeTable(lakeDir, spark,
+      new CaseInsensitiveStringMap(merged), Seq(lakeDir), declared,
+      lakeDir, version, cdf, entries)
+  }
+
+  /** Snapshot `version` as a frame over its [[GraftLakeTable]], planned
+    * as a `graftlake` load plans it — restricted to `entries` when
+    * given, with deletion vectors as of `version`, field ids matched on
+    * mapped lakes and partition columns from the entry names. */
+  private[engine] def snapshotFrame(spark: SparkSession, lakeDir: String,
+      version: Int, entries: Option[Seq[String]] = None)
+      : DataFrame = {
+    val options = java.util.Map.of("path", lakeDir, VersionAsOf,
+      version.toString)
+    org.apache.spark.sql.graft.RelationBridge.ofTable(spark,
+      snapshotTable(spark, lakeDir, version, options, entries = entries),
+      new CaseInsensitiveStringMap(options))
+  }
+
   /** Parse a time-travel option value (`timestampAsOf` /
     * `startingTimestamp`) to epoch millis. Accepted shapes:
     *
@@ -1029,7 +1053,7 @@ object GraftLakeTable {
 final class GraftLakeTable(tableName: String, spark: SparkSession,
     options: CaseInsensitiveStringMap, paths: Seq[String],
     userSpecifiedSchema: Option[StructType], lakeDir: String, version: Int,
-    cdf: Boolean = false)
+    cdf: Boolean = false, entries: Option[Seq[String]] = None)
   extends org.apache.spark.sql.connector.catalog.Table
   with org.apache.spark.sql.connector.catalog.SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -1045,7 +1069,10 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     new ParquetTable(tableName, spark, options, paths, userSpecifiedSchema,
         classOf[ParquetFileFormat]) {
       override lazy val fileIndex: PartitioningAwareFileIndex =
-        new GraftLakeFileIndex(spark, lakeDir, snapshotVersion)
+        entries.fold(
+          new GraftLakeFileIndex(spark, lakeDir, snapshotVersion))(es =>
+          new GraftLakeFileIndex(spark, lakeDir,
+            es.map(e => new Path(s"$lakeDir/$e"))))
     }
 
   /** Table creation options merged under call-site options — the same
@@ -1256,7 +1283,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     val partCols = GraftLakePartitions.of(spark, lakeDir)
     if (partCols.isEmpty)
       // the metadata-delete survivor rewrite id-matches on mapped
-      // lakes (VersionedLake.survivorReader) and the DV position scan
+      // lakes (VersionedLake.rewriteEntries) and the DV position scan
       // reads through the declared schema, so neither path excludes
       // column mapping anymore. A DELETION-VECTOR lake takes this
       // path for EVERY exactly-replayable predicate: the delete
@@ -1441,8 +1468,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
         ()
       case Some(GraftLakeDelete.Range(c, lo, hi)) =>
         if (lo <= hi) {
-          VersionedLake.deleteRange(spark, lakeDir, c, lo, hi,
-            GraftLakeDataSource.numericCols(schema()))
+          VersionedLake.deleteRange(spark, lakeDir, c, lo, hi)
           ()
         } // empty interval: nothing can match — publish nothing
       case None => throw new UnsupportedOperationException(
@@ -1595,10 +1621,14 @@ private[engine] object GraftLakeDelete {
   * atomic versioned commit: rows matching the condition are deleted,
   * the new data appended, published together as a single manifest swap.
   * The condition is evaluated EXACTLY (the full pushed-filter algebra,
-  * [[GraftLakeDelete.toColumn]]); when it additionally composes into
-  * one numeric interval, the stats sidecars prune the rewrite to the
-  * intersecting data dirs — every other live dir is carried by manifest
-  * reference, zero IO, same shape as [[VersionedLake.deleteRange]]. */
+  * [[GraftLakeDelete.toColumn]]). The dirs it rewrites are the ones
+  * [[VersionedLake.entriesTouched]] cannot clear — partition conjuncts
+  * by entry name, an interval by the stats sidecars, `=`/`IN` by stats
+  * and bloom — and their survivors go through the library's survivor
+  * rewrite ([[VersionedLake.rewriteEntries]]); every other live dir is
+  * carried by manifest reference, zero IO, the same selection and
+  * rewrite as [[VersionedLake.deleteRange]] and
+  * [[VersionedLake.replaceWhereIn]]. */
 final class GraftLakeWriteBuilder(table: GraftLakeTable, lakeDir: String,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -1752,11 +1782,11 @@ final class GraftLakeWrite(
       * survivor IO (rows of an entry share its partition values, so
       * the condition drops entries whole — INSERT OVERWRITE ...
       * PARTITION, the Y/M/D backfill shape). A DATA-COLUMN condition
-      * takes the partitioned COW path: the rewrite set is bounded
-      * first by the condition's partition-decidable conjuncts (a
-      * partition they falsify cannot hold a matching row — dropped at
-      * metadata cost), then by the stats sidecars when the condition
-      * is one numeric interval; the surviving rows of the touched
+      * takes the partitioned COW path: the rewrite set is the entries
+      * [[VersionedLake.entriesTouched]] cannot clear (a partition the
+      * condition's partition conjuncts falsify holds no matching row,
+      * nor does a file whose sidecars rule it out — both dropped at
+      * metadata cost); the surviving rows of the touched
       * partitions rewrite INTO THE SAME partition leaves of the staged
       * dir (partition boundaries never crossed — the entries-are-
       * partition-leaves invariant holds by construction), every other
@@ -1819,36 +1849,12 @@ final class GraftLakeWrite(
               Some(tableSchema.json), noDvSince = tipV)
             ()
           } else {
-            // partitioned COW: Delta's arbitrary replaceWhere. On a
-            // COLUMN-MAPPING lake the survivor read id-matches through
-            // a derived session with the DECLARED schema (partition
-            // values still parse from the dir names via basePath) and
-            // the rewrite re-stamps the ids — a name-matched read
-            // would null renamed columns out of pre-rename files.
-            val mapped = GraftLakeMapping.enabled(spark, lakeDir)
-            val readTouched: Seq[String] => org.apache.spark.sql.DataFrame =
-              if (!mapped)
-                es => GraftLakePartitions.readEntries(spark, lakeDir,
-                  es, partCols, dropDvAt = tipV)
-              else {
-                val s2 = spark.newSession()
-                s2.conf.set("spark.sql.parquet.fieldId.read.enabled",
-                  "true")
-                es => es.groupBy(_.takeWhile(_ != '/')).toSeq
-                  .sortBy(_._1).map { case (dd, g) =>
-                    // declared schema carries the field ids; its
-                    // partition columns fill from the `c=v` dir names.
-                    // Rows earlier deletion vectors deleted are NOT
-                    // survivors here either — the id-matched branch
-                    // must apply them like the unmapped one, or the
-                    // triple composition would resurrect deletes
-                    VersionedLake.dropDvRows(s2, lakeDir,
-                      s2.read.schema(tableSchema)
-                        .option("basePath", s"$lakeDir/$dd")
-                        .parquet(g.map(e => s"$lakeDir/$e"): _*),
-                      tipV.getOrElse(0))
-                  }.reduce(_.unionByName(_))
-              }
+            // partitioned COW: Delta's arbitrary replaceWhere. The
+            // survivors of the touched entries rewrite INTO the staged
+            // dir's own partition leaves ([[VersionedLake
+            // .rewriteEntries]]: deletion vectors applied, field ids
+            // matched and re-stamped). Three-valued logic: a row where
+            // the condition is NULL is not matched and must survive.
             if (!seeded) {
               val bad = GraftLakePartitions.readEntries(spark, lakeDir,
                 entries, partCols).filter(not(pred <=> lit(true))).count()
@@ -1858,41 +1864,14 @@ final class GraftLakeWrite(
                   "duplicate beside the surviving rows; widen the " +
                   "condition or fix the written frame")
             }
-            val partBound = replaceCond.filter(f =>
-              GraftLakePartitions.partitionDecidable(Array(f), partCols))
-            val byPartition =
-              if (partBound.isEmpty) snapshot
-              else GraftLakePartitions.entriesWhere(spark, snapshot,
-                partCols,
-                partBound.map(f => GraftLakeDelete.toColumn(tableSchema,
-                  f).get).reduce(_ && _))._1
-            val touched =
-              GraftLakeDelete.translate(tableSchema, replaceCond) match {
-                case Some(GraftLakeDelete.Range(c, lo, hi)) =>
-                  if (lo <= hi) VersionedLake.dirsIntersecting(spark,
-                    lakeDir, byPartition, c, lo, hi)
-                  else Seq.empty // provably-empty interval: pure append
-                case _ => byPartition
-              }
-            if (touched.nonEmpty) {
-              // survivors rewrite into the staged dir's own partition
-              // leaves (three-valued logic: a NULL-condition row is
-              // not matched and must survive). On a DV lake, rows
-              // earlier vectors deleted are NOT survivors — carrying
-              // them would resurrect deletes (the rewrite
-              // MATERIALIZES the touched entries' vectors away)
-              readTouched(touched)
-                .filter(not(pred <=> lit(true)))
-                .write.partitionBy(partCols.map(_.name): _*)
-                .mode("append").parquet(s"$lakeDir/$dataDir")
-            }
+            val touched = VersionedLake.entriesTouched(spark, lakeDir,
+              snapshot, tableSchema, replaceCond.toSeq)
             // sidecars AFTER the survivor append so they cover every
             // file of every published leaf
-            val finalEntries = {
-              val es = GraftLakePartitions.stagedEntries(spark, lakeDir,
-                dataDir, partCols.length)
-              if (es.nonEmpty) es else entries // zero-survivor seeded
-            }
+            val finalEntries =
+              if (touched.isEmpty) entries
+              else VersionedLake.rewriteEntries(spark, lakeDir, tipV.get,
+                touched, dataDir)(_.filter(not(pred <=> lit(true))))
             indexAll(finalEntries)
             if (touched.isEmpty) {
               VersionedLake.publishAll(spark, lakeDir, finalEntries,
@@ -1916,8 +1895,9 @@ final class GraftLakeWrite(
       * (file committer landed above); rewrite the SURVIVORS of the
       * condition-intersecting dirs into the same staged dir, then swap
       * `tip \ touched + staged` in one manifest CAS. Pruning is
-      * metadata-only (stats sidecars) and conservative; dirs the
-      * sidecars cannot clear rewrite through the exact row filter.
+      * metadata-only ([[VersionedLake.entriesTouched]]: stats and bloom
+      * sidecars) and conservative; dirs the sidecars cannot clear
+      * rewrite through the exact row filter.
       * Publishes SERIALIZABLE ([[VersionedLake.publishReplacingChecked]])
       * — a concurrent rewrite of a touched dir, or an append landing
       * after the survivor scan (it may hold rows matching the
@@ -1934,39 +1914,16 @@ final class GraftLakeWrite(
       val snapshot = tipV
         .map(v => VersionedLake.manifestEntries(spark, lakeDir, v))
         .getOrElse(Seq.empty)
-      val touched = GraftLakeDelete.translate(tableSchema, replaceCond) match {
-        case Some(GraftLakeDelete.Range(c, lo, hi)) =>
-          if (lo <= hi)
-            VersionedLake.dirsIntersecting(spark, lakeDir, snapshot, c, lo, hi)
-          else Seq.empty // provably-empty interval: pure append
-        case _ => snapshot // no interval shape: every live dir rewrites
-      }
-      if (touched.nonEmpty) {
-        // COLUMN-MAPPING lakes: survivors must read BY FIELD ID (a
-        // name-matched read would null a renamed column out of
-        // pre-rename files) and the rewrite must stamp the ids —
-        // reading with the table schema (ids in its metadata) on a
-        // fieldId-scoped derived session gives both, the compactSmall
-        // pattern (per-read options are clobbered by the V1 path)
-        val reader =
-          if (!GraftLakeMapping.enabled(spark, lakeDir))
-            spark.read.option("mergeSchema", "true")
-          else {
-            val s2 = spark.newSession()
-            s2.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            s2.read.schema(tableSchema)
-          }
-        // three-valued logic: a row where the condition is NULL is NOT
-        // matched — it must survive, so keep NOT(pred IS TRUE). On a
-        // DV lake, rows earlier vectors deleted are NOT survivors —
-        // carrying them would resurrect deletes (the rewrite
-        // MATERIALIZES the touched dirs' vectors away)
-        VersionedLake.dropDvRows(spark, lakeDir,
-            reader.parquet(touched.map(d => s"$lakeDir/$d"): _*),
-            tipV.getOrElse(0))
-          .filter(not(pred <=> lit(true)))
-          .write.mode("append").parquet(s"$lakeDir/$dataDir")
-      }
+      val touched = VersionedLake.entriesTouched(spark, lakeDir, snapshot,
+        tableSchema, replaceCond.toSeq)
+      // survivors join the staged new data in its dir. Three-valued
+      // logic: a row where the condition is NULL is NOT matched — it
+      // must survive, so keep NOT(pred IS TRUE). On a DV lake, rows
+      // earlier vectors deleted are NOT survivors (the rewrite
+      // MATERIALIZES the touched dirs' vectors away)
+      if (touched.nonEmpty)
+        VersionedLake.rewriteEntries(spark, lakeDir, tipV.get, touched,
+          dataDir)(_.filter(not(pred <=> lit(true))))
       // sidecars AFTER the survivor append so they cover every file in
       // the published dir (new data and survivors alike)
       VersionedLake.indexStagedDir(spark, lakeDir, dataDir, tableSchema)
@@ -2951,7 +2908,13 @@ private[engine] final class SidecarProbe(spark: SparkSession,
     // only fully-rendered value sets may prune
     if (renders.length == values.length)
       partitionAdmit(p.getParent, c, renders).foreach(a => return a)
-    val nums = values.collect { case n: Number => n.doubleValue() }
+    // a decimal value (a DECIMAL column's V1 filter value) never meets
+    // the stats: parquet records such a column's min/max unscaled, and
+    // sidecars written before that was known hold those lines
+    val nums = values.collect {
+      case n: Number if !n.isInstanceOf[java.math.BigDecimal] &&
+        !n.isInstanceOf[scala.math.BigDecimal] => n.doubleValue()
+    }
     val statsOk = nums.length != values.length ||
       stats(d, c).get(f)
         .forall { case (mn, mx, _) => nums.exists(v => v >= mn && v <= mx) }

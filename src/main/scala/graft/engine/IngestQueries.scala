@@ -597,8 +597,7 @@ object IngestQueries {
       ).foreach(p => VersionedLake.commitWithStats(
         ev.filter(p).repartition(1), lake, statsCols = Seq("event_id")))
       val before = VersionedLake.readLatest(s, lake).inputFiles.toSet
-      VersionedLake.deleteRange(s, lake, "event_id", 1000d, 3000d,
-        statsCols = Seq("event_id"))
+      VersionedLake.deleteRange(s, lake, "event_id", 1000d, 3000d)
       val after = VersionedLake.readLatest(s, lake).inputFiles.toSet
       require((before intersect after).size >= 2,
         s"delete must carry untouched files by reference " +
@@ -1838,7 +1837,7 @@ object IngestQueries {
         ev.filter(col("user_id") >= 100 && col("user_id") < 200), lake,
         Seq("user_id")) // pending
       // COW DELETE rewrites slice 1's dir (stats confine it there)
-      VersionedLake.deleteRange(s, lake, "user_id", 0, 49, Seq("user_id"))
+      VersionedLake.deleteRange(s, lake, "user_id", 0, 49)
       require(VersionedLake.versions(s, lake) == Seq(1, 2, 3),
         "the delete must land as one rewrite commit")
       drain() // resumes: slice 2 delivers, the rewrite commit is dropped
@@ -1889,7 +1888,7 @@ object IngestQueries {
       VersionedLake.commitWithStats(
         ev.filter(col("user_id") >= 100 && col("user_id") < 200), lake,
         Seq("user_id"))
-      VersionedLake.deleteRange(s, lake, "user_id", 0, 49, Seq("user_id"))
+      VersionedLake.deleteRange(s, lake, "user_id", 0, 49)
       drain() // band 2 inserts + band 1's delete/re-insert pairs
       val sign = when(col("_change_type") === "insert", lit(1L))
         .otherwise(lit(-1L))
@@ -1961,7 +1960,7 @@ object IngestQueries {
       VersionedLake.commitWithStats(
         ev.filter(col("user_id") >= 100 && col("user_id") < 200), lake,
         Seq("user_id"))
-      VersionedLake.deleteRange(s, lake, "user_id", 0, 49, Seq("user_id"))
+      VersionedLake.deleteRange(s, lake, "user_id", 0, 49)
       drain()
       VersionedLake.readLatest(s, mv)
         .select(col("bucket"), col("n"), col("total"))
@@ -2839,7 +2838,7 @@ object IngestQueries {
       val beforeEntries = VersionedLake.manifestEntries(s, lake,
         VersionedLake.tip(s, lake).get).toSet
       val v = VersionedLake.deleteRange(s, lake, "event_id",
-        (total * 3 / 4).toDouble, total.toDouble, Seq("event_id"))
+        (total * 3 / 4).toDouble, total.toDouble)
       val afterEntries = VersionedLake.manifestEntries(s, lake, v).toSet
       require((beforeEntries -- afterEntries).nonEmpty,
         "intersecting leaves must rewrite")

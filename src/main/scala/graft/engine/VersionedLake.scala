@@ -380,9 +380,9 @@ object VersionedLake {
     * forward. Bounded by [[CheckpointInterval]] small file reads (the
     * write side guarantees a full manifest at least every Nth
     * version). */
-  private def resolveLive(spark: SparkSession, dir: String, v: Int)
-      : Seq[String] =
-    try resolveLiveWalk(spark, dir, v)
+  private def resolveLive(spark: SparkSession, dir: String, v: Int,
+      vLines: Option[Seq[String]] = None): Seq[String] =
+    try resolveLiveWalk(spark, dir, v, vLines)
     catch {
       // a CONCURRENT VACUUM writes its boundary checkpoint and then
       // deletes the dropped delta bases — a walker that passed the
@@ -392,20 +392,23 @@ object VersionedLake {
       // readable BEFORE any delete); a genuinely truncated log fails
       // the same way twice and the loud error stands.
       case _: java.io.FileNotFoundException =>
-        resolveLiveWalk(spark, dir, v)
+        resolveLiveWalk(spark, dir, v, vLines)
       case e: IllegalStateException
           if e.getMessage != null &&
             e.getMessage.contains("no resolvable base") =>
-        resolveLiveWalk(spark, dir, v)
+        resolveLiveWalk(spark, dir, v, vLines)
     }
 
-  private def resolveLiveWalk(spark: SparkSession, dir: String, v: Int)
-      : Seq[String] = {
+  /** The walk of [[resolveLive]]; `vLines` are v's own manifest lines
+    * when the caller already read them. */
+  private def resolveLiveWalk(spark: SparkSession, dir: String, v: Int,
+      vLines: Option[Seq[String]]): Seq[String] = {
     val f = fs(spark, dir)
     var pending = List.empty[(Seq[String], Seq[String])]
     var cur = v
     while (true) {
-      parseManifest(readManifestLines(spark, dir, cur))._1 match {
+      parseManifest(vLines.filter(_ => cur == v)
+          .getOrElse(readManifestLines(spark, dir, cur)))._1 match {
         case Right(full) =>
           return pending.foldLeft(full)(applyOps)
         case Left(ops) =>
@@ -491,19 +494,22 @@ object VersionedLake {
       : Option[org.apache.spark.sql.types.StructType] =
     try {
       if (!versionExists(spark, dir, v)) None
-      else readManifestLines(spark, dir, v)
-        .collectFirst { case l if l.startsWith(SchemaMarker) =>
-          val payload = l.drop(SchemaMarker.length)
-          // JSON is the format (it round-trips field metadata — the
-          // column-mapping ids live there); DDL accepted for
-          // manifests written by the first schema-declaring build
-          scala.util.Try(org.apache.spark.sql.types.DataType
-            .fromJson(payload)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .orElse(scala.util.Try(org.apache.spark.sql.types.StructType
-              .fromDDL(payload))).toOption
-        }.flatten
+      else declaredIn(readManifestLines(spark, dir, v))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The schema one version's manifest `lines` declare, if any. */
+  private def declaredIn(lines: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    lines.collectFirst { case l if l.startsWith(SchemaMarker) =>
+      val payload = l.drop(SchemaMarker.length)
+      // JSON is the format (it round-trips field metadata — the
+      // column-mapping ids live there); DDL accepted for manifests
+      // written by the first schema-declaring build
+      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(payload)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .orElse(scala.util.Try(org.apache.spark.sql.types.StructType
+          .fromDDL(payload))).toOption
+    }.flatten
 
   private def schemaLine(schemaDdl: Option[String]): Seq[String] =
     schemaDdl.filterNot(_.contains("\n")).map(SchemaMarker + _).toSeq
@@ -574,26 +580,29 @@ object VersionedLake {
   private def stageForCommit(df: DataFrame, dir: String,
       dataDir: String, codec: String)
       : (Seq[String], org.apache.spark.sql.types.StructType) = {
-    val spark = df.sparkSession
-    val partCols = GraftLakePartitions.of(spark, dir)
     val out = withMappedIds(df, dir)
+    (writeStaged(out, dir, dataDir, codec), out.schema)
+  }
+
+  /** Write the id-stamped frame `out` into `dataDir` — appended when it
+    * already holds staged rows — honoring the lake's partition spec, and
+    * return the entries staged there: the dir itself on a flat lake,
+    * its partition leaves ([[stagedOrSeed]]) on a partitioned one. */
+  private def writeStaged(out: DataFrame, dir: String, dataDir: String,
+      codec: String): Seq[String] = {
+    val spark = out.sparkSession
+    val partCols = GraftLakePartitions.of(spark, dir)
+    val w = out.write.mode("append").option("compression", codec)
     if (partCols.isEmpty) {
-      out.write.option("compression", codec).parquet(s"$dir/$dataDir")
-      (Seq(dataDir), out.schema)
+      w.parquet(s"$dir/$dataDir")
+      Seq(dataDir)
     } else {
       require(partCols.forall(pc =>
         out.columns.exists(_.equalsIgnoreCase(pc.name))),
         "the committed frame lacks the lake's partition columns " +
           s"(${partCols.map(_.name).mkString(", ")})")
-      out.write.option("compression", codec)
-        .partitionBy(partCols.map(_.name): _*).parquet(s"$dir/$dataDir")
-      val staged = GraftLakePartitions.stagedEntries(spark, dir,
-        dataDir, partCols.length)
-      val entries =
-        if (staged.nonEmpty) staged
-        else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-          out.schema, partCols))
-      (entries, out.schema)
+      w.partitionBy(partCols.map(_.name): _*).parquet(s"$dir/$dataDir")
+      stagedOrSeed(spark, dir, dataDir, out.schema, partCols)
     }
   }
 
@@ -605,7 +614,7 @@ object VersionedLake {
   def commit(df: DataFrame, dir: String, mode: String = "append",
       codec: String = "snappy"): Int = {
     require(mode == "append" || mode == "overwrite", s"bad mode $mode")
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     val (entries, schema) = stageForCommit(df, dir, dataDir, codec)
     publishAll(df.sparkSession, dir, entries, mode,
       carrySchema = Some(schema))
@@ -738,24 +747,6 @@ object VersionedLake {
       dataDir: String, mode: String, layoutOnly: Boolean = false): Int =
     publishAll(spark, dir, Seq(dataDir), mode, layoutOnly)
 
-  /** Measurement seam ([[graft.LogScale]]): one real-protocol append
-    * publish — production's exact write pattern, without the data
-    * write the scale harness fabricates separately. */
-  private[graft] def publishForScale(spark: SparkSession, dir: String,
-      dataDir: String, schemaDdl: Option[String] = None): Int =
-    publishAll(spark, dir, Seq(dataDir), "append", schemaDdl = schemaDdl)
-
-  /** Measurement seams for PARTITIONED-entry commits ([[graft.LogScale]]
-    * point: one manifest entry per (commit, partition leaf) — the
-    * partitioned streaming sink's write pattern). */
-  private[graft] def publishForScaleAll(spark: SparkSession, dir: String,
-      entries: Seq[String]): Int =
-    publishAll(spark, dir, entries, "append")
-
-  private[graft] def replacePublishForScale(spark: SparkSession,
-      dir: String, dropped: Set[String], added: Seq[String]): Int =
-    publishReplacing(spark, dir, dropped, added)
-
   /** Declared-schema union: `prev`'s fields keep their order, types and
     * metadata (the column-mapping field ids live there); `write`-only
     * fields append. The monotone merge that keeps a lake's `#schema`
@@ -878,7 +869,7 @@ object VersionedLake {
     * `CREATE TABLE` shape (one empty schema-bearing data dir). */
   private[engine] def commitCreateStrict(df: DataFrame,
       dir: String): Boolean = {
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     df.write.parquet(s"$dir/$dataDir")
     publishCreateStrictAll(df.sparkSession, dir, Seq(dataDir),
       Some(df.schema.json))
@@ -936,6 +927,13 @@ object VersionedLake {
     * through the stats and bloom sidecars like the `graftlake` scan. */
   def readAt(spark: SparkSession, dir: String, v: Int): DataFrame = {
     requireVersion(spark, dir, v)
+    snapshotAt(spark, dir, v, None)
+  }
+
+  /** The relation [[readAt]] builds for version `v`, over `entries` (a
+    * subset of v's live set) when given, else over all of it. */
+  private def snapshotAt(spark: SparkSession, dir: String, v: Int,
+      entries: Option[Seq[String]]): DataFrame = {
     // a PARTITIONED lake's entries are partition leaf dirs whose files
     // do not carry the partition columns — read through the DSv2 index,
     // which reconstructs them from the manifest entry names in ONE
@@ -944,9 +942,9 @@ object VersionedLake {
     // a renamed column out of pre-rename files).
     if (GraftLakePartitions.of(spark, dir).nonEmpty ||
         GraftLakeMapping.enabled(spark, dir) || dvEnabled(spark, dir))
-      return spark.read.format("graftlake")
-        .option(GraftLakeDataSource.VersionAsOf, v).load(dir)
-    val dirs = readManifest(spark, dir, v).map(d => s"$dir/$d")
+      return GraftLakeDataSource.snapshotFrame(spark, dir, v, entries)
+    val dirs = entries.getOrElse(readManifest(spark, dir, v))
+      .map(d => s"$dir/$d")
     val index = new GraftLakeFileIndex(spark, dir, dirs.map(new Path(_)))
     // a live data dir that is gone (a damaged lake, or a vacuum racing
     // this read) must fail the read, never answer without its rows;
@@ -1174,91 +1172,27 @@ object VersionedLake {
       leafFiles(spark, new Path(s"$dir/$d")).toSeq
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val small = live.filter(d => bytesOf(d) < thresholdBytes)
-    // COLUMN-MAPPING lakes: the coalescing rewrite must stamp the
-    // field ids or the id-matching reader cannot bind the compacted
-    // files. Reading with the DECLARED schema (metadata included)
-    // makes the parquet writer stamp them — no extra pass; files of
-    // older eras clip/null against it exactly like a mergeSchema read.
-    val lakePartCols = GraftLakePartitions.of(spark, dir)
-    val declared: Option[org.apache.spark.sql.types.StructType] =
-      if (GraftLakeMapping.enabled(spark, dir))
-        Some(manifestSchema(spark, dir, vs.last).map(s =>
-          // data files never carry partition columns — clip them
-          org.apache.spark.sql.types.StructType(s.filterNot(fl =>
-            lakePartCols.exists(_.name.equalsIgnoreCase(fl.name)))))
-          .getOrElse(throw new IllegalStateException(
-            s"column-mapping lake $dir has no declared schema at its " +
-              "tip — cannot stamp field ids into the compacted files")))
-      else None
-    // the path-based read CLOBBERS per-read fieldId options from the
-    // session conf (ParquetFileFormat re-sets them from SQLConf), so
-    // id-matching for the mapped rewrite needs a SESSION whose conf
-    // says so — a DERIVED one, never the caller's: mutate-and-restore
-    // on the shared session would silently flip concurrent queries to
-    // id-matched reads for the rewrite's whole duration. newSession()
-    // shares the SparkContext (and so the executors and the warehouse)
-    // but owns its conf; the flag lives and dies with the rewrite.
-    val rss: SparkSession =
-      if (declared.isEmpty) spark
-      else {
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        s2
-      }
-    def readSmall(entries: Seq[String]): DataFrame = {
-      val paths = entries.map(e => s"$dir/$e")
-      val base = declared.fold(
-        rss.read.option("mergeSchema", "true").parquet(paths: _*))(
-        sch => rss.read.schema(sch).parquet(paths: _*))
-      // deletion vectors MATERIALIZE here: the coalesced replacement
-      // carries only visible rows, and the replaced files' vectors
-      // become dead metadata for vacuum
-      dropDvRows(rss, dir, base, vs.last)
-    }
-    {
-    val partitioned = lakePartCols.nonEmpty
-    if (partitioned) {
-      // OPTIMIZE WITHIN PARTITIONS: small entries group by their
-      // partition suffix; each group coalesces into one leaf under a
-      // single fresh data dir (`d-new/<suffix>`) — rows never cross a
-      // partition boundary, so the entries-are-partition-leaves
-      // invariant and every partition-pruning path survive compaction
-      val groups = small.groupBy(_.split('/').drop(1).mkString("/"))
-        .filter(_._2.length >= 2)
-      if (groups.isEmpty) return None
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      val newEntries = groups.toSeq.sortBy(_._1).map { case (suffix, es) =>
-        val outFiles = math.max(1L,
-          es.map(bytesOf).sum / (128L << 20)).toInt
-        readSmall(es)
-          .coalesce(outFiles).write.option("compression", codec)
-          .parquet(s"$dir/$dataDir/$suffix")
-        s"$dataDir/$suffix"
-      }
-      // sidecars for ALL compacted leaves in one batched build, not
-      // one driver iteration per partition
-      writeSidecarsBatch(spark, dir, newEntries, statsCols,
-        bloomCol.toSeq)
-      return Some(publishReplacing(spark, dir,
-        groups.values.flatten.toSet, newEntries,
-        checked = true, layoutOnly = true, noDvSince = Some(vs.last)))
-    }
-    if (small.length < 2) None
-    else {
-      val merged = readSmall(small)
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      // one output file per ~128 MB of input: the tail usually fits
-      // one file, but a large tail must not funnel through one task
-      val outFiles = math.max(1L,
-        small.map(bytesOf).sum / (128L << 20)).toInt
-      merged.coalesce(outFiles).write.option("compression", codec)
-        .parquet(s"$dir/$dataDir")
-      if (statsCols.nonEmpty) writeStatsFor(spark, dir, dataDir, statsCols)
-      bloomCol.foreach(c => writeBloomFor(spark, dir, dataDir, c))
-      Some(publishReplacing(spark, dir, small.toSet, Seq(dataDir),
-        checked = true, layoutOnly = true, noDvSince = Some(vs.last)))
-    }
-    }
+    // OPTIMIZE WITHIN PARTITIONS on a partitioned lake: small entries
+    // group by their partition suffix, and only groups of two or more
+    // coalesce — the rewrite keeps partition leaves, so rows never
+    // cross a partition boundary and every pruning path survives
+    val partitioned = GraftLakePartitions.of(spark, dir).nonEmpty
+    val merged =
+      if (!partitioned) small
+      else small.groupBy(_.split('/').drop(1).mkString("/")).values
+        .filter(_.length >= 2).flatten.toSeq.sorted
+    if (merged.length < 2) return None
+    // one output file per ~128 MB of input: the tail usually fits one
+    // file (per leaf), but a large tail must not funnel through one
+    // task. Deletion vectors MATERIALIZE here: the coalesced
+    // replacement carries only visible rows, and the replaced files'
+    // vectors become dead metadata for vacuum
+    val outFiles = math.max(1L, merged.map(bytesOf).sum / (128L << 20)).toInt
+    val newEntries = rewriteEntries(spark, dir, vs.last, merged,
+      codec = codec)(_.coalesce(outFiles))
+    writeSidecarsBatch(spark, dir, newEntries, statsCols, bloomCol.toSeq)
+    Some(publishReplacing(spark, dir, merged.toSet, newEntries,
+      checked = true, layoutOnly = true, noDvSince = Some(vs.last)))
   }
 
   /** Z-ordered compaction as a versioned commit: rewrite the latest
@@ -1323,7 +1257,7 @@ object VersionedLake {
     val t = tip(spark, dir)
     require(t.nonEmpty, s"no versions published at $dir")
     val observed = readManifest(spark, dir, t.get)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     // ONE job for the whole lake, not one per partition (a 1,000-day
     // lake must not run 1,000 sequential rewrites): range-partition by
     // (partition cols, z) so each task holds contiguous (partition, z)
@@ -1344,12 +1278,9 @@ object VersionedLake {
       .write.option("compression", codec)
       .partitionBy(partCols.map(_.name): _*)
       .parquet(s"$dir/$dataDir")
-    var newEntries = GraftLakePartitions.stagedEntries(spark, dir,
-      dataDir, partCols.length)
-    if (newEntries.isEmpty) // empty lake: keep a schema carrier live
-      newEntries = Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-        manifestSchema(spark, dir, t.get).getOrElse(
-          readAt(spark, dir, t.get).schema), partCols))
+    // an empty lake keeps a schema carrier live
+    val newEntries = stagedOrSeed(spark, dir, dataDir,
+      schemaAt(spark, dir, t.get), partCols)
     // ONE batched sidecar build for every leaf — the sidecar phase
     // must not reintroduce the O(partitions)-sequential-jobs term the
     // single-job rewrite removed
@@ -1373,7 +1304,7 @@ object VersionedLake {
   // (The round-16 refusal helpers requireUnpartitionedLake /
   // requireNotMappedLake are gone: library commits stage through the
   // lake's partition spec ([[stageForCommit]]), and every survivor
-  // rewrite reads through [[survivorReader]] — id-matched on mapped
+  // rewrite goes through [[rewriteEntries]] — id-matched on mapped
   // lakes, DV-filtered on deletion-vector lakes.)
 
   /** Field-id stamping for library commits on a COLUMN-MAPPING lake:
@@ -1382,13 +1313,16 @@ object VersionedLake {
     * schema (mapped lakes always declare — CREATE writes v1's). A
     * column the mapping has never seen gets a FRESH id, recorded in
     * the registry before the data lands — the same protocol as SQL
-    * `ADD COLUMN`. Unmapped lakes pass through untouched. */
-  private def withMappedIds(df: DataFrame, dir: String): DataFrame = {
+    * `ADD COLUMN`. Unmapped lakes pass through untouched. The ids come
+    * from version `at`'s declaration when given (a rewrite of that
+    * version's rows), else the tip's. */
+  private def withMappedIds(df: DataFrame, dir: String,
+      at: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
     if (!GraftLakeMapping.enabled(spark, dir)) df
     else {
       import org.apache.spark.sql.functions.col
-      val declared = tip(spark, dir)
+      val declared = at.orElse(tip(spark, dir))
         .flatMap(manifestSchema(spark, dir, _))
         .getOrElse(throw new IllegalStateException(
           s"column-mapping lake $dir has no declared schema at its " +
@@ -1404,6 +1338,57 @@ object VersionedLake {
     }
   }
 
+  /** A fresh data dir name — every commit writes one. */
+  private[engine] def newDataDir(): String =
+    s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+
+  /** The leaf entries staged under `dataDir` of a partitioned lake, or
+    * when no task wrote a row, the zero-row schema carrier that keeps
+    * the commit's schema live ([[GraftLakePartitions.seedEmpty]]). */
+  private def stagedOrSeed(spark: SparkSession, dir: String, dataDir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      partCols: Seq[org.apache.spark.sql.types.StructField]): Seq[String] = {
+    val staged = GraftLakePartitions.stagedEntries(spark, dir, dataDir,
+      partCols.length)
+    if (staged.nonEmpty) staged
+    else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir, schema,
+      partCols))
+  }
+
+  /** The schema of version `v`: its declaration, else its relation's. */
+  private def schemaAt(spark: SparkSession, dir: String, v: Int)
+      : org.apache.spark.sql.types.StructType =
+    manifestSchema(spark, dir, v).getOrElse(readAt(spark, dir, v).schema)
+
+  /** `schema` without the lake's partition columns — the columns a data
+    * file of a rewrite holds, which the DML index policy covers. */
+  private def dataColumns(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    val partCols = GraftLakePartitions.of(spark, dir)
+    org.apache.spark.sql.types.StructType(schema.filterNot(f =>
+      partCols.exists(_.name.equalsIgnoreCase(f.name))))
+  }
+
+  /** The one survivor rewrite: `entries` (live at `v`) read through
+    * the relation [[readAt]] builds for `v` ([[snapshotAt]]: deletion
+    * vectors as of `v` applied, field ids matched on mapped lakes,
+    * partition columns from the entry names), passed through `step` (a
+    * keep-filter, a coalesce), stamped with the field ids of `v`'s
+    * declaration ([[withMappedIds]]) and written into `dataDir`
+    * ([[writeStaged]]). Returns the entries staged there.
+    *
+    * The relation prunes files by the filters `step` applies, so `step`
+    * may only filter by what SURVIVES: a file with no survivor is meant
+    * to vanish with its replaced entry. Handing it the delete or replace
+    * condition instead would prune exactly the files whose survivors the
+    * rewrite must carry, and lose them. */
+  private[engine] def rewriteEntries(spark: SparkSession, dir: String,
+      v: Int, entries: Seq[String], dataDir: String = newDataDir(),
+      codec: String = "snappy")(step: DataFrame => DataFrame): Seq[String] =
+    writeStaged(withMappedIds(step(snapshotAt(spark, dir, v, Some(entries))),
+      dir, Some(v)), dir, dataDir, codec)
+
   private def compactFullSnapshot(spark: SparkSession, dir: String,
       statsCols: Seq[String], bloomCol: Option[String], codec: String)(
       cluster: DataFrame => DataFrame): Int = {
@@ -1414,7 +1399,7 @@ object VersionedLake {
     val t = tip(spark, dir)
     require(t.nonEmpty, s"no versions published at $dir")
     val observed = readManifest(spark, dir, t.get)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     // readAt routes through the DSv2 seam: deletion vectors apply
     // (the rewrite materializes them) and column-mapping lakes read
     // by field id; withMappedIds re-stamps the ids into the rewrite
@@ -1442,7 +1427,7 @@ object VersionedLake {
     val t = tip(spark, dir)
     require(t.nonEmpty, s"no versions published at $dir")
     val observed = readManifest(spark, dir, t.get)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     val keys = partCols.map(c => col(c.name))
     val nParts = math.max(1,
       observed.map(_.split('/').drop(1).mkString("/")).distinct.length)
@@ -1453,12 +1438,9 @@ object VersionedLake {
     bloomCol.fold(w)(c =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
       .parquet(s"$dir/$dataDir")
-    var newEntries = GraftLakePartitions.stagedEntries(spark, dir,
-      dataDir, partCols.length)
-    if (newEntries.isEmpty) // empty lake: keep a schema carrier live
-      newEntries = Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-        manifestSchema(spark, dir, t.get).getOrElse(
-          readAt(spark, dir, t.get).schema), partCols))
+    // an empty lake keeps a schema carrier live
+    val newEntries = stagedOrSeed(spark, dir, dataDir,
+      schemaAt(spark, dir, t.get), partCols)
     writeSidecarsBatch(spark, dir, newEntries, statsCols,
       bloomCol.toSeq)
     publishReplacing(spark, dir, observed.toSet, newEntries,
@@ -1604,8 +1586,8 @@ object VersionedLake {
   // Scope: composes with PARTITIONED BY (partition-decidable deletes
   // keep the manifest-only whole-leaf drop; data-column deletes vector
   // within the candidate leaves) AND with column mapping (the position
-  // scans read by field id on mapped lakes — see the survivorReader /
-  // deleteVectors mapped branches). UPDATE/MERGE/rich-predicate DELETE
+  // scans read by field id on mapped lakes — see [[rewriteEntries]] and
+  // the deleteVectors mapped branch). UPDATE/MERGE/rich-predicate DELETE
   // on any DV lake take the SupportsDelta merge-on-read path
   // ([[GraftLakeDeltaOperation]]).
 
@@ -1746,32 +1728,10 @@ object VersionedLake {
       .map(k => k.substring(0, k.lastIndexOf('/')))
       .distinct.sorted
     if (touched.isEmpty) return None
-    val partCols = GraftLakePartitions.of(spark, dir)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-    // id-matched on mapped lakes, DV-filtered by construction
-    val (rss, readEs) = survivorReader(spark, dir, t)
-    val newEntries: Seq[String] =
-      if (partCols.isEmpty) {
-        readEs(touched)
-          .write.option("compression", codec).parquet(s"$dir/$dataDir")
-        Seq(dataDir)
-      } else {
-        // group vectored leaves by partition suffix; rows never cross
-        // a partition boundary
-        touched.groupBy(_.split('/').drop(1).mkString("/")).toSeq
-          .sortBy(_._1).map { case (suffix, es) =>
-            readEs(es)
-              .write.option("compression", codec)
-              .parquet(s"$dir/$dataDir/$suffix")
-            s"$dataDir/$suffix"
-          }
-      }
-    val _ = rss
-    val schema = manifestSchema(spark, dir, t)
-      .map(s => org.apache.spark.sql.types.StructType(s.filterNot(fl =>
-        partCols.exists(_.name.equalsIgnoreCase(fl.name)))))
-      .getOrElse(readAt(spark, dir, t).schema)
-    indexStagedEntries(spark, dir, newEntries, schema)
+    val newEntries = rewriteEntries(spark, dir, t, touched,
+      codec = codec)(identity)
+    indexStagedEntries(spark, dir, newEntries,
+      dataColumns(spark, dir, schemaAt(spark, dir, t)))
     Some(publishReplacing(spark, dir, touched.toSet, newEntries,
       checked = true, layoutOnly = true, noDvSince = Some(t)))
   }
@@ -1787,8 +1747,8 @@ object VersionedLake {
     * `sidecarVersion <= readVersion`, so at the restored tip those
     * post-v deletes would silently stay applied to restored data.
     * EXACTLY those entries are instead rewritten with v's OWN vector
-    * state ([[survivorReader]] anchored at v — id-matched on mapped
-    * lakes, per-leaf on partitioned ones), which also kills the
+    * state ([[rewriteEntries]] at v — id-matched on mapped lakes,
+    * partition leaves kept on partitioned ones), which also kills the
     * post-v sidecars' keys (replaced entries → dead metadata for
     * vacuum). O(post-v-vectored entries), never O(lake).
     *
@@ -1810,32 +1770,14 @@ object VersionedLake {
       else readDvParquet(spark, postV.map(_._2.getPath.toString))
         .select("entry").distinct().collect().map(_.getString(0))
         .filter(wantSet).sorted.toSeq
-    val partCols = GraftLakePartitions.of(spark, dir)
+    // v's state of exactly these entries: v's declared schema
+    // (id-matched on mapped lakes) and v's vectors
     val newEntries: Seq[String] =
       if (affected.isEmpty) Seq.empty
       else {
-        // v's state of exactly these entries: v's declared schema
-        // (id-matched on mapped lakes) and v's vectors
-        val (rss, readEs) = survivorReader(spark, dir, v)
-        val dataDir =
-          s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-        val es =
-          if (partCols.isEmpty) {
-            readEs(affected).write.parquet(s"$dir/$dataDir")
-            Seq(dataDir)
-          } else {
-            affected.groupBy(_.split('/').drop(1).mkString("/")).toSeq
-              .sortBy(_._1).map { case (suffix, group) =>
-                readEs(group).write.parquet(s"$dir/$dataDir/$suffix")
-                s"$dataDir/$suffix"
-              }
-          }
-        val _ = rss
-        val schema = manifestSchema(spark, dir, v)
-          .map(s => org.apache.spark.sql.types.StructType(s.filterNot(
-            fl => partCols.exists(_.name.equalsIgnoreCase(fl.name)))))
-          .getOrElse(readAt(spark, dir, v).schema)
-        indexStagedEntries(spark, dir, es, schema)
+        val es = rewriteEntries(spark, dir, v, affected)(identity)
+        indexStagedEntries(spark, dir, es,
+          dataColumns(spark, dir, schemaAt(spark, dir, v)))
         es
       }
     val entries =
@@ -2224,8 +2166,9 @@ object VersionedLake {
     // COLUMN-MAPPING lakes: the position scan must read BY FIELD ID
     // (a name-matched read would null renamed columns out of
     // pre-rename files and the predicate would silently MISS their
-    // rows) — declared schema on a derived fieldId session, the
-    // survivorReader pattern
+    // rows) — declared schema on a derived session whose conf enables
+    // field-id reads (the path-based read re-sets the per-read option
+    // from SQLConf, and the caller's session must not change)
     val (prs, declaredOpt) =
       if (!GraftLakeMapping.enabled(spark, dir)) (spark, None)
       else {
@@ -2713,7 +2656,7 @@ object VersionedLake {
     val spark = df.sparkSession
     val partCols = GraftLakePartitions.of(spark, dir)
     val out = withMappedIds(df, dir)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
+    val dataDir = newDataDir()
     val w0 = out.write.option("compression", codec)
     // parquet's native row-group bloom rides along whenever the
     // file-level bloom is requested (see commitWithBloom's doc)
@@ -2729,11 +2672,7 @@ object VersionedLake {
           "the committed frame lacks the lake's partition columns " +
             s"(${partCols.map(_.name).mkString(", ")})")
         w.partitionBy(partCols.map(_.name): _*).parquet(s"$dir/$dataDir")
-        val staged = GraftLakePartitions.stagedEntries(spark, dir,
-          dataDir, partCols.length)
-        if (staged.nonEmpty) staged
-        else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-          out.schema, partCols))
+        stagedOrSeed(spark, dir, dataDir, out.schema, partCols)
       }
     writeSidecarsBatch(spark, dir, entries, statsCols, bloomCol.toSeq)
     publishAll(spark, dir, entries, mode, layoutOnly,
@@ -2859,6 +2798,12 @@ object VersionedLake {
       statsCols.flatMap { c =>
         val chunks = blocks.asScala.toSeq.flatMap(_.getColumns.asScala
           .filter(_.getPath.toDotString == c))
+        // parquet records an INT32/INT64 decimal's min/max UNSCALED (the
+        // stored integer), so no line of a decimal column is a range of
+        // its values: none is written
+        def decimal = chunks.exists(_.getPrimitiveType
+          .getLogicalTypeAnnotation.isInstanceOf[org.apache.parquet.schema
+            .LogicalTypeAnnotation.DecimalLogicalTypeAnnotation])
         // an all-null chunk has no min/max: parquet reports
         // hasNonNullValue=false and genericGetMin would return the
         // unset 0, so only value-bearing chunks give a range
@@ -2869,7 +2814,8 @@ object VersionedLake {
             ch.getStatistics
           s != null && s.isNumNullsSet && s.getNumNulls == ch.getValueCount
         }
-        if (stats.isEmpty) {
+        if (decimal) None
+        else if (stats.isEmpty) {
           // a ZERO-ROW file, or one whose column is provably all null,
           // gets an explicit empty range (it can never intersect a
           // probe — NULL satisfies no comparison — and must not be
@@ -3128,8 +3074,8 @@ object VersionedLake {
   /** Read a specific FILE subset of the lake, BY FIELD ID when the
     * lake is column-mapped: a name-matched read nulls renamed columns
     * out of pre-rename files, which silently drops their rows past any
-    * later filter (or skews a min/max) — the survivorReader discipline
-    * for [[statsAggregate]]'s scanned fraction. Data columns only
+    * later filter (or skews a min/max) — for [[statsAggregate]]'s
+    * scanned fraction. Data columns only
     * (these are leaf files; partition values live in dir names).
     * Returns the session the read plans against so DV application
     * joins on it. */
@@ -3189,13 +3135,12 @@ object VersionedLake {
     val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
     require(vs.nonEmpty, s"no versions published at $dir")
     val tipV = vs.last
-    val snapshot = readManifest(spark, dir, tipV)
     // COLUMN-MAPPING lakes: stats lines are keyed by each file's OWN
     // column name — fold under every name `c`'s id has had (computed
     // once), and read the scan fraction BY FIELD ID (a name-matched
     // read would null `c` out of pre-rename files and silently skew
     // min/max)
-    val cNames = aliasNamesOf(spark, dir, c)
+    val (snapshot, cNames) = liveAndStatsNames(spark, dir, tipV, c)
     // files carrying LIVE vectors, per entry — O(DV files) metadata
     val dvLive: Map[String, Set[String]] =
       if (!dvEnabled(spark, dir)) Map.empty
@@ -3261,34 +3206,36 @@ object VersionedLake {
         liveDvKeys(spark, dir, t).nonEmpty)) return false
     // alias-merged on mapped lakes: pre-rename files' stats live under
     // their own era's name and still count as coverage
-    val cNames = aliasNamesOf(spark, dir, c)
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    vs.nonEmpty && readManifest(spark, dir, vs.last).forall { d =>
-      val stats = statsForNames(spark, dir, d, cNames)
-      dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
+    tip(spark, dir).exists { t =>
+      val (live, cNames) = liveAndStatsNames(spark, dir, t, c)
+      live.forall { d =>
+        val stats = statsForNames(spark, dir, d, cNames)
+        dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
+      }
     }
   }
 
-  /** Targeted delete as a commit (the right-to-be-forgotten shape):
-    * remove every row with `c` in [lo, hi] by REWRITING ONLY the data
-    * dirs whose stats intersect the range — untouched dirs carry
-    * forward by reference, so the blast radius is the intersecting
-    * fraction, not the lake (at 100 TB the difference between a
-    * surgical rewrite and a full-table pass). Dirs without stats are
-    * conservatively rewritten. The rewrite lands as ONE new stats-
-    * carrying data dir and the next manifest references
-    * untouched ∪ rewrite — published through the same CAS as every
-    * commit, CONFLICT-CHECKED: a concurrent APPEND that wins the CAS
-    * race is re-read and carried forward by the retry, while a
-    * concurrent rewrite of a touched dir (another delete, a
-    * compaction) fails the publish loudly instead of resurrecting its
-    * removed rows. Returns the new version, or the current one if
-    * nothing intersects (no-op, no new version). */
+  /** Version `v`'s live entries, and the sidecar names `c`'s stats are
+    * folded under ([[aliasNamesOf]]) — none when `c` is a DECIMAL
+    * column: its lines hold parquet's unscaled min/max, which
+    * [[statsLinesOfFile]] no longer writes but sidecars written before
+    * may hold. The type comes from the manifest read for the live set
+    * (v's relation when v declares no schema). */
+  private def liveAndStatsNames(spark: SparkSession, dir: String, v: Int,
+      c: String): (Seq[String], Seq[String]) = {
+    val lines = readManifestLines(spark, dir, v)
+    val decimal = declaredIn(lines).getOrElse(readAt(spark, dir, v).schema)
+      .exists(f => f.name.equalsIgnoreCase(c) &&
+        f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
+    (resolveLive(spark, dir, v, Some(lines)),
+      if (decimal) Seq.empty else aliasNamesOf(spark, dir, c))
+  }
+
   /** Of `dirs`, those the stats sidecars CANNOT clear of [lo, hi] on
     * `c` — conservative: a dir with no stats, a file with no recorded
     * range, or an empty dir all count as intersecting. Driver-side
-    * metadata only; shared by [[deleteRange]] and the DSv2
-    * overwrite-by-filter commit ([[GraftLakeWrite]]). */
+    * metadata only; the range bound of [[entriesTouched]] and of the
+    * DV position scan ([[dvPruneFiles]]). */
   private[engine] def dirsIntersecting(spark: SparkSession, dir: String,
       dirs: Seq[String], c: String, lo: Double, hi: Double): Seq[String] = {
     dirs.filter { d =>
@@ -3300,62 +3247,107 @@ object VersionedLake {
     }
   }
 
-  /** Survivor-rewrite read seam, shared by [[deleteRange]] /
-    * [[replaceWhereIn]] / [[compactFullSnapshot]]: on a COLUMN-MAPPING
-    * lake the entries read BY FIELD ID through a derived session with
-    * the declared schema (a name-matched read would null renamed
-    * columns out of pre-rename files, and the rewrite would bake the
-    * nulls in), and on a DV lake rows earlier vectors deleted are
-    * dropped (carrying them would resurrect deletes; the rewrite
-    * materializes the touched entries' vectors). Returns the session
-    * the read plans against (field-id conf scoped to it) and the
-    * entry-set reader. */
-  private def survivorReader(spark: SparkSession, dir: String,
-      tipV: Int): (SparkSession, Seq[String] => DataFrame) = {
+  /** The entries of `live` a rewrite conditioned on `filters` (the
+    * conjuncts of its delete or replace condition, over `schema`) must
+    * touch: every other entry provably holds no row the condition makes
+    * TRUE and carries by manifest reference. Each conjunct bounds the
+    * set on its own, conservatively:
+    *  - conjuncts on partition columns only keep the entries whose
+    *    partition values can make them TRUE
+    *    ([[GraftLakePartitions.entriesWhere]]);
+    *  - the conjuncts on one numeric data column that compose into one
+    *    interval keep the entries whose stats intersect it
+    *    ([[dirsIntersecting]]; an empty interval touches nothing);
+    *  - `=` / `IN` on a [[GraftLakeFileIndex.runtimeProbeable]] data
+    *    column keeps the entries holding a file whose stats or bloom
+    *    admit a value ([[SidecarProbe.admitAnyOf]]);
+    *  - anything else bounds nothing.
+    * Decimal columns never reach a sidecar here: they are neither
+    * interval nor probe columns, since parquet records their ranges
+    * unscaled. Shared by [[deleteRange]], [[replaceWhereIn]] and the
+    * SQL overwrite-by-filter commits ([[GraftLakeWrite]]). */
+  private[engine] def entriesTouched(spark: SparkSession, dir: String,
+      live: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
+    import org.apache.spark.sql.{sources => sf}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    def flatten(f: sf.Filter): Seq[sf.Filter] = f match {
+      case sf.And(a, b) => flatten(a) ++ flatten(b)
+      case other => Seq(other)
+    }
     val partCols = GraftLakePartitions.of(spark, dir)
-    val dvAt = if (dvEnabled(spark, dir)) Some(tipV) else None
-    if (!GraftLakeMapping.enabled(spark, dir)) {
-      (spark, es => {
-        val base = spark.read.option("mergeSchema", "true")
-          .parquet(es.map(e => s"$dir/$e"): _*)
-        dvAt.fold(base)(v => dropDvRows(spark, dir, base, v))
-      })
-    } else {
-      val declared = manifestSchema(spark, dir, tipV)
-        .map(s => org.apache.spark.sql.types.StructType(s.filterNot(fl =>
-          partCols.exists(_.name.equalsIgnoreCase(fl.name)))))
-        .getOrElse(throw new IllegalStateException(
-          s"column-mapping lake $dir has no declared schema at its " +
-            "tip — cannot id-match the survivor read"))
-      // derived session: the path-based read re-sets fieldId options
-      // from SQLConf, and mutating the caller's session would flip
-      // concurrent queries to id-matched reads (compactSmall pattern)
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      (s2, es => {
-        val base = s2.read.schema(declared)
-          .parquet(es.map(e => s"$dir/$e"): _*)
-        dvAt.fold(base)(v => dropDvRows(s2, dir, base, v))
-      })
+    val (partF, dataF) = filters.flatMap(flatten).partition(f =>
+      f.references.nonEmpty && f.references.forall(r =>
+        partCols.exists(_.name == r)))
+    val byPartition =
+      partF.flatMap(GraftLakeDelete.toColumn(schema, _)).reduceOption(_ && _)
+        .fold(live)(GraftLakePartitions.entriesWhere(spark, live, partCols,
+          _)._1)
+    val ranges = dataF.groupBy(_.references.toSeq).toSeq.flatMap {
+      case (Seq(_), fs) => GraftLakeDelete.translate(schema, fs.toArray)
+      case _ => None
+    }.collect { case GraftLakeDelete.Range(c, lo, hi) => (c, lo, hi) }
+    if (ranges.exists(r => r._2 > r._3)) return Seq.empty
+    // the values as the column's catalyst values, the form the probe
+    // renders for the bloom; a value that does not cast, or a NaN the
+    // stats cannot place, bounds nothing
+    def probeable(c: String, vs: Seq[Any]): Option[(String, Seq[Any])] =
+      schema.find(_.name == c).map(_.dataType)
+        .filter(GraftLakeFileIndex.runtimeProbeable).flatMap { dt =>
+          scala.util.Try(vs.map(v =>
+            Cast(Literal.create(v), dt, Some("UTC")).eval())).toOption
+            .filterNot(_.exists {
+              case d: java.lang.Double => d.isNaN
+              case f: java.lang.Float => f.isNaN
+              case _ => false
+            }).map(c -> _)
+        }
+    val points = dataF.flatMap {
+      case sf.EqualTo(c, v) => probeable(c, Seq(v))
+      case sf.In(c, vs) => probeable(c, vs.toSeq)
+      case _ => None
+    }
+    lazy val probe = new SidecarProbe(spark, dir)
+    val byStats = ranges.foldLeft(byPartition) { case (es, (c, lo, hi)) =>
+      dirsIntersecting(spark, dir, es, c, lo, hi) }
+    byStats.filter { d =>
+      val files = dataFiles(spark, dir, d)
+      points.isEmpty || files.isEmpty || files.exists(p =>
+        points.forall { case (c, vs) => probe.admitAnyOf(p, c, vs) })
     }
   }
 
+  /** Targeted delete as a commit (the right-to-be-forgotten shape):
+    * remove every row with `c` in [lo, hi] by REWRITING ONLY the data
+    * dirs whose stats intersect the range ([[entriesTouched]]) —
+    * untouched dirs carry forward by reference, so the blast radius is
+    * the intersecting fraction, not the lake (at 100 TB the difference
+    * between a surgical rewrite and a full-table pass). Dirs without
+    * stats are conservatively rewritten. The survivors land in ONE new
+    * data dir ([[rewriteEntries]]; partition leaves kept), indexed by
+    * the DML policy ([[indexStagedEntries]]: numeric columns plus the
+    * lake's declared blooms), and the next manifest references
+    * untouched ∪ rewrite — published through the same CAS as every
+    * commit, CONFLICT-CHECKED: a concurrent APPEND that wins the CAS
+    * race is re-read and carried forward by the retry, while a
+    * concurrent rewrite of a touched dir (another delete, a
+    * compaction) fails the publish loudly instead of resurrecting its
+    * removed rows. Returns the new version, or the current one if
+    * nothing intersects (no-op, no new version). */
   def deleteRange(spark: SparkSession, dir: String, c: String,
-      lo: Double, hi: Double, statsCols: Seq[String]): Int = {
+      lo: Double, hi: Double): Int = {
+    import org.apache.spark.sql.{sources => sf}
     import org.apache.spark.sql.functions.col
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    val tipV = vs.last
-    val live = readManifest(spark, dir, tipV)
-    val partCols = GraftLakePartitions.of(spark, dir)
-    val dv = dvEnabled(spark, dir)
-    val touched = dirsIntersecting(spark, dir, live, c, lo, hi)
-    if (touched.isEmpty) return tipV
-    require(!partCols.exists(_.name.equalsIgnoreCase(c)) ||
-      partCols.isEmpty,
+    val tipV = tip(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no versions published at $dir"))
+    require(!GraftLakePartitions.of(spark, dir).exists(
+      _.name.equalsIgnoreCase(c)),
       s"deleteRange on partition column '$c' — use the SQL partition " +
         "DELETE (manifest-only) instead of a survivor rewrite")
-    val (rss, readEs) = survivorReader(spark, dir, tipV)
+    val schema = schemaAt(spark, dir, tipV)
+    val touched = entriesTouched(spark, dir, readManifest(spark, dir, tipV),
+      schema, Seq(sf.GreaterThanOrEqual(c, lo), sf.LessThanOrEqual(c, hi)))
+    if (touched.isEmpty) return tipV
     // NULL-keyed rows are OUTSIDE any range — they must survive, and
     // a bare !(range) would drop them (three-valued logic: !(NULL) is
     // NULL, and Filter discards NULL). readSkipping has the matching
@@ -3369,75 +3361,48 @@ object VersionedLake {
     // no-op without a commit. On a DV lake the expected count nets
     // out the touched files' LIVE vectored positions (footer counts
     // include them; the survivor read does not).
-    val touchedRows = touched.map(d =>
-      statsFor(spark, dir, d, c).values.map(_._3).sum)
     val countsKnown = touched.forall { d =>
       val stats = statsFor(spark, dir, d, c)
       dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
-    val dvPending =
-      if (!dv) 0L
-      else {
-        val ts = touched.toSet
-        // exact by protocol: a DV delete anti-joins every earlier
-        // vector before publishing, so no (entry, file, pos) repeats
-        // across sidecars and the ref counts sum to live positions
-        dvRefs(spark, dir, tipV).collect {
-          case (k, r) if ts(k.substring(0, k.lastIndexOf('/'))) =>
-            r.count
+    if (countsKnown) {
+      val touchedRows = touched.map(d =>
+        statsFor(spark, dir, d, c).values.map(_._3).sum).sum
+      // exact by protocol: a DV delete anti-joins every earlier vector
+      // before publishing, so no (entry, file, pos) repeats across
+      // sidecars and the ref counts sum to live positions
+      val ts = touched.toSet
+      val dvPending =
+        if (!dvEnabled(spark, dir)) 0L
+        else dvRefs(spark, dir, tipV).collect {
+          case (k, r) if ts(k.substring(0, k.lastIndexOf('/'))) => r.count
         }.sum
-      }
-    val survivorsAll = keep(readEs(touched))
-    if (countsKnown &&
-        survivorsAll.count() == touchedRows.sum - dvPending)
-      return tipV
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-    val blooms = bloomIndexCols(spark, dir)
-    val newEntries: Seq[String] =
-      if (partCols.isEmpty) {
-        survivorsAll.write.parquet(s"$dir/$dataDir")
-        Seq(dataDir)
-      } else {
-        // partitioned: survivors rewrite WITHIN their own partition
-        // leaves (rows never cross a boundary — the entries-are-
-        // partition-leaves invariant holds by construction)
-        touched.groupBy(_.split('/').drop(1).mkString("/")).toSeq
-          .sortBy(_._1).map { case (suffix, es) =>
-            keep(readEs(es)).write.parquet(s"$dir/$dataDir/$suffix")
-            s"$dataDir/$suffix"
-          }
-      }
-    // the survivor dir absorbs rows from bloom-indexed dirs: honor
-    // the lake's declared policy or point lookups stop pruning
-    // over the rewritten fraction (same parity as indexStagedDir)
-    writeSidecarsBatch(spark, dir, newEntries, statsCols,
-      blooms.filter(survivorsAll.columns.contains))
-    // checked: a concurrent rewrite of a touched dir (another
-    // delete, a compaction) is refused loudly — publishing would
-    // resurrect its removed rows, since they are baked into this
-    // survivor set. Concurrent APPENDS still absorb via the CAS
-    // retry (they are not in `dropped`). On a DV lake a vector
-    // landing after the survivor scan refuses too (noDvSince).
-    val v = publishReplacing(spark, dir, touched.toSet, newEntries,
-      checked = true, noDvSince = if (dv) Some(tipV) else None)
+      if (keep(snapshotAt(spark, dir, tipV, Some(touched))).count() ==
+          touchedRows - dvPending)
+        return tipV
+    }
+    val newEntries = rewriteEntries(spark, dir, tipV, touched)(keep)
+    indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
+    val v = publishRewrite(spark, dir, tipV, touched.toSet, newEntries)
     // opt-in row-level CDF: the deleted rows ARE the net diff of
     // touched-vs-survivors (survivors cancel) — persist them so
     // feeds deliver O(deleted rows), not the whole touched band
     if (cdfEnabled(spark, dir))
       writeChangeSidecar(spark, dir, v,
         cowChangeRows(spark, dir, touched, newEntries, "DELETE"))
-    val _ = rss // scoped field-id session lives for the rewrite only
     v
   }
 
-  /** Targeted partition overwrite — Delta's `replaceWhere` for an
-    * integer partition key: replace every live row with `c ∈ values` by
-    * `replacement`, rewriting ONLY the data dirs whose file stats
-    * intersect some value; every other dir carries forward BY REFERENCE
-    * in the next manifest (the [[deleteRange]] machinery, generalized
-    * from a range predicate to a value set). This is the write half of
-    * incremental backfill: recompute the affected partitions, swap them
-    * in, leave the rest untouched.
+  /** Targeted value-set overwrite — Delta's `replaceWhere` for an
+    * integer key: replace every live row with `c ∈ values` by
+    * `replacement`, rewriting ONLY the data dirs that can hold one of
+    * the values ([[entriesTouched]]); every other dir carries forward
+    * BY REFERENCE in the next manifest (the [[deleteRange]] machinery,
+    * generalized from a range predicate to a value set). This is the
+    * write half of incremental backfill: recompute the affected
+    * partitions, swap them in, leave the rest untouched. The
+    * replacement stages like a commit ([[stageForCommit]]) and the
+    * survivors of the touched dirs join it in the same data dir.
     *
     * NULL-keyed rows are outside every value set and survive
     * (three-valued-logic convention shared with [[deleteRange]] /
@@ -3445,79 +3410,41 @@ object VersionedLake {
     * Returns the committed version (the current tip when `values` is
     * empty and `replacement` must also be empty by contract). */
   def replaceWhereIn(spark: SparkSession, dir: String, c: String,
-      values: Seq[Long], replacement: DataFrame,
-      statsCols: Seq[String]): Int = {
+      values: Seq[Long], replacement: DataFrame): Int = {
+    import org.apache.spark.sql.{sources => sf}
     import org.apache.spark.sql.functions.col
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    val tipV = vs.last
+    val tipV = tip(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no versions published at $dir"))
     if (values.isEmpty) return tipV
-    val partCols = GraftLakePartitions.of(spark, dir)
-    val dv = dvEnabled(spark, dir)
-    require(!partCols.exists(_.name.equalsIgnoreCase(c)),
+    require(!GraftLakePartitions.of(spark, dir).exists(
+      _.name.equalsIgnoreCase(c)),
       s"replaceWhereIn on partition column '$c' — use SQL INSERT " +
         "OVERWRITE with a partition predicate (manifest-only swap)")
-    def intersects(d: String): Boolean = {
-      val stats = statsFor(spark, dir, d, c)
-      val files = dataFiles(spark, dir, d).map(_.getName)
-      files.isEmpty ||
-        files.exists(n => stats.get(n)
-          .forall { case (mn, mx, _) => values.exists(v => v >= mn && v <= mx) })
-    }
-    val touched = readManifest(spark, dir, tipV).filter(intersects)
-    val (rss, readEs) = survivorReader(spark, dir, tipV)
-    def keep(df: DataFrame): DataFrame =
-      df.filter(col(c).isNull || !col(c).isin(values: _*))
-    val repl = withMappedIds(replacement, dir)
-    val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-    val newEntries: Seq[String] =
-      if (partCols.isEmpty) {
-        val survivors =
-          if (touched.isEmpty) repl.limit(0)
-          else keep(readEs(touched))
-        survivors.unionByName(repl, allowMissingColumns = true)
-          .write.parquet(s"$dir/$dataDir")
-        Seq(dataDir)
-      } else {
-        // survivors rewrite within their own leaves; the replacement
-        // routes through the dynamic-partition writer (it must carry
-        // the partition columns)
-        require(partCols.forall(pc =>
-          repl.columns.exists(_.equalsIgnoreCase(pc.name))),
-          "replacement frame lacks the lake's partition columns " +
-            s"(${partCols.map(_.name).mkString(", ")})")
-        touched.groupBy(_.split('/').drop(1).mkString("/")).toSeq
-          .sortBy(_._1).foreach { case (suffix, es) =>
-            keep(readEs(es)).write.mode("append")
-              .parquet(s"$dir/$dataDir/$suffix")
-          }
-        repl.write.partitionBy(partCols.map(_.name): _*)
-          .mode("append").parquet(s"$dir/$dataDir")
-        val staged = GraftLakePartitions.stagedEntries(spark, dir,
-          dataDir, partCols.length)
-        if (staged.nonEmpty) staged
-        else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-          repl.schema, partCols))
-      }
-    // declared bloom policy carries through the partition swap, like
-    // deleteRange and every DML commit path
-    writeSidecarsBatch(spark, dir, newEntries, statsCols,
-      bloomIndexCols(spark, dir).filter(n =>
-        repl.columns.contains(n) && !partCols.exists(
-          _.name.equalsIgnoreCase(n))))
-    // checked for the same reason as deleteRange: survivors of the
-    // touched dirs are baked into the new dir, so a concurrent rewrite
-    // of one of them must fail the publish, not resurrect rows; a DV
-    // commit landing after the survivor scan refuses too
-    val v = publishReplacing(spark, dir, touched.toSet, newEntries,
-      checked = true, noDvSince = if (dv) Some(tipV) else None)
-    val _ = rss
-    v
+    val schema = schemaAt(spark, dir, tipV)
+    val touched = entriesTouched(spark, dir, readManifest(spark, dir, tipV),
+      schema, Seq(sf.In(c, values.toArray[Any])))
+    val dataDir = newDataDir()
+    val (staged, _) = stageForCommit(replacement, dir, dataDir, "snappy")
+    val newEntries =
+      if (touched.isEmpty) staged
+      else rewriteEntries(spark, dir, tipV, touched, dataDir)(
+        _.filter(col(c).isNull || !col(c).isin(values: _*)))
+    indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
+    publishRewrite(spark, dir, tipV, touched.toSet, newEntries)
   }
 
-  /** CAS publish of `live(tip) \ dropped :+ added` — the delete/rewrite
-    * pointer swap. A lost race re-reads the new tip, so appends that
-    * landed meanwhile are preserved (they are not in `dropped`). */
+  /** The publish step of [[deleteRange]] and [[replaceWhereIn]]: CAS
+    * of `live(tip) \ touched :+ added`, checked — a concurrent rewrite
+    * of a touched dir (another delete, a compaction) is refused
+    * loudly, since its removed rows are baked into these survivors,
+    * and on a DV lake so is a vector landing after the survivor scan at
+    * `observed`. Concurrent APPENDS absorb through the CAS retry (they
+    * are not in `touched`). */
+  private[graft] def publishRewrite(spark: SparkSession, dir: String,
+      observed: Int, touched: Set[String], added: Seq[String]): Int =
+    publishReplacing(spark, dir, touched, added, checked = true,
+      noDvSince = if (dvEnabled(spark, dir)) Some(observed) else None)
+
   /** Manifest dir names of a version — the replacement units the COW
     * row-level write coordinates on ([[GraftLakeRowLevelOperation]]). */
   private[graft] def manifestEntries(spark: SparkSession, dir: String,
@@ -3525,9 +3452,7 @@ object VersionedLake {
 
   /** Parquet data files the TIP manifest references — the read tax a
     * scan pays per query, and the number maintenance must bound (the
-    * MoR churn tail grows by one per small row-level commit). Shared
-    * by the maintenance spec and the MorMaintScale measurement so the
-    * two cannot drift on what "live" means. */
+    * MoR churn tail grows by one per small row-level commit). */
   private[graft] def liveDataFileCount(spark: SparkSession,
       dir: String): Int = {
     val f = fs(spark, dir)
@@ -3575,13 +3500,9 @@ object VersionedLake {
       snapshot = Some(snapshot), schemaDdl = schemaDdl,
       noDvSince = noDvSince)
 
-  /** Test seam: [[deleteRange]]'s publish step with an externally-
-    * staged survivor dir — lets a spec interleave a competing rewrite
-    * between the scan and the publish to pin the conflict refusal. */
-  private[graft] def deleteRangePublishForTest(spark: SparkSession,
-      dir: String, dropped: Set[String], added: String): Int =
-    publishReplacing(spark, dir, dropped, Seq(added), checked = true)
-
+  /** CAS publish of `live(tip) \ dropped :+ added` — the delete/rewrite
+    * pointer swap. A lost race re-reads the new tip, so appends that
+    * landed meanwhile are preserved (they are not in `dropped`). */
   private def publishReplacing(spark: SparkSession, dir: String,
       dropped: Set[String], added: Seq[String],
       checked: Boolean = false,

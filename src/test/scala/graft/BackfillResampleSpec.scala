@@ -25,10 +25,10 @@ class BackfillResampleSpec extends AnyFunSuite {
     // empty values → no-op, no version minted
     val tip = VersionedLake.versions(spark, root).last
     assert(VersionedLake.replaceWhereIn(spark, root, "k", Seq.empty,
-      Seq.empty[(Long, String)].toDF("k", "v"), Seq("k")) == tip)
+      Seq.empty[(Long, String)].toDF("k", "v")) == tip)
     // replace k ∈ {4, 8}: dirs 2 and 3 rewrite, dir 1 carries forward
     VersionedLake.replaceWhereIn(spark, root, "k", Seq(4L, 8L),
-      Seq((4L, "D"), (8L, "H")).toDF("k", "v"), Seq("k"))
+      Seq((4L, "D"), (8L, "H")).toDF("k", "v"))
     val after = VersionedLake.readLatest(spark, root).inputFiles.toSet
     assert((before intersect after).nonEmpty, "chunk1 must carry by reference")
     val rows = VersionedLake.readLatest(spark, root)

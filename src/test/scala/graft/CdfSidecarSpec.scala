@@ -20,7 +20,7 @@ class CdfSidecarSpec extends AnyFunSuite {
     VersionedLake.commitWithStats(
       spark.range(0, 100).toDF("id").repartition(2), dir, Seq("id"))
     VersionedLake.setChangeDataFeed(spark, dir)
-    VersionedLake.deleteRange(spark, dir, "id", 10, 19, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 10, 19)
     val sc = VersionedLake.changeSidecarPath(spark, dir, 2)
     assert(sc.nonEmpty, "cdf lake must persist the delete's sidecar")
     // the sidecar holds EXACTLY the 10 deleted rows, tagged delete
@@ -55,7 +55,7 @@ class CdfSidecarSpec extends AnyFunSuite {
     VersionedLake.commitWithStats(
       spark.range(0, 50).toDF("id").repartition(1), dir, Seq("id"))
     VersionedLake.setChangeDataFeed(spark, dir)
-    VersionedLake.deleteRange(spark, dir, "id", 0, 4, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 0, 4)
     val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val sc = VersionedLake.changeSidecarPath(spark, dir, 2).get
@@ -81,7 +81,7 @@ class CdfSidecarSpec extends AnyFunSuite {
     VersionedLake.setChangeDataFeed(spark, dir)
     VersionedLake.commitWithStats(
       spark.range(50, 100).toDF("id").repartition(1), dir, Seq("id"))
-    VersionedLake.deleteRange(spark, dir, "id", 0, 9, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 0, 9)
     // ONE batch covers v1..v3: events must arrive commit-ordered
     val seen = new java.util.concurrent.CopyOnWriteArrayList[
       (Int, Long, String)]()

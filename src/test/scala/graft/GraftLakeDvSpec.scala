@@ -610,7 +610,7 @@ class GraftLakeDvSpec extends AnyFunSuite {
       assert(spark.table(s"$cat.t").count() == 997)
       // deleteRange of [900, 999]: the survivor rewrite must NOT
       // resurrect the vectored 100..102
-      VersionedLake.deleteRange(spark, dir, "id", 900, 999, Seq("id"))
+      VersionedLake.deleteRange(spark, dir, "id", 900, 999)
       val t1 = spark.table(s"$cat.t")
       assert(t1.count() == 897,
         "deleteRange must materialize vectors, not resurrect them")
@@ -618,8 +618,7 @@ class GraftLakeDvSpec extends AnyFunSuite {
       // fresh vectors, then replaceWhereIn — same contract
       spark.sql(s"DELETE FROM $cat.t WHERE id IN (200, 201)")
       val repl = Seq((300L, -5.0)).toDF("id", "v")
-      VersionedLake.replaceWhereIn(spark, dir, "id", Seq(300L), repl,
-        Seq("id"))
+      VersionedLake.replaceWhereIn(spark, dir, "id", Seq(300L), repl)
       val t2 = spark.table(s"$cat.t")
       assert(t2.count() == 895)
       assert(t2.filter(col("id").isin(200L, 201L)).count() == 0,

@@ -233,7 +233,7 @@ class GraftLakeMappingSpec extends AnyFunSuite {
       // survivor rewrites through the library are ID-MATCHED now:
       // deleteRange reads the touched files by field id and re-stamps
       // the ids into the survivor rewrite — values survive intact
-      VersionedLake.deleteRange(spark, dir, "id", 0, 1, Seq("id"))
+      VersionedLake.deleteRange(spark, dir, "id", 0, 1)
       assert(spark.table(s"$cat.m").count() == 101)
       assert(spark.sql(s"SELECT v FROM $cat.m WHERE id = 2")
         .head().getDouble(0) == 2.0,

@@ -316,8 +316,7 @@ class GraftLakePartitionSpec extends AnyFunSuite {
       // the first indexed commit's leaves carry by reference)
       val before = VersionedLake.manifestEntries(spark, dir,
         VersionedLake.tip(spark, dir).get).toSet
-      val v1 = VersionedLake.deleteRange(spark, dir, "id", 850, 899,
-        Seq("id"))
+      val v1 = VersionedLake.deleteRange(spark, dir, "id", 850, 899)
       val after = VersionedLake.manifestEntries(spark, dir, v1).toSet
       assert((before -- after).nonEmpty, "intersecting leaves rewrite")
       assert((before intersect after).nonEmpty,
@@ -332,7 +331,7 @@ class GraftLakePartitionSpec extends AnyFunSuite {
       val repl = Seq((100L, -1.0, 1), (101L, -1.0, 2))
         .toDF("id", "v", "m")
       val v2 = VersionedLake.replaceWhereIn(spark, dir, "id",
-        Seq(100L, 101L), repl, Seq("id"))
+        Seq(100L, 101L), repl)
       val t2 = spark.table(s"$cat.t")
       assert(t2.count() == 880)
       assert(t2.filter(col("id").isin(100L, 101L))

@@ -329,7 +329,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       VersionedLake.readLatest(spark, dir).inputFiles.length)
     assert(probe2.collect().map(_.getLong(1)).toSeq == Seq(150L))
     // the library deleteRange's survivor dir carries the policy too
-    VersionedLake.deleteRange(spark, dir, "id", 0, 9, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 0, 9)
     val probe3 = spark.read.format("graftlake").load(dir)
       .filter(col("tag") === "k40")
     assert(GraftLakeDataSource.filesRead(probe3) <
@@ -372,7 +372,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // a stats-pruned DELETE rewrites only the low band; the feed must
     // deliver that band's pre-image as delete and its survivors as
     // insert — the untouched high band contributes nothing
-    VersionedLake.deleteRange(spark, dir, "id", 10, 19, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 10, 19)
     // a layout-only compaction mid-feed contributes nothing either
     assert(VersionedLake.compactSmall(spark, dir, Long.MaxValue).isDefined)
     VersionedLake.commit(spark.range(5000, 5010).toDF("id"), dir)
@@ -466,7 +466,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // pending-superseding replacement nor a re-delivery of v1's rows
     VersionedLake.commitWithStats(spark.range(100L, 110L).toDF("id"), dir,
       Seq("id"))
-    VersionedLake.deleteRange(spark, dir, "id", 0, 4, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 0, 4)
     VersionedLake.commit(spark.range(200L, 205L).toDF("id"), dir)
     drain()
     // v2's append delivered... unless the delete rewrote v2's dir too.
@@ -495,7 +495,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       mode = "overwrite") // change commit, skipped whole
     VersionedLake.commitWithStats(spark.range(300L, 310L).toDF("id"), dir,
       Seq("id")) // pending — NOT yet drained
-    VersionedLake.deleteRange(spark, dir, "id", 300, 304, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 300, 304)
     drain()
     assert(ids() == (0L until 10L) ++ (100L until 110L) ++
       (200L until 205L) ++ (300L until 310L),

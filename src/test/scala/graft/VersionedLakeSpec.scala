@@ -295,11 +295,11 @@ class VersionedLakeSpec extends AnyFunSuite {
     val survivorsOfA = VersionedLake.readLatest(spark, dir)
       .filter(!(col("id") >= 10 && col("id") <= 19))
     survivorsOfA.write.parquet(s"$dir/d-race-a")
-    VersionedLake.deleteRange(spark, dir, "id", 50, 59, Seq("id")) // B wins
+    VersionedLake.deleteRange(spark, dir, "id", 50, 59) // B wins
     val e = intercept[java.util.ConcurrentModificationException](
       // A's publish attempt with its stale touched set
-      VersionedLake.deleteRangePublishForTest(spark, dir,
-        touched.toSet, "d-race-a"))
+      VersionedLake.publishRewrite(spark, dir, 1, touched.toSet,
+        Seq("d-race-a")))
     assert(e.getMessage.contains("copy-on-write conflict"), e.getMessage)
     // B's delete survives; A's rows are NOT resurrected
     val ids0 = VersionedLake.readLatest(spark, dir)
@@ -411,8 +411,7 @@ class VersionedLakeSpec extends AnyFunSuite {
       spark.range(1000, 1100).toDF("id"), dir, Seq("id"))
     val untouched = VersionedLake.manifestEntries(spark, dir, 1)
     // stats-pruned delete rewrites ONLY the high band's dir
-    val v3 = VersionedLake.deleteRange(spark, dir, "id", 1050, 1059,
-      Seq("id"))
+    val v3 = VersionedLake.deleteRange(spark, dir, "id", 1050, 1059)
     assert(v3 == 3)
     assert(VersionedLake.manifestEntries(spark, dir, 3)
       .exists(untouched.contains), "low band must carry by reference")
@@ -566,8 +565,7 @@ class VersionedLakeSpec extends AnyFunSuite {
         statsCols = Seq("id"))
     }
     val before = VersionedLake.readLatest(spark, dir).inputFiles.toSet
-    val v = VersionedLake.deleteRange(spark, dir, "id", 120d, 180d,
-      statsCols = Seq("id"))
+    val v = VersionedLake.deleteRange(spark, dir, "id", 120d, 180d)
     assert(v == 4)
     val after = VersionedLake.readLatest(spark, dir).inputFiles.toSet
     // dirs 1 and 3 carried forward physically; dir 2 rewritten
@@ -579,8 +577,7 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(ids.flatten.sorted.toSeq == ((0L until 120L) ++ (181L until 300L)))
     // the rewrite carries stats, so a REPEATED delete is a metadata
     // no-op: nothing intersects, no new version
-    assert(VersionedLake.deleteRange(spark, dir, "id", 120d, 180d,
-      statsCols = Seq("id")) == 4)
+    assert(VersionedLake.deleteRange(spark, dir, "id", 120d, 180d) == 4)
     assert(VersionedLake.versions(spark, dir).last == 4)
     // and time travel still sees the pre-delete snapshot
     assert(VersionedLake.readAt(spark, dir, 3).count() == 302)
@@ -756,8 +753,7 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(!d.queryExecution.optimizedPlan.toString.contains("Except"))
     assert(ids(d) == (10L until 200L))
     // a COW rewrite delta-encodes drops too, and still resolves
-    val v21 = VersionedLake.deleteRange(spark, dir, "id", 0, 9,
-      statsCols = Seq("id"))
+    val v21 = VersionedLake.deleteRange(spark, dir, "id", 0, 9)
     assert(v21 == 21 && manifestText(21).contains("#delta"))
     assert(ids(VersionedLake.readLatest(spark, dir)) == (10L until 200L))
     // versionRange == listed versions; versionAt binary search agrees
@@ -851,7 +847,7 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(GraftLakeDataSource.filesRead(
       VersionedLake.readBloomProbe(spark, dir, "bk", "nope")) == 0)
     // a deleteRange rewrite re-indexes BOTH declared columns
-    VersionedLake.deleteRange(spark, dir, "id", 0, 9, Seq("id"))
+    VersionedLake.deleteRange(spark, dir, "id", 0, 9)
     Seq(("ak", "a137"), ("bk", "b159")).foreach { case (c, v) =>
       val p = VersionedLake.readBloomProbe(spark, dir, c, v)
       assert(p.count() >= 1, s"post-rewrite $c=$v lost rows")
