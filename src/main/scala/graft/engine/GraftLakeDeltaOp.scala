@@ -548,7 +548,7 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
   private val replayOfPublished: Boolean = commitTag.exists(t =>
     VersionedLake.tagPublished(SparkSession.active, lakeDir, t))
 
-  /** Flipped the instant publishDvDelta returns: from that point this
+  /** Flipped the instant the publish returns: from that point this
     * write's data dir and change sidecar are manifest-referenced LIVE
     * state, and no failure after it (tag-marker write, enforceDvBound,
     * Spark's commit-failure → abort bridge) may delete them. */
@@ -722,10 +722,11 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
           if (partCols.isEmpty) table.schema() else dataOnly)
       }
       try {
-        VersionedLake.publishDvDelta(spark, lakeDir,
-          op.observedVersion, op.snapshotDirs, touched, addedEntries,
-          if (winners.isEmpty) None else Some(stage), uuid,
-          Some(table.schema().json))
+        VersionedLake.publish(spark, lakeDir,
+          VersionedLake.mergeOnReadCommit(spark, lakeDir,
+            op.observedVersion, op.snapshotDirs, touched, addedEntries,
+            if (winners.isEmpty) None else Some(stage), uuid,
+            Some(table.schema().json)))
       } catch { case e: Throwable =>
         // a refused publish leaves NOTHING bound: drop the stagings so
         // they cannot be mistaken for live state (the change dir is

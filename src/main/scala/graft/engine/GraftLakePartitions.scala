@@ -188,10 +188,15 @@ object GraftLakePartitions {
       s"${c.name}=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"))
       .mkString("/")
 
-  /** Write the zero-row schema carrier a partitioned commit needs when
-    * no task produced output (CREATE TABLE, zero-row CTAS, a COW that
-    * deleted everything): data columns only (partition values live in
-    * dir names), at the null-partition entry. Returns the entry. */
+  /** Write the zero-row schema carrier a commit needs when no task
+    * produced output (CREATE TABLE, ALTER, TRUNCATE, zero-row CTAS, a
+    * COW or partition DELETE that removed every row): data columns only
+    * (partition values live in dir names), at the null-partition entry
+    * — on a flat lake (`cols` empty) the data dir itself. The carrier is
+    * indexed like every staged dir ([[VersionedLake.indexStagedDir]]):
+    * its zero-row stats lines keep stats-pruned rewrites from counting
+    * it as intersecting, and the metadata-only aggregates covered.
+    * Returns the entry. */
   private[engine] def seedEmpty(spark: SparkSession, lakeDir: String,
       dataDir: String, fullSchema: StructType,
       cols: Seq[StructField]): String = {
@@ -202,6 +207,7 @@ object GraftLakePartitions {
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       dataOnly).repartition(1)
       .write.mode("append").parquet(s"$lakeDir/$entry")
+    VersionedLake.indexStagedDir(spark, lakeDir, entry, dataOnly)
     entry
   }
 

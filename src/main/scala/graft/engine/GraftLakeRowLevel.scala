@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
+import VersionedLake.Commit
+import VersionedLake.CommitSchema.Declared
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
@@ -29,7 +31,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    KB-sized merge source touches one dir of a 100 TB lake;
   *  - the WRITE stages parquet through Spark's committer and publishes
   *    one manifest version replacing exactly the scanned dirs
-  *    ([[VersionedLake.publishReplacingChecked]]) — atomic, time
+  *    ([[VersionedLake.refuseConflicts]]) — atomic, time
   *    travel keeps the pre-merge snapshot, and a concurrent rewrite of
   *    a scanned dir fails the publish loudly instead of duplicating or
   *    resurrecting rows.
@@ -379,17 +381,12 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
         }
         // every row of the scanned dirs was deleted — keep the
         // replacement readable (schema from the write's own contract)
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          info.schema()).repartition(1)
-          .write.mode("append").parquet(staged.toString)
-      }
-      VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
-        info.schema())
-      val v = VersionedLake.publishReplacingChecked(spark, lakeDir,
-        op.scannedDirs, dataDir, op.snapshotDirs,
-        Some(Option(declaredSchema).getOrElse(info.schema()).json),
-        noDvSince = Some(op.observedVersion))
+        GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
+          info.schema(), Nil)
+      } else
+        VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
+          info.schema())
+      val v = publishScanned(spark, Seq(dataDir))
       // opt-in row-level CDF: persist this commit's EXACT changes
       // (survivors netted) so feeds stop shipping the whole rewritten
       // band as delete+insert pairs
@@ -418,21 +415,31 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
           op.snapshotDirs.diff(op.scannedDirs).isEmpty)
         entries = Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
           dataDir, info.schema(), partCols))
-      val dataOnly = org.apache.spark.sql.types.StructType(
-        info.schema().filterNot(fl =>
-          partCols.exists(_.name.equalsIgnoreCase(fl.name))))
-      entries.foreach(e =>
-        VersionedLake.indexStagedDir(spark, lakeDir, e, dataOnly))
-      val v = VersionedLake.publishReplacingCheckedAll(spark, lakeDir,
-        op.scannedDirs, entries, op.snapshotDirs,
-        Some(Option(declaredSchema).getOrElse(info.schema()).json),
-        noDvSince = Some(op.observedVersion))
+      else {
+        val dataOnly = org.apache.spark.sql.types.StructType(
+          info.schema().filterNot(fl =>
+            partCols.exists(_.name.equalsIgnoreCase(fl.name))))
+        entries.foreach(e =>
+          VersionedLake.indexStagedDir(spark, lakeDir, e, dataOnly))
+      }
+      val v = publishScanned(spark, entries)
       if (VersionedLake.cdfEnabled(spark, lakeDir))
         VersionedLake.writeChangeSidecar(spark, lakeDir, v,
           VersionedLake.cowChangeRows(spark, lakeDir,
             op.scannedDirs.toSeq, entries, op.command().toString))
       ()
     }
+    /** `entries` replace the scanned entries, SERIALIZABLE
+      * ([[VersionedLake.refuseConflicts]] against the operation's
+      * snapshot and scanned version). */
+    private def publishScanned(spark: SparkSession,
+        entries: Seq[String]): Int =
+      VersionedLake.publish(spark, lakeDir, Commit(entries, op.scannedDirs,
+        schema = Declared(Some(Option(declaredSchema)
+          .getOrElse(info.schema()).json)),
+        check = VersionedLake.refuseConflicts(op.scannedDirs,
+          Some(op.snapshotDirs), Some(op.observedVersion)))).get
+
     override def abort(msgs: Array[WriterCommitMessage]): Unit = {
       innerBatch.abort(msgs)
       val p = new Path(s"$lakeDir/$dataDir")

@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
+import VersionedLake.{Commit, Expect}
+import VersionedLake.CommitSchema.Declared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast,
   EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
@@ -674,31 +676,20 @@ final class GraftLakeCatalog
     val declared =
       if (mapped) GraftLakeMapping.assignIds(toStruct(columns))
       else toStruct(columns)
-    // strict single-attempt v1 publish, NOT commit's CAS-retry: two
-    // racing CREATEs must yield one winner and one clean error, never
-    // a retried append that unions their schemas/data
-    if (partCols.isEmpty) {
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row], declared)
-        .repartition(1).write.parquet(s"$dir/$dataDir")
-      if (!VersionedLake.publishCreateStrictAll(spark, dir, Seq(dataDir),
-          Some(declared.json)))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(ident)
-    } else {
-      // the schema carrier lives at the null partition (an empty frame
-      // has no partition values); the spec registry lands only AFTER
-      // the create wins — a lost-race loser must not plant its spec
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      val entry = GraftLakePartitions.seedEmpty(spark, dir, dataDir,
-        declared, partCols)
-      if (!VersionedLake.publishCreateStrictAll(spark, dir, Seq(entry),
-          Some(declared.json)))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(ident)
-      GraftLakePartitions.set(spark, dir, partCols)
-    }
+    // exactly version 1, NOT commit's CAS-retry: two racing CREATEs
+    // must yield one winner and one clean error, never a retried append
+    // that unions their schemas/data. On a partitioned lake the schema
+    // carrier lives at the null partition (an empty frame has no
+    // partition values); the spec registry lands only AFTER the create
+    // wins — a lost-race loser must not plant its spec
+    val entry = GraftLakePartitions.seedEmpty(spark, dir,
+      VersionedLake.newDataDir(), declared, partCols)
+    if (VersionedLake.publish(spark, dir, Commit(Seq(entry),
+        replaceAll = true, schema = Declared(Some(declared.json)),
+        expect = Expect.First)).isEmpty)
+      throw new org.apache.spark.sql.catalyst.analysis
+        .TableAlreadyExistsException(ident)
+    if (partCols.nonEmpty) GraftLakePartitions.set(spark, dir, partCols)
     if (mapped) GraftLakeMapping.record(spark, dir, declared)
     if (dv) VersionedLake.setDeletionVectors(spark, dir,
       dvMaxRatioProp(properties), dvMaxPendingProp(properties))
@@ -965,27 +956,9 @@ final class GraftLakeCatalog
     // as successive versions whose schemas merge. On a partitioned
     // lake the schema carrier lives at the null-partition entry like
     // every other empty commit.
-    if (partCols.isEmpty) {
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row], schema)
-        .repartition(1).write.parquet(s"$dir/$dataDir")
-      // index the empty carrier like every other staged dir — without
-      // a stats line its seed file would demote statsCovered (and the
-      // metadata-only aggregate path) FOREVER after any ALTER
-      VersionedLake.indexStagedDir(spark, dir, dataDir, schema)
-      VersionedLake.publishAll(spark, dir, Seq(dataDir),
-        "append", schemaDdl = Some(schema.json))
-    } else {
-      val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-      val entry = GraftLakePartitions.seedEmpty(spark, dir,
-        dataDir, schema, partCols)
-      VersionedLake.indexStagedDir(spark, dir, entry,
-        org.apache.spark.sql.types.StructType(schema.filterNot(f =>
-          partCols.exists(_.name.equalsIgnoreCase(f.name)))))
-      VersionedLake.publishAll(spark, dir, Seq(entry), "append",
-        schemaDdl = Some(schema.json))
-    }
+    VersionedLake.publish(spark, dir, Commit(Seq(GraftLakePartitions
+      .seedEmpty(spark, dir, VersionedLake.newDataDir(), schema, partCols)),
+      schema = Declared(Some(schema.json))))
     if (mapped) GraftLakeMapping.record(spark, dir, schema)
     loadTable(ident)
   }
@@ -1337,13 +1310,11 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     // a delete emptying the lake still needs a schema carrier
     val added =
       if (kept.nonEmpty) Seq.empty[String]
-      else {
-        val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-        Seq(GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
-          schema(), partCols))
-      }
-    VersionedLake.publishReplacingCheckedAll(spark, lakeDir,
-      touched.toSet, added, snapshot.toSet, Some(schema().json))
+      else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
+        VersionedLake.newDataDir(), schema(), partCols))
+    VersionedLake.publish(spark, lakeDir, Commit(added, touched.toSet,
+      schema = Declared(Some(schema().json)), check = VersionedLake
+        .refuseConflicts(touched.toSet, Some(snapshot.toSet))))
     ()
   }
 
@@ -1458,13 +1429,9 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
         // manifest-level truncate: one empty-but-schema-bearing commit
         // (SPARK-23271 writes a footer-only file), so the tip is an
         // empty table and every prior version stays readable
-        val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schema()).repartition(1)
-          .write.parquet(s"$lakeDir/$dataDir")
-        VersionedLake.publishAll(spark, lakeDir, Seq(dataDir),
-          "overwrite", schemaDdl = Some(schema().json))
+        VersionedLake.publish(spark, lakeDir, Commit(Seq(GraftLakePartitions
+          .seedEmpty(spark, lakeDir, VersionedLake.newDataDir(), schema(),
+            Nil)), replaceAll = true, schema = Declared(Some(schema().json))))
         ()
       case Some(GraftLakeDelete.Range(c, lo, hi)) =>
         if (lo <= hi) {
@@ -1769,8 +1736,10 @@ final class GraftLakeWrite(
       // sidecar paths as library-indexed commits
       VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
         info.schema())
-      VersionedLake.publishAll(spark, lakeDir, Seq(dataDir), mode,
-        schemaDdl = Some(tableSchema.json))
+      VersionedLake.publish(spark, lakeDir, Commit(Seq(dataDir),
+        replaceAll = mode == "overwrite",
+        schema = Declared(Some(tableSchema.json))))
+      ()
     }
 
     /** Partitioned commit: the dynamic-partition writer laid the staged
@@ -1809,11 +1778,12 @@ final class GraftLakeWrite(
       }
       def indexAll(es: Seq[String]): Unit =
         VersionedLake.indexStagedEntries(spark, lakeDir, es, dataOnly)
+      val declared = Declared(Some(tableSchema.json))
       mode match {
         case "append" | "overwrite" =>
-          indexAll(entries)
-          VersionedLake.publishAll(spark, lakeDir, entries, mode,
-            schemaDdl = Some(tableSchema.json))
+          if (!seeded) indexAll(entries)
+          VersionedLake.publish(spark, lakeDir, Commit(entries,
+            replaceAll = mode == "overwrite", schema = declared))
           ()
         case "replace" =>
           val pred = replaceCond.toSeq
@@ -1841,12 +1811,12 @@ final class GraftLakeWrite(
                   "would duplicate beside the surviving partitions; " +
                   "widen the condition or fix the written frame")
             }
-            indexAll(entries)
+            if (!seeded) indexAll(entries)
             val (touched, _) = GraftLakePartitions.entriesWhere(spark,
               snapshot, partCols, pred)
-            VersionedLake.publishReplacingCheckedAll(spark, lakeDir,
-              touched.toSet, entries, snapshot.toSet,
-              Some(tableSchema.json), noDvSince = tipV)
+            VersionedLake.publish(spark, lakeDir, Commit(entries,
+              touched.toSet, schema = declared, check = VersionedLake
+                .refuseConflicts(touched.toSet, Some(snapshot.toSet), tipV)))
             ()
           } else {
             // partitioned COW: Delta's arbitrary replaceWhere. The
@@ -1873,22 +1843,34 @@ final class GraftLakeWrite(
               else VersionedLake.rewriteEntries(spark, lakeDir, tipV.get,
                 touched, dataDir)(_.filter(not(pred <=> lit(true))))
             indexAll(finalEntries)
-            if (touched.isEmpty) {
-              VersionedLake.publishAll(spark, lakeDir, finalEntries,
-                "append", schemaDdl = Some(tableSchema.json))
-              ()
-            } else {
-              val v = VersionedLake.publishReplacingCheckedAll(spark,
-                lakeDir, touched.toSet, finalEntries, snapshot.toSet,
-                Some(tableSchema.json), noDvSince = tipV)
-              if (VersionedLake.cdfEnabled(spark, lakeDir))
-                VersionedLake.writeChangeSidecar(spark, lakeDir, v,
-                  VersionedLake.cowChangeRows(spark, lakeDir, touched,
-                    finalEntries, "REPLACE"))
-            }
+            publishOver(spark, tipV, snapshot, touched, finalEntries)
           }
       }
       ()
+    }
+
+    /** The replaceWhere publish: `entries` replace the `touched` entries
+      * of `snapshot` (observed at `tipV`). Nothing touched is a plain
+      * append. Otherwise the commit is SERIALIZABLE
+      * ([[VersionedLake.refuseConflicts]]) — a concurrent rewrite of a
+      * touched entry, or an append landing after the survivor scan (it
+      * may hold rows matching the condition), is refused loudly for the
+      * caller to retry, the same call Delta/Iceberg's COW validation
+      * makes — and persists its row-level changes on a cdf lake. */
+    private def publishOver(spark: SparkSession, tipV: Option[Int],
+        snapshot: Seq[String], touched: Seq[String],
+        entries: Seq[String]): Unit = {
+      val check: VersionedLake.Attempt => Boolean =
+        if (touched.isEmpty) _ => true
+        else VersionedLake.refuseConflicts(touched.toSet,
+          Some(snapshot.toSet), tipV)
+      val v = VersionedLake.publish(spark, lakeDir, Commit(entries,
+        touched.toSet, schema = Declared(Some(tableSchema.json)),
+        check = check)).get
+      if (touched.nonEmpty && VersionedLake.cdfEnabled(spark, lakeDir))
+        VersionedLake.writeChangeSidecar(spark, lakeDir, v,
+          VersionedLake.cowChangeRows(spark, lakeDir, touched, entries,
+            "REPLACE"))
     }
 
     /** replaceWhere commit: the staged dir already holds the new data
@@ -1898,11 +1880,7 @@ final class GraftLakeWrite(
       * metadata-only ([[VersionedLake.entriesTouched]]: stats and bloom
       * sidecars) and conservative; dirs the sidecars cannot clear
       * rewrite through the exact row filter.
-      * Publishes SERIALIZABLE ([[VersionedLake.publishReplacingChecked]])
-      * — a concurrent rewrite of a touched dir, or an append landing
-      * after the survivor scan (it may hold rows matching the
-      * condition), is refused loudly for the caller to retry, the same
-      * call Delta/Iceberg's COW validation makes. */
+      * Publishes through [[publishOver]]. */
     private def commitReplace(spark: SparkSession): Unit = {
       import org.apache.spark.sql.functions.{lit, not}
       val pred = replaceCond
@@ -1927,20 +1905,7 @@ final class GraftLakeWrite(
       // sidecars AFTER the survivor append so they cover every file in
       // the published dir (new data and survivors alike)
       VersionedLake.indexStagedDir(spark, lakeDir, dataDir, tableSchema)
-      if (touched.isEmpty) {
-        VersionedLake.publishAll(spark, lakeDir, Seq(dataDir), "append",
-          schemaDdl = Some(tableSchema.json))
-        ()
-      } else {
-        val v = VersionedLake.publishReplacingChecked(spark, lakeDir,
-          touched.toSet, dataDir, snapshot.toSet,
-          Some(tableSchema.json), noDvSince = tipV)
-        if (VersionedLake.cdfEnabled(spark, lakeDir))
-          VersionedLake.writeChangeSidecar(spark, lakeDir, v,
-            VersionedLake.cowChangeRows(spark, lakeDir, touched,
-              Seq(dataDir), "REPLACE"))
-      }
-      ()
+      publishOver(spark, tipV, snapshot, touched, Seq(dataDir))
     }
     override def abort(msgs: Array[WriterCommitMessage]): Unit = {
       innerBatch.abort(msgs)

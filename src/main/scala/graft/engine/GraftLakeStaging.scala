@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import VersionedLake.{Commit, Expect}
+import VersionedLake.CommitSchema.Declared
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable,
   SupportsWrite, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory,
@@ -56,7 +58,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
     * commit publishes against EXACTLY this tip: staged DDL must not
     * absorb a racing writer through publish's CAS-retry (a CTAS that
     * lost the v1 race would land its data as an APPEND at v2 — two
-    * racing CREATEs silently unioned). See the strict publishes below. */
+    * racing CREATEs silently unioned) — see commitStagedChanges. */
   private val observedTip: Int =
     VersionedLake.tip(spark, lakeDir).getOrElse(0)
 
@@ -151,33 +153,30 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
         .NoSuchTableException(ident)
     // a zero-row CTAS may have landed zero files; a manifest entry must
     // still carry the schema, so seed one empty schema-bearing file —
-    // the same shape as a library create-empty commit (partitioned:
-    // the null-partition entry, data columns only)
+    // the same carrier as CREATE TABLE (partitioned: the null-partition
+    // entry, data columns only)
     val f = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = new Path(s"$lakeDir/$dataDir")
-    val entries: Seq[String] =
-      if (partCols.isEmpty) {
-        val hasFiles = f.exists(staged) && f.listStatus(staged)
-          .exists(_.getPath.getName.endsWith(".parquet"))
-        if (!hasFiles)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row],
-            stSchema).repartition(1)
-            .write.mode("append").parquet(staged.toString)
-        Seq(dataDir)
-      } else {
-        val es = GraftLakePartitions.stagedEntries(spark, lakeDir,
-          dataDir, partCols.length)
-        if (es.nonEmpty) es
-        else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
-          stSchema, partCols))
-      }
-    // STRICT publishes — never publish's CAS-retry, which would absorb
-    // a racing writer as a silent append/union (exactly-one-winner is
+    val written: Seq[String] =
+      if (partCols.nonEmpty) GraftLakePartitions.stagedEntries(spark,
+        lakeDir, dataDir, partCols.length)
+      else if (f.exists(staged) && f.listStatus(staged)
+          .exists(_.getPath.getName.endsWith(".parquet"))) Seq(dataDir)
+      else Nil
+    val entries =
+      if (written.nonEmpty) written
+      else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
+        stSchema, partCols))
+    // exact expectations — never the CAS retry, which would absorb a
+    // racing writer as a silent append/union (exactly-one-winner is
     // CTAS's contract; the library commit path WANTS retry, DDL does
     // not). A lost race leaves this writer's staged dir as an
     // unreferenced orphan for vacuum.
+    def publishAs(expect: Expect): Option[Int] =
+      VersionedLake.publish(spark, lakeDir, Commit(entries,
+        replaceAll = true, schema = Declared(Some(stSchema.json)),
+        expect = expect))
     if (observedTip == 0) {
       // CREATE (or the create half of CREATE OR REPLACE): claim v1
       // exactly once; a racer's publish — any version — loses a plain
@@ -187,8 +186,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
       // two DDLs running sequentially), not a failed DDL. Any FURTHER
       // tip movement between that observation and the publish is still
       // a loud serializable conflict.
-      if (!VersionedLake.publishCreateStrictAll(spark, lakeDir, entries,
-          Some(stSchema.json))) {
+      if (publishAs(Expect.First).isEmpty) {
         if (!(replace && orCreate))
           throw new org.apache.spark.sql.catalyst.analysis
             .TableAlreadyExistsException(ident)
@@ -229,8 +227,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
             "both sides assigned fresh column-mapping field ids — " +
             "re-run (the retry takes never-used ids from the winner's " +
             "registry)")
-        VersionedLake.publishReplaceStrictAll(spark, lakeDir, entries,
-          racerTip, Some(stSchema.json))
+        publishAs(Expect.After(racerTip))
         ()
       }
     } else if (!replace) {
@@ -242,8 +239,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
       // RTAS: overwrite exactly the tip this replace was staged
       // against; any concurrent commit since is a serializable
       // conflict, refused loudly for the caller to re-run
-      VersionedLake.publishReplaceStrictAll(spark, lakeDir, entries,
-        observedTip, Some(stSchema.json))
+      publishAs(Expect.After(observedTip))
       ()
     }
     // persist the declared policies so every LATER commit inherits

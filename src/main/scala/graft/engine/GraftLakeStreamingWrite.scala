@@ -186,13 +186,14 @@ final class GraftLakeStreamingWrite(lakeDir: String, schema: StructType,
     VersionedLake.indexStagedEntries(spark, lakeDir, entries,
       dataOnly(stamped))
     // the declaration carries the tip's schema forward merged with
-    // THIS WRITE'S ([[VersionedLake.publishAll]] carrySchema —
-    // computed per CAS attempt, so a racing writer's new column is
-    // never hidden). The write schema, NOT the captured table schema:
-    // the capture goes stale across an ALTER TABLE RENAME and would
+    // THIS WRITE'S ([[VersionedLake.CommitSchema.Carried]] — computed
+    // per CAS attempt, so a racing writer's new column is never
+    // hidden). The write schema, NOT the captured table schema: the
+    // capture goes stale across an ALTER TABLE RENAME and would
     // re-declare the renamed-away name
-    VersionedLake.publishAll(spark, lakeDir, entries, mode,
-      carrySchema = Some(stamped))
+    VersionedLake.publish(spark, lakeDir, VersionedLake.Commit(entries,
+      replaceAll = mode == "overwrite",
+      schema = VersionedLake.CommitSchema.Carried(stamped)))
     val out = f.create(marker, true)
     out.close()
   }

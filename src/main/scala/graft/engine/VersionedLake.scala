@@ -511,24 +511,6 @@ object VersionedLake {
           .fromDDL(payload))).toOption
     }.flatten
 
-  private def schemaLine(schemaDdl: Option[String]): Seq[String] =
-    schemaDdl.filterNot(_.contains("\n")).map(SchemaMarker + _).toSeq
-
-  private def manifestBytes(live: Seq[String],
-      layoutOnly: Boolean = false,
-      schemaDdl: Option[String] = None): Array[Byte] =
-    (schemaLine(schemaDdl) ++
-      (if (layoutOnly) live :+ LayoutMarker else live) :+ ManifestEnd)
-      .mkString("\n").getBytes("UTF-8")
-
-  /** Delta-manifest bytes: O(changed dirs), the routine-commit write. */
-  private def deltaBytes(adds: Seq[String], drops: Seq[String],
-      layoutOnly: Boolean, schemaDdl: Option[String] = None): Array[Byte] =
-    ((DeltaMarker +: schemaLine(schemaDdl)) ++
-      (drops.map("-" + _) ++ adds.map("+" + _)) ++
-      (if (layoutOnly) Seq(LayoutMarker) else Nil) :+ ManifestEnd)
-      .mkString("\n").getBytes("UTF-8")
-
   /** Un-wedge a lake whose publisher crashed between the CAS create
     * and the content write: such a manifest claimed its version NAME
     * but never became readable, and because every publish reads the
@@ -578,21 +560,25 @@ object VersionedLake {
     * manifest DECLARATION must carry the partition columns or
     * readEntries could not reconstruct and cast them. */
   private def stageForCommit(df: DataFrame, dir: String,
-      dataDir: String, codec: String)
+      dataDir: String, codec: String, bloomCol: Option[String] = None)
       : (Seq[String], org.apache.spark.sql.types.StructType) = {
     val out = withMappedIds(df, dir)
-    (writeStaged(out, dir, dataDir, codec), out.schema)
+    (writeStaged(out, dir, dataDir, codec, bloomCol), out.schema)
   }
 
   /** Write the id-stamped frame `out` into `dataDir` — appended when it
     * already holds staged rows — honoring the lake's partition spec, and
     * return the entries staged there: the dir itself on a flat lake,
-    * its partition leaves ([[stagedOrSeed]]) on a partitioned one. */
+    * its partition leaves ([[stagedOrSeed]]) on a partitioned one.
+    * Parquet's native row-group bloom over `bloomCol` rides along when
+    * the file-level bloom is requested (see [[commitWithBloom]]). */
   private def writeStaged(out: DataFrame, dir: String, dataDir: String,
-      codec: String): Seq[String] = {
+      codec: String, bloomCol: Option[String] = None): Seq[String] = {
     val spark = out.sparkSession
     val partCols = GraftLakePartitions.of(spark, dir)
-    val w = out.write.mode("append").option("compression", codec)
+    val w0 = out.write.mode("append").option("compression", codec)
+    val w = bloomCol.fold(w0)(c =>
+      w0.option(s"parquet.bloom.filter.enabled#$c", "true"))
     if (partCols.isEmpty) {
       w.parquet(s"$dir/$dataDir")
       Seq(dataDir)
@@ -612,13 +598,8 @@ object VersionedLake {
     * dynamic-partition writer and publishes one entry per leaf.
     * Returns the published version number. */
   def commit(df: DataFrame, dir: String, mode: String = "append",
-      codec: String = "snappy"): Int = {
-    require(mode == "append" || mode == "overwrite", s"bad mode $mode")
-    val dataDir = newDataDir()
-    val (entries, schema) = stageForCommit(df, dir, dataDir, codec)
-    publishAll(df.sparkSession, dir, entries, mode,
-      carrySchema = Some(schema))
-  }
+      codec: String = "snappy"): Int =
+    commitIndexed(df, dir, Nil, None, mode, codec)
 
   /** Exactly-once commit for RETRIED writers (foreachBatch replays,
     * task restarts): the data dir name derives from `tag`, so a replay
@@ -655,10 +636,11 @@ object VersionedLake {
     else {
       f.delete(new Path(s"$dir/$dataDir"), true) // orphan from a crash
       val (entries, schema) = stageForCommit(df, dir, dataDir, codec)
-      val v = publishAll(spark, dir, entries, mode,
-        carrySchema = Some(schema))
+      val v = publish(spark, dir, Commit(entries,
+        replaceAll = mode == "overwrite",
+        schema = CommitSchema.Carried(schema)))
       writeTagMarker(spark, dir, tag)
-      Some(v)
+      v
     }
   }
 
@@ -736,17 +718,6 @@ object VersionedLake {
         !readManifestTags(spark, dir, v).contains(tag))
     }
 
-  /** The commit CAS: create-no-overwrite of the next manifest; a racing
-    * writer that published first makes the create throw — recompute
-    * against the new tip and retry (the data dir is already durable,
-    * only the pointer write repeats). `private[engine]` because the
-    * DSv2 write path ([[GraftLakeWrite]]) stages its parquet through
-    * Spark's own committer and then lands HERE for the pointer swing —
-    * one publish protocol, two front doors. */
-  private[engine] def publish(spark: SparkSession, dir: String,
-      dataDir: String, mode: String, layoutOnly: Boolean = false): Int =
-    publishAll(spark, dir, Seq(dataDir), mode, layoutOnly)
-
   /** Declared-schema union: `prev`'s fields keep their order, types and
     * metadata (the column-mapping field ids live there); `write`-only
     * fields append. The monotone merge that keeps a lake's `#schema`
@@ -759,157 +730,230 @@ object VersionedLake {
       write.fields.filterNot(w =>
         prev.fields.exists(_.name.equalsIgnoreCase(w.name))))
 
-  /** [[publish]] generalized to several data entries in ONE version —
-    * a partitioned commit publishes one entry per partition leaf.
-    *
-    * `schemaDdl` is for writers that know the FULL table schema (SQL
-    * paths — they pass `table.schema()`). Writers that only know their
-    * OWN write schema (library commits, the streaming sink) pass it as
-    * `carrySchema` instead: the declaration is then derived PER CAS
-    * ATTEMPT from the current tip — the tip's declared schema merged
-    * with the write schema — so a lost race never publishes a stale
-    * declaration that hides a concurrent commit's new column. A lake
-    * whose tip never declared stays undeclared (the true footer union
-    * is unknowable without the O(live files) pass the declaration
-    * exists to avoid). */
-  private[engine] def publishAll(spark: SparkSession, dir: String,
-      dataDirs: Seq[String], mode: String,
+  // ---- the publish protocol ----------------------------------------------
+  //
+  // Every version is minted by [[publish]]: one CAS loop, one manifest
+  // encoder, one create-no-overwrite of the next manifest. A caller
+  // describes its commit as a [[Commit]] value — what it adds and drops,
+  // which `#schema` line it writes, which version it expects to claim and
+  // what it refuses per attempt — and the loop does the rest:
+  //
+  //   policy          expect     per-attempt check          lost race
+  //   --------------  ---------  -------------------------  --------------
+  //   absorb (append) Next       none; adds already live    retry on the
+  //                              → that version is the      new tip
+  //                              commit (exactly-once)
+  //   checked         Next       [[refuseConflicts]]:       retry on the
+  //   (COW, rewrite,             dropped entry gone, fresh  new tip
+  //   compaction)                append (row-level), DV
+  //                              since the scan
+  //   merge-on-read   Next       [[mergeOnReadCommit]]:     retry; sidecar
+  //                              footprint adjudication,    renamed forward
+  //                              32-attempt cap
+  //   DV delete       Next       [[deleteVectors]]: re-     retry; attempt's
+  //                              subtract interleaved       sidecar unbound
+  //                              vectors
+  //   create          First      none                       None: nothing
+  //                                                         published
+  //   replace         After(v)   tip must still be v        refused (CME)
+
+  /** The version a commit claims. */
+  private[graft] sealed trait Expect
+  private[graft] object Expect {
+    /** Whatever follows the tip: a lost race retries on the new tip. */
+    case object Next extends Expect
+    /** Exactly version 1 (staged CREATE / CTAS): a lake that already has
+      * a version, or a lost race, publishes nothing — [[publish]] returns
+      * None and the staged data dir is an orphan for [[vacuum]]. A
+      * CREATE that lost must not retry as an append at version 2: that
+      * silently unions two racing writers' tables. */
+    case object First extends Expect
+    /** Exactly `observed + 1` (staged REPLACE, restore): the staged data
+      * was computed against `observed` and cannot absorb a concurrent
+      * commit by retrying, so a moved tip or a lost race is refused
+      * loudly instead of silently discarding the concurrent commit. */
+    final case class After(observed: Int) extends Expect
+  }
+
+  /** The `#schema` line a commit writes. */
+  private[graft] sealed trait CommitSchema
+  private[graft] object CommitSchema {
+    /** Exactly this declaration (None: none) — writers that know the
+      * FULL table schema (SQL paths pass `table.schema()`). */
+    final case class Declared(json: Option[String]) extends CommitSchema
+    /** Writers that only know their OWN write schema (library commits,
+      * the streaming sink): derived PER ATTEMPT from the tip — the tip's
+      * declaration merged with the write schema — so a lost race never
+      * publishes a stale declaration that hides a concurrent commit's new
+      * column. A lake whose tip never declared stays undeclared (the true
+      * footer union is unknowable without the O(live files) pass the
+      * declaration exists to avoid); a replace or a first version
+      * declares the write schema. */
+    final case class Carried(write: org.apache.spark.sql.types.StructType)
+      extends CommitSchema
+    /** The tip's declaration, per attempt — rewrites that preserve or
+      * shrink rows, never columns (compaction, deleteRange, DV deletes):
+      * without it every OPTIMIZE would knock a declared lake back to
+      * O(live files) footer inference on its next cold plan. */
+    case object Inherited extends CommitSchema
+  }
+
+  /** One CAS attempt: the tip it publishes on and the version it claims.
+    * The tip's live set is read only when something asks for it. */
+  private[graft] final class Attempt(val spark: SparkSession,
+      val dir: String, val tip: Option[Int]) {
+    val next: Int = tip.getOrElse(0) + 1
+    lazy val live: Seq[String] =
+      tip.fold(Seq.empty[String])(readManifest(spark, dir, _))
+  }
+
+  /** One commit, as [[publish]] takes it. `adds` are manifest entries
+    * already staged on disk; `replaceAll` makes them the whole live set
+    * (overwrite, replace, create), otherwise the next live set is
+    * `live(tip) \ drops ++ adds`. `dv` binds a deletion-vector sidecar
+    * (`#dv <uuid>`). `check` runs once per attempt, before the encode:
+    * it may throw to refuse, return false to publish nothing, and stage
+    * per-attempt artifacts named by [[Attempt.next]]; it may carry state
+    * across the attempts of one publish. */
+  private[graft] final case class Commit(
+      adds: Seq[String] = Seq.empty,
+      drops: Set[String] = Set.empty,
+      replaceAll: Boolean = false,
       layoutOnly: Boolean = false,
-      schemaDdl: Option[String] = None,
-      carrySchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int = {
-    require(dataDirs.nonEmpty, "publishAll needs at least one entry")
+      schema: CommitSchema = CommitSchema.Inherited,
+      dv: Option[String] = None,
+      expect: Expect = Expect.Next,
+      check: Attempt => Boolean = _ => true)
+
+  /** Publish `c` as the next version — the only writer of a manifest.
+    * Each attempt resolves the tip, applies the expectation and the
+    * check, encodes the manifest and creates it with `overwrite = false`
+    * (the CAS). Encoding: FULL at version 1, for `replaceAll` and at
+    * every [[CheckpointInterval]]-th version, DELTA otherwise; a
+    * deletion-vector commit is always a delta. The create throwing while
+    * the manifest exists is a lost race (handled per [[Expect]]); any
+    * other IO failure propagates. The tip hint is written only after a
+    * version is minted. Returns the version that holds the commit — for
+    * an append whose entries are already live, the existing one — or
+    * None when nothing was published (a lost [[Expect.First]], or a
+    * check that found nothing left to publish). */
+  private[graft] def publish(spark: SparkSession, dir: String,
+      c: Commit): Option[Int] = {
+    require(c.adds.nonEmpty || c.drops.nonEmpty || c.dv.nonEmpty,
+      "a commit must add, drop or bind a deletion vector")
     val f = fs(spark, dir)
-    var committed = -1
-    var minted = false
-    while (committed < 0) {
-      val prevTip = tip(spark, dir)
-      val next = prevTip.getOrElse(0) + 1
-      val prevLive =
-        prevTip.fold(Seq.empty[String])(readManifest(spark, dir, _))
-      val declared = schemaDdl.orElse(carrySchema.flatMap { ws =>
-        if (mode == "overwrite" || prevTip.isEmpty) Some(ws.json)
-        else manifestSchema(spark, dir, prevTip.get)
-          .map(prev => mergeDeclared(prev, ws).json)
-      })
-      // a CAS-retry (or a racing same-tag replay) may find its entries
-      // already published at the new tip — appending them AGAIN would
+    while (true) {
+      val at = new Attempt(spark, dir, tip(spark, dir))
+      c.expect match {
+        case Expect.First if at.tip.nonEmpty => return None
+        case Expect.After(v) if at.tip.getOrElse(0) != v =>
+          replaceConflict(dir, v)
+        case _ => ()
+      }
+      if (!c.check(at)) return None
+      // a CAS retry (or a racing same-tag replay) may find an append's
+      // entries already live at the new tip — appending them AGAIN would
       // double-count the rows; the existing version is the commit
-      val fresh = dataDirs.filterNot(prevLive.contains)
-      if (mode == "append" && fresh.isEmpty) {
-        committed = prevTip.get
-      } else {
-        val full = mode == "overwrite" || prevTip.isEmpty
-        val live = if (full) dataDirs else prevLive ++ fresh
-        // routine appends delta-encode (+entry per added dir, O(delta)
-        // bytes); full snapshots at the cadence — and for overwrites,
-        // whose live set IS the delta — bound every reader's replay walk
-        val bytes =
-          if (full || next % CheckpointInterval == 0)
-            manifestBytes(live, layoutOnly, declared)
-          else deltaBytes(fresh, Seq.empty, layoutOnly, declared)
-        try {
-          val out = f.create(manifestPath(dir, next), false)
-          try out.write(bytes)
-          finally out.close()
-          committed = next
-          minted = true
-        } catch {
-          case e: java.io.IOException =>
-            // retry ONLY a lost race (the loser's manifest now
-            // exists); a real IO failure must not spin
-            if (!f.exists(manifestPath(dir, next))) throw e
-        }
+      val fresh =
+        if (c.replaceAll) c.adds else c.adds.filterNot(at.live.contains)
+      if (fresh.isEmpty && c.drops.isEmpty && c.dv.isEmpty) return at.tip
+      val declared = c.schema match {
+        case CommitSchema.Declared(json) => json
+        case CommitSchema.Inherited =>
+          at.tip.flatMap(manifestSchema(spark, dir, _)).map(_.json)
+        case CommitSchema.Carried(ws) =>
+          if (c.replaceAll || at.tip.isEmpty) Some(ws.json)
+          else manifestSchema(spark, dir, at.tip.get)
+            .map(mergeDeclared(_, ws).json)
+      }
+      val schemaLine =
+        declared.filterNot(_.contains("\n")).map(SchemaMarker + _).toSeq
+      val layout = if (c.layoutOnly) Seq(LayoutMarker) else Nil
+      // routine commits delta-encode (O(changed entries) bytes); full
+      // snapshots at the cadence — and for replaces, whose live set IS
+      // the delta — bound every reader's replay walk
+      val lines =
+        if (c.replaceAll || at.tip.isEmpty ||
+            (c.dv.isEmpty && at.next % CheckpointInterval == 0))
+          schemaLine ++
+            (if (c.replaceAll) c.adds else at.live.filterNot(c.drops) ++ fresh)
+        else (DeltaMarker +: schemaLine) ++
+          at.live.filter(c.drops).map("-" + _) ++ fresh.map("+" + _) ++
+          c.dv.map(DvMarker + _)
+      try {
+        val out = f.create(manifestPath(dir, at.next), false)
+        try out.write((lines ++ layout :+ ManifestEnd).mkString("\n")
+          .getBytes("UTF-8"))
+        finally out.close()
+        writeTipHint(f, dir, at.next)
+        return Some(at.next)
+      } catch {
+        case e: java.io.IOException =>
+          // a lost race makes the create throw AND the manifest exist; a
+          // real IO failure must propagate, not spin or read as a race
+          if (!f.exists(manifestPath(dir, at.next))) throw e
+          c.expect match {
+            case Expect.First => return None
+            case Expect.After(v) => replaceConflict(dir, v)
+            case Expect.Next => ()
+          }
       }
     }
-    if (minted) writeTipHint(f, dir, committed)
-    committed
+    None // unreachable
   }
 
-  // ---- strict staged-DDL publishes -------------------------------------
-  //
-  // [[publish]]'s CAS-RETRY loop is the right protocol for data commits
-  // (a lost race re-reads the tip and appends on top), but it is WRONG
-  // for staged DDL: a CTAS that loses the version-1 race must NOT retry
-  // as an append at version 2 — that silently unions two racing
-  // writers' tables, violating CREATE's exactly-one-winner contract.
-  // These variants attempt exactly ONE expected version and surface a
-  // lost race to the caller instead of absorbing it.
+  private def replaceConflict(dir: String, observed: Int): Nothing =
+    throw new java.util.ConcurrentModificationException(
+      s"REPLACE TABLE conflict on $dir: the tip moved past " +
+        s"v$observed after this replace was staged — publishing " +
+        "would silently discard the concurrent commit; re-run the " +
+        "replace against the new snapshot")
 
-  /** Single-attempt publish of a brand-new table's version 1 (staged
-    * CREATE / CTAS). Returns false — leaving the staged data dir as an
-    * unreferenced orphan for [[vacuum]] — when a racing writer
-    * published ANY version first (the caller maps that to
-    * `TableAlreadyExistsException`); only a genuinely unclaimed
-    * version 1 is created. */
-  private[engine] def publishCreateStrict(spark: SparkSession,
-      dir: String, dataDir: String): Boolean =
-    publishCreateStrictAll(spark, dir, Seq(dataDir))
-
-  private[engine] def publishCreateStrictAll(spark: SparkSession,
-      dir: String, dataDirs: Seq[String],
-      schemaDdl: Option[String] = None): Boolean = {
-    val f = fs(spark, dir)
-    if (tip(spark, dir).nonEmpty) return false
-    try {
-      val out = f.create(manifestPath(dir, 1), false)
-      try out.write(manifestBytes(dataDirs, schemaDdl = schemaDdl))
-      finally out.close()
-      writeTipHint(f, dir, 1)
-      true
-    } catch {
-      case e: java.io.IOException =>
-        // a lost race makes the create throw AND the manifest exist;
-        // a real IO failure must propagate, not read as "already there"
-        if (f.exists(manifestPath(dir, 1))) false else throw e
-    }
-  }
-
-  /** [[publishCreateStrict]] with the data write included — the plain
-    * `CREATE TABLE` shape (one empty schema-bearing data dir). */
-  private[engine] def commitCreateStrict(df: DataFrame,
-      dir: String): Boolean = {
-    val dataDir = newDataDir()
-    df.write.parquet(s"$dir/$dataDir")
-    publishCreateStrictAll(df.sparkSession, dir, Seq(dataDir),
-      Some(df.schema.json))
-  }
-
-  /** Single-attempt overwrite publish at exactly `observedTip + 1` —
-    * the staged REPLACE TABLE AS SELECT commit. Any tip movement since
-    * the replace was staged (a concurrent commit whose data this
-    * replace would silently discard, or whose CAS slot it would lose)
-    * is refused loudly — the same serializable posture as
-    * [[publishReplacingChecked]], for the same reason: the staged data
-    * was computed against the observed snapshot and cannot absorb a
-    * concurrent commit by retrying. */
-  private[engine] def publishReplaceStrict(spark: SparkSession,
-      dir: String, dataDir: String, observedTip: Int): Int =
-    publishReplaceStrictAll(spark, dir, Seq(dataDir), observedTip)
-
-  private[engine] def publishReplaceStrictAll(spark: SparkSession,
-      dir: String, dataDirs: Seq[String], observedTip: Int,
-      schemaDdl: Option[String] = None): Int = {
-    val f = fs(spark, dir)
-    def conflict(): Nothing =
+  /** The checked policy's per-attempt refusals, for commits computed
+    * from a SCAN that already happened (copy-on-write DML, survivor
+    * rewrites, compaction): the tip is re-read every attempt, so a
+    * conflict landing between attempts is caught too.
+    *
+    *  - a deletion-vector commit after `noDvSince` (the scanned version):
+    *    the rewrite carried its deleted rows as survivors;
+    *  - an entry in `drops` left the tip — a concurrent compaction/
+    *    delete/merge rewrote it, and its rows are baked into the adds, so
+    *    publishing would duplicate or resurrect them;
+    *  - with `snapshot` (row-level DML only): an entry appeared that the
+    *    operation's snapshot never saw — a concurrent append may hold
+    *    rows MATCHING the operation's condition (a key a MERGE just
+    *    inserted, a row an UPDATE/DELETE should have touched). The
+    *    sidecars cannot prove it disjoint in general, so this is strict
+    *    serializable (Delta/Iceberg's COW validation makes the same
+    *    call). Compaction-style callers omit it: an appended entry they
+    *    never read is simply carried forward.
+    * Every refusal is loud; the caller retries against the new snapshot. */
+  private[graft] def refuseConflicts(drops: Set[String],
+      snapshot: Option[Set[String]] = None,
+      noDvSince: Option[Int] = None): Attempt => Boolean = { at =>
+    def refuse(what: String): Nothing =
       throw new java.util.ConcurrentModificationException(
-        s"REPLACE TABLE conflict on $dir: the tip moved past " +
-          s"v$observedTip after this replace was staged — publishing " +
-          "would silently discard the concurrent commit; re-run the " +
-          "replace against the new snapshot")
-    if (tip(spark, dir).getOrElse(0) != observedTip)
-      conflict()
-    try {
-      val out = f.create(manifestPath(dir, observedTip + 1), false)
-      try out.write(manifestBytes(dataDirs, schemaDdl = schemaDdl))
-      finally out.close()
-      writeTipHint(f, dir, observedTip + 1)
-      observedTip + 1
-    } catch {
-      case e: java.io.IOException =>
-        if (f.exists(manifestPath(dir, observedTip + 1))) conflict()
-        else throw e
+        s"copy-on-write conflict on ${at.dir}: $what; retry against the " +
+          "new snapshot")
+    noDvSince.foreach { v0 =>
+      ((v0 + 1) to at.tip.getOrElse(0)).foreach { k =>
+        if (isDvCommit(at.spark, at.dir, k))
+          refuse(s"deletion-vector commit v$k landed after this " +
+            "rewrite's scan (its deletes would be resurrected)")
+      }
     }
+    val gone = drops.diff(at.live.toSet)
+    if (gone.nonEmpty)
+      refuse(s"dirs ${gone.mkString(", ")} were rewritten by a concurrent " +
+        "commit after this operation scanned them")
+    snapshot.foreach { snap =>
+      val fresh = at.live.toSet.diff(snap)
+      if (fresh.nonEmpty)
+        refuse(s"dirs ${fresh.mkString(", ")} were appended by a " +
+          "concurrent commit after this operation's snapshot — they may " +
+          "hold rows matching the operation's condition")
+    }
+    true
   }
 
   /** Snapshot read of one published version — fails loudly, with the
@@ -1191,8 +1235,7 @@ object VersionedLake {
     val newEntries = rewriteEntries(spark, dir, vs.last, merged,
       codec = codec)(_.coalesce(outFiles))
     writeSidecarsBatch(spark, dir, newEntries, statsCols, bloomCol.toSeq)
-    Some(publishReplacing(spark, dir, merged.toSet, newEntries,
-      checked = true, layoutOnly = true, noDvSince = Some(vs.last)))
+    publish(spark, dir, layoutCommit(merged, newEntries, vs.last))
   }
 
   /** Z-ordered compaction as a versioned commit: rewrite the latest
@@ -1286,8 +1329,7 @@ object VersionedLake {
     // single-job rewrite removed
     writeSidecarsBatch(spark, dir, newEntries, Seq(aCol, bCol),
       bloomCol.toSeq)
-    publishReplacing(spark, dir, observed.toSet, newEntries,
-      checked = true, layoutOnly = true, noDvSince = Some(t.get))
+    publish(spark, dir, layoutCommit(observed, newEntries, t.get)).get
   }
 
   /** The full-snapshot rewrite shared by [[compactVersions]] and
@@ -1370,6 +1412,15 @@ object VersionedLake {
       partCols.exists(_.name.equalsIgnoreCase(f.name))))
   }
 
+  /** A row-preserving rewrite of `replaced` (observed live at `v`) into
+    * `added`, conflict-checked: a concurrent rewrite of a replaced entry
+    * or a deletion vector since `v` refuses, a concurrent append carries
+    * forward. */
+  private def layoutCommit(replaced: Seq[String], added: Seq[String],
+      v: Int): Commit =
+    Commit(added, replaced.toSet, layoutOnly = true,
+      check = refuseConflicts(replaced.toSet, noDvSince = Some(v)))
+
   /** The one survivor rewrite: `entries` (live at `v`) read through
     * the relation [[readAt]] builds for `v` ([[snapshotAt]]: deletion
     * vectors as of `v` applied, field ids matched on mapped lakes,
@@ -1410,8 +1461,7 @@ object VersionedLake {
       .parquet(s"$dir/$dataDir")
     if (statsCols.nonEmpty) writeStatsFor(spark, dir, dataDir, statsCols)
     bloomCol.foreach(c => writeBloomFor(spark, dir, dataDir, c))
-    publishReplacing(spark, dir, observed.toSet, Seq(dataDir),
-      checked = true, layoutOnly = true, noDvSince = Some(t.get))
+    publish(spark, dir, layoutCommit(observed, Seq(dataDir), t.get)).get
   }
 
   /** Full-snapshot rewrite of a PARTITIONED lake: every partition's
@@ -1443,8 +1493,7 @@ object VersionedLake {
       schemaAt(spark, dir, t.get), partCols)
     writeSidecarsBatch(spark, dir, newEntries, statsCols,
       bloomCol.toSeq)
-    publishReplacing(spark, dir, observed.toSet, newEntries,
-      checked = true, layoutOnly = true, noDvSince = Some(t.get))
+    publish(spark, dir, layoutCommit(observed, newEntries, t.get)).get
   }
 
   // ---- row-level change-data-feed sidecars ------------------------------
@@ -1732,8 +1781,7 @@ object VersionedLake {
       codec = codec)(identity)
     indexStagedEntries(spark, dir, newEntries,
       dataColumns(spark, dir, schemaAt(spark, dir, t)))
-    Some(publishReplacing(spark, dir, touched.toSet, newEntries,
-      checked = true, layoutOnly = true, noDvSince = Some(t)))
+    publish(spark, dir, layoutCommit(touched, newEntries, t))
   }
 
   /** Roll the lake back to version `v` AS A NEW COMMIT — the rolled-
@@ -1794,8 +1842,10 @@ object VersionedLake {
     if (GraftLakeMapping.enabled(spark, dir))
       manifestSchema(spark, dir, v).foreach(s =>
         GraftLakeMapping.record(spark, dir, s))
-    Some(publishReplaceStrictAll(spark, dir, entries, tipV,
-      schemaDdl = manifestSchema(spark, dir, v).map(_.json)))
+    publish(spark, dir, Commit(entries, replaceAll = true,
+      schema = CommitSchema.Declared(manifestSchema(spark, dir, v)
+        .map(_.json)),
+      expect = Expect.After(tipV)))
   }
 
   /** DV maintenance-bound enforcement, called after a DV delete
@@ -2255,74 +2305,65 @@ object VersionedLake {
       // sidecar would re-report rows the interleaved commit already
       // deleted (duplicate delete events for CDF consumers)
       var subtractedTo = tipV
-      var committed = -1
-      while (committed < 0) {
-        val prevTip = tip(spark, dir).get
-        val gone = touched.toSet.diff(
-          readManifest(spark, dir, prevTip).toSet)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"deletion-vector conflict on $dir: dirs " +
-              s"${gone.mkString(", ")} were rewritten after this " +
-              "DELETE scanned them (the rewrite carried the rows as " +
-              "survivors) — retry against the new snapshot")
-        val interleaved = dvSidecars(spark, dir, prevTip)
-          .filter(_._1 > subtractedTo)
-        if (interleaved.nonEmpty) {
-          val nv = spark.read
-            .parquet(interleaved.map(_._2.getPath.toString): _*)
-            .select(col("entry").as("__dv_entry"),
-              col("file").as("__dv_file"),
-              col("pos").as("__dv_pos"))
-          val next0 = cur.join(
-            if (dvSidecarBytes(spark, dir, prevTip) <=
-              DvBroadcastMaxBytes) broadcast(nv) else nv,
-            Seq("__dv_entry", "__dv_file", "__dv_pos"), "left_anti")
-            .cache()
-          if (cur ne m) cur.unpersist()
-          cur = next0
-          subtractedTo = prevTip
-          if (cur.isEmpty) {
-            // every matched row was deleted by the interleaved
-            // commit(s): nothing left to publish
-            f.delete(new Path(changeDir), true)
-            return None
+      // the previous attempt's positions sidecar: a lost race leaves it
+      // under the winner's version name — unbind it
+      var attemptSidecar = Option.empty[Path]
+      val committed = publish(spark, dir, Commit(dv = Some(uuid),
+        check = { at =>
+          attemptSidecar.foreach(f.delete(_, true))
+          attemptSidecar = None
+          val gone = touched.toSet.diff(at.live.toSet)
+          if (gone.nonEmpty)
+            throw new java.util.ConcurrentModificationException(
+              s"deletion-vector conflict on $dir: dirs " +
+                s"${gone.mkString(", ")} were rewritten after this " +
+                "DELETE scanned them (the rewrite carried the rows as " +
+                "survivors) — retry against the new snapshot")
+          val interleaved = dvSidecars(spark, dir, at.tip.get)
+            .filter(_._1 > subtractedTo)
+          if (interleaved.nonEmpty) {
+            val nv = spark.read
+              .parquet(interleaved.map(_._2.getPath.toString): _*)
+              .select(col("entry").as("__dv_entry"),
+                col("file").as("__dv_file"),
+                col("pos").as("__dv_pos"))
+            val next0 = cur.join(
+              if (dvSidecarBytes(spark, dir, at.tip.get) <=
+                DvBroadcastMaxBytes) broadcast(nv) else nv,
+              Seq("__dv_entry", "__dv_file", "__dv_pos"), "left_anti")
+              .cache()
+            if (cur ne m) cur.unpersist()
+            cur = next0
+            subtractedTo = at.tip.get
           }
-          cur.drop("__dv_fp", "__dv_entry", "__dv_file", "__dv_pos")
-            .withColumn("_change_type", lit("delete"))
-            .write.mode("overwrite").parquet(changeDir)
-        }
-        // SORTED by (entry, file, pos): each vectored file's positions
-        // cluster into few row groups with tight stats, so the
-        // task-side predicate-pushed sidecar read
-        // ([[GraftLakeDvScan.loadPositions]]) skips foreign keys'
-        // pages instead of decoding the whole backlog per task
-        val pos = cur.select(col("__dv_entry").as("entry"),
-          col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-          .sort("entry", "file", "pos")
-        val next = prevTip + 1
-        val sidecar = new Path(s"$dir/_deletes/v$next-$uuid")
-        f.delete(sidecar, true) // our own stale attempt (uuid-unique)
-        pos.write.parquet(sidecar.toString)
-        val declared = manifestSchema(spark, dir, prevTip).map(_.json)
-        val bytes = ((DeltaMarker +: schemaLine(declared)) ++
-          Seq(DvMarker + uuid) :+ ManifestEnd)
-          .mkString("\n").getBytes("UTF-8")
-        try {
-          val out = f.create(manifestPath(dir, next), false)
-          try out.write(bytes) finally out.close()
-          committed = next
-        } catch {
-          case e: java.io.IOException =>
-            if (!f.exists(manifestPath(dir, next))) throw e
-            f.delete(sidecar, true) // lost the race: unbind the attempt
-        }
-      }
-      writeTipHint(f, dir, committed)
+          // every matched row was deleted by the interleaved commit(s):
+          // nothing left to publish
+          if (interleaved.nonEmpty && cur.isEmpty) {
+            f.delete(new Path(changeDir), true)
+            false
+          } else {
+            if (interleaved.nonEmpty)
+              cur.drop("__dv_fp", "__dv_entry", "__dv_file", "__dv_pos")
+                .withColumn("_change_type", lit("delete"))
+                .write.mode("overwrite").parquet(changeDir)
+            // SORTED by (entry, file, pos): each vectored file's
+            // positions cluster into few row groups with tight stats, so
+            // the task-side predicate-pushed sidecar read
+            // ([[GraftLakeDvScan.loadPositions]]) skips foreign keys'
+            // pages instead of decoding the whole backlog per task
+            val sidecar = new Path(s"$dir/_deletes/v${at.next}-$uuid")
+            f.delete(sidecar, true) // our own stale attempt (uuid-unique)
+            cur.select(col("__dv_entry").as("entry"),
+              col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+              .sort("entry", "file", "pos").write.parquet(sidecar.toString)
+            attemptSidecar = Some(sidecar)
+            true
+          }
+        }))
       // dv_max_ratio maintenance contract: the commit that pushes
       // pending positions past the bound pays the (scoped) rewrite
-      enforceDvBound(spark, dir)
-      Some(committed)
+      committed.foreach(_ => enforceDvBound(spark, dir))
+      committed
     } finally {
       if (cur ne m) cur.unpersist()
       m.unpersist()
@@ -2330,7 +2371,7 @@ object VersionedLake {
     }
   }
 
-  /** The MERGE-ON-READ row-level publish ([[GraftLakeDeltaWrite]]):
+  /** The MERGE-ON-READ row-level commit ([[GraftLakeDeltaWrite]]):
     * ONE version that appends `added` (the UPDATE/MERGE's rewritten +
     * inserted rows) and binds the staged positions sidecar via the
     * `#dv` marker (the delete half) — O(changed rows) bytes, zero
@@ -2361,20 +2402,20 @@ object VersionedLake {
     * write-snapshot isolation, Delta's WriteSerializable default.
     * Attempts are bounded; the final failure is loud.
     *
-    * The staged sidecar dir renames to its version-bound name inside
-    * the CAS loop (the name embeds the version); a lost race's next
+    * The staged sidecar dir renames to its version-bound name in each
+    * attempt's check (the name embeds the version); a lost race's next
     * attempt renames it forward again, and a REFUSAL after a rename
     * puts it back on the stage path so the caller's cleanup covers it
-    * (a version-named but unbound sidecar would orphan until vacuum). */
-  private[graft] def publishDvDelta(spark: SparkSession, dir: String,
+    * (a version-named but unbound sidecar would orphan until vacuum).
+    * The returned commit carries that state: publish it once. */
+  private[graft] def mergeOnReadCommit(spark: SparkSession, dir: String,
       observedV: Int, snapshot: Set[String], touched: Seq[String],
       added: Seq[String], stagedPos: Option[Path], uuid: String,
-      schemaDdl: Option[String]): Int = {
+      schemaDdl: Option[String]): Commit = {
     require(stagedPos.nonEmpty || added.nonEmpty,
-      "publishDvDelta needs positions or added entries")
+      "a merge-on-read commit needs positions or added entries")
     val f = fs(spark, dir)
     var sidecarAt = stagedPos
-    var committed = -1
     val ourEntries = touched.toSet
     // concurrent-commit adjudication state: versions at or below
     // `adjudicatedTo` have been checked (re-checking per CAS attempt
@@ -2384,7 +2425,7 @@ object VersionedLake {
     val toleratedAdds = scala.collection.mutable.Set.empty[String]
     var attempts = 0
     def refuse(msg: String): Nothing = {
-      // ADVICE r19: a lost CAS race may have renamed the sidecar to a
+      // a lost CAS race may have renamed the sidecar to a
       // version-bound name already — restore the stage path before
       // rethrowing so the caller's stage-dir cleanup reaches it
       (sidecarAt, stagedPos) match {
@@ -2395,13 +2436,14 @@ object VersionedLake {
       }
       throw new java.util.ConcurrentModificationException(msg)
     }
-    while (committed < 0) {
+    Commit(added, dv = stagedPos.map(_ => uuid),
+      schema = CommitSchema.Declared(schemaDdl), check = { at =>
       attempts += 1
       if (attempts > 32)
         refuse(s"merge-on-read publish on $dir lost $attempts CAS " +
           "races — the lake is under write contention this commit " +
           "cannot outrun; retry the operation")
-      val prevTip = tip(spark, dir).getOrElse(
+      val prevTip = at.tip.getOrElse(
         throw new IllegalStateException(s"no versions published at $dir"))
       ((adjudicatedTo + 1) to prevTip).foreach { k =>
         val lines = readManifestLines(spark, dir, k)
@@ -2441,23 +2483,21 @@ object VersionedLake {
         }
       }
       adjudicatedTo = prevTip
-      val tip0 = readManifest(spark, dir, prevTip)
-      val gone = touched.toSet.diff(tip0.toSet)
+      val gone = touched.toSet.diff(at.live.toSet)
       if (gone.nonEmpty)
         refuse(
           s"merge-on-read conflict on $dir: dirs ${gone.mkString(", ")} " +
             "were rewritten by a concurrent commit after this " +
             "operation scanned them; retry against the new snapshot")
-      val fresh = tip0.toSet.diff(snapshot).diff(toleratedAdds)
+      val fresh = at.live.toSet.diff(snapshot).diff(toleratedAdds)
       if (fresh.nonEmpty)
         refuse(
           s"merge-on-read conflict on $dir: dirs ${fresh.mkString(", ")} " +
             "were appended by a concurrent commit after this " +
             "operation's snapshot — they may hold rows matching the " +
             "operation's condition; retry against the new snapshot")
-      val next = prevTip + 1
       sidecarAt.foreach { cur =>
-        val tgt = new Path(s"$dir/_deletes/v$next-$uuid")
+        val tgt = new Path(s"$dir/_deletes/v${at.next}-$uuid")
         if (cur != tgt) {
           f.delete(tgt, true) // our own stale attempt (uuid-unique)
           if (!f.rename(cur, tgt))
@@ -2466,23 +2506,8 @@ object VersionedLake {
           sidecarAt = Some(tgt)
         }
       }
-      val marker = sidecarAt.map(_ => DvMarker + uuid).toSeq
-      val bytes = ((DeltaMarker +: schemaLine(schemaDdl)) ++
-        added.map("+" + _) ++ marker :+ ManifestEnd)
-        .mkString("\n").getBytes("UTF-8")
-      try {
-        val out = f.create(manifestPath(dir, next), false)
-        try out.write(bytes) finally out.close()
-        committed = next
-      } catch {
-        case e: java.io.IOException =>
-          if (!f.exists(manifestPath(dir, next))) throw e
-        // lost race: loop — the next attempt re-checks conflicts and
-        // renames the sidecar forward to the new next version
-      }
-    }
-    writeTipHint(f, dir, committed)
-    committed
+      true
+    })
   }
 
   /** Changed rows between two published versions, tagged `op` =
@@ -2653,30 +2678,13 @@ object VersionedLake {
   def commitIndexed(df: DataFrame, dir: String, statsCols: Seq[String],
       bloomCol: Option[String], mode: String = "append",
       codec: String = "snappy", layoutOnly: Boolean = false): Int = {
+    require(mode == "append" || mode == "overwrite", s"bad mode $mode")
     val spark = df.sparkSession
-    val partCols = GraftLakePartitions.of(spark, dir)
-    val out = withMappedIds(df, dir)
-    val dataDir = newDataDir()
-    val w0 = out.write.option("compression", codec)
-    // parquet's native row-group bloom rides along whenever the
-    // file-level bloom is requested (see commitWithBloom's doc)
-    val w = bloomCol.fold(w0)(c =>
-      w0.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    val entries: Seq[String] =
-      if (partCols.isEmpty) {
-        w.parquet(s"$dir/$dataDir")
-        Seq(dataDir)
-      } else {
-        require(partCols.forall(pc =>
-          out.columns.exists(_.equalsIgnoreCase(pc.name))),
-          "the committed frame lacks the lake's partition columns " +
-            s"(${partCols.map(_.name).mkString(", ")})")
-        w.partitionBy(partCols.map(_.name): _*).parquet(s"$dir/$dataDir")
-        stagedOrSeed(spark, dir, dataDir, out.schema, partCols)
-      }
+    val (entries, schema) =
+      stageForCommit(df, dir, newDataDir(), codec, bloomCol)
     writeSidecarsBatch(spark, dir, entries, statsCols, bloomCol.toSeq)
-    publishAll(spark, dir, entries, mode, layoutOnly,
-      carrySchema = Some(out.schema))
+    publish(spark, dir, Commit(entries, replaceAll = mode == "overwrite",
+      layoutOnly = layoutOnly, schema = CommitSchema.Carried(schema))).get
   }
 
   // ---- declared index policy (SQL-writer parity) -----------------------
@@ -3383,7 +3391,8 @@ object VersionedLake {
     }
     val newEntries = rewriteEntries(spark, dir, tipV, touched)(keep)
     indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
-    val v = publishRewrite(spark, dir, tipV, touched.toSet, newEntries)
+    val v = publish(spark, dir, rewriteCommit(spark, dir, tipV, touched,
+      newEntries)).get
     // opt-in row-level CDF: the deleted rows ARE the net diff of
     // touched-vs-survivors (survivors cancel) — persist them so
     // feeds deliver O(deleted rows), not the whole touched band
@@ -3430,20 +3439,21 @@ object VersionedLake {
       else rewriteEntries(spark, dir, tipV, touched, dataDir)(
         _.filter(col(c).isNull || !col(c).isin(values: _*)))
     indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
-    publishRewrite(spark, dir, tipV, touched.toSet, newEntries)
+    publish(spark, dir, rewriteCommit(spark, dir, tipV, touched,
+      newEntries)).get
   }
 
-  /** The publish step of [[deleteRange]] and [[replaceWhereIn]]: CAS
-    * of `live(tip) \ touched :+ added`, checked — a concurrent rewrite
-    * of a touched dir (another delete, a compaction) is refused
-    * loudly, since its removed rows are baked into these survivors,
-    * and on a DV lake so is a vector landing after the survivor scan at
-    * `observed`. Concurrent APPENDS absorb through the CAS retry (they
-    * are not in `touched`). */
-  private[graft] def publishRewrite(spark: SparkSession, dir: String,
-      observed: Int, touched: Set[String], added: Seq[String]): Int =
-    publishReplacing(spark, dir, touched, added, checked = true,
-      noDvSince = if (dvEnabled(spark, dir)) Some(observed) else None)
+  /** The commit of [[deleteRange]] and [[replaceWhereIn]]:
+    * `live(tip) \ touched ++ added`, checked — a concurrent rewrite of a
+    * touched dir (another delete, a compaction) is refused loudly, since
+    * its removed rows are baked into these survivors, and on a DV lake
+    * so is a vector landing after the survivor scan at `observed`.
+    * Concurrent APPENDS absorb through the CAS retry (they are not in
+    * `touched`). */
+  private[graft] def rewriteCommit(spark: SparkSession, dir: String,
+      observed: Int, touched: Seq[String], added: Seq[String]): Commit =
+    Commit(added, touched.toSet, check = refuseConflicts(touched.toSet,
+      noDvSince = if (dvEnabled(spark, dir)) Some(observed) else None))
 
   /** Manifest dir names of a version — the replacement units the COW
     * row-level write coordinates on ([[GraftLakeRowLevelOperation]]). */
@@ -3459,128 +3469,6 @@ object VersionedLake {
     manifestEntries(spark, dir, tip(spark, dir).get).map(e =>
       f.listStatus(new Path(s"$dir/$e"))
         .count(_.getPath.getName.endsWith(".parquet"))).sum
-  }
-
-  /** [[publishReplacing]] with a SERIALIZABLE conflict check for the
-    * copy-on-write row-level writes, which computed their result from
-    * a SCAN that already happened and cannot recompute. Two races are
-    * refused (loudly), not absorbed:
-    *
-    *  - a dir this commit replaces left the tip — a concurrent
-    *    compaction/delete/merge rewrote it, and its rows are baked
-    *    into `added`, so publishing would duplicate or resurrect them;
-    *  - a dir appeared in the tip that the operation's snapshot never
-    *    saw — a concurrent append may contain rows MATCHING the
-    *    operation's condition (a key a MERGE just inserted, a row an
-    *    UPDATE/DELETE should have touched), and publishing would leave
-    *    duplicates or ghosts the operation's semantics exclude. The
-    *    sidecars cannot prove the append disjoint in general, so this
-    *    is strict serializable (Delta/Iceberg's COW validation makes
-    *    the same call); the caller retries against the new snapshot.
-    *
-    * The lenient variant stays correct for its callers (deleteRange /
-    * backfill recompute `dropped` from the tip inside their own
-    * loop). */
-  private[engine] def publishReplacingChecked(spark: SparkSession,
-      dir: String, dropped: Set[String], added: String,
-      snapshot: Set[String], schemaDdl: Option[String] = None,
-      noDvSince: Option[Int] = None): Int =
-    publishReplacing(spark, dir, dropped, Seq(added), checked = true,
-      snapshot = Some(snapshot), schemaDdl = schemaDdl,
-      noDvSince = noDvSince)
-
-  /** Multi-entry checked replace — a partitioned COW/replaceWhere drops
-    * and adds PARTITION entries; `added` may be empty (whole-partition
-    * DELETE: the drop is the entire commit, manifest-only). */
-  private[engine] def publishReplacingCheckedAll(spark: SparkSession,
-      dir: String, dropped: Set[String], added: Seq[String],
-      snapshot: Set[String], schemaDdl: Option[String] = None,
-      noDvSince: Option[Int] = None): Int =
-    publishReplacing(spark, dir, dropped, added, checked = true,
-      snapshot = Some(snapshot), schemaDdl = schemaDdl,
-      noDvSince = noDvSince)
-
-  /** CAS publish of `live(tip) \ dropped :+ added` — the delete/rewrite
-    * pointer swap. A lost race re-reads the new tip, so appends that
-    * landed meanwhile are preserved (they are not in `dropped`). */
-  private def publishReplacing(spark: SparkSession, dir: String,
-      dropped: Set[String], added: Seq[String],
-      checked: Boolean = false,
-      snapshot: Option[Set[String]] = None,
-      layoutOnly: Boolean = false,
-      schemaDdl: Option[String] = None,
-      noDvSince: Option[Int] = None): Int = {
-    val f = fs(spark, dir)
-    var committed = -1
-    while (committed < 0) {
-      val prevTip = tip(spark, dir)
-      // a DELETION VECTOR published on the dropped dirs after this
-      // rewrite SCANNED them would be silently undone (the rewrite
-      // carried the deleted rows as survivors) — refuse loudly, the
-      // same serializable posture as the dropped-dir check below
-      noDvSince.foreach { v0 =>
-        ((v0 + 1) to prevTip.getOrElse(0)).foreach { k =>
-          if (isDvCommit(spark, dir, k))
-            throw new java.util.ConcurrentModificationException(
-              s"copy-on-write conflict on $dir: deletion-vector " +
-                s"commit v$k landed after this rewrite's scan (its " +
-                "deletes would be resurrected); retry against the " +
-                "new snapshot")
-        }
-      }
-      val next = prevTip.getOrElse(0) + 1
-      val tip0 = prevTip.fold(Seq.empty[String])(
-        readManifest(spark, dir, _))
-      // the conflict check lives INSIDE the CAS loop: every retry
-      // re-reads the tip it is about to replace, so a dir rewritten
-      // (or appended) between attempts is caught too
-      if (checked) {
-        val gone = dropped.diff(tip0.toSet)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"copy-on-write conflict on $dir: dirs " +
-              s"${gone.mkString(", ")} were rewritten by a concurrent " +
-              "commit after this operation scanned them; retry against " +
-              "the new snapshot")
-        // the append check only applies to ROW-LEVEL ops (which pass
-        // their snapshot): a concurrent append may hold rows matching
-        // their condition. Compaction-style callers omit it — an
-        // appended dir they never read is simply carried forward.
-        snapshot.foreach { snap =>
-          val fresh = tip0.toSet.diff(snap)
-          if (fresh.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"copy-on-write conflict on $dir: dirs " +
-                s"${fresh.mkString(", ")} were appended by a concurrent " +
-                "commit after this operation's snapshot — they may hold " +
-                "rows matching the operation's condition; retry against " +
-                "the new snapshot")
-        }
-      }
-      val live = tip0.filterNot(dropped) ++ added
-      // callers that don't declare (library compaction, deleteRange)
-      // CARRY the tip's declaration forward: their rewrites preserve
-      // or shrink rows, never columns — without this every OPTIMIZE
-      // would knock a declared lake back to O(live files) footer
-      // inference on its next cold plan
-      val declared = schemaDdl.orElse(
-        prevTip.flatMap(manifestSchema(spark, dir, _)).map(_.json))
-      val bytes =
-        if (prevTip.isEmpty || next % CheckpointInterval == 0)
-          manifestBytes(live, layoutOnly, declared)
-        else deltaBytes(added, tip0.filter(dropped), layoutOnly, declared)
-      try {
-        val out = f.create(manifestPath(dir, next), false)
-        try out.write(bytes)
-        finally out.close()
-        committed = next
-      } catch {
-        case e: java.io.IOException =>
-          if (!f.exists(manifestPath(dir, next))) throw e
-      }
-    }
-    writeTipHint(f, dir, committed)
-    committed
   }
 
   /** Range probe over the latest snapshot: [[readLatest]] filtered to

@@ -47,6 +47,38 @@ class GraftLakeCtasSpec extends AnyFunSuite {
     }
   }
 
+  test("the zero-row schema carrier of CREATE TABLE and of a TRUNCATE " +
+      "is indexed: a stats-pruned deleteRange after two INSERTs keeps " +
+      "it live") {
+    val root = tempDir("glc-carrier")
+    withCatalog(root) { cat =>
+      def tipEntries(dir: String) = VersionedLake.manifestEntries(spark,
+        dir, VersionedLake.tip(spark, dir).get)
+      // `setup` leaves the carrier as the tip's only entry
+      def carrierSurvives(t: String)(setup: => Unit): Unit = {
+        val dir = s"$root/$t"
+        setup
+        val carrier = tipEntries(dir)
+        assert(carrier.length == 1, s"$t: $carrier")
+        spark.sql(s"INSERT INTO $cat.$t SELECT id FROM range(0, 100)")
+        spark.sql(s"INSERT INTO $cat.$t SELECT id FROM range(100, 200)")
+        VersionedLake.deleteRange(spark, dir, "id", 150, 160)
+        assert(tipEntries(dir).contains(carrier.head),
+          s"$t: the carrier ${carrier.head} was rewritten away: " +
+            tipEntries(dir))
+        assert(spark.table(s"$cat.$t").count() == 189)
+      }
+      carrierSurvives("created") {
+        spark.sql(s"CREATE TABLE $cat.created (id BIGINT)")
+      }
+      carrierSurvives("truncated") {
+        spark.sql(s"CREATE TABLE $cat.truncated (id BIGINT)")
+        spark.sql(s"INSERT INTO $cat.truncated SELECT id FROM range(0, 50)")
+        spark.sql(s"DELETE FROM $cat.truncated")
+      }
+    }
+  }
+
   test("CTAS is one atomic versioned commit: data lands WITH the table; " +
       "RTAS replaces as an overwrite commit keeping the old snapshot " +
       "time-travelable; zero-row CTAS still carries its schema") {

@@ -460,9 +460,9 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
       spark.sql(s"INSERT INTO $cat.t SELECT id, CAST(9 AS DOUBLE) " +
         "FROM range(1000, 1100)")
       val e = intercept[java.util.ConcurrentModificationException] {
-        VersionedLake.publishDvDelta(spark, dir, observed,
-          snapshot.toSet, snapshot, Seq("d-bogus"), None, "abcdef123456",
-          None)
+        VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
+          spark, dir, observed, snapshot.toSet, snapshot, Seq("d-bogus"),
+          None, "abcdef123456", None))
       }
       assert(e.getMessage.contains("appended by a concurrent commit"))
       // a concurrent ROW-LEVEL commit is ADJUDICATED by footprint:
@@ -485,8 +485,9 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
       }
       val overlapStage = mkStage("abcdef123457", theirs)
       val e2 = intercept[java.util.ConcurrentModificationException] {
-        VersionedLake.publishDvDelta(spark, dir, observed2, snap2.toSet,
-          snap2, Seq.empty, Some(overlapStage), "abcdef123457", None)
+        VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
+          spark, dir, observed2, snap2.toSet, snap2, Seq.empty,
+          Some(overlapStage), "abcdef123457", None))
       }
       assert(e2.getMessage.contains("lost update"), e2.getMessage)
       assert(f.exists(overlapStage),
@@ -502,9 +503,9 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
           .selectExpr("substring_index(fkey, '/', 1) AS entry",
             "substring_index(fkey, '/', -1) AS file", "pos"))
       val tipBefore = VersionedLake.tip(spark, dir).get
-      val committed = VersionedLake.publishDvDelta(spark, dir,
-        observed2, snap2.toSet, snap2, Seq.empty, Some(disjointStage),
-        "abcdef123458", None)
+      val committed = VersionedLake.publish(spark, dir,
+        VersionedLake.mergeOnReadCommit(spark, dir, observed2, snap2.toSet,
+          snap2, Seq.empty, Some(disjointStage), "abcdef123458", None)).get
       assert(committed == tipBefore + 1,
         "disjoint-position row-level commits must auto-serialize")
       // both vectors applied: ids 1,2,3 (theirs) + 501,502,503 (ours)
@@ -695,7 +696,7 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
         try body finally spark.conf.unset("spark.graft.lake.commitTag")
       }
       // BLOCK the marker write: a regular FILE where the _tags
-      // directory must be created — publishDvDelta succeeds, then
+      // directory must be created — the MoR publish succeeds, then
       // writeTagMarker throws, commit() throws AFTER the publish, and
       // Spark routes the failure through BatchWrite.abort
       val tagsPath = new org.apache.hadoop.fs.Path(s"$dir/_tags")

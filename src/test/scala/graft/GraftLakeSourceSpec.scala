@@ -748,8 +748,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     val tipBefore = listDataDirs(dir)
     VersionedLake.compactVersions(spark, dir, statsCols = Seq("id"))
     val e = intercept[java.util.ConcurrentModificationException] {
-      graft.engine.EngineTestBridge.publishReplacingChecked(spark, dir,
-        tipBefore, "d-stale-cow", tipBefore)
+      VersionedLake.publish(spark, dir, VersionedLake.Commit(
+        Seq("d-stale-cow"), tipBefore, check = VersionedLake
+          .refuseConflicts(tipBefore, Some(tipBefore))))
     }
     assert(e.getMessage.contains("copy-on-write conflict"))
     // conflict 2: a concurrent APPEND after the operation's snapshot —
@@ -761,8 +762,9 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     val snap = listDataDirs(dir2) // single commit: disk set == tip set
     VersionedLake.commit(Seq((99L, "z", 9.0)).toDF("id", "tag", "v"), dir2)
     val e2 = intercept[java.util.ConcurrentModificationException] {
-      graft.engine.EngineTestBridge.publishReplacingChecked(spark, dir2,
-        snap, "d-stale-cow2", snap)
+      VersionedLake.publish(spark, dir2, VersionedLake.Commit(
+        Seq("d-stale-cow2"), snap, check = VersionedLake
+          .refuseConflicts(snap, Some(snap))))
     }
     assert(e2.getMessage.contains("appended by a concurrent commit"))
   }

@@ -6,13 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine._
 
-/** Crash points of the survivor-rewrite commits: a library
-  * `deleteRange` and an unpartitioned SQL overwrite-by-filter run once
-  * per filesystem step k = 1..N of the commit, with the k-th mutating
-  * call (create, rename, delete, mkdirs) failing. After each crash a
-  * fresh reader sees exactly version V or V+1 with that version's rows,
-  * and repairing torn manifests then retrying the operation converges
-  * on the committed answer. */
+/** Crash points of every library publish policy: a checked survivor
+  * rewrite (library `deleteRange`, unpartitioned SQL overwrite-by-
+  * filter), an absorbed append (`commitTagged`) and a layout-only
+  * checked commit (`compactSmall`) run once per filesystem step
+  * k = 1..N of the commit, with the k-th mutating call (create, rename,
+  * delete, mkdirs) failing. After each crash a fresh reader sees exactly
+  * version V or V+1 with that version's rows, and repairing torn
+  * manifests then retrying the operation converges on the committed
+  * answer — for the tagged append, by publishing it exactly once. */
 class RewriteCrashSpec extends AnyFunSuite {
   import TestSpark.{spark, tempDir}
 
@@ -46,9 +48,11 @@ class RewriteCrashSpec extends AnyFunSuite {
   private val before = (0L until 30L).map(i => (i, i * 10))
 
   /** Every crash point of `op` on a fresh copy of the lake, named by
-    * `lakeAt(k)`; `after` is the committed answer. */
-  private def enumerate(lakeAt: Int => String, after: Seq[(Long, Long)])(
-      op: String => Unit): Int = {
+    * `lakeAt(k)`; `after` is the committed answer. With `exactlyOnce`
+    * the retry must also leave the tip at v4: a commit the crash
+    * already published is not published again. */
+  private def enumerate(lakeAt: Int => String, after: Seq[(Long, Long)],
+      exactlyOnce: Boolean = false)(op: String => Unit): Int = {
     CrashingFileSystem.install(spark)
     val clean = lakeAt(0)
     val (n, err) = CrashingFileSystem.run(0)(op(clean))
@@ -65,6 +69,9 @@ class RewriteCrashSpec extends AnyFunSuite {
       VersionedLake.repairTornManifests(spark, dir, staleMs = 0L)
       op(dir)
       assert(rows(dir) == after, s"step $k/$n ($crash): retry did not converge")
+      if (exactlyOnce)
+        assert(VersionedLake.tip(spark, dir).contains(4),
+          s"step $k/$n ($crash): the retry published again")
     }
     n
   }
@@ -93,6 +100,30 @@ class RewriteCrashSpec extends AnyFunSuite {
     val n = enumerate(k => copyOfBase(s"$root/t$k"), after) { dir =>
       replacement.writeTo(s"rwcrash.${dir.split('/').last}")
         .overwrite(col("id") >= 12 && col("id") <= 15)
+    }
+    info(s"$n crash points")
+  }
+
+  test("commitTagged: a crash at any filesystem step leaves v3 or v4 " +
+      "readable with its rows, and the retried append publishes once") {
+    val root = tempDir("rwcrash-tag")
+    val batch = spark.range(30, 35).selectExpr("id", "id * 10 AS v")
+      .coalesce(1)
+    val n = enumerate(k => copyOfBase(s"$root/k$k"),
+      before ++ (30L until 35L).map(i => (i, i * 10)),
+      exactlyOnce = true) { dir =>
+      VersionedLake.commitTagged(batch, dir, "batch-7")
+      ()
+    }
+    info(s"$n crash points")
+  }
+
+  test("compactSmall: a crash at any filesystem step leaves v3 or v4 " +
+      "readable with the same rows, and the retried compaction converges") {
+    val root = tempDir("rwcrash-compact")
+    val n = enumerate(k => copyOfBase(s"$root/k$k"), before) { dir =>
+      VersionedLake.compactSmall(spark, dir, 1L << 20, statsCols = Seq("id"))
+      ()
     }
     info(s"$n crash points")
   }

@@ -298,13 +298,45 @@ class VersionedLakeSpec extends AnyFunSuite {
     VersionedLake.deleteRange(spark, dir, "id", 50, 59) // B wins
     val e = intercept[java.util.ConcurrentModificationException](
       // A's publish attempt with its stale touched set
-      VersionedLake.publishRewrite(spark, dir, 1, touched.toSet,
-        Seq("d-race-a")))
+      VersionedLake.publish(spark, dir, VersionedLake.rewriteCommit(spark,
+        dir, 1, touched, Seq("d-race-a"))))
     assert(e.getMessage.contains("copy-on-write conflict"), e.getMessage)
     // B's delete survives; A's rows are NOT resurrected
     val ids0 = VersionedLake.readLatest(spark, dir)
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids0 == ((0L until 50L) ++ (60L until 100L)))
+  }
+
+  test("one publish protocol: main code holds exactly one manifest CAS " +
+      "create, and only publish, repair and vacuum write a manifest path") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val lines = sources.flatMap(p =>
+      Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) =>
+        (s"$p:${i + 1}", l) })
+    val creates = lines.filter(_._2.contains("create(manifestPath("))
+    assert(creates.length == 1, creates.mkString("\n"))
+    // the members of VersionedLake (the only file that can name the
+    // private manifestPath) that both name a manifest path and mutate
+    // the file system
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    val body = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    var cur = ""
+    Files.readAllLines(root.resolve("graft/engine/VersionedLake.scala"))
+      .asScala.foreach { l =>
+        l match { case member(n) => cur = n; case _ => () }
+        body(cur) = body.getOrElse(cur, "") + l + "\n"
+      }
+    val writers = body.collect { case (n, b) if b.contains("manifestPath(") &&
+        Seq(".create(", ".delete(", ".rename(").exists(b.contains) => n }
+    assert(writers.toSet == Set("publish", "repairTornManifests", "vacuum"),
+      writers)
+    assert(lines.forall { case (at, l) => !l.contains("manifestPath(") ||
+      at.contains("VersionedLake.scala") })
   }
 
   test("tip resolution: the hint-checkpointed tip equals the listed " +
