@@ -95,12 +95,12 @@ private[engine] object GraftLakeDeltaOp {
 /** See [[GraftLakeDeltaOp]]. Same construction seam as the COW
   * operation: snapshot, version and DV refs pinned at build time. */
 final class GraftLakeDeltaOperation(table: GraftLakeTable,
-    spark: SparkSession, lakeDir: String, version: Int,
+    spark: SparkSession, private[engine] val snap: Snapshot,
     cmd: RowLevelOperation.Command)
   extends org.apache.spark.sql.connector.write.SupportsDelta {
+  private val (lakeDir, version) = (snap.dir, snap.version)
 
-  private[engine] val snapshotDirs: Set[String] =
-    VersionedLake.manifestEntries(spark, lakeDir, version).toSet
+  private[engine] val snapshotDirs: Set[String] = snap.entries.toSet
 
   private[engine] def observedVersion: Int = version
 
@@ -129,15 +129,14 @@ final class GraftLakeDeltaOperation(table: GraftLakeTable,
     // sidecarPrune = true — SAFE here, unlike the COW scan: a file
     // statically pruned out of a delta scan is merely a file with no
     // matched rows, not a silently-dropped replacement unit
-    val idx = new GraftLakeFileIndex(spark, lakeDir,
-      VersionedLake.liveDataDirs(spark, lakeDir, version)
-        .map(new Path(_)))
+    val idx = new GraftLakeFileIndex(spark, snap,
+      snap.entries.map(e => new Path(s"$lakeDir/$e")))
     // COLUMN-MAPPING lakes: the scan must bind BY FIELD ID — Spark
     // hands this builder ITS OWN options, and a name-matched read of
     // pre-rename files would null the renamed column out of exactly
     // the rows the operation is rewriting (the COW scan's lesson)
     val opts =
-      if (!GraftLakeMapping.enabled(spark, lakeDir)) options
+      if (!snap.mapped) options
       else {
         val m = new java.util.HashMap[String, String](
           options.asCaseSensitiveMap())
@@ -145,13 +144,13 @@ final class GraftLakeDeltaOperation(table: GraftLakeTable,
         new CaseInsensitiveStringMap(m)
       }
     new GraftLakeDeltaScanBuilder(this, spark, idx, table.schema(),
-      table.dataSchema, opts, lakeDir)
+      table.dataSchema, opts)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new GraftLakeDeltaWrite(
-        GraftLakeDeltaOperation.this, table, info, lakeDir)
+        GraftLakeDeltaOperation.this, table, info)
     }
 }
 
@@ -167,7 +166,7 @@ final class GraftLakeDeltaScanBuilder(op: GraftLakeDeltaOperation,
     fileIndex: org.apache.spark.sql.execution.datasources
       .PartitioningAwareFileIndex,
     schema: StructType, dataSchema: StructType,
-    options: CaseInsensitiveStringMap, lakeDir: String)
+    options: CaseInsensitiveStringMap)
   extends ParquetScanBuilder(spark, fileIndex, schema, dataSchema,
     options) {
 
@@ -189,7 +188,7 @@ final class GraftLakeDeltaScanBuilder(op: GraftLakeDeltaOperation,
 
   override def build()
       : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =
-    new GraftLakeDeltaScan(op.dvRefs, super.build(), lakeDir, metaCols)
+    new GraftLakeDeltaScan(op.dvRefs, super.build(), op.snap, metaCols)
 }
 
 /** Parquet execution plus (a) one file per partition — the row-address
@@ -215,7 +214,7 @@ final class GraftLakeDeltaScanBuilder(op: GraftLakeDeltaOperation,
 final class GraftLakeDeltaScan(
     private[engine] val dvRefs: Map[String, GraftLakeDvRef],
     base: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan,
-    lakeDir: String, metaCols: Seq[String])
+    snap: Snapshot, metaCols: Seq[String])
   extends org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
     base.sparkSession, base.hadoopConf, base.fileIndex, base.dataSchema,
     base.readDataSchema, base.readPartitionSchema, base.pushedFilters,
@@ -298,7 +297,7 @@ final class GraftLakeDeltaScan(
       base.readPartitionSchema.fields).map(_.dataType)
     new GraftLakeDeltaReaderFactory(withIdx,
       base.readDataSchema.length, innerTypes, metaCols,
-      1 + GraftLakePartitions.of(base.sparkSession, lakeDir).length + 1,
+      1 + snap.partCols.length + 1,
       new GraftLakeSerializableConf(base.hadoopConf))
   }
 }
@@ -492,7 +491,7 @@ private final case class GraftLakeDeltaCommitMsg(
   * per-task sorted parquet parts under `_deletes/.stage-<uuid>`; the
   * driver commit assembles both into ONE serializable publish. */
 final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
-    table: GraftLakeTable, info: LogicalWriteInfo, lakeDir: String)
+    table: GraftLakeTable, info: LogicalWriteInfo)
   extends DeltaWrite
   with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
@@ -531,12 +530,10 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
   // plain parquet read. `stage-*` never matches the sidecar pattern,
   // so readers can't confuse staging with a bound vector; vacuum
   // sweeps crashed attempts' stagings after the grace window.
+  private val lakeDir = op.snap.dir
   private val stageDir = s"$lakeDir/_deletes/stage-$uuid"
 
-  private val partCols = GraftLakePartitions.of(SparkSession.active,
-    lakeDir)
-  private val mapped = GraftLakeMapping.enabled(SparkSession.active,
-    lakeDir)
+  private val (partCols, mapped) = (op.snap.partCols, op.snap.mapped)
 
   /** Durable answer, read ONCE at write construction: is this a
     * REPLAY of an already-published tag? Published state cannot
@@ -718,7 +715,7 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
         val dataOnly = org.apache.spark.sql.types.StructType(
           table.schema().filterNot(fl =>
             partCols.exists(_.name.equalsIgnoreCase(fl.name))))
-        VersionedLake.indexStagedEntries(spark, lakeDir, addedEntries,
+        VersionedLake.indexStagedEntries(spark, op.snap, addedEntries,
           if (partCols.isEmpty) table.schema() else dataOnly)
       }
       try {

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField,
   *    constant across eras;
   *  - the stats/bloom sidecars keep pruning across renames: their
   *    lines are keyed by each FILE's own column name, and the probes
-  *    consult every name the field id has ever had ([[aliases]]).
+  *    consult every name the field id has ever had
+  *    ([[Registry.aliases]]).
   *
   * The `_mapping` registry at the lake root holds the mode line plus
   * one `name <id> <colName>` line per name a field has ever had —
@@ -35,14 +36,70 @@ object GraftLakeMapping {
   /** The metadata key Spark's parquet writer/reader natively honor. */
   val IdKey = "parquet.field.id"
 
-  private def regPath(dir: String) = new Path(s"$dir/_mapping")
+  private def regPath(dir: String) =
+    Snapshot.registryPath(dir, Snapshot.MappingReg)
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def enabled(spark: SparkSession, dir: String): Boolean =
-    try fs(spark, dir).exists(regPath(dir))
-    catch { case scala.util.control.NonFatal(_) => false }
+  /** The `_mapping` registry as a [[Snapshot]] resolved it: the mode
+    * line, one `name <id> <colName> [<epoch>]` line per name a field has
+    * had, and the `epoch <n>` lines [[bumpEpoch]] appends. */
+  final case class Registry(lines: Seq[String]) {
+
+    /** The next never-used field id — the registry never forgets (a
+      * dropped column's id stays retired: old files carry it, and a
+      * reused id would bind new reads to the dropped bytes). Counts
+      * EVERY epoch: a REPLACEd table's old ids stay retired too — its
+      * pre-replace versions are still time-travelable. */
+    lazy val nextId: Long = lines.collect {
+      case l if l.startsWith("name\t") => l.split('\t')(1).toLong
+    }.foldLeft(0L)(math.max) + 1
+
+    /** The current mapping ERA. `REPLACE TABLE` bumps it
+      * ([[bumpEpoch]]): the replaced table is a NEW id universe layered
+      * over a registry that never forgets, and [[aliases]] must not
+      * merge names across the boundary. Lines without an epoch field
+      * (pre-epoch registries) read as era 0. */
+    lazy val currentEpoch: Long = lines.collect {
+      case l if l.startsWith("epoch\t") => l.split('\t')(1).toLong
+    }.foldLeft(0L)(math.max)
+
+    /** Every name each field id has had IN THE CURRENT EPOCH, keyed by
+      * each of those names — the sidecar probes' alias table. Pre-era
+      * names are excluded by design: after a REPLACE they belong to a
+      * different id universe, and merging them could probe an unrelated
+      * column's sidecar history (the degradation is conservative — a
+      * missing alias admits the file, never skips it). A name two ids
+      * have had in the epoch (a rename onto a former name, or a dropped
+      * name added again) keys sidecar lines that may describe either
+      * column, so those ids get no names: their sidecars go unused, the
+      * same conservative degradation. */
+    lazy val aliases: Map[String, Seq[String]] = {
+      val byId = lines.collect {
+        case l if l.startsWith("name\t") =>
+          val a = l.split('\t')
+          (a(1), a(2), if (a.length > 3) a(3).toLong else 0L)
+      }.filter(_._3 == currentEpoch)
+        .groupBy(_._1).view.mapValues(_.map(_._2).distinct.toSeq).toMap
+      val shared = byId.values.toSeq.flatten.groupBy(identity)
+        .collect { case (n, ids) if ids.length > 1 => n }.toSet
+      byId.values.flatMap { names =>
+        val usable = if (names.exists(shared)) Seq.empty else names
+        names.map(n => n -> usable)
+      }.toMap
+    }
+  }
+
+  /** The tip's mapping era ([[Registry.currentEpoch]]). */
+  def currentEpoch(spark: SparkSession, dir: String): Long =
+    VersionedLake.resolveTip(spark, dir).mapping.fold(0L)(_.currentEpoch)
+
+  /** The tip's alias table ([[Registry.aliases]]); empty off mapped
+    * lakes. */
+  def aliases(spark: SparkSession, dir: String): Map[String, Seq[String]] =
+    VersionedLake.resolveTip(spark, dir).mapping
+      .fold(Map.empty[String, Seq[String]])(_.aliases)
 
   def fieldId(f: StructField): Option[Long] =
     if (f.metadata.contains(IdKey)) Some(f.metadata.getLong(IdKey))
@@ -65,43 +122,22 @@ object GraftLakeMapping {
     })
   }
 
-  /** The next never-used field id — from the registry, which never
-    * forgets (a dropped column's id stays retired: old files carry it,
-    * and a reused id would bind new reads to the dropped bytes). Scans
-    * EVERY epoch: a REPLACEd table's old ids stay retired too — its
-    * pre-replace versions are still time-travelable, and a reused id
-    * would bind their files' bytes to an unrelated new column. */
-  def nextId(spark: SparkSession, dir: String): Long =
-    lines(spark, dir).collect {
-      case l if l.startsWith("name\t") => l.split('\t')(1).toLong
-    }.foldLeft(0L)(math.max) + 1
-
-  /** The registry's current mapping ERA. `REPLACE TABLE` bumps it
-    * ([[bumpEpoch]]): the replaced table is a NEW id universe layered
-    * over a registry that never forgets, and [[aliases]] must not
-    * merge names across the boundary — a post-replace rename reusing a
-    * pre-replace column's name would otherwise inherit that column's
-    * alias set and probe sidecars through an unrelated column's
-    * history. Lines without an epoch field (pre-epoch registries)
-    * read as era 0. */
-  def currentEpoch(spark: SparkSession, dir: String): Long =
-    lines(spark, dir).collect {
-      case l if l.startsWith("epoch\t") => l.split('\t')(1).toLong
-    }.foldLeft(0L)(math.max)
-
   /** Open a new mapping era (REPLACE TABLE's commit step). Names
     * recorded before the bump stay in the registry — they keep their
-    * ids retired ([[nextId]]) — but stop aliasing. */
+    * ids retired ([[Registry.nextId]]) — but stop aliasing. */
   def bumpEpoch(spark: SparkSession, dir: String): Unit = {
-    val keep = lines(spark, dir).filter(l =>
+    val reg = lines(spark, dir)
+    val keep = reg.filter(l =>
       l.startsWith("name\t") || l.startsWith("epoch\t")).toSet
-    val all = (keep + s"epoch\t${currentEpoch(spark, dir) + 1}")
+    val all = (keep + s"epoch\t${Registry(reg).currentEpoch + 1}")
       .toSeq.sorted
     val out = fs(spark, dir).create(regPath(dir), true)
     try out.write(("mode\tid" +: all).mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
+  /** The registry's lines as its writers merge into them — readers
+    * take them from their [[Snapshot]]. */
   private def lines(spark: SparkSession, dir: String): Seq[String] = {
     val f = fs(spark, dir)
     if (!f.exists(regPath(dir))) Seq.empty
@@ -119,8 +155,9 @@ object GraftLakeMapping {
     * and the id-retirement record). New names stamp the CURRENT epoch
     * so alias probing scopes to the live era. */
   def record(spark: SparkSession, dir: String, schema: StructType): Unit = {
-    val epoch = currentEpoch(spark, dir)
-    val existing = lines(spark, dir).collect {
+    val reg = lines(spark, dir)
+    val epoch = Registry(reg).currentEpoch
+    val existing = reg.collect {
       case l if l.startsWith("name\t") || l.startsWith("epoch\t") => l
     }.toSet
     val added = schema.fields.flatMap(f =>
@@ -131,33 +168,6 @@ object GraftLakeMapping {
     val out = fs(spark, dir).create(regPath(dir), true)
     try out.write(("mode\tid" +: all).mkString("\n").getBytes("UTF-8"))
     finally out.close()
-  }
-
-  /** Every name each field id has had IN THE CURRENT EPOCH, keyed by
-    * each of those names — the sidecar probes' alias table. Pre-era
-    * names are excluded by design: after a REPLACE they belong to a
-    * different id universe, and merging them could probe an unrelated
-    * column's sidecar history (the degradation is conservative — a
-    * missing alias admits the file, never skips it). A name two ids
-    * have had in the epoch (a rename onto a former name, or a dropped
-    * name added again) keys sidecar lines that may describe either
-    * column, so those ids get no names: their sidecars go unused, the
-    * same conservative degradation. Empty for unmapped lakes (probe
-    * cost: one memoized small read). */
-  def aliases(spark: SparkSession, dir: String): Map[String, Seq[String]] = {
-    val epoch = currentEpoch(spark, dir)
-    val byId = lines(spark, dir).collect {
-      case l if l.startsWith("name\t") =>
-        val a = l.split('\t')
-        (a(1), a(2), if (a.length > 3) a(3).toLong else 0L)
-    }.filter(_._3 == epoch)
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.toSeq).toMap
-    val shared = byId.values.toSeq.flatten.groupBy(identity)
-      .collect { case (n, ids) if ids.length > 1 => n }.toSet
-    byId.values.flatMap { names =>
-      val usable = if (names.exists(shared)) Seq.empty else names
-      names.map(n => n -> usable)
-    }.toMap
   }
 
   /** Overlay the table schema's field-id metadata onto a WRITE schema

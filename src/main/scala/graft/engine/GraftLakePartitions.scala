@@ -39,64 +39,17 @@ object GraftLakePartitions {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def regPath(dir: String) = new Path(s"$dir/_partition")
-
   /** Persist the partition spec (written once, right after the CREATE
     * publish — a lost-race DDL must not plant its spec in the winner's
-    * lake). */
+    * lake). The next resolution of the lake ([[VersionedLake.resolve]])
+    * stats the registry and sees it. */
   def set(spark: SparkSession, dir: String,
       cols: Seq[StructField]): Unit = {
-    val out = fs(spark, dir).create(regPath(dir), true)
+    val out = fs(spark, dir).create(
+      Snapshot.registryPath(dir, Snapshot.PartitionReg), true)
     try out.write(StructType(cols).toDDL.getBytes("UTF-8"))
     finally out.close()
-    // refresh (don't just seed) the memo: a recreate at a reused path
-    // must displace the dead table's cached spec
-    if (cols.nonEmpty) memo.put(dir, cols) else memo.remove(dir)
-    ()
   }
-
-  // positive-only memo: the registry is written once at CREATE and
-  // never changes, but BEFORE it exists a lookup must keep re-reading
-  // (a negative cache would freeze a table as unpartitioned when the
-  // read raced the CREATE)
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[StructField]]
-
-  /** Drop the memoized spec for `dir` — called by the table
-    * delete/create paths ([[Lake.delete]], the catalog's DROP and the
-    * staged-DDL commits): a lake deleted and recreated at the same path
-    * within one JVM must not keep serving the dead table's partition
-    * columns (mis-parsed entries, misrouted writes). External deletes
-    * this process never sees still require a new path or a restart —
-    * the same contract as every metastore cache. */
-  private[engine] def invalidate(dir: String): Unit = {
-    memo.remove(dir)
-    ()
-  }
-
-  /** Declared partition columns in partition order; empty for an
-    * unpartitioned lake. One small file read, memoized once found. */
-  def of(spark: SparkSession, dir: String): Seq[StructField] =
-    memo.getOrElse(dir, {
-      val p = regPath(dir)
-      val f = fs(spark, dir)
-      val r =
-        try {
-          if (!f.exists(p)) Seq.empty[StructField]
-          else {
-            val in = f.open(p)
-            val ddl = try scala.io.Source.fromInputStream(in, "UTF-8")
-              .mkString.trim
-            finally in.close()
-            if (ddl.isEmpty) Seq.empty[StructField]
-            else StructType.fromDDL(ddl).fields.toSeq
-          }
-        } catch { case scala.util.control.NonFatal(_) =>
-          Seq.empty[StructField]
-        }
-      if (r.nonEmpty) memo.put(dir, r)
-      r
-    })
 
   /** Partition VALUES of one manifest entry (`d-x/c1=v1/c2=v2`),
     * parsed and cast to the declared types. Hive escaping and the
@@ -141,8 +94,7 @@ object GraftLakePartitions {
     * decided from MANIFEST METADATA (the entry names), not from any
     * directory listing or value inference. */
   private[engine] def specFor(spark: SparkSession, lakeDir: String,
-      entryPaths: Seq[Path]): Option[PartitionSpec] = {
-    val cols = of(spark, lakeDir)
+      cols: Seq[StructField], entryPaths: Seq[Path]): Option[PartitionSpec] =
     if (cols.isEmpty) None
     else {
       val zone = spark.sessionState.conf.sessionLocalTimeZone
@@ -156,7 +108,6 @@ object GraftLakePartitions {
           f.makeQualified(p))
       }))
     }
-  }
 
   /** Leaf partition entries (relative paths) of a freshly-staged data
     * dir — what a partitioned commit publishes. One bounded driver walk
@@ -193,13 +144,13 @@ object GraftLakePartitions {
     * COW or partition DELETE that removed every row): data columns only
     * (partition values live in dir names), at the null-partition entry
     * — on a flat lake (`cols` empty) the data dir itself. The carrier is
-    * indexed like every staged dir ([[VersionedLake.indexStagedDir]]):
-    * its zero-row stats lines keep stats-pruned rewrites from counting
-    * it as intersecting, and the metadata-only aggregates covered.
-    * Returns the entry. */
+    * indexed like every staged dir ([[VersionedLake.indexStagedDir]],
+    * with the lake's declared `blooms`): its zero-row stats lines keep
+    * stats-pruned rewrites from counting it as intersecting, and the
+    * metadata-only aggregates covered. Returns the entry. */
   private[engine] def seedEmpty(spark: SparkSession, lakeDir: String,
       dataDir: String, fullSchema: StructType,
-      cols: Seq[StructField]): String = {
+      cols: Seq[StructField], blooms: Seq[String]): String = {
     val dataOnly = StructType(fullSchema.filterNot(f =>
       cols.exists(_.name.equalsIgnoreCase(f.name))))
     val entry = nullEntry(dataDir, cols)
@@ -207,7 +158,7 @@ object GraftLakePartitions {
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       dataOnly).repartition(1)
       .write.mode("append").parquet(s"$lakeDir/$entry")
-    VersionedLake.indexStagedDir(spark, lakeDir, entry, dataOnly)
+    VersionedLake.indexStagedDir(spark, lakeDir, entry, dataOnly, blooms)
     entry
   }
 

@@ -40,17 +40,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * metadata-only delete: Spark prefers `SupportsDelete.deleteWhere`
   * when every predicate translates, and falls back here otherwise. */
 final class GraftLakeRowLevelOperation(table: GraftLakeTable,
-    spark: SparkSession, lakeDir: String, version: Int,
+    spark: SparkSession, private[engine] val snap: Snapshot,
     cmd: RowLevelOperation.Command)
   extends RowLevelOperation {
+  private val (lakeDir, version) = (snap.dir, snap.version)
 
   /** Dirs the COW scan ends up reading (post group filter) — what the
     * write replaces. Initialized to the full snapshot so a plan that
     * never narrows (no group filter) rewrites everything, which is
     * correct; [[GraftLakeCowScan.partitions]] overwrites it with the
     * final (possibly pruned) set before any task reads a byte. */
-  private[engine] val snapshotDirs: Set[String] =
-    VersionedLake.manifestEntries(spark, lakeDir, version).toSet
+  private[engine] val snapshotDirs: Set[String] = snap.entries.toSet
 
   /** The version this operation scanned — the publish's serializable
     * anchor (no concurrent DV commit may land after it). */
@@ -61,7 +61,8 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     * survivors. The rewrite thereby MATERIALIZES the touched dirs'
     * vectors away. */
   private[engine] val dvRefs: Map[String, GraftLakeDvRef] =
-    VersionedLake.dvRefs(spark, lakeDir, version)
+    if (!snap.dvEnabled) Map.empty
+    else VersionedLake.dvRefs(spark, lakeDir, version)
 
   @volatile private[engine] var scannedDirs: Set[String] = snapshotDirs
 
@@ -81,9 +82,8 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     // silent row loss (caught by the CDF sidecar's netted diff when a
     // CTAS's tight per-file ranges let `id < k` prune). Partition-dir
     // pruning stays safe (a pruned partition's dir is not replaced).
-    val idx = new GraftLakeFileIndex(spark, lakeDir,
-      VersionedLake.liveDataDirs(spark, lakeDir, version).map(new Path(_)),
-      sidecarPrune = false)
+    val idx = new GraftLakeFileIndex(spark, snap,
+      snap.entries.map(e => new Path(s"$lakeDir/$e")), sidecarPrune = false)
     // on a COLUMN-MAPPING lake the COW scan must id-match too: Spark
     // hands this builder ITS OWN options (not the table's merged ones),
     // and a name-matched read of pre-rename files returns NULL for the
@@ -91,7 +91,7 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     // corrupting every replaced row (caught by the mapped-OPTIMIZE
     // spec sequence: MERGE, RENAME, DELETE nulled the renamed column)
     val opts =
-      if (!GraftLakeMapping.enabled(spark, lakeDir)) options
+      if (!snap.mapped) options
       else {
         val m = new java.util.HashMap[String, String](
           options.asCaseSensitiveMap())
@@ -99,15 +99,14 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
         new CaseInsensitiveStringMap(m)
       }
     new GraftLakeCowScanBuilder(this, spark, idx, table.schema(),
-      table.dataSchema, opts, lakeDir)
+      table.dataSchema, opts)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): org.apache.spark.sql.connector.write.Write = {
         val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-        val partCols = GraftLakePartitions.of(spark, lakeDir)
-        val mapped = GraftLakeMapping.enabled(spark, lakeDir)
+        val (partCols, mapped) = (snap.partCols, snap.mapped)
         val inner: org.apache.spark.sql.connector.write.Write =
           if (partCols.isEmpty && !mapped)
             ParquetWrite(Seq(s"$lakeDir/$dataDir"),
@@ -118,7 +117,7 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
             s"graftlake partitioned COW $lakeDir (staging $dataDir)",
             if (mapped) Some(table.schema()) else None)
         new GraftLakeCowWrite(GraftLakeRowLevelOperation.this, inner,
-          info, lakeDir, dataDir, partCols, table.schema())
+          info, dataDir, table.schema())
       }
     }
 }
@@ -132,7 +131,7 @@ final class GraftLakeCowScanBuilder(op: GraftLakeRowLevelOperation,
       .PartitioningAwareFileIndex,
     schema: org.apache.spark.sql.types.StructType,
     dataSchema: org.apache.spark.sql.types.StructType,
-    options: CaseInsensitiveStringMap, lakeDir: String)
+    options: CaseInsensitiveStringMap)
   extends ParquetScanBuilder(spark, fileIndex, schema, dataSchema,
     options) {
 
@@ -153,15 +152,14 @@ final class GraftLakeCowScanBuilder(op: GraftLakeRowLevelOperation,
 
   override def build()
       : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =
-    new GraftLakeCowScan(op, super.build(), lakeDir)
+    new GraftLakeCowScan(op, super.build())
 }
 
 /** The COW scan: vanilla parquet execution, plus (a) dir-granular
   * runtime group filtering through the sidecars and (b) recording the
   * final dir set on the operation for the write to replace. */
 final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
-    base: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan,
-    lakeDir: String)
+    base: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan)
   extends org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
     base.sparkSession, base.hadoopConf, base.fileIndex, base.dataSchema,
     base.readDataSchema, base.readPartitionSchema, base.pushedFilters,
@@ -170,7 +168,7 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
   @volatile private var runtimeIns: Seq[(String, Seq[Any])] = Seq.empty
-  private val probe = new SidecarProbe(base.sparkSession, lakeDir)
+  private val probe = new SidecarProbe(base.sparkSession, op.snap)
 
   /** The replacement unit is a MANIFEST ENTRY — `d-x`, or the leaf
     * partition dir `d-x/c=v/...` on a partitioned lake. */
@@ -204,7 +202,7 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
   private lazy val groupFilterAttr
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val sample = op.snapshotDirs.toSeq.sorted.take(16)
-    val indexed = VersionedLake.indexedCols(base.sparkSession, lakeDir,
+    val indexed = VersionedLake.indexedCols(base.sparkSession, op.snap.dir,
       sample).toSet
     val candidates = readDataSchema.fields.filter(f =>
       indexed(f.name) && GraftLakeFileIndex.runtimeProbeable(f.dataType))
@@ -314,8 +312,7 @@ private final class GraftLakeStripPrefixFactory(
   * schema-bearing empty file is added when no task produced output. */
 final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
     inner: org.apache.spark.sql.connector.write.Write,
-    info: LogicalWriteInfo, lakeDir: String, dataDir: String,
-    partCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
+    info: LogicalWriteInfo, dataDir: String,
     // the DECLARED schema: the analyzer strips metadata (field ids)
     // from info.schema(), so declarations come from the table
     declaredSchema: org.apache.spark.sql.types.StructType = null)
@@ -323,6 +320,9 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
   with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory,
     PhysicalWriteInfo, WriterCommitMessage}
+
+  private val snap = op.snap
+  private val (lakeDir, partCols) = (snap.dir, snap.partCols)
 
   override def description(): String =
     s"graftlake COW ${op.command()} $lakeDir (staging $dataDir)"
@@ -382,17 +382,17 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
         // every row of the scanned dirs was deleted — keep the
         // replacement readable (schema from the write's own contract)
         GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
-          info.schema(), Nil)
+          info.schema(), Nil, snap.bloomCols)
       } else
         VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
-          info.schema())
+          info.schema(), snap.bloomCols)
       val v = publishScanned(spark, Seq(dataDir))
       // opt-in row-level CDF: persist this commit's EXACT changes
       // (survivors netted) so feeds stop shipping the whole rewritten
       // band as delete+insert pairs
-      if (VersionedLake.cdfEnabled(spark, lakeDir))
-        VersionedLake.writeChangeSidecar(spark, lakeDir, v,
-          VersionedLake.cowChangeRows(spark, lakeDir,
+      if (snap.cdf)
+        VersionedLake.writeChangeSidecar(spark, snap, v,
+          VersionedLake.cowChangeRows(spark, snap,
             op.scannedDirs.toSeq, Seq(dataDir), op.command().toString))
       ()
     }
@@ -414,18 +414,18 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
       if (entries.isEmpty &&
           op.snapshotDirs.diff(op.scannedDirs).isEmpty)
         entries = Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
-          dataDir, info.schema(), partCols))
+          dataDir, info.schema(), partCols, snap.bloomCols))
       else {
         val dataOnly = org.apache.spark.sql.types.StructType(
           info.schema().filterNot(fl =>
             partCols.exists(_.name.equalsIgnoreCase(fl.name))))
-        entries.foreach(e =>
-          VersionedLake.indexStagedDir(spark, lakeDir, e, dataOnly))
+        entries.foreach(e => VersionedLake.indexStagedDir(spark, lakeDir, e,
+          dataOnly, snap.bloomCols))
       }
       val v = publishScanned(spark, entries)
-      if (VersionedLake.cdfEnabled(spark, lakeDir))
-        VersionedLake.writeChangeSidecar(spark, lakeDir, v,
-          VersionedLake.cowChangeRows(spark, lakeDir,
+      if (snap.cdf)
+        VersionedLake.writeChangeSidecar(spark, snap, v,
+          VersionedLake.cowChangeRows(spark, snap,
             op.scannedDirs.toSeq, entries, op.command().toString))
       ()
     }

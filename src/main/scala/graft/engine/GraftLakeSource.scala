@@ -93,9 +93,15 @@ final class GraftLakeDataSource
       }
     val cdf = Option(options.get(GraftLakeDataSource.ReadChangeFeed))
       .exists(_.trim.equalsIgnoreCase("true"))
-    GraftLakeDataSource.snapshotTable(spark, lakeDir, version,
+    // inferSchema and getTable of one load resolve the version once
+    val snap = resolved.filter(s => s.dir == lakeDir && s.version == version)
+      .getOrElse(VersionedLake.resolve(spark, lakeDir, version))
+    resolved = Some(snap)
+    GraftLakeDataSource.snapshotTable(spark, snap,
       options.asCaseSensitiveMap(), schema, cdf)
   }
+
+  private var resolved: Option[Snapshot] = None
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     makeTable(options, None).asInstanceOf[GraftLakeTable].schema
@@ -110,10 +116,11 @@ object GraftLakeDataSource {
   /** The table of snapshot `version` — over its live entries, or over
     * `entries` alone (a subset of them) when given. `options` are the
     * caller's read options; the snapshot ones are added here. */
-  private[engine] def snapshotTable(spark: SparkSession, lakeDir: String,
-      version: Int, options: java.util.Map[String, String],
+  private[engine] def snapshotTable(spark: SparkSession, snap: Snapshot,
+      options: java.util.Map[String, String],
       schema: Option[StructType] = None, cdf: Boolean = false,
-      entries: Option[Seq[String]] = None): GraftLakeTable = {
+      entries: Option[Seq[String]] = None,
+      name: Option[String] = None): GraftLakeTable = {
     // snapshots may span schema-evolving commits — same mergeSchema
     // semantics as VersionedLake.readAt
     val merged = new java.util.HashMap[String, String](options)
@@ -122,31 +129,28 @@ object GraftLakeDataSource {
     // table OPTIONS (they reach the scan's and write's hadoop
     // configuration — scoped to exactly these tables, never a session
     // conf mutation)
-    if (GraftLakeMapping.enabled(spark, lakeDir))
+    if (snap.mapped)
       GraftLakeMapping.confOptions.foreach { case (k, v) =>
         merged.put(k, v) }
     // schema from the version's OWN manifest when its writer declared
     // one — the cold plan then skips the O(live files) footer-merge
     // inference (library-committed versions without a declaration
     // still infer)
-    val declared = schema.orElse(
-      VersionedLake.manifestSchema(spark, lakeDir, version))
-    new GraftLakeTable(lakeDir, spark,
-      new CaseInsensitiveStringMap(merged), Seq(lakeDir), declared,
-      lakeDir, version, cdf, entries)
+    new GraftLakeTable(name.getOrElse(snap.dir), spark,
+      new CaseInsensitiveStringMap(merged), schema.orElse(snap.declared),
+      snap, cdf, entries)
   }
 
   /** Snapshot `version` as a frame over its [[GraftLakeTable]], planned
     * as a `graftlake` load plans it — restricted to `entries` when
     * given, with deletion vectors as of `version`, field ids matched on
     * mapped lakes and partition columns from the entry names. */
-  private[engine] def snapshotFrame(spark: SparkSession, lakeDir: String,
-      version: Int, entries: Option[Seq[String]] = None)
-      : DataFrame = {
-    val options = java.util.Map.of("path", lakeDir, VersionAsOf,
-      version.toString)
+  private[engine] def snapshotFrame(spark: SparkSession, snap: Snapshot,
+      entries: Option[Seq[String]] = None): DataFrame = {
+    val options = java.util.Map.of("path", snap.dir, VersionAsOf,
+      snap.version.toString)
     org.apache.spark.sql.graft.RelationBridge.ofTable(spark,
-      snapshotTable(spark, lakeDir, version, options, entries = entries),
+      snapshotTable(spark, snap, options, entries = entries),
       new CaseInsensitiveStringMap(options))
   }
 
@@ -425,17 +429,12 @@ final class GraftLakeCatalog
     val dir = dirOf(ident)
     val t = VersionedLake.tip(spark, dir)
     if (t.isEmpty) throw new NoSuchTableException(ident)
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("path", dir)
-    opts.put("mergeSchema", "true")
-    if (GraftLakeMapping.enabled(spark, dir))
-      GraftLakeMapping.confOptions.foreach { case (k, v0) =>
-        opts.put(k, v0) }
-    val v = version.getOrElse(t.get)
-    new GraftLakeTable(ident.toString, spark,
-      new CaseInsensitiveStringMap(opts), Seq(dir),
-      VersionedLake.manifestSchema(spark, dir, v), dir, v)
+    tableOf(ident, VersionedLake.resolve(spark, dir, version.getOrElse(t.get)))
   }
+
+  private def tableOf(ident: Identifier, snap: Snapshot): GraftLakeTable =
+    GraftLakeDataSource.snapshotTable(spark, snap,
+      java.util.Map.of("path", snap.dir), name = Some(ident.toString))
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
 
@@ -526,9 +525,9 @@ final class GraftLakeCatalog
   /** A REPLACE over an existing partitioned lake must keep its spec:
     * the registry is lake-global (old versions' manifest entries parse
     * against it), so changing partitioning means a new table. */
-  private def requireSpecUnchanged(dir: String,
+  private def requireSpecUnchanged(snap: Snapshot,
       cols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    val existing = GraftLakePartitions.of(spark, dir)
+    val existing = snap.partCols
     require(existing.map(f => (f.name, f.dataType)) ==
       cols.map(f => (f.name, f.dataType)),
       s"cannot change PARTITIONED BY of an existing lake (" +
@@ -683,7 +682,7 @@ final class GraftLakeCatalog
     // partition values); the spec registry lands only AFTER the create
     // wins — a lost-race loser must not plant its spec
     val entry = GraftLakePartitions.seedEmpty(spark, dir,
-      VersionedLake.newDataDir(), declared, partCols)
+      VersionedLake.newDataDir(), declared, partCols, Nil)
     if (VersionedLake.publish(spark, dir, Commit(Seq(entry),
         replaceAll = true, schema = Declared(Some(declared.json)),
         expect = Expect.First)).isEmpty)
@@ -740,21 +739,20 @@ final class GraftLakeCatalog
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchTableException(ident)
-    val dir = dirOf(ident)
-    requireSpecUnchanged(dir, partCols)
+    val snap = VersionedLake.resolveTip(spark, dirOf(ident))
+    val dir = snap.dir
+    requireSpecUnchanged(snap, partCols)
     // REPLACE on a MAPPED lake: the new table keeps mapping (old files
     // are only readable by id, and the registry persists). Its columns
     // take FRESH ids from the never-reused counter — pre-replace ids
     // stay retired because pre-replace versions stay time-travelable —
     // and the commit opens a new mapping EPOCH so alias probing cannot
     // merge a reused name with a pre-replace column's history.
-    val mapped = GraftLakeMapping.enabled(spark, dir)
+    val mapped = snap.mapped
     require(!mappingProp(properties) || mapped,
       "column_mapping is declared at CREATE TABLE, not REPLACE")
-    val declared =
-      if (mapped) GraftLakeMapping.assignIds(toStruct(columns),
-        GraftLakeMapping.nextId(spark, dir))
-      else toStruct(columns)
+    val declared = snap.mapping.fold(toStruct(columns))(reg =>
+      GraftLakeMapping.assignIds(toStruct(columns), reg.nextId))
     new GraftLakeStagedTable(ident, dir, declared,
       replace = true, orCreate = false,
       bloomProp(properties, columns), partCols, cdfProp(properties),
@@ -771,10 +769,11 @@ final class GraftLakeCatalog
       : org.apache.spark.sql.connector.catalog.StagedTable = {
     val partCols = identityPartitionCols(partitions, columns)
     val dir = dirOf(ident)
-    val exists = tableExists(ident)
-    val existingMapped = exists && GraftLakeMapping.enabled(spark, dir)
-    if (exists) {
-      requireSpecUnchanged(dir, partCols)
+    val existing = VersionedLake.tip(spark, dir)
+      .map(VersionedLake.resolve(spark, dir, _))
+    val existingMapped = existing.exists(_.mapped)
+    existing.foreach { snap =>
+      requireSpecUnchanged(snap, partCols)
       // an UNMAPPED table cannot gain mapping by replace (its existing
       // files carry no ids); a MAPPED one keeps it, with or without
       // the property respelled
@@ -784,13 +783,14 @@ final class GraftLakeCatalog
     val mapped = mappingProp(properties) || existingMapped
     val dv = dvProp(properties)
     requireDvCompatible(dv, partCols, mapped)
-    val declared =
-      if (existingMapped)
-        // fresh-id + epoch discipline, as stageReplace
-        GraftLakeMapping.assignIds(toStruct(columns),
-          GraftLakeMapping.nextId(spark, dir))
-      else if (mapped) GraftLakeMapping.assignIds(toStruct(columns))
-      else toStruct(columns)
+    val declared = existing.flatMap(_.mapping) match {
+      // fresh-id + epoch discipline, as stageReplace
+      case Some(reg) =>
+        GraftLakeMapping.assignIds(toStruct(columns), reg.nextId)
+      case None =>
+        if (mapped) GraftLakeMapping.assignIds(toStruct(columns))
+        else toStruct(columns)
+    }
     new GraftLakeStagedTable(ident, dir, declared,
       replace = true, orCreate = true,
       bloomProp(properties, columns), partCols, cdfProp(properties),
@@ -846,10 +846,11 @@ final class GraftLakeCatalog
           s"${allowed.mkString(", ")}; got ${touched.mkString(", ")} " +
           "(deletion_vectors/column_mapping/bloom/cdf are declared " +
           "at CREATE TABLE)")
-      require(VersionedLake.dvEnabled(spark, dir0),
-        "the DV maintenance bounds require a 'deletion_vectors' table")
-      var ratio = VersionedLake.dvMaxRatio(spark, dir0)
-      var pending = VersionedLake.dvMaxPendingDeclared(spark, dir0)
+      val dv = VersionedLake.resolveTip(spark, dir0).dv.getOrElse(
+        throw new IllegalArgumentException("requirement failed: the DV " +
+          "maintenance bounds require a 'deletion_vectors' table"))
+      var ratio = dv.maxRatio
+      var pending = dv.maxPending
       setProps.foreach { pr =>
         pr.property match {
           case "dv_max_ratio" =>
@@ -884,8 +885,8 @@ final class GraftLakeCatalog
       VersionedLake.enforceDvBound(spark, dir0)
       return loadTable(ident)
     }
-    val dir = dirOf(ident)
-    val mapped = GraftLakeMapping.enabled(spark, dir)
+    val snap = VersionedLake.resolveTip(spark, dirOf(ident))
+    val (dir, mapped, partCols) = (snap.dir, snap.mapped, snap.partCols)
     if ((renames.nonEmpty || drops.nonEmpty) && !mapped)
       throw new UnsupportedOperationException(
         "graftlake RENAME/DROP COLUMN needs column mapping — create " +
@@ -893,8 +894,7 @@ final class GraftLakeCatalog
           "stable parquet field ids make both metadata-only; without " +
           "them a rename would silently null the column in every " +
           "existing file")
-    val partCols = GraftLakePartitions.of(spark, dir)
-    var schema = loadTable(ident).asInstanceOf[GraftLakeTable].schema()
+    var schema = tableOf(ident, snap).schema()
     adds.foreach { a =>
       require(a.fieldNames().length == 1,
         "graftlake ADD COLUMN supports top-level columns, got " +
@@ -912,13 +912,12 @@ final class GraftLakeCatalog
         a.dataType(), nullable = true)
       schema = schema.add(Option(a.comment()).fold(fld)(fld.withComment))
     }
-    if (mapped && adds.nonEmpty)
+    if (adds.nonEmpty) snap.mapping.foreach(reg =>
       // fresh ids for added columns, from the registry's never-reused
       // counter (a DROPPED column's id must stay retired: old files
       // still carry it, and a reused id would bind new reads to the
       // dropped column's bytes)
-      schema = GraftLakeMapping.assignIds(schema,
-        GraftLakeMapping.nextId(spark, dir))
+      schema = GraftLakeMapping.assignIds(schema, reg.nextId))
     renames.foreach { r =>
       require(r.fieldNames().length == 1,
         "graftlake RENAME COLUMN supports top-level columns")
@@ -947,7 +946,7 @@ final class GraftLakeCatalog
     if (renames.nonEmpty) {
       // the bloom policy follows renamed names (sidecar ALIASES keep
       // old files pruning; new commits index under the new name)
-      val renamedBloom = VersionedLake.bloomIndexCols(spark, dir).map(c =>
+      val renamedBloom = snap.bloomCols.map(c =>
         renames.find(_.fieldNames()(0) == c).fold(c)(_.newName()))
       VersionedLake.setBloomIndexCols(spark, dir, renamedBloom)
     }
@@ -957,8 +956,8 @@ final class GraftLakeCatalog
     // lake the schema carrier lives at the null-partition entry like
     // every other empty commit.
     VersionedLake.publish(spark, dir, Commit(Seq(GraftLakePartitions
-      .seedEmpty(spark, dir, VersionedLake.newDataDir(), schema, partCols)),
-      schema = Declared(Some(schema.json))))
+      .seedEmpty(spark, dir, VersionedLake.newDataDir(), schema, partCols,
+        snap.bloomCols)), schema = Declared(Some(schema.json))))
     if (mapped) GraftLakeMapping.record(spark, dir, schema)
     loadTable(ident)
   }
@@ -1024,8 +1023,8 @@ object GraftLakeTable {
 }
 
 final class GraftLakeTable(tableName: String, spark: SparkSession,
-    options: CaseInsensitiveStringMap, paths: Seq[String],
-    userSpecifiedSchema: Option[StructType], lakeDir: String, version: Int,
+    options: CaseInsensitiveStringMap,
+    userSpecifiedSchema: Option[StructType], snap: Snapshot,
     cdf: Boolean = false, entries: Option[Seq[String]] = None)
   extends org.apache.spark.sql.connector.catalog.Table
   with org.apache.spark.sql.connector.catalog.SupportsRead
@@ -1037,15 +1036,13 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
 
   GraftLakeTable.ensureRuntimeRules(spark)
 
-  private val snapshotVersion = version // FileTable.version() shadows inside the delegate
+  private val lakeDir = snap.dir
   private val delegate: ParquetTable =
-    new ParquetTable(tableName, spark, options, paths, userSpecifiedSchema,
-        classOf[ParquetFileFormat]) {
+    new ParquetTable(tableName, spark, options, Seq(lakeDir),
+        userSpecifiedSchema, classOf[ParquetFileFormat]) {
       override lazy val fileIndex: PartitioningAwareFileIndex =
-        entries.fold(
-          new GraftLakeFileIndex(spark, lakeDir, snapshotVersion))(es =>
-          new GraftLakeFileIndex(spark, lakeDir,
-            es.map(e => new Path(s"$lakeDir/$e"))))
+        new GraftLakeFileIndex(spark, snap,
+          entries.getOrElse(snap.entries).map(e => new Path(s"$lakeDir/$e")))
     }
 
   /** Table creation options merged under call-site options — the same
@@ -1082,37 +1079,24 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     * see [[GraftLakePartitions]]). */
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] =
-    GraftLakePartitions.of(spark, lakeDir).map(c =>
+    snap.partCols.map(c =>
       org.apache.spark.sql.connector.expressions.Expressions
         .identity(c.name)).toArray
   /** Declared feature registries, surfaced so SHOW TBLPROPERTIES /
     * DESCRIBE EXTENDED reflect what the lake actually enforces —
     * including maintenance bounds set later via
-    * `ALTER TABLE SET TBLPROPERTIES`. Read from the registries ONCE
-    * PER TABLE INSTANCE: Spark calls properties() repeatedly while
-    * resolving a single plan (and again for DESCRIBE), and each
-    * uncached call costs five registry reads — several metadata RPCs
-    * per plan on an object store. A table instance is minted per
-    * resolution at a pinned snapshot version, so the memo is exactly
-    * as fresh as the snapshot itself: the next statement re-resolves
-    * the table and re-reads the ALTER-visible bounds from disk. */
-  override def properties(): java.util.Map[String, String] =
-    memoizedProperties
-
-  private lazy val memoizedProperties: java.util.Map[String, String] = {
+    * `ALTER TABLE SET TBLPROPERTIES` — as the table's snapshot resolved
+    * them. */
+  override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    if (VersionedLake.dvEnabled(spark, lakeDir)) {
+    snap.dv.foreach { dv =>
       m.put("deletion_vectors", "true")
-      VersionedLake.dvMaxRatio(spark, lakeDir)
-        .foreach(r => m.put("dv_max_ratio", r.toString))
-      VersionedLake.dvMaxPendingDeclared(spark, lakeDir)
-        .foreach(n => m.put("dv_max_pending", n.toString))
+      dv.maxRatio.foreach(r => m.put("dv_max_ratio", r.toString))
+      dv.maxPending.foreach(n => m.put("dv_max_pending", n.toString))
     }
-    if (GraftLakeMapping.enabled(spark, lakeDir))
-      m.put("column_mapping", "id")
-    if (VersionedLake.cdfEnabled(spark, lakeDir)) m.put("cdf", "true")
-    val blooms = VersionedLake.bloomIndexCols(spark, lakeDir)
-    if (blooms.nonEmpty) m.put("bloom", blooms.mkString(","))
+    if (snap.mapped) m.put("column_mapping", "id")
+    if (snap.cdf) m.put("cdf", "true")
+    if (snap.bloomCols.nonEmpty) m.put("bloom", snap.bloomCols.mkString(","))
     m
   }
 
@@ -1150,14 +1134,16 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     // as a (files-absent → null) data column; the stream's reader
     // factory overwrites it with each partition's op constant
     new GraftLakeScanBuilder(spark, delegate.fileIndex, schema(),
-      widen(delegate.dataSchema), merged(options), lakeDir, cdf,
+      widen(delegate.dataSchema), merged(options), snap, cdf,
       // deletion vectors applying to THIS snapshot (version-bound:
       // time travel below a DV commit must not see it), restricted to
       // files the snapshot actually holds — once a rewrite/OPTIMIZE
       // materializes every vector away, scans are vectorized again
       // IMMEDIATELY, not only after vacuum sweeps the dead sidecars
       {
-        val dv0 = VersionedLake.dvRefs(spark, lakeDir, snapshotVersion)
+        val dv0 =
+          if (!snap.dvEnabled) Map.empty[String, GraftLakeDvRef]
+          else VersionedLake.dvRefs(spark, lakeDir, snap.version)
         if (dv0.isEmpty) dv0
         else {
           // keys are `entry…/fileName` relative paths — match by the
@@ -1195,7 +1181,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       override def queryId(): String = info.queryId()
       override def schema(): StructType = info.schema()
     }
-    new GraftLakeWriteBuilder(this, lakeDir, mergedInfo)
+    new GraftLakeWriteBuilder(this, snap, mergedInfo)
   }
 
   /** Whether row-level SQL routes MERGE-ON-READ: EVERY deletion-vector
@@ -1204,8 +1190,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     * ([[GraftLakeDeltaOperation]]; mapped lakes id-match the scan and
     * overlay field ids on the staged rewrite). Copy-on-write remains
     * for lakes without vectors. */
-  private def deltaCapable: Boolean =
-    VersionedLake.dvEnabled(spark, lakeDir)
+  private def deltaCapable: Boolean = snap.dvEnabled
 
   /** Row-address metadata columns — surfaced on every DV lake, served
     * by BOTH scan paths that can synthesize them: the row-level delta
@@ -1231,10 +1216,10 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       override def build()
           : org.apache.spark.sql.connector.write.RowLevelOperation =
         if (deltaCapable)
-          new GraftLakeDeltaOperation(GraftLakeTable.this, spark,
-            lakeDir, snapshotVersion, info.command())
+          new GraftLakeDeltaOperation(GraftLakeTable.this, spark, snap,
+            info.command())
         else new GraftLakeRowLevelOperation(GraftLakeTable.this, spark,
-          lakeDir, snapshotVersion, info.command())
+          snap, info.command())
     }
 
   /** SQL `DELETE FROM` as a versioned commit. The pushed conjuncts
@@ -1253,7 +1238,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     * metadata-only shortcut. */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
-    val partCols = GraftLakePartitions.of(spark, lakeDir)
+    val partCols = snap.partCols
     if (partCols.isEmpty)
       // the metadata-delete survivor rewrite id-matches on mapped
       // lakes (VersionedLake.rewriteEntries) and the DV position scan
@@ -1262,7 +1247,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       // path for EVERY exactly-replayable predicate: the delete
       // records positions, no rewrite.
       GraftLakeDelete.translate(schema(), filters).isDefined ||
-        (VersionedLake.dvEnabled(spark, lakeDir) &&
+        (snap.dvEnabled &&
           filters.forall(f =>
             GraftLakeDelete.toColumn(schema(), f).isDefined))
     else {
@@ -1283,8 +1268,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       }
       translatable &&
         (GraftLakePartitions.partitionDecidable(filters, partCols) ||
-          (VersionedLake.dvEnabled(spark, lakeDir) && filters.nonEmpty &&
-            unmixed))
+          (snap.dvEnabled && filters.nonEmpty && unmixed))
     }
   }
 
@@ -1302,8 +1286,8 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       .map(f => GraftLakeDelete.toColumn(schema(), f).getOrElse(
         throw new IllegalStateException(s"untranslatable filter $f")))
       .reduceOption(_ && _).getOrElse(lit(true))
-    val tipV = VersionedLake.tip(spark, lakeDir).getOrElse(return)
-    val snapshot = VersionedLake.manifestEntries(spark, lakeDir, tipV)
+    val cur = VersionedLake.current(spark, snap)
+    val snapshot = cur.entries
     val (touched, kept) =
       GraftLakePartitions.entriesWhere(spark, snapshot, partCols, pred)
     if (touched.isEmpty) return // no partition matches: no new version
@@ -1311,7 +1295,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     val added =
       if (kept.nonEmpty) Seq.empty[String]
       else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
-        VersionedLake.newDataDir(), schema(), partCols))
+        VersionedLake.newDataDir(), schema(), partCols, cur.bloomCols))
     VersionedLake.publish(spark, lakeDir, Commit(added, touched.toSet,
       schema = Declared(Some(schema().json)), check = VersionedLake
         .refuseConflicts(touched.toSet, Some(snapshot.toSet))))
@@ -1351,7 +1335,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val partCols = GraftLakePartitions.of(spark, lakeDir)
+    val partCols = snap.partCols
     if (partCols.nonEmpty) {
       if (GraftLakePartitions.partitionDecidable(filters, partCols)) {
         deleteWherePartitioned(filters, partCols)
@@ -1374,8 +1358,8 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
           .getOrElse(throw new IllegalStateException(
             s"untranslatable filter $f")))
           .reduceOption(_ && _).getOrElse(lit(true))
-      val tipV = VersionedLake.tip(spark, lakeDir).getOrElse(return)
-      val snapshot = VersionedLake.manifestEntries(spark, lakeDir, tipV)
+      val cur = VersionedLake.current(spark, snap)
+      val snapshot = cur.entries
       val candidates =
         if (partF.isEmpty) snapshot
         else GraftLakePartitions.entriesWhere(spark, snapshot, partCols,
@@ -1392,7 +1376,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
         case org.apache.spark.sql.sources.EqualTo(c, v) => (c, Seq(v))
         case org.apache.spark.sql.sources.In(c, vs) => (c, vs.toSeq)
       }
-      VersionedLake.deleteVectors(spark, lakeDir, toCol(filters), bound,
+      VersionedLake.deleteVectors(spark, cur, toCol(filters), bound,
         points, entriesOverride = Some(candidates))
       return
     }
@@ -1401,8 +1385,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     // rewritten (truncate stays the cheaper manifest overwrite). A
     // one-interval condition still bounds the position SCAN through
     // the stats sidecars.
-    if (VersionedLake.dvEnabled(spark, lakeDir) &&
-        filters.nonEmpty &&
+    if (snap.dvEnabled && filters.nonEmpty &&
         !GraftLakeDelete.translate(schema(), filters)
           .contains(GraftLakeDelete.Truncate)) {
       import org.apache.spark.sql.functions.lit
@@ -1421,7 +1404,8 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
         case org.apache.spark.sql.sources.EqualTo(c, v) => (c, Seq(v))
         case org.apache.spark.sql.sources.In(c, vs) => (c, vs.toSeq)
       }
-      VersionedLake.deleteVectors(spark, lakeDir, pred, bound, points)
+      VersionedLake.deleteVectors(spark, VersionedLake.current(spark, snap),
+        pred, bound, points)
       return
     }
     GraftLakeDelete.translate(schema(), filters) match {
@@ -1431,11 +1415,13 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
         // empty table and every prior version stays readable
         VersionedLake.publish(spark, lakeDir, Commit(Seq(GraftLakePartitions
           .seedEmpty(spark, lakeDir, VersionedLake.newDataDir(), schema(),
-            Nil)), replaceAll = true, schema = Declared(Some(schema().json))))
+            Nil, snap.bloomCols)), replaceAll = true,
+          schema = Declared(Some(schema().json))))
         ()
       case Some(GraftLakeDelete.Range(c, lo, hi)) =>
         if (lo <= hi) {
-          VersionedLake.deleteRange(spark, lakeDir, c, lo, hi)
+          VersionedLake.deleteRange(spark, VersionedLake.current(spark, snap),
+            c, lo, hi)
           ()
         } // empty interval: nothing can match — publish nothing
       case None => throw new UnsupportedOperationException(
@@ -1596,7 +1582,7 @@ private[engine] object GraftLakeDelete {
   * carried by manifest reference, zero IO, the same selection and
   * rewrite as [[VersionedLake.deleteRange]] and
   * [[VersionedLake.replaceWhereIn]]. */
-final class GraftLakeWriteBuilder(table: GraftLakeTable, lakeDir: String,
+final class GraftLakeWriteBuilder(table: GraftLakeTable, snap: Snapshot,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   extends org.apache.spark.sql.connector.write.WriteBuilder
   with org.apache.spark.sql.connector.write.SupportsOverwrite {
@@ -1640,9 +1626,7 @@ final class GraftLakeWriteBuilder(table: GraftLakeTable, lakeDir: String,
     // same dir shape as VersionedLake.commit — compaction, vacuum and
     // the racing-writer specs treat every d-* dir uniformly
     val dataDir = s"d-${java.util.UUID.randomUUID.toString.take(12)}"
-    val spark0 = org.apache.spark.sql.SparkSession.active
-    val partCols = GraftLakePartitions.of(spark0, lakeDir)
-    val mapped = GraftLakeMapping.enabled(spark0, lakeDir)
+    val (lakeDir, partCols, mapped) = (snap.dir, snap.partCols, snap.mapped)
     val inner: org.apache.spark.sql.connector.write.Write =
       if (partCols.isEmpty && !mapped)
         org.apache.spark.sql.execution.datasources.v2.parquet
@@ -1653,8 +1637,8 @@ final class GraftLakeWriteBuilder(table: GraftLakeTable, lakeDir: String,
         partCols.map(_.name),
         s"graftlake partitioned $mode $lakeDir (staging $dataDir)",
         if (mapped) Some(table.schema()) else None)
-    new GraftLakeWrite(inner, info, lakeDir, dataDir, mode,
-      table.schema(), replaceCond, partCols)
+    new GraftLakeWrite(inner, info, snap, dataDir, mode,
+      table.schema(), replaceCond)
   }
 }
 
@@ -1669,14 +1653,15 @@ final class GraftLakeWriteBuilder(table: GraftLakeTable, lakeDir: String,
 final class GraftLakeWrite(
     inner: org.apache.spark.sql.connector.write.Write,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo,
-    lakeDir: String, dataDir: String, mode: String,
+    snap: Snapshot, dataDir: String, mode: String,
     tableSchema: StructType,
-    replaceCond: Array[org.apache.spark.sql.sources.Filter],
-    partCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty)
+    replaceCond: Array[org.apache.spark.sql.sources.Filter])
   extends org.apache.spark.sql.connector.write.Write
   with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory,
     PhysicalWriteInfo, WriterCommitMessage}
+
+  private val (lakeDir, partCols) = (snap.dir, snap.partCols)
 
   override def description(): String =
     s"graftlake $mode $lakeDir (staging $dataDir)"
@@ -1711,10 +1696,10 @@ final class GraftLakeWrite(
     // Partitioned lakes route each epoch's rows into c=v leaf files and
     // publish one manifest entry per (epoch, partition leaf) — the
     // reference's flagship micro-batch-into-Y/M/D shape.
-    new GraftLakeStreamingWrite(lakeDir, info.schema(),
+    new GraftLakeStreamingWrite(snap, info.schema(),
       info.queryId(), mode,
       info.options().asCaseSensitiveMap().asScala.toMap,
-      partCols, Some(tableSchema))
+      Some(tableSchema))
   }
 
   override def toBatch: BatchWrite = new BatchWrite {
@@ -1735,7 +1720,7 @@ final class GraftLakeWrite(
       // INSERT'd data is immediately skippable through the same
       // sidecar paths as library-indexed commits
       VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
-        info.schema())
+        info.schema(), snap.bloomCols)
       VersionedLake.publish(spark, lakeDir, Commit(Seq(dataDir),
         replaceAll = mode == "overwrite",
         schema = Declared(Some(tableSchema.json))))
@@ -1774,10 +1759,10 @@ final class GraftLakeWrite(
       if (seeded) {
         if (mode == "append") return // zero-row INSERT: publish nothing
         entries = Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
-          dataDir, info.schema(), partCols))
+          dataDir, info.schema(), partCols, snap.bloomCols))
       }
       def indexAll(es: Seq[String]): Unit =
-        VersionedLake.indexStagedEntries(spark, lakeDir, es, dataOnly)
+        VersionedLake.indexStagedEntries(spark, snap, es, dataOnly)
       val declared = Declared(Some(tableSchema.json))
       mode match {
         case "append" | "overwrite" =>
@@ -1791,10 +1776,8 @@ final class GraftLakeWrite(
               throw new IllegalStateException(
                 s"untranslatable overwrite filter $f")))
             .reduceOption(_ && _).getOrElse(lit(true))
-          val tipV = VersionedLake.tip(spark, lakeDir)
-          val snapshot = tipV
-            .map(v => VersionedLake.manifestEntries(spark, lakeDir, v))
-            .getOrElse(Seq.empty)
+          val cur = VersionedLake.current(spark, snap)
+          val snapshot = cur.entries
           if (GraftLakePartitions.partitionDecidable(replaceCond,
               partCols)) {
             // whole-partition swap. Constraint check is entry-level:
@@ -1816,7 +1799,8 @@ final class GraftLakeWrite(
               snapshot, partCols, pred)
             VersionedLake.publish(spark, lakeDir, Commit(entries,
               touched.toSet, schema = declared, check = VersionedLake
-                .refuseConflicts(touched.toSet, Some(snapshot.toSet), tipV)))
+                .refuseConflicts(touched.toSet, Some(snapshot.toSet),
+                  Some(cur.version))))
             ()
           } else {
             // partitioned COW: Delta's arbitrary replaceWhere. The
@@ -1834,42 +1818,41 @@ final class GraftLakeWrite(
                   "duplicate beside the surviving rows; widen the " +
                   "condition or fix the written frame")
             }
-            val touched = VersionedLake.entriesTouched(spark, lakeDir,
+            val touched = VersionedLake.entriesTouched(spark, cur,
               snapshot, tableSchema, replaceCond.toSeq)
             // sidecars AFTER the survivor append so they cover every
             // file of every published leaf
             val finalEntries =
               if (touched.isEmpty) entries
-              else VersionedLake.rewriteEntries(spark, lakeDir, tipV.get,
-                touched, dataDir)(_.filter(not(pred <=> lit(true))))
+              else VersionedLake.rewriteEntries(spark, cur, touched,
+                dataDir)(_.filter(not(pred <=> lit(true)))).entries
             indexAll(finalEntries)
-            publishOver(spark, tipV, snapshot, touched, finalEntries)
+            publishOver(spark, cur, touched, finalEntries)
           }
       }
       ()
     }
 
     /** The replaceWhere publish: `entries` replace the `touched` entries
-      * of `snapshot` (observed at `tipV`). Nothing touched is a plain
+      * of `cur` (the tip it observed). Nothing touched is a plain
       * append. Otherwise the commit is SERIALIZABLE
       * ([[VersionedLake.refuseConflicts]]) — a concurrent rewrite of a
       * touched entry, or an append landing after the survivor scan (it
       * may hold rows matching the condition), is refused loudly for the
       * caller to retry, the same call Delta/Iceberg's COW validation
       * makes — and persists its row-level changes on a cdf lake. */
-    private def publishOver(spark: SparkSession, tipV: Option[Int],
-        snapshot: Seq[String], touched: Seq[String],
-        entries: Seq[String]): Unit = {
+    private def publishOver(spark: SparkSession, cur: Snapshot,
+        touched: Seq[String], entries: Seq[String]): Unit = {
       val check: VersionedLake.Attempt => Boolean =
         if (touched.isEmpty) _ => true
         else VersionedLake.refuseConflicts(touched.toSet,
-          Some(snapshot.toSet), tipV)
+          Some(cur.entries.toSet), Some(cur.version))
       val v = VersionedLake.publish(spark, lakeDir, Commit(entries,
         touched.toSet, schema = Declared(Some(tableSchema.json)),
         check = check)).get
-      if (touched.nonEmpty && VersionedLake.cdfEnabled(spark, lakeDir))
-        VersionedLake.writeChangeSidecar(spark, lakeDir, v,
-          VersionedLake.cowChangeRows(spark, lakeDir, touched, entries,
+      if (touched.nonEmpty && cur.cdf)
+        VersionedLake.writeChangeSidecar(spark, cur, v,
+          VersionedLake.cowChangeRows(spark, cur, touched, entries,
             "REPLACE"))
     }
 
@@ -1888,11 +1871,8 @@ final class GraftLakeWrite(
           throw new IllegalStateException( // canOverwrite gated this
             s"untranslatable overwrite filter $f")))
         .reduceOption(_ && _).getOrElse(lit(true))
-      val tipV = VersionedLake.tip(spark, lakeDir)
-      val snapshot = tipV
-        .map(v => VersionedLake.manifestEntries(spark, lakeDir, v))
-        .getOrElse(Seq.empty)
-      val touched = VersionedLake.entriesTouched(spark, lakeDir, snapshot,
+      val cur = VersionedLake.current(spark, snap)
+      val touched = VersionedLake.entriesTouched(spark, cur, cur.entries,
         tableSchema, replaceCond.toSeq)
       // survivors join the staged new data in its dir. Three-valued
       // logic: a row where the condition is NULL is NOT matched — it
@@ -1900,12 +1880,13 @@ final class GraftLakeWrite(
       // earlier vectors deleted are NOT survivors (the rewrite
       // MATERIALIZES the touched dirs' vectors away)
       if (touched.nonEmpty)
-        VersionedLake.rewriteEntries(spark, lakeDir, tipV.get, touched,
+        VersionedLake.rewriteEntries(spark, cur, touched,
           dataDir)(_.filter(not(pred <=> lit(true))))
       // sidecars AFTER the survivor append so they cover every file in
       // the published dir (new data and survivors alike)
-      VersionedLake.indexStagedDir(spark, lakeDir, dataDir, tableSchema)
-      publishOver(spark, tipV, snapshot, touched, Seq(dataDir))
+      VersionedLake.indexStagedDir(spark, lakeDir, dataDir, tableSchema,
+        cur.bloomCols)
+      publishOver(spark, cur, touched, Seq(dataDir))
     }
     override def abort(msgs: Array[WriterCommitMessage]): Unit = {
       innerBatch.abort(msgs)
@@ -1924,10 +1905,11 @@ final class GraftLakeWrite(
 final class GraftLakeScanBuilder(spark: SparkSession,
     fileIndex: PartitioningAwareFileIndex, schema: StructType,
     dataSchema: StructType, options: CaseInsensitiveStringMap,
-    lakeDir: String, cdf: Boolean = false,
+    snap: Snapshot, cdf: Boolean = false,
     dvRefs: Map[String, GraftLakeDvRef] = Map.empty)
   extends org.apache.spark.sql.execution.datasources.v2.parquet
     .ParquetScanBuilder(spark, fileIndex, schema, dataSchema, options) {
+  private val lakeDir = snap.dir
 
   /** `SELECT count(*), min(c), max(c)` answered from the stats
     * sidecars while planning: [[build]] then returns a [[LocalScan]]
@@ -2081,7 +2063,7 @@ final class GraftLakeScanBuilder(spark: SparkSession,
       // loudly instead of mis-addressing).
       require(!cdf, "row-address columns are a snapshot-read surface; " +
         "the change feed delivers _change_type events instead")
-      return new GraftLakeDeltaScan(dvRefs, super.build(), lakeDir,
+      return new GraftLakeDeltaScan(dvRefs, super.build(), snap,
         metaCols)
     }
     statsRow.foreach { case (aggregation, schema, row) =>
@@ -2113,7 +2095,7 @@ final class GraftLakeScanBuilder(spark: SparkSession,
     val failOnLoss = Option(
       options.get(GraftLakeDataSource.FailOnDataLoss))
       .forall(!_.trim.equalsIgnoreCase("false"))
-    new GraftLakeParquetScan(super.build(), lakeDir,
+    new GraftLakeParquetScan(super.build(), snap,
       fromTs.orElse(intOpt(GraftLakeDataSource.StartingVersion))
         .getOrElse(1),
       intOpt(GraftLakeDataSource.MaxVersionsPerTrigger),
@@ -2146,7 +2128,7 @@ final class GraftLakeStatsScan(
   * streaming entry point is added. */
 final class GraftLakeParquetScan(
     base: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan,
-    lakeDir: String, startingVersion: Int,
+    snap: Snapshot, startingVersion: Int,
     maxVersionsPerTrigger: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     skipChangeCommits: Boolean = false,
@@ -2162,7 +2144,7 @@ final class GraftLakeParquetScan(
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftLakeMicroBatchStream(this, lakeDir, startingVersion,
+    new GraftLakeMicroBatchStream(this, snap, startingVersion,
       maxVersionsPerTrigger, maxFilesPerTrigger, skipChangeCommits, cdf,
       failOnDataLoss)
 
@@ -2301,7 +2283,7 @@ final case class GraftLakeOffset(v: Int)
   * per-batch file index of the added dirs — the streaming path reuses
   * the native vectorized reader like everything else here. */
 final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
-    lakeDir: String, startingVersion: Int,
+    snap: Snapshot, startingVersion: Int,
     maxVersionsPerTrigger: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     skipChangeCommits: Boolean = false,
@@ -2316,6 +2298,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
   import org.apache.spark.sql.connector.read.InputPartition
 
   private def spark = scan.sparkSession
+  private val lakeDir = snap.dir
 
   override def initialOffset(): Offset = GraftLakeOffset(startingVersion - 1)
 
@@ -2410,7 +2393,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
           .count(_.getPath.getName.endsWith(".parquet"))).sum
       var prev: Seq[String] =
         if (from <= 0) Seq.empty
-        else VersionedLake.manifestInfo(spark, lakeDir, from)._1
+        else VersionedLake.manifestEntries(spark, lakeDir, from)
       var v = from + 1
       while (v <= end) {
         val (cur, layoutOnly, isDv) =
@@ -2501,7 +2484,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
     // delta-chain re-resolution per version
     var prevSeq: Seq[String] =
       if (from <= 0) Seq.empty[String]
-      else VersionedLake.manifestInfo(spark, lakeDir, from)._1
+      else VersionedLake.manifestEntries(spark, lakeDir, from)
     var prev: Set[String] = prevSeq.toSet
     // sidecar-aware per-batch index + the scan's own pushed data
     // filters: a filtered stream prunes each batch's files through the
@@ -2511,7 +2494,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
         org.apache.spark.sql.execution.datasources.FilePartition] =
       if (paths.isEmpty) Seq.empty
       else scan.copy(
-        fileIndex = new GraftLakeFileIndex(spark, lakeDir, paths),
+        fileIndex = new GraftLakeFileIndex(spark, snap, paths),
         partitionFilters = Nil, dataFilters = scan.dataFilters)
         .planInputPartitions().toSeq.collect {
           case fp: org.apache.spark.sql.execution.datasources
@@ -2545,7 +2528,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
     val cdfGroups = scala.collection.mutable.ArrayBuffer.empty[
       (Seq[org.apache.spark.sql.execution.datasources.FilePartition],
         String, Int)]
-    val partitionedLake = GraftLakePartitions.of(spark, lakeDir).nonEmpty
+    val partitionedLake = snap.partCols.nonEmpty
     var v = from + 1
     while (v <= to) {
       val (cur, layoutOnly, isDv) =
@@ -2645,7 +2628,7 @@ final class GraftLakeMicroBatchStream(scan: GraftLakeParquetScan,
       // row layout, partition columns sourced from file bytes (own
       // hadoop conf copy — factory creation writes its schema there)
       val sidecarInner =
-        if (GraftLakePartitions.of(spark, lakeDir).isEmpty) None
+        if (snap.partCols.isEmpty) None
         else Some(scan.copy(
           hadoopConf = new org.apache.hadoop.conf.Configuration(
             scan.hadoopConf),
@@ -2737,20 +2720,17 @@ private[engine] final class GraftLakeCdfReaderFactory(
   * each micro-batch indexes only its delta dirs, and the same sidecar
   * pruning applies — a filtered stream skips non-matching files per
   * batch instead of reading every delta file. */
-final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
+final class GraftLakeFileIndex(spark: SparkSession, snap: Snapshot,
     dataDirPaths: Seq[Path], sidecarPrune: Boolean = true)
   extends InMemoryFileIndex(spark, dataDirPaths, Map.empty, None,
     VersionedLake.listingCache(spark),
     // partitioned lakes: partition values decided from MANIFEST entry
     // names (an explicit PartitionSpec), never inferred from listings —
     // planning-time partition pruning + DPP then drop whole entries
-    GraftLakePartitions.specFor(spark, lakeDir, dataDirPaths), None) {
+    GraftLakePartitions.specFor(spark, snap.dir, snap.partCols,
+      dataDirPaths), None) {
 
-  def this(spark: SparkSession, lakeDir: String, version: Int) =
-    this(spark, lakeDir,
-      VersionedLake.liveDataDirs(spark, lakeDir, version).map(new Path(_)))
-
-  private[engine] val probe = new SidecarProbe(spark, lakeDir)
+  private[engine] val probe = new SidecarProbe(spark, snap)
 
   private[engine] def admitAnyOf(p: Path, c: String,
       values: Seq[Any]): Boolean = probe.admitAnyOf(p, c, values)
@@ -2800,17 +2780,15 @@ final class GraftLakeFileIndex(spark: SparkSession, lakeDir: String,
   * is one `getFileStatus`), and conservative at every gap — no sidecar
   * / no entry / unrenderable value → admit. */
 private[engine] final class SidecarProbe(spark: SparkSession,
-    lakeDir: String) {
-  private val partCols = GraftLakePartitions.of(spark, lakeDir)
+    snap: Snapshot) {
+  private val (lakeDir, partCols) = (snap.dir, snap.partCols)
   private val entryDepth = 1 + partCols.length
 
   // column-mapping renames: a column's sidecar lines are keyed by each
   // FILE's own era name, so a probe consults every name the field id
   // has ever had — a file appears under exactly one era name, the
-  // merged map stays one-entry-per-file. Empty off mapped lakes.
-  private lazy val aliasMap = GraftLakeMapping.aliases(spark, lakeDir)
-  private def aliasesOf(c: String): Seq[String] =
-    aliasMap.getOrElse(c, Seq(c))
+  // merged map stays one-entry-per-file
+  private def aliasesOf(c: String): Seq[String] = snap.aliasesOf(c)
 
   /** Runtime (join-driven) pruning on a PARTITION column — the V2
     * dynamic-partition-pruning shape: the build side's key set arrives

@@ -167,7 +167,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
     val entries =
       if (written.nonEmpty) written
       else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
-        stSchema, partCols))
+        stSchema, partCols, bloomProp))
     // exact expectations — never the CAS retry, which would absorb a
     // racing writer as a silent append/union (exactly-one-winner is
     // CTAS's contract; the library commit path WANTS retry, DDL does
@@ -202,8 +202,8 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
         // against the overwritten lake-global registry: refuse loudly
         // (requireSpecUnchanged/requireNotMapped ran at stage time,
         // when no table existed to check against).
-        GraftLakePartitions.invalidate(lakeDir)
-        val racerCols = GraftLakePartitions.of(spark, lakeDir)
+        val racer = VersionedLake.resolve(spark, lakeDir, racerTip)
+        val racerCols = racer.partCols
           .map(c => (c.name.toLowerCase, c.dataType))
         require(racerCols == partCols.map(c =>
             (c.name.toLowerCase, c.dataType)),
@@ -212,7 +212,7 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
             s"(${racerCols.map(_._1).mkString(",")} vs " +
             s"${partCols.map(_.name).mkString(",")}) — re-run against " +
             "the existing table or drop it first")
-        require(GraftLakeMapping.enabled(spark, lakeDir) == mapped,
+        require(racer.mapped == mapped,
           s"CREATE OR REPLACE lost the create race on $lakeDir and the " +
             "racing CREATE's column-mapping mode differs — re-run " +
             "against the existing table or drop it first")

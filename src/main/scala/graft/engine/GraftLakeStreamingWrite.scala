@@ -68,11 +68,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * rename + one footer read per file, one manifest CAS — nothing
   * size-of-data. The write path itself is Spark's parquet encoder on
   * executors, exactly like the batch DSv2 write. */
-final class GraftLakeStreamingWrite(lakeDir: String, schema: StructType,
+final class GraftLakeStreamingWrite(snap: Snapshot, schema: StructType,
     queryId: String, mode: String, options: Map[String, String],
-    partCols: Seq[StructField] = Seq.empty,
     tableSchema: Option[StructType] = None)
   extends StreamingWrite {
+  private val (lakeDir, partCols) = (snap.dir, snap.partCols)
 
   // checkpoint-stable identity: safe chars only (queryId is a UUID, but
   // the tag grammar is enforced, not assumed)
@@ -87,23 +87,18 @@ final class GraftLakeStreamingWrite(lakeDir: String, schema: StructType,
     * lake is column-mapped — the analyzer does not reliably carry
     * metadata into `info.schema()`, and an id-less footer would be
     * unreadable to the id-matching scan (its column reads back NULL:
-    * silent data loss). Ids overlay from the lake's CURRENT declared
-    * schema (the captured `tableSchema` goes stale across an ALTER
-    * TABLE RENAME between stream restarts), and a column the
-    * declaration has never seen gets a FRESH registered id — the same
-    * ADD COLUMN protocol as [[VersionedLake]]'s library commits, so a
-    * stream carrying a new column widens the table instead of writing
-    * invisible bytes. */
+    * silent data loss). Ids overlay from the declared schema of the
+    * snapshot the query resolved at its (re)start (the captured
+    * `tableSchema` goes stale across an ALTER TABLE RENAME between
+    * stream restarts), and a column the declaration has never seen gets
+    * a FRESH registered id — the same ADD COLUMN protocol as
+    * [[VersionedLake]]'s library commits, so a stream carrying a new
+    * column widens the table instead of writing invisible bytes. */
   private lazy val stamped: StructType =
-    if (!GraftLakeMapping.enabled(spark, lakeDir)) schema
-    else {
-      val declared = VersionedLake.tip(spark, lakeDir)
-        .flatMap(VersionedLake.manifestSchema(spark, lakeDir, _))
-        .orElse(tableSchema)
-        .getOrElse(schema)
+    snap.mapping.fold(schema) { reg =>
+      val declared = snap.declared.orElse(tableSchema).getOrElse(schema)
       val overlaid = GraftLakeMapping.withFieldIds(schema, declared)
-      val out = GraftLakeMapping.assignIds(overlaid,
-        GraftLakeMapping.nextId(spark, lakeDir))
+      val out = GraftLakeMapping.assignIds(overlaid, reg.nextId)
       if (out.fields.exists(f =>
           GraftLakeMapping.fieldId(overlaid(f.name)).isEmpty))
         GraftLakeMapping.record(spark, lakeDir, out)
@@ -157,7 +152,7 @@ final class GraftLakeStreamingWrite(lakeDir: String, schema: StructType,
     // partitioned entries are `d-tag/c=v` — the epoch's identity is the
     // first path segment, not the leaf name
     val published = f.exists(marker) || tip.exists(v =>
-      VersionedLake.liveDataDirs(spark, lakeDir, v)
+      VersionedLake.manifestEntries(spark, lakeDir, v)
         .exists(_.split('/').contains(dataDir)))
     if (published) {
       // replayed epoch: the lake already carries this batch — the
@@ -183,8 +178,7 @@ final class GraftLakeStreamingWrite(lakeDir: String, schema: StructType,
     val entries: Seq[String] =
       if (partCols.isEmpty) Seq(dataDir)
       else kept.map(m => s"$dataDir/${m.partSubpath}").distinct.sorted
-    VersionedLake.indexStagedEntries(spark, lakeDir, entries,
-      dataOnly(stamped))
+    VersionedLake.indexStagedEntries(spark, snap, entries, dataOnly(stamped))
     // the declaration carries the tip's schema forward merged with
     // THIS WRITE'S ([[VersionedLake.CommitSchema.Carried]] — computed
     // per CAS attempt, so a racing writer's new column is never

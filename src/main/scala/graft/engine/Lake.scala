@@ -404,8 +404,6 @@ object Lake {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    // a lake recreated at this path must re-read its own registries
-    GraftLakePartitions.invalidate(dir)
   }
 
   /** Row accounting per partition — the D1 audit query. */

@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 final case class MetaCacheStats(hits: Long, misses: Long, entries: Int)
 
 /** The one process-wide cache of lake metadata that never changes once
-  * written: data-dir listings, parsed stats and bloom sidecars, footer
-  * row counts, and deletion-vector bindings, refs and sizes.
+  * written: manifest facts, registry parses, data-dir listings, parsed
+  * stats and bloom sidecars, footer row counts, and deletion-vector
+  * bindings, refs and sizes.
   *
   * Listing and sidecar keys are a path together with the modification
   * time and length of one `getFileStatus` ([[stamp]]): a lake deleted
@@ -20,9 +21,11 @@ final case class MetaCacheStats(hits: Long, misses: Long, entries: Int)
   * a DV sidecar's name, modification time and length from the
   * `_deletes` listing, for the same reason (tag-derived uuids repeat).
   * Footer entries key on a part file's path, a name never reused.
+  * Manifest facts and registry parses key on their file's stamp too
+  * ([[VersionedLake.resolve]]).
   * Least-recently-used entries drop once the entries' weights
   * (approximate bytes) pass [[MaxWeight]]. */
-private[engine] object LakeMetaCache {
+private[graft] object LakeMetaCache {
   val MaxWeight: Long = 64L << 20
 
   private val lru = // key → (value, weight), least recently used first
@@ -52,14 +55,23 @@ private[engine] object LakeMetaCache {
         v
     }
 
-  /** Approximate retained bytes of a cached value. */
-  private def weightOf(v: Any): Long = v match {
+  /** The value cached under `key`, if any; computes nothing. */
+  def peek[V](key: Any): Option[V] =
+    lru.synchronized(Option(lru.get(key))).map { case (v, _) =>
+      hits.incrementAndGet(); v.asInstanceOf[V]
+    }
+
+  /** Approximate retained bytes of a cached value. A collection is
+    * weighed element by element in a loop — before the `Product` case,
+    * which a `List` also matches and would recurse through once per
+    * element. */
+  private[graft] def weightOf(v: Any): Long = v match {
     case _: org.apache.hadoop.fs.FileStatus => 512L
     case b: java.util.BitSet => 64L + b.size / 8
-    case a: Array[_] => 64L + a.iterator.map(weightOf).sum
-    case m: Map[_, _] => 64L + m.iterator.map(weightOf).sum
-    case p: Product => 32L + p.productIterator.map(weightOf).sum
     case s: String => 48L + 2L * s.length
+    case a: Array[_] => 64L + a.iterator.map(weightOf).sum
+    case c: Iterable[_] => 64L + c.iterator.map(weightOf).sum
+    case p: Product => 32L + p.productIterator.map(weightOf).sum
     case _ => 16L
   }
 

@@ -46,6 +46,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * object store without atomic create would supply its CAS primitive —
   * conditional PUT — behind the same protocol.)
   *
+  * A statement or library call resolves the version it works on once,
+  * into an immutable [[Snapshot]] ([[resolve]]): the live set, markers
+  * and declared schema from one read of the version's manifest
+  * (memoized on its stamp), and the partition, column-mapping,
+  * deletion-vector, change-feed and bloom registries from one stat
+  * each. Every reader, pruner and rewrite of the operation takes that
+  * value; none looks a registry up again.
+  *
   * The reference keeps one mutable lake with no version history
   * (sparkle-v9.py:128-138 overwrite-style append); this module is the
   * missing production discipline: concurrent writers can't corrupt the
@@ -215,7 +223,7 @@ object VersionedLake {
     val f = fs(spark, dir)
     versionRange(spark, dir).fold(Seq.empty[(Int, Long, Int)]) {
       case (lo, hi) =>
-        var live = readManifest(spark, dir, lo)
+        var live = manifestEntries(spark, dir, lo)
         (lo to hi).map { v =>
           if (v > lo) live = manifestStep(spark, dir, live, v)._1
           (v, f.getFileStatus(manifestPath(dir, v)).getModificationTime,
@@ -270,7 +278,7 @@ object VersionedLake {
   val CheckpointInterval: Int = 16
 
   /** Manifest content lines (terminator dropped), marker lines
-    * included — the raw form [[readManifest]] and [[isLayoutOnly]]
+    * included — the raw form [[facts]] and the walks
     * filter their views from. */
   private def readManifestLines(spark: SparkSession, dir: String, v: Int)
       : Seq[String] = {
@@ -371,17 +379,19 @@ object VersionedLake {
   def checkpoint(spark: SparkSession, dir: String): Int = {
     val t = tip(spark, dir).getOrElse(throw new IllegalArgumentException(
       s"no versions published at $dir"))
-    writeCheckpointFile(fs(spark, dir), dir, t, readManifest(spark, dir, t))
+    writeCheckpointFile(fs(spark, dir), dir, t, manifestEntries(spark, dir, t))
     t
   }
 
-  /** Live set of version `v`: walk back through delta manifests to the
-    * nearest full manifest or checkpoint sidecar, then replay the ops
-    * forward. Bounded by [[CheckpointInterval]] small file reads (the
-    * write side guarantees a full manifest at least every Nth
-    * version). */
+  /** Live set of version `v` from its manifest `vLines`: walk back
+    * through delta manifests to the nearest full manifest, checkpoint
+    * sidecar or version whose [[facts]] this process already holds, then
+    * replay the ops forward. Bounded by [[CheckpointInterval]] small
+    * file reads (the write side guarantees a full manifest at least
+    * every Nth version); one `getFileStatus` when the previous version
+    * was resolved before. */
   private def resolveLive(spark: SparkSession, dir: String, v: Int,
-      vLines: Option[Seq[String]] = None): Seq[String] =
+      vLines: Seq[String]): Seq[String] =
     try resolveLiveWalk(spark, dir, v, vLines)
     catch {
       // a CONCURRENT VACUUM writes its boundary checkpoint and then
@@ -399,56 +409,156 @@ object VersionedLake {
         resolveLiveWalk(spark, dir, v, vLines)
     }
 
-  /** The walk of [[resolveLive]]; `vLines` are v's own manifest lines
-    * when the caller already read them. */
+  /** The walk of [[resolveLive]]. */
   private def resolveLiveWalk(spark: SparkSession, dir: String, v: Int,
-      vLines: Option[Seq[String]]): Seq[String] = {
+      vLines: Seq[String]): Seq[String] = {
     val f = fs(spark, dir)
     var pending = List.empty[(Seq[String], Seq[String])]
     var cur = v
+    var lines = vLines
     while (true) {
-      parseManifest(vLines.filter(_ => cur == v)
-          .getOrElse(readManifestLines(spark, dir, cur)))._1 match {
+      parseManifest(lines)._1 match {
         case Right(full) =>
           return pending.foldLeft(full)(applyOps)
         case Left(ops) =>
-          readCheckpoint(f, dir, cur) match {
-            // ckpt(cur) is the live set AFTER cur — cur's own ops are
-            // already included, only the later pending ones replay
-            case Some(live) => return pending.foldLeft(live)(applyOps)
-            case None =>
-              if (cur <= 1) throw new IllegalStateException(
-                s"delta manifest v$cur of $dir has no resolvable base " +
-                  "(no full manifest or checkpoint below it) — the log " +
-                  "was truncated outside the vacuum protocol")
-              pending = ops :: pending
-              cur -= 1
+          // live(cur) = live(cur - 1) + cur's ops: a predecessor this
+          // process already resolved ends the walk
+          val known = if (cur <= 1) None
+            else LakeMetaCache.stamp(f, manifestPath(dir, cur - 1))
+              .flatMap(s => LakeMetaCache.peek[ManifestFacts](("manifest", s)))
+          known match {
+            case Some(m) =>
+              return (ops :: pending).foldLeft(m.entries)(applyOps)
+            case None => readCheckpoint(f, dir, cur) match {
+              // ckpt(cur) is the live set AFTER cur — cur's own ops are
+              // already included, only the later pending ones replay
+              case Some(live) => return pending.foldLeft(live)(applyOps)
+              case None =>
+                if (cur <= 1) throw new IllegalStateException(
+                  s"delta manifest v$cur of $dir has no resolvable base " +
+                    "(no full manifest or checkpoint below it) — the " +
+                    "log was truncated outside the vacuum protocol")
+                pending = ops :: pending
+                cur -= 1
+                lines = readManifestLines(spark, dir, cur)
+            }
           }
       }
     }
     Nil // unreachable
   }
 
-  private def readManifest(spark: SparkSession, dir: String, v: Int)
-      : Seq[String] = resolveLive(spark, dir, v)
+  // ---- snapshot resolution ----------------------------------------------
+  //
+  // Both halves memoize in [[LakeMetaCache]] on a stamp: a manifest's
+  // never changes once terminated, and an ALTER, a `set*` call or a
+  // delete-and-rebuild restamps a registry — nothing to invalidate.
+
+  /** The manifest-derived half of a [[Snapshot]]. */
+  private final case class ManifestFacts(entries: Seq[String],
+      layoutOnly: Boolean, dvUuid: Option[String],
+      declared: Option[org.apache.spark.sql.types.StructType])
+
+  /** Version `v`'s [[ManifestFacts]]; None when its manifest does not
+    * exist (never published, or vacuumed). */
+  private def facts(spark: SparkSession, dir: String, v: Int)
+      : Option[ManifestFacts] =
+    LakeMetaCache.stamp(fs(spark, dir), manifestPath(dir, v)).map { s =>
+      LakeMetaCache.memo(("manifest", s)) {
+        val lines = readManifestLines(spark, dir, v)
+        ManifestFacts(resolveLive(spark, dir, v, lines),
+          lines.contains(LayoutMarker), dvUuidOf(lines), declaredIn(lines))
+      }
+    }
+
+  /** [[facts]] of a version that must exist: a missing manifest throws
+    * FileNotFoundException, as opening it did. */
+  private def factsOf(spark: SparkSession, dir: String, v: Int)
+      : ManifestFacts =
+    facts(spark, dir, v).getOrElse(throw new java.io.FileNotFoundException(
+      s"manifest ${manifestPath(dir, v)} does not exist"))
+
+  /** The live set (manifest entries) of version `v` — [[facts]]
+    * without the registries, for the walks and the per-attempt tip of
+    * [[publish]]. */
+  private[graft] def manifestEntries(spark: SparkSession, dir: String,
+      v: Int): Seq[String] = factsOf(spark, dir, v).entries
+
+  /** One root registry's parse, or None when the file does not exist:
+    * one `getFileStatus`, the parse memoized on its stamp. A read that
+    * fails parses as an empty registry and is not memoized. */
+  private def registry[T](f: org.apache.hadoop.fs.FileSystem, dir: String,
+      name: String)(parse: Seq[String] => T): Option[T] = {
+    val p = Snapshot.registryPath(dir, name)
+    LakeMetaCache.stamp(f, p).map { s =>
+      try LakeMetaCache.memo(("registry", s)) {
+        val in = f.open(p)
+        try parse(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(_.nonEmpty).toList)
+        finally in.close()
+      } catch { case scala.util.control.NonFatal(_) => parse(Nil) }
+    }
+  }
+
+  /** Version `v` of the lake at `dir`, resolved: the manifest half from
+    * [[facts]], the registry half from one stat of each registry. A
+    * version that never existed or was expired by [[vacuum]] fails
+    * loudly with the still-readable range (a raw FileNotFoundException
+    * would leave the reader guessing whether the lake is corrupt or
+    * merely retention-trimmed). */
+  def resolve(spark: SparkSession, dir: String, v: Int): Snapshot = {
+    val m = facts(spark, dir, v).getOrElse {
+      val vs = versions(spark, dir)
+      throw new IllegalArgumentException(
+        s"version $v of $dir does not exist or was vacuumed; " +
+          (if (vs.isEmpty) "no versions are published"
+           else s"readable versions: ${vs.head}..${vs.last}"))
+    }
+    withRegistries(spark, dir, v, m)
+  }
+
+  /** Version `v`'s manifest facts `m` with the registries as they stand. */
+  private def withRegistries(spark: SparkSession, dir: String, v: Int,
+      m: ManifestFacts): Snapshot = {
+    val f = fs(spark, dir)
+    def num[T](ls: Seq[String], key: String)(conv: String => T) =
+      ls.map(_.split('\t')).collectFirst { case Array(`key`, x) =>
+        scala.util.Try(conv(x)).toOption }.flatten
+    Snapshot(dir, v, m.entries, m.layoutOnly, m.dvUuid, m.declared,
+      // one struct DDL line; empty or unparsable reads as unpartitioned
+      partCols = registry(f, dir, Snapshot.PartitionReg)(ls =>
+        scala.util.Try(org.apache.spark.sql.types.StructType.fromDDL(
+          ls.mkString).fields.toSeq).getOrElse(Nil)).getOrElse(Nil),
+      mapping = registry(f, dir, Snapshot.MappingReg)(
+        GraftLakeMapping.Registry(_)),
+      dv = registry(f, dir, Snapshot.DvReg)(ls => DvPolicy(
+        num(ls, "maxRatio")(_.toDouble).filter(r => r > 0 && r <= 1),
+        num(ls, "maxPending")(_.toLong).filter(_ > 0))),
+      cdf = registry(f, dir, Snapshot.CdfReg)(_ => ()).nonEmpty,
+      bloomCols = registry(f, dir, Snapshot.IndexReg)(_.map(_.split('\t'))
+        .collect { case Array("bloom", c) if c.nonEmpty => c }.distinct)
+        .getOrElse(Nil))
+  }
+
+  /** The tip as an operation planned on `snap` acts on it: `snap`
+    * itself while it is still the tip, else the tip resolved afresh. */
+  private[engine] def current(spark: SparkSession, snap: Snapshot)
+      : Snapshot =
+    tip(spark, snap.dir) match {
+      case Some(t) if t == snap.version => snap
+      case t => resolve(spark, snap.dir, t.getOrElse(throw
+        new IllegalArgumentException(s"no versions published at ${snap.dir}")))
+    }
+
+  /** The newest version, [[resolve]]d. */
+  def resolveTip(spark: SparkSession, dir: String): Snapshot =
+    resolve(spark, dir, tip(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no versions published at $dir")))
 
   /** True iff version `v` was published as a layout-only (row-
     * preserving) commit — see [[LayoutMarker]]. */
   def isLayoutOnly(spark: SparkSession, dir: String, v: Int): Boolean =
-    readManifestLines(spark, dir, v).contains(LayoutMarker)
-
-  /** (live dir names, layoutOnly) of one version — the random-access
-    * resolution. Per-version WALKS ([[changes]], the streaming source)
-    * should step with [[manifestStep]] instead: one manifest read per
-    * version, no repeated delta-chain replay. */
-  private[engine] def manifestInfo(spark: SparkSession, dir: String,
-      v: Int): (Seq[String], Boolean) = {
-    val lines = readManifestLines(spark, dir, v)
-    parseManifest(lines) match {
-      case (Right(full), l) => (full, l)
-      case (Left(_), l) => (resolveLive(spark, dir, v), l)
-    }
-  }
+    factsOf(spark, dir, v).layoutOnly
 
   /** The uuid a manifest's [[DvMarker]] binds, if it is a
     * deletion-vector commit. */
@@ -460,7 +570,7 @@ object VersionedLake {
   /** True iff version `v` is a deletion-vector commit (rows removed by
     * sidecar, live dirs untouched). */
   def isDvCommit(spark: SparkSession, dir: String, v: Int): Boolean =
-    dvUuidOf(readManifestLines(spark, dir, v)).nonEmpty
+    factsOf(spark, dir, v).dvUuid.nonEmpty
 
   /** live(v) from live(v-1) with ONE manifest read — the incremental
     * step the per-version walks advance with. Returns (live,
@@ -492,10 +602,8 @@ object VersionedLake {
     * which raises the clear retention message. */
   def manifestSchema(spark: SparkSession, dir: String, v: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    try {
-      if (!versionExists(spark, dir, v)) None
-      else declaredIn(readManifestLines(spark, dir, v))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try facts(spark, dir, v).flatMap(_.declared)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** The schema one version's manifest `lines` declare, if any. */
   private def declaredIn(lines: Seq[String])
@@ -517,7 +625,7 @@ object VersionedLake {
     * tip to build the next live set, a torn TIP blocks all future
     * commits too — loudly, but forever. Deleting it is safe: an
     * unreadable manifest can never have been observed by a reader nor
-    * built upon by a writer (their readManifest fails the same way),
+    * built upon by a writer (their manifest read fails the same way),
     * and its data dir simply becomes an unreferenced orphan for
     * [[vacuum]]. Only manifests stale for `staleMs` are touched — a
     * fresh one is a publisher mid-fill (the window is normally
@@ -559,11 +667,20 @@ object VersionedLake {
     * files of a partitioned lake hold only data columns, but the
     * manifest DECLARATION must carry the partition columns or
     * readEntries could not reconstruct and cast them. */
-  private def stageForCommit(df: DataFrame, dir: String,
+  private def stageForCommit(df: DataFrame, snap: Snapshot,
       dataDir: String, codec: String, bloomCol: Option[String] = None)
-      : (Seq[String], org.apache.spark.sql.types.StructType) = {
-    val out = withMappedIds(df, dir)
-    (writeStaged(out, dir, dataDir, codec, bloomCol), out.schema)
+      : (Staged, org.apache.spark.sql.types.StructType) = {
+    val out = withMappedIds(df, snap)
+    (writeStaged(out, snap, dataDir, codec, bloomCol), out.schema)
+  }
+
+  /** The entries a write staged under one data dir; `seeded` when no
+    * task wrote a row and they are the zero-row carrier
+    * [[GraftLakePartitions.seedEmpty]] wrote and already indexed. */
+  private[engine] final case class Staged(entries: Seq[String],
+      seeded: Boolean) {
+    /** The entries the caller's sidecar pass has yet to index. */
+    def unindexed: Seq[String] = if (seeded) Nil else entries
   }
 
   /** Write the id-stamped frame `out` into `dataDir` — appended when it
@@ -572,25 +689,31 @@ object VersionedLake {
     * its partition leaves ([[stagedOrSeed]]) on a partitioned one.
     * Parquet's native row-group bloom over `bloomCol` rides along when
     * the file-level bloom is requested (see [[commitWithBloom]]). */
-  private def writeStaged(out: DataFrame, dir: String, dataDir: String,
-      codec: String, bloomCol: Option[String] = None): Seq[String] = {
-    val spark = out.sparkSession
-    val partCols = GraftLakePartitions.of(spark, dir)
+  private def writeStaged(out: DataFrame, snap: Snapshot, dataDir: String,
+      codec: String, bloomCol: Option[String] = None): Staged = {
+    val (dir, partCols) = (snap.dir, snap.partCols)
     val w0 = out.write.mode("append").option("compression", codec)
     val w = bloomCol.fold(w0)(c =>
       w0.option(s"parquet.bloom.filter.enabled#$c", "true"))
     if (partCols.isEmpty) {
       w.parquet(s"$dir/$dataDir")
-      Seq(dataDir)
+      Staged(Seq(dataDir), seeded = false)
     } else {
       require(partCols.forall(pc =>
         out.columns.exists(_.equalsIgnoreCase(pc.name))),
         "the committed frame lacks the lake's partition columns " +
           s"(${partCols.map(_.name).mkString(", ")})")
       w.partitionBy(partCols.map(_.name): _*).parquet(s"$dir/$dataDir")
-      stagedOrSeed(spark, dir, dataDir, out.schema, partCols)
+      stagedOrSeed(out.sparkSession, snap, dataDir, out.schema)
     }
   }
+
+  /** The tip to commit against — for a lake with no version yet, its
+    * registries over an empty version 0. */
+  private def resolveForCommit(spark: SparkSession, dir: String): Snapshot =
+    tip(spark, dir).fold(withRegistries(spark, dir, 0,
+      ManifestFacts(Nil, layoutOnly = false, None, None)))(
+      resolve(spark, dir, _))
 
   /** Commit `df` as the next version. `mode` "append" carries the
     * previous live set forward plus the new data dir; "overwrite"
@@ -635,8 +758,9 @@ object VersionedLake {
     if (tagPublished(spark, dir, tag)) None
     else {
       f.delete(new Path(s"$dir/$dataDir"), true) // orphan from a crash
-      val (entries, schema) = stageForCommit(df, dir, dataDir, codec)
-      val v = publish(spark, dir, Commit(entries,
+      val (staged, schema) =
+        stageForCommit(df, resolveForCommit(spark, dir), dataDir, codec)
+      val v = publish(spark, dir, Commit(staged.entries,
         replaceAll = mode == "overwrite",
         schema = CommitSchema.Carried(schema)))
       writeTagMarker(spark, dir, tag)
@@ -661,7 +785,7 @@ object VersionedLake {
       e == dataDir || e.startsWith(s"$dataDir/")
     f.exists(new Path(s"$dir/_tags/$tag")) ||
       versionRange(spark, dir).exists { case (lo, hi) =>
-        readManifest(spark, dir, lo).exists(carries) ||
+        manifestEntries(spark, dir, lo).exists(carries) ||
           (lo to hi).reverseIterator.exists { v =>
             readManifestLines(spark, dir, v).exists(l =>
               carries(l) || (l.startsWith("+") && carries(l.drop(1))) ||
@@ -695,7 +819,7 @@ object VersionedLake {
     * itself instead of a side state file. */
   def readManifestTags(spark: SparkSession, dir: String, v: Int)
       : Seq[String] =
-    readManifest(spark, dir, v).map(_.stripPrefix("d-"))
+    manifestEntries(spark, dir, v).map(_.stripPrefix("d-"))
 
   /** The tagged writer's DEDUP BASELINE: the newest version whose live
     * set does not carry `tag` — i.e. the writer's pre-batch snapshot,
@@ -756,6 +880,10 @@ object VersionedLake {
   //   create          First      none                       None: nothing
   //                                                         published
   //   replace         After(v)   tip must still be v        refused (CME)
+  //
+  // The operation behind a commit read its version once, as a
+  // [[Snapshot]]; the loop stays live: every attempt resolves the tip
+  // afresh and checks against its (stamp-memoized) manifest facts.
 
   /** The version a commit claims. */
   private[graft] sealed trait Expect
@@ -804,7 +932,7 @@ object VersionedLake {
       val dir: String, val tip: Option[Int]) {
     val next: Int = tip.getOrElse(0) + 1
     lazy val live: Seq[String] =
-      tip.fold(Seq.empty[String])(readManifest(spark, dir, _))
+      tip.fold(Seq.empty[String])(manifestEntries(spark, dir, _))
   }
 
   /** One commit, as [[publish]] takes it. `adds` are manifest entries
@@ -969,14 +1097,12 @@ object VersionedLake {
     * [[LakeMetaCache]] (listed once per process on the driver, never as
     * a Spark listing job), and a later filter on the frame prunes files
     * through the stats and bloom sidecars like the `graftlake` scan. */
-  def readAt(spark: SparkSession, dir: String, v: Int): DataFrame = {
-    requireVersion(spark, dir, v)
-    snapshotAt(spark, dir, v, None)
-  }
+  def readAt(spark: SparkSession, dir: String, v: Int): DataFrame =
+    snapshotAt(spark, resolve(spark, dir, v), None)
 
-  /** The relation [[readAt]] builds for version `v`, over `entries` (a
-    * subset of v's live set) when given, else over all of it. */
-  private def snapshotAt(spark: SparkSession, dir: String, v: Int,
+  /** The relation [[readAt]] builds for snapshot `snap`, over `entries`
+    * (a subset of its live set) when given, else over all of it. */
+  private def snapshotAt(spark: SparkSession, snap: Snapshot,
       entries: Option[Seq[String]]): DataFrame = {
     // a PARTITIONED lake's entries are partition leaf dirs whose files
     // do not carry the partition columns — read through the DSv2 index,
@@ -984,12 +1110,11 @@ object VersionedLake {
     // scan. A COLUMN-MAPPING lake routes the same way: its files must
     // bind by field id (a name-matched plain read would silently null
     // a renamed column out of pre-rename files).
-    if (GraftLakePartitions.of(spark, dir).nonEmpty ||
-        GraftLakeMapping.enabled(spark, dir) || dvEnabled(spark, dir))
-      return GraftLakeDataSource.snapshotFrame(spark, dir, v, entries)
-    val dirs = entries.getOrElse(readManifest(spark, dir, v))
-      .map(d => s"$dir/$d")
-    val index = new GraftLakeFileIndex(spark, dir, dirs.map(new Path(_)))
+    if (snap.partCols.nonEmpty || snap.mapped || snap.dvEnabled)
+      return GraftLakeDataSource.snapshotFrame(spark, snap, entries)
+    val (dir, v) = (snap.dir, snap.version)
+    val dirs = entries.getOrElse(snap.entries).map(d => s"$dir/$d")
+    val index = new GraftLakeFileIndex(spark, snap, dirs.map(new Path(_)))
     // a live data dir that is gone (a damaged lake, or a vacuum racing
     // this read) must fail the read, never answer without its rows;
     // only a dir that listed no file can be gone
@@ -1008,7 +1133,7 @@ object VersionedLake {
     // lakes (never committed with a schema) keep the footer merge —
     // the union is unknowable without it; with no file to merge, the
     // plain read raises Spark's own "unable to infer" error.
-    val schema = manifestSchema(spark, dir, v)
+    val schema = snap.declared
       .orElse(format.inferSchema(spark, Map("mergeSchema" -> "true"),
         index.allFiles()))
       .getOrElse(return spark.read.option("mergeSchema", "true")
@@ -1025,20 +1150,18 @@ object VersionedLake {
         None, format, Map.empty)(spark))
   }
 
-  /** Read an arbitrary ENTRY set of version-agnostic lake dirs —
-    * partition-aware: on a partitioned lake the partition columns are
-    * reconstructed from the entry names ([[GraftLakePartitions
-    * .readEntries]]); on an unpartitioned one this is the plain
-    * mergeSchema multi-dir read. The incremental walks' primitive. */
-  /** Read a set of manifest entries. `dvAt` applies deletion vectors
-    * at/below that version — threaded INTO the per-data-dir scans on a
+  /** Read a set of manifest entries — the incremental walks' primitive:
+    * partition columns reconstructed from the entry names on a
+    * partitioned lake ([[GraftLakePartitions.readEntries]]), field ids
+    * matched through the declaration of `tipSnap` (the lake's tip) on a
+    * mapped one. `dvAt` applies deletion vectors at/below that version — threaded INTO the per-data-dir scans on a
     * partitioned lake because `_metadata` (the DV join key) resolves
     * only on a direct file relation, never through the union
     * [[GraftLakePartitions.readEntries]] builds. */
-  private def readEntrySet(spark: SparkSession, dir: String,
+  private def readEntrySet(spark: SparkSession, tipSnap: Snapshot,
       entries: Seq[String], dvAt: Option[Int] = None): DataFrame = {
-    val partCols = GraftLakePartitions.of(spark, dir)
-    if (!GraftLakeMapping.enabled(spark, dir)) {
+    val (dir, partCols) = (tipSnap.dir, tipSnap.partCols)
+    if (!tipSnap.mapped) {
       if (partCols.nonEmpty)
         GraftLakePartitions.readEntries(spark, dir, entries, partCols,
           dropDvAt = dvAt)
@@ -1069,9 +1192,7 @@ object VersionedLake {
       // feeds and CDF sidecars computed from these frames. Historical
       // rows surface under the CURRENT names (ids are stable across
       // renames — Delta's CDF-with-latest-schema shape).
-      import org.apache.spark.sql.functions.col
-      val declared = tip(spark, dir)
-        .flatMap(manifestSchema(spark, dir, _))
+      val declared = tipSnap.declared
         .getOrElse(throw new IllegalStateException(
           s"column-mapping lake $dir has no declared schema at its " +
             "tip — cannot id-match the entry-set read"))
@@ -1100,27 +1221,6 @@ object VersionedLake {
   private[engine] def versionExists(spark: SparkSession, dir: String,
       v: Int): Boolean =
     fs(spark, dir).exists(manifestPath(dir, v))
-
-  private def requireVersion(spark: SparkSession, dir: String,
-      v: Int): Unit =
-    if (!fs(spark, dir).exists(manifestPath(dir, v))) {
-      val vs = versions(spark, dir)
-      throw new IllegalArgumentException(
-        s"version $v of $dir does not exist or was vacuumed; " +
-          (if (vs.isEmpty) "no versions are published"
-           else s"readable versions: ${vs.head}..${vs.last}"))
-    }
-
-  // ---- DSv2 read-path seam ([[GraftLakeDataSource]]) -------------------
-
-  /** Live data-dir paths of one published version, with [[readAt]]'s
-    * clear retention error — the snapshot resolution the `graftlake`
-    * format's FileIndex is built from. */
-  private[engine] def liveDataDirs(spark: SparkSession, dir: String,
-      v: Int): Seq[String] = {
-    requireVersion(spark, dir, v)
-    readManifest(spark, dir, v).map(d => s"$dir/$d")
-  }
 
   /** Leaf files of one data dir or partition leaf, as `InMemoryFileIndex`
     * lists them, from [[LakeMetaCache]]: listed on the driver once per
@@ -1170,11 +1270,8 @@ object VersionedLake {
     dataDirs.flatMap(d => statsSidecar(spark, dir, d)._2.keys ++
       bloomSidecar(spark, dir, d).keys).distinct
 
-  def readLatest(spark: SparkSession, dir: String): DataFrame = {
-    val t = tip(spark, dir)
-    require(t.nonEmpty, s"no versions published at $dir")
-    readAt(spark, dir, t.get)
-  }
+  def readLatest(spark: SparkSession, dir: String): DataFrame =
+    snapshotAt(spark, resolveTip(spark, dir), None)
 
   /** Rewrite the current live set as ONE data directory and publish it
     * as a new version (small-file compaction as a commit, not a swap:
@@ -1192,7 +1289,8 @@ object VersionedLake {
     // carrying both SHOULD) be requested together — one data write,
     // two sidecars. layoutOnly: the rewrite preserves every row, so
     // streams and changes() skip this version instead of refusing it.
-    compactFullSnapshot(spark, dir, statsCols, bloomCol, codec)(identity)
+    compactFullSnapshot(spark, resolveTip(spark, dir), statsCols, bloomCol,
+      codec)(identity)
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance op):
     * coalesce only the data dirs whose total bytes fall below
@@ -1209,9 +1307,8 @@ object VersionedLake {
       thresholdBytes: Long, statsCols: Seq[String] = Seq.empty,
       bloomCol: Option[String] = None, codec: String = "snappy")
       : Option[Int] = {
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    val live = readManifest(spark, dir, vs.last)
+    val snap = resolveTip(spark, dir)
+    val live = snap.entries
     def bytesOf(d: String): Long =
       leafFiles(spark, new Path(s"$dir/$d")).toSeq
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
@@ -1220,9 +1317,8 @@ object VersionedLake {
     // group by their partition suffix, and only groups of two or more
     // coalesce — the rewrite keeps partition leaves, so rows never
     // cross a partition boundary and every pruning path survives
-    val partitioned = GraftLakePartitions.of(spark, dir).nonEmpty
     val merged =
-      if (!partitioned) small
+      if (snap.partCols.isEmpty) small
       else small.groupBy(_.split('/').drop(1).mkString("/")).values
         .filter(_.length >= 2).flatten.toSeq.sorted
     if (merged.length < 2) return None
@@ -1232,10 +1328,11 @@ object VersionedLake {
     // replacement carries only visible rows, and the replaced files'
     // vectors become dead metadata for vacuum
     val outFiles = math.max(1L, merged.map(bytesOf).sum / (128L << 20)).toInt
-    val newEntries = rewriteEntries(spark, dir, vs.last, merged,
+    val staged = rewriteEntries(spark, snap, merged,
       codec = codec)(_.coalesce(outFiles))
-    writeSidecarsBatch(spark, dir, newEntries, statsCols, bloomCol.toSeq)
-    publish(spark, dir, layoutCommit(merged, newEntries, vs.last))
+    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
+      bloomCol.toSeq)
+    publish(spark, dir, layoutCommit(merged, staged.entries, snap.version))
   }
 
   /** Z-ordered compaction as a versioned commit: rewrite the latest
@@ -1257,18 +1354,17 @@ object VersionedLake {
       bCol: String, nFiles: Int, bits: Int = 16,
       bloomCol: Option[String] = None, codec: String = "snappy"): Int = {
     import org.apache.spark.sql.functions.col
-    val partCols = GraftLakePartitions.of(spark, dir)
-    if (partCols.nonEmpty)
-      return compactZOrderPartitioned(spark, dir, aCol, bCol, nFiles,
-        bits, bloomCol, codec, partCols)
+    val snap = resolveTip(spark, dir)
+    if (snap.partCols.nonEmpty)
+      return compactZOrderPartitioned(spark, snap, aCol, bCol, nFiles,
+        bits, bloomCol, codec)
     // codec threads through like every other commit entry point — the
     // z-order rewrite is the LARGEST rewrite a lake ever does, the
     // worst place to silently swap the caller's compression policy.
     // layoutOnly: sortWithinPartitions over a range repartition is a
     // row-preserving permutation — streaming consumers skip it.
-    compactFullSnapshot(spark, dir, Seq(aCol, bCol), bloomCol, codec)(
-      snap => snap
-        .withColumn("_z", Lake.zValue(col(aCol), col(bCol), bits))
+    compactFullSnapshot(spark, snap, Seq(aCol, bCol), bloomCol, codec)(
+      _.withColumn("_z", Lake.zValue(col(aCol), col(bCol), bits))
         .repartitionByRange(nFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
         .drop("_z"))
@@ -1288,18 +1384,15 @@ object VersionedLake {
     * and is exactly what this deliberately does not attempt. `nFiles`
     * is PER PARTITION. Layout-only, conflict-checked, one atomic
     * commit for the whole lake. */
-  private def compactZOrderPartitioned(spark: SparkSession, dir: String,
+  private def compactZOrderPartitioned(spark: SparkSession, snap: Snapshot,
       aCol: String, bCol: String, nFiles: Int, bits: Int,
-      bloomCol: Option[String], codec: String,
-      partCols: Seq[org.apache.spark.sql.types.StructField]): Int = {
+      bloomCol: Option[String], codec: String): Int = {
     import org.apache.spark.sql.functions.col
+    val (dir, partCols, observed) = (snap.dir, snap.partCols, snap.entries)
     Seq(aCol, bCol).foreach(c =>
       require(!partCols.exists(_.name.equalsIgnoreCase(c)),
         s"z-order dimension $c is a PARTITION column — constant within " +
           "every leaf, nothing to cluster; pick data columns"))
-    val t = tip(spark, dir)
-    require(t.nonEmpty, s"no versions published at $dir")
-    val observed = readManifest(spark, dir, t.get)
     val dataDir = newDataDir()
     // ONE job for the whole lake, not one per partition (a 1,000-day
     // lake must not run 1,000 sequential rewrites): range-partition by
@@ -1313,23 +1406,23 @@ object VersionedLake {
     val keys = partCols.map(c => col(c.name)) :+ col("_z")
     // readAt applies deletion vectors and id-matches mapped lakes;
     // withMappedIds re-stamps the field ids into the rewrite
-    withMappedIds(readAt(spark, dir, t.get)
+    withMappedIds(snapshotAt(spark, snap, None)
         .withColumn("_z", Lake.zValue(col(aCol), col(bCol), bits))
         .repartitionByRange(math.max(1, nFiles) * nParts, keys: _*)
         .sortWithinPartitions(keys: _*)
-        .drop("_z"), dir)
+        .drop("_z"), snap)
       .write.option("compression", codec)
       .partitionBy(partCols.map(_.name): _*)
       .parquet(s"$dir/$dataDir")
     // an empty lake keeps a schema carrier live
-    val newEntries = stagedOrSeed(spark, dir, dataDir,
-      schemaAt(spark, dir, t.get), partCols)
+    val staged = stagedOrSeed(spark, snap, dataDir, schemaOf(spark, snap))
     // ONE batched sidecar build for every leaf — the sidecar phase
     // must not reintroduce the O(partitions)-sequential-jobs term the
     // single-job rewrite removed
-    writeSidecarsBatch(spark, dir, newEntries, Seq(aCol, bCol),
+    writeSidecarsBatch(spark, dir, staged.unindexed, Seq(aCol, bCol),
       bloomCol.toSeq)
-    publish(spark, dir, layoutCommit(observed, newEntries, t.get)).get
+    publish(spark, dir,
+      layoutCommit(observed, staged.entries, snap.version)).get
   }
 
   /** The full-snapshot rewrite shared by [[compactVersions]] and
@@ -1351,34 +1444,27 @@ object VersionedLake {
 
   /** Field-id stamping for library commits on a COLUMN-MAPPING lake:
     * the id-matching reader only binds files whose footers carry the
-    * ids, so the write schema inherits them from the lake's declared
-    * schema (mapped lakes always declare — CREATE writes v1's). A
-    * column the mapping has never seen gets a FRESH id, recorded in
-    * the registry before the data lands — the same protocol as SQL
-    * `ADD COLUMN`. Unmapped lakes pass through untouched. The ids come
-    * from version `at`'s declaration when given (a rewrite of that
-    * version's rows), else the tip's. */
-  private def withMappedIds(df: DataFrame, dir: String,
-      at: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    if (!GraftLakeMapping.enabled(spark, dir)) df
-    else {
+    * ids, so the write schema inherits them from the declared schema of
+    * `snap` (mapped lakes always declare — CREATE writes v1's; a rewrite
+    * passes the version it read, a commit the tip). A column the
+    * mapping has never seen gets a FRESH id, recorded in the registry
+    * before the data lands — the same protocol as SQL `ADD COLUMN`.
+    * Unmapped lakes pass through untouched. */
+  private def withMappedIds(df: DataFrame, snap: Snapshot): DataFrame =
+    snap.mapping.fold(df) { reg =>
       import org.apache.spark.sql.functions.col
-      val declared = at.orElse(tip(spark, dir))
-        .flatMap(manifestSchema(spark, dir, _))
-        .getOrElse(throw new IllegalStateException(
-          s"column-mapping lake $dir has no declared schema at its " +
-            "tip — cannot stamp parquet field ids into a library commit"))
+      val declared = snap.declared.getOrElse(throw new IllegalStateException(
+        s"column-mapping lake ${snap.dir} has no declared schema at " +
+          s"v${snap.version} — cannot stamp parquet field ids into a " +
+          "library commit"))
       val overlaid = GraftLakeMapping.withFieldIds(df.schema, declared)
-      val stamped = GraftLakeMapping.assignIds(overlaid,
-        GraftLakeMapping.nextId(spark, dir))
+      val stamped = GraftLakeMapping.assignIds(overlaid, reg.nextId)
       if (stamped.fields.exists(f => GraftLakeMapping.fieldId(
           overlaid(f.name)).isEmpty))
-        GraftLakeMapping.record(spark, dir, stamped)
+        GraftLakeMapping.record(df.sparkSession, snap.dir, stamped)
       df.select(stamped.fields.map(f =>
         col(s"`${f.name}`").as(f.name, f.metadata)).toSeq: _*)
     }
-  }
 
   /** A fresh data dir name — every commit writes one. */
   private[engine] def newDataDir(): String =
@@ -1386,31 +1472,22 @@ object VersionedLake {
 
   /** The leaf entries staged under `dataDir` of a partitioned lake, or
     * when no task wrote a row, the zero-row schema carrier that keeps
-    * the commit's schema live ([[GraftLakePartitions.seedEmpty]]). */
-  private def stagedOrSeed(spark: SparkSession, dir: String, dataDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[org.apache.spark.sql.types.StructField]): Seq[String] = {
-    val staged = GraftLakePartitions.stagedEntries(spark, dir, dataDir,
-      partCols.length)
-    if (staged.nonEmpty) staged
-    else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir, schema,
-      partCols))
+    * the commit's schema live ([[GraftLakePartitions.seedEmpty]]),
+    * already indexed. */
+  private def stagedOrSeed(spark: SparkSession, snap: Snapshot,
+      dataDir: String, schema: org.apache.spark.sql.types.StructType)
+      : Staged = {
+    val staged = GraftLakePartitions.stagedEntries(spark, snap.dir, dataDir,
+      snap.partCols.length)
+    if (staged.nonEmpty) Staged(staged, seeded = false)
+    else Staged(Seq(GraftLakePartitions.seedEmpty(spark, snap.dir, dataDir,
+      schema, snap.partCols, snap.bloomCols)), seeded = true)
   }
 
-  /** The schema of version `v`: its declaration, else its relation's. */
-  private def schemaAt(spark: SparkSession, dir: String, v: Int)
+  /** The schema of `snap`: its declaration, else its relation's. */
+  private def schemaOf(spark: SparkSession, snap: Snapshot)
       : org.apache.spark.sql.types.StructType =
-    manifestSchema(spark, dir, v).getOrElse(readAt(spark, dir, v).schema)
-
-  /** `schema` without the lake's partition columns — the columns a data
-    * file of a rewrite holds, which the DML index policy covers. */
-  private def dataColumns(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    val partCols = GraftLakePartitions.of(spark, dir)
-    org.apache.spark.sql.types.StructType(schema.filterNot(f =>
-      partCols.exists(_.name.equalsIgnoreCase(f.name))))
-  }
+    snap.declared.getOrElse(snapshotAt(spark, snap, None).schema)
 
   /** A row-preserving rewrite of `replaced` (observed live at `v`) into
     * `added`, conflict-checked: a concurrent rewrite of a replaced entry
@@ -1421,47 +1498,45 @@ object VersionedLake {
     Commit(added, replaced.toSet, layoutOnly = true,
       check = refuseConflicts(replaced.toSet, noDvSince = Some(v)))
 
-  /** The one survivor rewrite: `entries` (live at `v`) read through
-    * the relation [[readAt]] builds for `v` ([[snapshotAt]]: deletion
-    * vectors as of `v` applied, field ids matched on mapped lakes,
-    * partition columns from the entry names), passed through `step` (a
-    * keep-filter, a coalesce), stamped with the field ids of `v`'s
-    * declaration ([[withMappedIds]]) and written into `dataDir`
-    * ([[writeStaged]]). Returns the entries staged there.
+  /** The one survivor rewrite: `entries` (live in `snap`) read through
+    * the relation [[readAt]] builds for `snap` ([[snapshotAt]]:
+    * deletion vectors as of its version applied, field ids matched on
+    * mapped lakes, partition columns from the entry names), passed
+    * through `step` (a keep-filter, a coalesce), stamped with the field
+    * ids of its declaration ([[withMappedIds]]) and written into
+    * `dataDir` ([[writeStaged]]). Returns what was staged there.
     *
     * The relation prunes files by the filters `step` applies, so `step`
     * may only filter by what SURVIVES: a file with no survivor is meant
     * to vanish with its replaced entry. Handing it the delete or replace
     * condition instead would prune exactly the files whose survivors the
     * rewrite must carry, and lose them. */
-  private[engine] def rewriteEntries(spark: SparkSession, dir: String,
-      v: Int, entries: Seq[String], dataDir: String = newDataDir(),
-      codec: String = "snappy")(step: DataFrame => DataFrame): Seq[String] =
-    writeStaged(withMappedIds(step(snapshotAt(spark, dir, v, Some(entries))),
-      dir, Some(v)), dir, dataDir, codec)
+  private[engine] def rewriteEntries(spark: SparkSession, snap: Snapshot,
+      entries: Seq[String], dataDir: String = newDataDir(),
+      codec: String = "snappy")(step: DataFrame => DataFrame): Staged =
+    writeStaged(withMappedIds(step(snapshotAt(spark, snap, Some(entries))),
+      snap), snap, dataDir, codec)
 
-  private def compactFullSnapshot(spark: SparkSession, dir: String,
+  private def compactFullSnapshot(spark: SparkSession, snap: Snapshot,
       statsCols: Seq[String], bloomCol: Option[String], codec: String)(
       cluster: DataFrame => DataFrame): Int = {
-    val partCols = GraftLakePartitions.of(spark, dir)
-    if (partCols.nonEmpty)
-      return compactFullSnapshotPartitioned(spark, dir, statsCols,
-        bloomCol, codec, partCols)(cluster)
-    val t = tip(spark, dir)
-    require(t.nonEmpty, s"no versions published at $dir")
-    val observed = readManifest(spark, dir, t.get)
+    if (snap.partCols.nonEmpty)
+      return compactFullSnapshotPartitioned(spark, snap, statsCols,
+        bloomCol, codec)(cluster)
+    val dir = snap.dir
     val dataDir = newDataDir()
-    // readAt routes through the DSv2 seam: deletion vectors apply
-    // (the rewrite materializes them) and column-mapping lakes read
-    // by field id; withMappedIds re-stamps the ids into the rewrite
-    val w = withMappedIds(cluster(readAt(spark, dir, t.get)), dir)
+    // the snapshot relation routes through the DSv2 seam: deletion
+    // vectors apply (the rewrite materializes them) and column-mapping
+    // lakes read by field id; withMappedIds re-stamps the ids
+    val w = withMappedIds(cluster(snapshotAt(spark, snap, None)), snap)
       .write.option("compression", codec)
     bloomCol.fold(w)(c =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
       .parquet(s"$dir/$dataDir")
     if (statsCols.nonEmpty) writeStatsFor(spark, dir, dataDir, statsCols)
     bloomCol.foreach(c => writeBloomFor(spark, dir, dataDir, c))
-    publish(spark, dir, layoutCommit(observed, Seq(dataDir), t.get)).get
+    publish(spark, dir,
+      layoutCommit(snap.entries, Seq(dataDir), snap.version)).get
   }
 
   /** Full-snapshot rewrite of a PARTITIONED lake: every partition's
@@ -1469,31 +1544,27 @@ object VersionedLake {
     * dir, as ONE dynamic-partition job (never one job per partition);
     * entries stay partition leaves, sidecars build batched. */
   private def compactFullSnapshotPartitioned(spark: SparkSession,
-      dir: String, statsCols: Seq[String], bloomCol: Option[String],
-      codec: String,
-      partCols: Seq[org.apache.spark.sql.types.StructField])(
-      cluster: DataFrame => DataFrame): Int = {
+      snap: Snapshot, statsCols: Seq[String], bloomCol: Option[String],
+      codec: String)(cluster: DataFrame => DataFrame): Int = {
     import org.apache.spark.sql.functions.col
-    val t = tip(spark, dir)
-    require(t.nonEmpty, s"no versions published at $dir")
-    val observed = readManifest(spark, dir, t.get)
+    val (dir, partCols, observed) = (snap.dir, snap.partCols, snap.entries)
     val dataDir = newDataDir()
     val keys = partCols.map(c => col(c.name))
     val nParts = math.max(1,
       observed.map(_.split('/').drop(1).mkString("/")).distinct.length)
-    val w = withMappedIds(cluster(readAt(spark, dir, t.get))
-        .repartitionByRange(nParts, keys: _*), dir)
+    val w = withMappedIds(cluster(snapshotAt(spark, snap, None))
+        .repartitionByRange(nParts, keys: _*), snap)
       .write.option("compression", codec)
       .partitionBy(partCols.map(_.name): _*)
     bloomCol.fold(w)(c =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
       .parquet(s"$dir/$dataDir")
     // an empty lake keeps a schema carrier live
-    val newEntries = stagedOrSeed(spark, dir, dataDir,
-      schemaAt(spark, dir, t.get), partCols)
-    writeSidecarsBatch(spark, dir, newEntries, statsCols,
+    val staged = stagedOrSeed(spark, snap, dataDir, schemaOf(spark, snap))
+    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
       bloomCol.toSeq)
-    publish(spark, dir, layoutCommit(observed, newEntries, t.get)).get
+    publish(spark, dir,
+      layoutCommit(observed, staged.entries, snap.version)).get
   }
 
   // ---- row-level change-data-feed sidecars ------------------------------
@@ -1511,21 +1582,16 @@ object VersionedLake {
   // Cost at DML time is one netted diff over the CHANGED dirs only —
   // O(changed rows) extra write, the same trade Delta makes.
 
-  private val CdfMarker = "_cdf"
-
   /** Opt this lake into row-level change capture: subsequent COW DML,
     * deleteRange and replaceWhere commits persist their exact changed
     * rows. Declared via `TBLPROPERTIES ('cdf' = 'true')` at CREATE or
     * this call. */
   def setChangeDataFeed(spark: SparkSession, dir: String): Unit = {
-    val out = fs(spark, dir).create(new Path(s"$dir/$CdfMarker"), true)
+    val out = fs(spark, dir).create(
+      Snapshot.registryPath(dir, Snapshot.CdfReg), true)
     try out.write("true".getBytes("UTF-8"))
     finally out.close()
   }
-
-  def cdfEnabled(spark: SparkSession, dir: String): Boolean =
-    try fs(spark, dir).exists(new Path(s"$dir/$CdfMarker"))
-    catch { case scala.util.control.NonFatal(_) => false }
 
   private def changeSidecarDir(dir: String, v: Int): Path =
     new Path(s"$dir/_changes/v$v")
@@ -1543,7 +1609,7 @@ object VersionedLake {
         // a DELETION-VECTOR commit's change rows were staged BEFORE
         // its publish under the uuid the manifest binds — atomic with
         // the commit, unlike the best-effort post-publish v<N> sidecar
-        dvUuidOf(readManifestLines(spark, dir, v)).map(u =>
+        factsOf(spark, dir, v).dvUuid.map(u =>
           new Path(s"$dir/_changes/dv-$u"))
           .filter(q => f.exists(q) && f.exists(new Path(q, "_SUCCESS")))
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -1553,10 +1619,11 @@ object VersionedLake {
     * `v`'s row-level feed: staged under a temp name, renamed into
     * place ATOMICALLY after the parquet job's own _SUCCESS lands — a
     * reader can only ever observe a complete sidecar or none. */
-  private[engine] def writeChangeSidecar(spark: SparkSession, dir: String,
+  private[engine] def writeChangeSidecar(spark: SparkSession, snap: Snapshot,
       v: Int, changes: DataFrame): Unit = {
     require(changes.columns.contains("_change_type"),
       "a change sidecar needs the _change_type column")
+    val dir = snap.dir
     val f = fs(spark, dir)
     // COLUMN-MAPPING lakes: sidecar files must carry the declared
     // field ids or the id-matching CDF read refuses them outright
@@ -1565,12 +1632,10 @@ object VersionedLake {
     // stays id-less and binds by name, which the partial-id parquet
     // read supports.
     val out =
-      if (!GraftLakeMapping.enabled(spark, dir)) changes
+      if (!snap.mapped) changes
       else {
         import org.apache.spark.sql.functions.col
-        val declared = tip(spark, dir)
-          .flatMap(manifestSchema(spark, dir, _))
-          .getOrElse(changes.schema)
+        val declared = snap.declared.getOrElse(changes.schema)
         val overlaid =
           GraftLakeMapping.withFieldIds(changes.schema, declared)
         changes.select(overlaid.fields.map(fl =>
@@ -1595,16 +1660,16 @@ object VersionedLake {
     * update (new image == old image) cancels too: a row whose bytes
     * did not change is not a change, matching [[changes]]'s multiset
     * semantics. */
-  private[engine] def cowChangeRows(spark: SparkSession, dir: String,
+  private[engine] def cowChangeRows(spark: SparkSession, snap: Snapshot,
       dropped: Seq[String], added: Seq[String], command: String)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, when}
     // on a DV lake the dropped dirs' raw bytes still hold rows earlier
     // vectors deleted — they were not part of THIS commit's pre-image
     // and must not surface as spurious delete events
-    val a = readEntrySet(spark, dir, dropped,
-      dvAt = tip(spark, dir).filter(_ => dvEnabled(spark, dir)))
-    val b = if (added.isEmpty) a.limit(0) else readEntrySet(spark, dir, added)
+    val a = readEntrySet(spark, snap, dropped,
+      dvAt = Some(snap.version).filter(_ => snap.dvEnabled))
+    val b = if (added.isEmpty) a.limit(0) else readEntrySet(spark, snap, added)
     val diff = snapshotDiff(spark, a, b)
     val tag =
       if (command == "UPDATE")
@@ -1640,12 +1705,6 @@ object VersionedLake {
   // on any DV lake take the SupportsDelta merge-on-read path
   // ([[GraftLakeDeltaOperation]]).
 
-  private def dvReg(dir: String) = new Path(s"$dir/_dv")
-
-  def dvEnabled(spark: SparkSession, dir: String): Boolean =
-    try fs(spark, dir).exists(dvReg(dir))
-    catch { case scala.util.control.NonFatal(_) => false }
-
   def setDeletionVectors(spark: SparkSession, dir: String,
       maxRatio: Option[Double] = None,
       maxPending: Option[Long] = None): Unit = {
@@ -1656,15 +1715,15 @@ object VersionedLake {
     val bytes = ("dv\n" +
       maxRatio.fold("")(r => s"maxRatio\t$r\n") +
       maxPending.fold("")(n => s"maxPending\t$n\n")).getBytes("UTF-8")
-    // NEVER truncate the registry in place: `dvEnabled` is an existence
-    // check, so on a lake with LIVE sidecars a crash between a
-    // truncating create and the content write would silently flip
-    // dvEnabled off — every pending delete resurrects on the next
-    // scan. Fill a tmp file invisibly, swing the name, and verify the
+    // NEVER truncate the registry in place: deletion vectors are
+    // enabled by the registry's existence, so on a lake with LIVE
+    // sidecars a crash between a truncating create and the content
+    // write would silently flip them off — every pending delete
+    // resurrects on the next scan. Fill a tmp file invisibly, swing the name, and verify the
     // registry is readable before returning (ALTER TABLE SET/UNSET
     // TBLPROPERTIES routes through here on live tables).
     val f = fs(spark, dir)
-    val reg = dvReg(dir)
+    val reg = Snapshot.registryPath(dir, Snapshot.DvReg)
     val tmp = reg.suffix(
       s".tmp-${java.util.UUID.randomUUID.toString.take(8)}")
     val out = f.create(tmp, true)
@@ -1705,21 +1764,8 @@ object VersionedLake {
     * vectors ([[materializeVectors]]) — turning "the DV tax is
     * bounded by OPTIMIZE cadence" from policy into mechanism.
     * Malformed/missing degrades to None (no auto-maintenance). */
-  def dvMaxRatio(spark: SparkSession, dir: String): Option[Double] = {
-    val f = fs(spark, dir)
-    try {
-      if (!f.exists(dvReg(dir))) None
-      else {
-        val in = f.open(dvReg(dir))
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList
-        finally in.close()
-        lines.map(_.split('\t')).collectFirst {
-          case Array("maxRatio", v) => v.toDouble
-        }.filter(r => r > 0 && r <= 1)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  def dvMaxRatio(spark: SparkSession, dir: String): Option[Double] =
+    resolveTip(spark, dir).dv.flatMap(_.maxRatio)
 
   /** The DEFAULT absolute pending-positions bound, when the table
     * declares neither `dv_max_ratio` nor `dv_max_pending`: 10M
@@ -1735,33 +1781,15 @@ object VersionedLake {
     * of growing an unbounded backlog (scan-side selection tax and
     * per-task sidecar reads are O(backlog); the bound is opt-OUT by
     * raising it, not opt-in). Malformed lines degrade to the default. */
-  def dvMaxPending(spark: SparkSession, dir: String): Long = {
-    val default =
+  def dvMaxPending(spark: SparkSession, dir: String): Long =
+    maxPendingOf(spark, resolveTip(spark, dir))
+
+  /** [[dvMaxPending]] of a resolved snapshot. */
+  private def maxPendingOf(spark: SparkSession, snap: Snapshot): Long =
+    snap.dv.flatMap(_.maxPending).getOrElse(
       try spark.conf.get("spark.graft.dv.maxPendingDefault",
         DvDefaultMaxPending.toString).toLong
-      catch { case scala.util.control.NonFatal(_) => DvDefaultMaxPending }
-    dvMaxPendingDeclared(spark, dir).getOrElse(default)
-  }
-
-  /** The PER-TABLE declared absolute bound, if any — distinct from
-    * [[dvMaxPending]]'s declared-or-default resolution so ALTER can
-    * rewrite one bound without clobbering the other's declaredness. */
-  private[engine] def dvMaxPendingDeclared(spark: SparkSession,
-      dir: String): Option[Long] = {
-    val f = fs(spark, dir)
-    try {
-      if (!f.exists(dvReg(dir))) None
-      else {
-        val in = f.open(dvReg(dir))
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList
-        finally in.close()
-        lines.map(_.split('\t')).collectFirst {
-          case Array("maxPending", v) => v.toLong
-        }.filter(_ > 0)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+      catch { case scala.util.control.NonFatal(_) => DvDefaultMaxPending })
 
   /** Rewrite EXACTLY the entries carrying live deletion vectors, with
     * the vectors applied — the bounded-maintenance primitive behind
@@ -1771,17 +1799,16 @@ object VersionedLake {
     * the published version, or None when no vector is live. */
   def materializeVectors(spark: SparkSession, dir: String,
       codec: String = "snappy"): Option[Int] = {
-    val t = tip(spark, dir).getOrElse(return None)
+    val snap = resolve(spark, dir, tip(spark, dir).getOrElse(return None))
     // entries still live that have at least one vectored file
-    val touched = liveDvKeys(spark, dir, t)
+    val touched = liveDvKeys(spark, dir, snap.version)
       .map(k => k.substring(0, k.lastIndexOf('/')))
       .distinct.sorted
     if (touched.isEmpty) return None
-    val newEntries = rewriteEntries(spark, dir, t, touched,
-      codec = codec)(identity)
-    indexStagedEntries(spark, dir, newEntries,
-      dataColumns(spark, dir, schemaAt(spark, dir, t)))
-    publish(spark, dir, layoutCommit(touched, newEntries, t))
+    val staged = rewriteEntries(spark, snap, touched, codec = codec)(identity)
+    indexStagedEntries(spark, snap, staged.unindexed,
+      snap.dataColumns(schemaOf(spark, snap)))
+    publish(spark, dir, layoutCommit(touched, staged.entries, snap.version))
   }
 
   /** Roll the lake back to version `v` AS A NEW COMMIT — the rolled-
@@ -1808,8 +1835,8 @@ object VersionedLake {
       throw new IllegalArgumentException(
         s"no versions published at $dir"))
     if (v == tipV) return None
-    requireVersion(spark, dir, v)
-    val want = readManifest(spark, dir, v)
+    val snap = resolve(spark, dir, v)
+    val want = snap.entries
     val wantSet = want.toSet
     // entries of v carrying a vector published AFTER v
     val postV = dvSidecars(spark, dir, tipV).filter(_._1 > v)
@@ -1823,10 +1850,10 @@ object VersionedLake {
     val newEntries: Seq[String] =
       if (affected.isEmpty) Seq.empty
       else {
-        val es = rewriteEntries(spark, dir, v, affected)(identity)
-        indexStagedEntries(spark, dir, es,
-          dataColumns(spark, dir, schemaAt(spark, dir, v)))
-        es
+        val staged = rewriteEntries(spark, snap, affected)(identity)
+        indexStagedEntries(spark, snap, staged.unindexed,
+          snap.dataColumns(schemaOf(spark, snap)))
+        staged.entries
       }
     val entries =
       want.filterNot(affected.toSet) ++ newEntries
@@ -1839,12 +1866,10 @@ object VersionedLake {
     // into the CURRENT epoch regains alias coverage; it cannot merge
     // unrelated histories because field ids are never reused across
     // epochs ([[GraftLakeMapping.nextId]] scans every era).
-    if (GraftLakeMapping.enabled(spark, dir))
-      manifestSchema(spark, dir, v).foreach(s =>
-        GraftLakeMapping.record(spark, dir, s))
+    if (snap.mapped)
+      snap.declared.foreach(s => GraftLakeMapping.record(spark, dir, s))
     publish(spark, dir, Commit(entries, replaceAll = true,
-      schema = CommitSchema.Declared(manifestSchema(spark, dir, v)
-        .map(_.json)),
+      schema = CommitSchema.Declared(snap.declared.map(_.json)),
       expect = Expect.After(tipV)))
   }
 
@@ -1865,9 +1890,10 @@ object VersionedLake {
     * loses nothing (the next delete re-checks). */
   private[engine] def enforceDvBound(spark: SparkSession,
       dir: String): Unit = {
-    val ratioOpt = dvMaxRatio(spark, dir)
-    val maxPending = dvMaxPending(spark, dir)
-    val t = tip(spark, dir).getOrElse(return)
+    val snap = resolve(spark, dir, tip(spark, dir).getOrElse(return))
+    val ratioOpt = snap.dv.flatMap(_.maxRatio)
+    val maxPending = maxPendingOf(spark, snap)
+    val t = snap.version
     // LIVE vectors only: a materialized-away sidecar still lists
     // until vacuum, but its files are gone from the manifest — dead
     // positions must not re-trigger maintenance forever. Counts come
@@ -1946,7 +1972,7 @@ object VersionedLake {
       v: Int): Seq[(Int, FileStatus)] = {
     val f = fs(spark, dir)
     val root = new Path(s"$dir/_deletes")
-    if (!dvEnabled(spark, dir) || !f.exists(root)) return Seq.empty
+    if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq.flatMap { st =>
       val p = st.getPath
       p.getName match {
@@ -1957,7 +1983,7 @@ object VersionedLake {
           // hiccup; only the well-understood vacuumed-manifest FNF
           // takes the fallback path.
           def bindOnce(): Boolean =
-            dvUuidOf(readManifestLines(spark, dir, n.toInt)).contains(uuid)
+            factsOf(spark, dir, n.toInt).dvUuid.contains(uuid)
           // a sidecar's manifest binding is IMMUTABLE once its manifest
           // is readable (published manifests never change their marker)
           // — memoized, so repeated plans pay one _deletes listing, not
@@ -2079,7 +2105,7 @@ object VersionedLake {
     * fixtures and the specs all share. */
   private[graft] def liveDvKeys(spark: SparkSession, dir: String,
       v: Int): Seq[String] = {
-    val live = readManifest(spark, dir, v).toSet
+    val live = manifestEntries(spark, dir, v).toSet
     dvFileKeys(spark, dir, v).collect {
       case (e, f) if live(e) => s"$e/$f"
     }
@@ -2160,44 +2186,43 @@ object VersionedLake {
     * file is skipped only when it provably holds no matching row, so
     * skipping loses no positions). THE 100 TB point-delete shape: the
     * scan cost is O(files that can match the keys), never O(lake). */
-  private[graft] def dvPruneFiles(spark: SparkSession, dir: String,
+  private[graft] def dvPruneFiles(spark: SparkSession, snap: Snapshot,
       snapshot: Seq[String],
       rangeBound: Option[(String, Double, Double)],
       pointLookups: Seq[(String, Seq[Any])]): Seq[(String, Path)] = {
     val dirs = rangeBound match {
       case Some((c, lo, hi)) =>
-        if (lo <= hi) dirsIntersecting(spark, dir, snapshot, c, lo, hi)
+        if (lo <= hi) dirsIntersecting(spark, snap.dir, snapshot, c, lo, hi)
         else Seq.empty
       case None => snapshot
     }
-    val probe = new SidecarProbe(spark, dir)
+    val probe = new SidecarProbe(spark, snap)
     dirs.flatMap { d =>
-      dataFiles(spark, dir, d)
+      dataFiles(spark, snap.dir, d)
         .filter(p => pointLookups.forall { case (c, vs) =>
           probe.admitAnyOf(p, c, vs) })
         .map(p => (d, p))
     }
   }
 
-  private[engine] def deleteVectors(spark: SparkSession, dir: String,
+  private[engine] def deleteVectors(spark: SparkSession, snap: Snapshot,
       pred: org.apache.spark.sql.Column,
       rangeBound: Option[(String, Double, Double)],
       pointLookups: Seq[(String, Seq[Any])] = Seq.empty,
       entriesOverride: Option[Seq[String]] = None): Option[Int] = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val (dir, tipV, snapshot, partCols) =
+      (snap.dir, snap.version, snap.entries, snap.partCols)
     val f = fs(spark, dir)
-    val tipV = tip(spark, dir).getOrElse(return None)
-    val snapshot = readManifest(spark, dir, tipV)
     // partition-pruned candidate entries (a partitioned DELETE's
     // partition conjuncts) — still CAS-anchored against the snapshot
     val scanEntries = entriesOverride.getOrElse(snapshot)
-    val pruned = dvPruneFiles(spark, dir, scanEntries, rangeBound,
+    val pruned = dvPruneFiles(spark, snap, scanEntries, rangeBound,
       pointLookups)
     if (pruned.isEmpty) return None
     // serializable anchor: the dirs whose files we record positions
     // for must still be live at the CAS
     val touched = pruned.map(_._1).distinct
-    val partCols = GraftLakePartitions.of(spark, dir)
     def withDvCols(df: DataFrame): DataFrame = df
       .withColumn("__dv_fp", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -2220,9 +2245,9 @@ object VersionedLake {
     // field-id reads (the path-based read re-sets the per-read option
     // from SQLConf, and the caller's session must not change)
     val (prs, declaredOpt) =
-      if (!GraftLakeMapping.enabled(spark, dir)) (spark, None)
+      if (!snap.mapped) (spark, None)
       else {
-        val declared = manifestSchema(spark, dir, tipV)
+        val declared = snap.declared
           .getOrElse(throw new IllegalStateException(
             s"column-mapping lake $dir has no declared schema at its " +
               "tip — cannot id-match the DV position scan"))
@@ -2537,9 +2562,10 @@ object VersionedLake {
     // — one RPC per version was the cost, paid on every call over a
     // long-lived lake's whole history. The failover is the ENDPOINT
     // snapshot diff — correct on any history, O(both snapshots).
-    try changesWalk(spark, dir, fromV, toV)
+    val tipSnap = resolveTip(spark, dir)
+    try changesWalk(spark, tipSnap, fromV, toV)
     catch { case _: java.io.FileNotFoundException =>
-      changesEndpoints(spark, dir, fromV, toV)
+      changesEndpoints(spark, tipSnap, fromV, toV)
     }
   }
 
@@ -2554,12 +2580,13 @@ object VersionedLake {
     * O(lake). Note the per-commit semantics: a row inserted at one
     * step and deleted at a later step appears as BOTH events (signed
     * consumers net it out; the endpoint fallback nets it silently). */
-  private def changesWalk(spark: SparkSession, dir: String, fromV: Int,
-      toV: Int): DataFrame = {
+  private def changesWalk(spark: SparkSession, tipSnap: Snapshot,
+      fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.lit
+    val dir = tipSnap.dir
     var inserts = Seq.empty[String]
     var steps = Seq.empty[DataFrame]
-    var prev = readManifest(spark, dir, fromV)
+    var prev = manifestEntries(spark, dir, fromV)
     var v = fromV + 1
     while (v <= toV) {
       val (cur, layoutOnly, isDv) = manifestStep(spark, dir, prev, v)
@@ -2591,11 +2618,11 @@ object VersionedLake {
           // earlier vectors deleted — they were not part of THIS
           // commit's pre-image and must not surface as spurious
           // delete events (caught by DvFuzzSpec's netted-feed check)
-          val dvAt = if (dvEnabled(spark, dir)) Some(v) else None
-          val a0 = readEntrySet(spark, dir, removed, dvAt)
+          val dvAt = if (tipSnap.dvEnabled) Some(v) else None
+          val a0 = readEntrySet(spark, tipSnap, removed, dvAt)
           val b0 =
             if (added.isEmpty) a0.limit(0)
-            else readEntrySet(spark, dir, added, dvAt)
+            else readEntrySet(spark, tipSnap, added, dvAt)
           steps = steps :+ snapshotDiff(spark, a0, b0)
       }
       prev = cur
@@ -2603,7 +2630,7 @@ object VersionedLake {
     }
     val insertDf =
       if (inserts.isEmpty) Seq.empty[DataFrame]
-      else Seq(readEntrySet(spark, dir, inserts)
+      else Seq(readEntrySet(spark, tipSnap, inserts)
         .withColumn("op", lit("insert")))
     val parts = insertDf ++ steps
     if (parts.isEmpty)
@@ -2614,11 +2641,12 @@ object VersionedLake {
   /** Endpoint-only resolution when the intermediate history was
     * vacuumed: append fast path when the endpoints prove it, otherwise
     * the full snapshot diff. */
-  private def changesEndpoints(spark: SparkSession, dir: String,
+  private def changesEndpoints(spark: SparkSession, tipSnap: Snapshot,
       fromV: Int, toV: Int): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val from = readManifest(spark, dir, fromV).toSet
-    val to = readManifest(spark, dir, toV)
+    val dir = tipSnap.dir
+    val from = manifestEntries(spark, dir, fromV).toSet
+    val to = manifestEntries(spark, dir, toV)
     // a deletion-vector commit in (fromV, toV] deletes rows WITHOUT
     // changing the dir set — the append fast path would miss it
     val dvInRange = dvSidecars(spark, dir, toV).exists(_._1 > fromV)
@@ -2626,7 +2654,7 @@ object VersionedLake {
       val added = to.filterNot(from)
       if (added.isEmpty)
         readAt(spark, dir, toV).limit(0).withColumn("op", lit("insert"))
-      else readEntrySet(spark, dir, added)
+      else readEntrySet(spark, tipSnap, added)
         .withColumn("op", lit("insert"))
     } else snapshotDiff(spark, readAt(spark, dir, fromV),
       readAt(spark, dir, toV))
@@ -2680,10 +2708,12 @@ object VersionedLake {
       codec: String = "snappy", layoutOnly: Boolean = false): Int = {
     require(mode == "append" || mode == "overwrite", s"bad mode $mode")
     val spark = df.sparkSession
-    val (entries, schema) =
-      stageForCommit(df, dir, newDataDir(), codec, bloomCol)
-    writeSidecarsBatch(spark, dir, entries, statsCols, bloomCol.toSeq)
-    publish(spark, dir, Commit(entries, replaceAll = mode == "overwrite",
+    val (staged, schema) = stageForCommit(df, resolveForCommit(spark, dir),
+      newDataDir(), codec, bloomCol)
+    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
+      bloomCol.toSeq)
+    publish(spark, dir, Commit(staged.entries,
+      replaceAll = mode == "overwrite",
       layoutOnly = layoutOnly, schema = CommitSchema.Carried(schema))).get
   }
 
@@ -2717,31 +2747,18 @@ object VersionedLake {
     * keep pre-rename files pruning). */
   private[engine] def setBloomIndexCols(spark: SparkSession, dir: String,
       cols: Seq[String]): Unit = {
-    val out = fs(spark, dir).create(new Path(s"$dir/_index"), true)
+    val out = fs(spark, dir).create(
+      Snapshot.registryPath(dir, Snapshot.IndexReg), true)
     try out.write(cols.distinct.map(x => s"bloom\t$x").mkString("\n")
       .getBytes("UTF-8"))
     finally out.close()
   }
 
-  /** The declared bloom-index columns, declaration order. One small
-    * file read — malformed or missing degrades to empty (no bloom,
-    * never an error). */
-  def bloomIndexCols(spark: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(s"$dir/_index")
-    val f = fs(spark, dir)
-    try {
-      if (!f.exists(p)) Seq.empty
-      else {
-        val in = f.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList
-        finally in.close()
-        lines.map(_.split('\t')).collect {
-          case Array("bloom", c) if c.nonEmpty => c
-        }.distinct
-      }
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-  }
+  /** The tip's declared bloom-index columns, declaration order
+    * ([[Snapshot.bloomCols]]): malformed or missing degrades to empty
+    * (no bloom, never an error). */
+  def bloomIndexCols(spark: SparkSession, dir: String): Seq[String] =
+    resolveTip(spark, dir).bloomCols
 
   /** First declared bloom column (legacy single-column view). */
   def bloomIndexCol(spark: SparkSession, dir: String): Option[String] =
@@ -2757,14 +2774,14 @@ object VersionedLake {
     * bloom is one narrow read-back aggregation of the staged files. */
   private[engine] def indexStagedDir(spark: SparkSession, dir: String,
       dataDir: String, schema: org.apache.spark.sql.types.StructType,
-      declaredBloom: Seq[String] = Seq.empty): Unit = {
+      declaredBloom: Seq[String]): Unit = {
     val numericCols = GraftLakeDataSource.numericCols(schema)
     if (numericCols.nonEmpty) writeStatsFor(spark, dir, dataDir, numericCols)
-    // declaredBloom covers staged CTAS, whose `_index` file only lands
-    // at commitStagedChanges (an aborted CTAS must leave nothing).
-    // MULTI-COLUMN: one sidecar carrying every declared column's bloom
-    val blooms = (declaredBloom ++ bloomIndexCols(spark, dir))
-      .distinct.filter(schema.fieldNames.contains)
+    // `declaredBloom` is the lake's [[Snapshot.bloomCols]] — or, for a
+    // staged CTAS, whose `_index` file only lands at
+    // commitStagedChanges, its `bloom` property. MULTI-COLUMN: one
+    // sidecar carrying every declared column's bloom
+    val blooms = declaredBloom.distinct.filter(schema.fieldNames.contains)
     if (blooms.nonEmpty) writeBloomsFor(spark, dir, dataDir, blooms)
   }
 
@@ -2773,13 +2790,11 @@ object VersionedLake {
     * sidecar build for all entries ([[writeSidecarsBatch]]) instead of
     * one driver iteration per partition leaf. */
   private[engine] def indexStagedEntries(spark: SparkSession,
-      dir: String, entries: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      declaredBloom: Seq[String] = Seq.empty): Unit =
-    writeSidecarsBatch(spark, dir, entries,
+      snap: Snapshot, entries: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    writeSidecarsBatch(spark, snap.dir, entries,
       GraftLakeDataSource.numericCols(schema),
-      (declaredBloom ++ bloomIndexCols(spark, dir))
-        .distinct.filter(schema.fieldNames.contains))
+      snap.bloomCols.distinct.filter(schema.fieldNames.contains))
 
   /** First line of every stats sidecar written since an all-null column
     * chunk stopped yielding the range 0/0 ([[statsLinesOfFile]]). An
@@ -3056,8 +3071,8 @@ object VersionedLake {
     * range lives under the OLD name — a name-only lookup would miss it
     * and silently demote the dir to the scan path (or, worse, leave a
     * metadata fold that ignores the pre-rename files). `names` is the
-    * alias set computed ONCE per operation ([[GraftLakeMapping
-    * .aliases]]); unmapped callers pass Seq(c). A file carries one
+    * alias set of the operation's snapshot ([[Snapshot.aliasesOf]]);
+    * unmapped callers pass Seq(c). A file carries one
     * name per field id, and aliases leave out names two ids share, so
     * the merge cannot collide. A sidecar without [[StatsHeader]] gives
     * no line, so the count/min/max fold scans the dir. */
@@ -3069,16 +3084,6 @@ object VersionedLake {
       .foldLeft(Map.empty[String, (Double, Double, Long)])(_ ++ _)
   }
 
-  /** Every name `c`'s field id has had in the current mapping era
-    * (Seq(c) on unmapped lakes; none when another id shared one of
-    * them, so its sidecars go unused) — compute ONCE per operation and
-    * thread through the sidecar lookups; per-dir registry reads would
-    * be O(dirs) metadata RPCs. */
-  private def aliasNamesOf(spark: SparkSession, dir: String,
-      c: String): Seq[String] =
-    if (!GraftLakeMapping.enabled(spark, dir)) Seq(c)
-    else GraftLakeMapping.aliases(spark, dir).getOrElse(c, Seq(c))
-
   /** Read a specific FILE subset of the lake, BY FIELD ID when the
     * lake is column-mapped: a name-matched read nulls renamed columns
     * out of pre-rename files, which silently drops their rows past any
@@ -3087,17 +3092,14 @@ object VersionedLake {
     * (these are leaf files; partition values live in dir names).
     * Returns the session the read plans against so DV application
     * joins on it. */
-  private def readFilesIdMatched(spark: SparkSession, dir: String,
-      tipV: Int, files: Seq[String]): (SparkSession, DataFrame) =
-    if (!GraftLakeMapping.enabled(spark, dir))
+  private def readFilesIdMatched(spark: SparkSession, snap: Snapshot,
+      files: Seq[String]): (SparkSession, DataFrame) =
+    if (!snap.mapped)
       (spark, spark.read.option("mergeSchema", "true").parquet(files: _*))
     else {
-      val partCols = GraftLakePartitions.of(spark, dir)
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      val declared = manifestSchema(spark, dir, tipV).map(sch =>
-        org.apache.spark.sql.types.StructType(sch.filterNot(fl =>
-          partCols.exists(_.name.equalsIgnoreCase(fl.name)))))
+      val declared = snap.declared.map(snap.dataColumns)
       (s2, declared.fold(
         s2.read.option("mergeSchema", "true"))(sch =>
         s2.read.schema(sch)).parquet(files: _*))
@@ -3140,18 +3142,18 @@ object VersionedLake {
   def statsAggregate(spark: SparkSession, dir: String, c: String)
       : (Long, Double, Double) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val vs = tip(spark, dir).toSeq // O(1+lag) newest-version resolution
-    require(vs.nonEmpty, s"no versions published at $dir")
-    val tipV = vs.last
+    val snap = resolveTip(spark, dir)
+    val tipV = snap.version
     // COLUMN-MAPPING lakes: stats lines are keyed by each file's OWN
     // column name — fold under every name `c`'s id has had (computed
     // once), and read the scan fraction BY FIELD ID (a name-matched
     // read would null `c` out of pre-rename files and silently skew
     // min/max)
-    val (snapshot, cNames) = liveAndStatsNames(spark, dir, tipV, c)
+    val snapshot = snap.entries
+    val cNames = statsNames(spark, snap, c)
     // files carrying LIVE vectors, per entry — O(DV files) metadata
     val dvLive: Map[String, Set[String]] =
-      if (!dvEnabled(spark, dir)) Map.empty
+      if (!snap.dvEnabled) Map.empty
       else {
         val live = snapshot.toSet
         dvRefs(spark, dir, tipV).values.toSeq
@@ -3176,7 +3178,7 @@ object VersionedLake {
     val scanAgg =
       if (scanPaths.isEmpty) None
       else {
-        val (prs, base) = readFilesIdMatched(spark, dir, tipV, scanPaths)
+        val (prs, base) = readFilesIdMatched(spark, snap, scanPaths)
         val applied =
           if (dvLive.isEmpty) base
           else dropDvRows(prs, dir, base, tipV)
@@ -3207,36 +3209,33 @@ object VersionedLake {
     * covered: [[statsAggregate]] scans it until a rewrite re-lifts its
     * stats. */
   def statsCovered(spark: SparkSession, dir: String, c: String): Boolean = {
+    val snap = resolve(spark, dir, tip(spark, dir).getOrElse(return false))
     // a LIVE vector forces its files onto the scan path (their stats
     // over-count deleted rows); materialized/vector-free DV lakes are
     // metadata-served like any other
-    if (dvEnabled(spark, dir) && tip(spark, dir).exists(t =>
-        liveDvKeys(spark, dir, t).nonEmpty)) return false
+    if (snap.dvEnabled && liveDvKeys(spark, dir, snap.version).nonEmpty)
+      return false
     // alias-merged on mapped lakes: pre-rename files' stats live under
     // their own era's name and still count as coverage
-    tip(spark, dir).exists { t =>
-      val (live, cNames) = liveAndStatsNames(spark, dir, t, c)
-      live.forall { d =>
-        val stats = statsForNames(spark, dir, d, cNames)
-        dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
-      }
+    val cNames = statsNames(spark, snap, c)
+    snap.entries.forall { d =>
+      val stats = statsForNames(spark, dir, d, cNames)
+      dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
     }
   }
 
-  /** Version `v`'s live entries, and the sidecar names `c`'s stats are
-    * folded under ([[aliasNamesOf]]) — none when `c` is a DECIMAL
-    * column: its lines hold parquet's unscaled min/max, which
-    * [[statsLinesOfFile]] no longer writes but sidecars written before
-    * may hold. The type comes from the manifest read for the live set
-    * (v's relation when v declares no schema). */
-  private def liveAndStatsNames(spark: SparkSession, dir: String, v: Int,
-      c: String): (Seq[String], Seq[String]) = {
-    val lines = readManifestLines(spark, dir, v)
-    val decimal = declaredIn(lines).getOrElse(readAt(spark, dir, v).schema)
-      .exists(f => f.name.equalsIgnoreCase(c) &&
+  /** The sidecar names `c`'s stats are folded under in `snap`
+    * ([[Snapshot.aliasesOf]]) — none when `c` is a DECIMAL column: its
+    * lines hold parquet's unscaled min/max, which [[statsLinesOfFile]]
+    * no longer writes but sidecars written before may hold. The type
+    * comes from the snapshot's declaration (its relation when it
+    * declares no schema). */
+  private def statsNames(spark: SparkSession, snap: Snapshot,
+      c: String): Seq[String] = {
+    val decimal = schemaOf(spark, snap).exists(f =>
+      f.name.equalsIgnoreCase(c) &&
         f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
-    (resolveLive(spark, dir, v, Some(lines)),
-      if (decimal) Seq.empty else aliasNamesOf(spark, dir, c))
+    if (decimal) Seq.empty else snap.aliasesOf(c)
   }
 
   /** Of `dirs`, those the stats sidecars CANNOT clear of [lo, hi] on
@@ -3274,7 +3273,7 @@ object VersionedLake {
     * interval nor probe columns, since parquet records their ranges
     * unscaled. Shared by [[deleteRange]], [[replaceWhereIn]] and the
     * SQL overwrite-by-filter commits ([[GraftLakeWrite]]). */
-  private[engine] def entriesTouched(spark: SparkSession, dir: String,
+  private[engine] def entriesTouched(spark: SparkSession, snap: Snapshot,
       live: Seq[String], schema: org.apache.spark.sql.types.StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
     import org.apache.spark.sql.{sources => sf}
@@ -3283,7 +3282,7 @@ object VersionedLake {
       case sf.And(a, b) => flatten(a) ++ flatten(b)
       case other => Seq(other)
     }
-    val partCols = GraftLakePartitions.of(spark, dir)
+    val (dir, partCols) = (snap.dir, snap.partCols)
     val (partF, dataF) = filters.flatMap(flatten).partition(f =>
       f.references.nonEmpty && f.references.forall(r =>
         partCols.exists(_.name == r)))
@@ -3315,7 +3314,7 @@ object VersionedLake {
       case sf.In(c, vs) => probeable(c, vs.toSeq)
       case _ => None
     }
-    lazy val probe = new SidecarProbe(spark, dir)
+    lazy val probe = new SidecarProbe(spark, snap)
     val byStats = ranges.foldLeft(byPartition) { case (es, (c, lo, hi)) =>
       dirsIntersecting(spark, dir, es, c, lo, hi) }
     byStats.filter { d =>
@@ -3343,18 +3342,22 @@ object VersionedLake {
     * removed rows. Returns the new version, or the current one if
     * nothing intersects (no-op, no new version). */
   def deleteRange(spark: SparkSession, dir: String, c: String,
-      lo: Double, hi: Double): Int = {
+      lo: Double, hi: Double): Int =
+    deleteRange(spark, resolveTip(spark, dir), c, lo, hi)
+
+  /** [[deleteRange]] on the snapshot `snap` — the tip the caller
+    * resolved. */
+  private[engine] def deleteRange(spark: SparkSession, snap: Snapshot,
+      c: String, lo: Double, hi: Double): Int = {
     import org.apache.spark.sql.{sources => sf}
     import org.apache.spark.sql.functions.col
-    val tipV = tip(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions published at $dir"))
-    require(!GraftLakePartitions.of(spark, dir).exists(
-      _.name.equalsIgnoreCase(c)),
+    val (dir, tipV) = (snap.dir, snap.version)
+    require(!snap.partCols.exists(_.name.equalsIgnoreCase(c)),
       s"deleteRange on partition column '$c' — use the SQL partition " +
         "DELETE (manifest-only) instead of a survivor rewrite")
-    val schema = schemaAt(spark, dir, tipV)
-    val touched = entriesTouched(spark, dir, readManifest(spark, dir, tipV),
-      schema, Seq(sf.GreaterThanOrEqual(c, lo), sf.LessThanOrEqual(c, hi)))
+    val schema = schemaOf(spark, snap)
+    val touched = entriesTouched(spark, snap, snap.entries, schema,
+      Seq(sf.GreaterThanOrEqual(c, lo), sf.LessThanOrEqual(c, hi)))
     if (touched.isEmpty) return tipV
     // NULL-keyed rows are OUTSIDE any range — they must survive, and
     // a bare !(range) would drop them (three-valued logic: !(NULL) is
@@ -3381,24 +3384,25 @@ object VersionedLake {
       // sidecars and the ref counts sum to live positions
       val ts = touched.toSet
       val dvPending =
-        if (!dvEnabled(spark, dir)) 0L
+        if (!snap.dvEnabled) 0L
         else dvRefs(spark, dir, tipV).collect {
           case (k, r) if ts(k.substring(0, k.lastIndexOf('/'))) => r.count
         }.sum
-      if (keep(snapshotAt(spark, dir, tipV, Some(touched))).count() ==
+      if (keep(snapshotAt(spark, snap, Some(touched))).count() ==
           touchedRows - dvPending)
         return tipV
     }
-    val newEntries = rewriteEntries(spark, dir, tipV, touched)(keep)
-    indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
-    val v = publish(spark, dir, rewriteCommit(spark, dir, tipV, touched,
-      newEntries)).get
+    val staged = rewriteEntries(spark, snap, touched)(keep)
+    indexStagedEntries(spark, snap, staged.unindexed,
+      snap.dataColumns(schema))
+    val v = publish(spark, dir, rewriteCommit(snap, touched,
+      staged.entries)).get
     // opt-in row-level CDF: the deleted rows ARE the net diff of
     // touched-vs-survivors (survivors cancel) — persist them so
     // feeds deliver O(deleted rows), not the whole touched band
-    if (cdfEnabled(spark, dir))
-      writeChangeSidecar(spark, dir, v,
-        cowChangeRows(spark, dir, touched, newEntries, "DELETE"))
+    if (snap.cdf)
+      writeChangeSidecar(spark, snap, v,
+        cowChangeRows(spark, snap, touched, staged.entries, "DELETE"))
     v
   }
 
@@ -3422,25 +3426,23 @@ object VersionedLake {
       values: Seq[Long], replacement: DataFrame): Int = {
     import org.apache.spark.sql.{sources => sf}
     import org.apache.spark.sql.functions.col
-    val tipV = tip(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no versions published at $dir"))
-    if (values.isEmpty) return tipV
-    require(!GraftLakePartitions.of(spark, dir).exists(
-      _.name.equalsIgnoreCase(c)),
+    val snap = resolveTip(spark, dir)
+    if (values.isEmpty) return snap.version
+    require(!snap.partCols.exists(_.name.equalsIgnoreCase(c)),
       s"replaceWhereIn on partition column '$c' — use SQL INSERT " +
         "OVERWRITE with a partition predicate (manifest-only swap)")
-    val schema = schemaAt(spark, dir, tipV)
-    val touched = entriesTouched(spark, dir, readManifest(spark, dir, tipV),
-      schema, Seq(sf.In(c, values.toArray[Any])))
+    val schema = schemaOf(spark, snap)
+    val touched = entriesTouched(spark, snap, snap.entries, schema,
+      Seq(sf.In(c, values.toArray[Any])))
     val dataDir = newDataDir()
-    val (staged, _) = stageForCommit(replacement, dir, dataDir, "snappy")
-    val newEntries =
-      if (touched.isEmpty) staged
-      else rewriteEntries(spark, dir, tipV, touched, dataDir)(
+    val (replaced, _) = stageForCommit(replacement, snap, dataDir, "snappy")
+    val staged =
+      if (touched.isEmpty) replaced
+      else rewriteEntries(spark, snap, touched, dataDir)(
         _.filter(col(c).isNull || !col(c).isin(values: _*)))
-    indexStagedEntries(spark, dir, newEntries, dataColumns(spark, dir, schema))
-    publish(spark, dir, rewriteCommit(spark, dir, tipV, touched,
-      newEntries)).get
+    indexStagedEntries(spark, snap, staged.unindexed,
+      snap.dataColumns(schema))
+    publish(spark, dir, rewriteCommit(snap, touched, staged.entries)).get
   }
 
   /** The commit of [[deleteRange]] and [[replaceWhereIn]]:
@@ -3450,15 +3452,10 @@ object VersionedLake {
     * so is a vector landing after the survivor scan at `observed`.
     * Concurrent APPENDS absorb through the CAS retry (they are not in
     * `touched`). */
-  private[graft] def rewriteCommit(spark: SparkSession, dir: String,
-      observed: Int, touched: Seq[String], added: Seq[String]): Commit =
+  private[graft] def rewriteCommit(snap: Snapshot, touched: Seq[String],
+      added: Seq[String]): Commit =
     Commit(added, touched.toSet, check = refuseConflicts(touched.toSet,
-      noDvSince = if (dvEnabled(spark, dir)) Some(observed) else None))
-
-  /** Manifest dir names of a version — the replacement units the COW
-    * row-level write coordinates on ([[GraftLakeRowLevelOperation]]). */
-  private[graft] def manifestEntries(spark: SparkSession, dir: String,
-      v: Int): Seq[String] = readManifest(spark, dir, v)
+      noDvSince = if (snap.dvEnabled) Some(snap.version) else None))
 
   /** Parquet data files the TIP manifest references — the read tax a
     * scan pays per query, and the number maintenance must bound (the
@@ -3675,14 +3672,14 @@ object VersionedLake {
       val isDelta =
         parseManifest(readManifestLines(spark, dir, k0))._1.isLeft
       if (isDelta && readCheckpoint(f, dir, k0).isEmpty) {
-        writeCheckpointFile(f, dir, k0, resolveLive(spark, dir, k0))
+        writeCheckpointFile(f, dir, k0, manifestEntries(spark, dir, k0))
         if (readCheckpoint(f, dir, k0).isEmpty)
           throw new IllegalStateException(
             s"checkpoint write for v$k0 of $dir failed verification; " +
               "aborting the manifest drop — retry the vacuum")
       }
     }
-    val liveDirs = keep.flatMap(readManifest(spark, dir, _)).toSet
+    val liveDirs = keep.flatMap(manifestEntries(spark, dir, _)).toSet
     // resolve DV sidecar bindings BEFORE their manifests drop: an
     // UNBOUND sidecar (a crashed DELETE attempt's orphan) must die in
     // the same pass that deletes the manifest disproving its binding —
@@ -3733,7 +3730,7 @@ object VersionedLake {
     // partially-dropped top dir (a whole-partition DELETE removed some
     // leaves) gets its dead LEAVES swept individually
     val topLive = liveDirs.map(_.takeWhile(_ != '/'))
-    val nPart = GraftLakePartitions.of(spark, dir).length
+    val nPart = keep.lastOption.fold(0)(resolve(spark, dir, _).partCols.length)
     def dropSidecars(entry: String): Unit = {
       f.delete(new Path(s"$dir/_stats/$entry.stats"), false)
       f.delete(new Path(s"$dir/_bloom/$entry.bloom"), false)

@@ -260,9 +260,10 @@ class GraftLakeDvSpec extends AnyFunSuite {
       val dir = s"$root/t"
       val tip = VersionedLake.tip(spark, dir).get
       val snapshot = VersionedLake.manifestEntries(spark, dir, tip)
-      val all = VersionedLake.dvPruneFiles(spark, dir, snapshot, None,
+      val snap = VersionedLake.resolve(spark, dir, tip)
+      val all = VersionedLake.dvPruneFiles(spark, snap, snapshot, None,
         Seq.empty)
-      val probedFiles = VersionedLake.dvPruneFiles(spark, dir, snapshot,
+      val probedFiles = VersionedLake.dvPruneFiles(spark, snap, snapshot,
         None, Seq(("skey", Seq("k7", "k3105"))))
       assert(probedFiles.nonEmpty && probedFiles.length < all.length,
         s"bloom must file-prune the position scan " +

@@ -79,7 +79,8 @@ class GraftLakeStreamingWriteSpec extends AnyFunSuite {
     val lake = s"$root/lake"
     val df = spark.range(0, 10).selectExpr("id", "id * 2 AS w")
     VersionedLake.commit(df.limit(0).repartition(1), lake)
-    val sw = new GraftLakeStreamingWrite(lake, df.schema,
+    val sw = new GraftLakeStreamingWrite(
+      VersionedLake.resolveTip(spark, lake), df.schema,
       queryId = "11111111-2222-3333-4444-555555555555", mode = "append",
       options = Map.empty)
     val factory = sw.createStreamingWriterFactory(

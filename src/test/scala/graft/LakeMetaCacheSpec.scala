@@ -167,4 +167,32 @@ class LakeMetaCacheSpec extends AnyFunSuite {
       "the re-created lake's vector must reuse the first one's name")
     check(1000, Seq(1007L, 1099L))
   }
+
+  test("a cached 100k-element List is weighed without deep recursion, " +
+      "and such values evict by weight") {
+    val n = 100000
+    def big(tag: Int): List[String] = {
+      val name = f"d-$tag%012d" // one instance: weighed n times, held once
+      List.fill(n)(name)
+    }
+    // a per-element recursion overflows a small stack long before 100k
+    var weight = 0L
+    val t = new Thread(null, () => { weight = LakeMetaCache.weightOf(big(0)) },
+      "weigh", 256L << 10)
+    t.start(); t.join()
+    assert(weight >= n * (48L + 2 * 14), s"weight $weight")
+    // enough of them pass the bound: the oldest is evicted, the newest
+    // is still served from the cache
+    val count = (LakeMetaCache.MaxWeight / weight + 2).toInt
+    (0 until count).foreach(i =>
+      LakeMetaCache.memo(("lmc-weight", i))(big(i)))
+    var recomputed = Seq.empty[Int]
+    def lookup(i: Int): Unit = {
+      LakeMetaCache.memo(("lmc-weight", i)) { recomputed :+= i; List.empty }
+      ()
+    }
+    lookup(count - 1)
+    lookup(0)
+    assert(recomputed == Seq(0))
+  }
 }

@@ -298,8 +298,8 @@ class VersionedLakeSpec extends AnyFunSuite {
     VersionedLake.deleteRange(spark, dir, "id", 50, 59) // B wins
     val e = intercept[java.util.ConcurrentModificationException](
       // A's publish attempt with its stale touched set
-      VersionedLake.publish(spark, dir, VersionedLake.rewriteCommit(spark,
-        dir, 1, touched, Seq("d-race-a"))))
+      VersionedLake.publish(spark, dir, VersionedLake.rewriteCommit(
+        VersionedLake.resolve(spark, dir, 1), touched, Seq("d-race-a"))))
     assert(e.getMessage.contains("copy-on-write conflict"), e.getMessage)
     // B's delete survives; A's rows are NOT resurrected
     val ids0 = VersionedLake.readLatest(spark, dir)
