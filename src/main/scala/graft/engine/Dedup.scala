@@ -94,9 +94,10 @@ object Dedup {
   def dedupAgainstIndex(batch: DataFrame, textCol: String, idCol: String,
       indexDir: String, tag: String): DataFrame = {
     val spark = batch.sparkSession
-    // O(1) on first delivery (tip via the tag marker), walk only on
-    // replay — [[VersionedLake.baselineVersionFor]]; the listing-based
-    // probe here cost O(commits) per micro-batch
+    // no manifest read on first delivery (neither the tag marker nor
+    // the tag's data dir exists), walk only on replay —
+    // [[VersionedLake.baselineVersionFor]]; the listing-based probe
+    // here cost O(commits) per micro-batch
     val baseV = VersionedLake.baselineVersionFor(spark, indexDir, tag)
     // The survivor decision as a function of the fingerprinted batch —
     // built twice, the [[nearDupAgainstIndex]] shape: once over an eager

@@ -715,8 +715,9 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
         val dataOnly = org.apache.spark.sql.types.StructType(
           table.schema().filterNot(fl =>
             partCols.exists(_.name.equalsIgnoreCase(fl.name))))
-        VersionedLake.indexStagedEntries(spark, op.snap, addedEntries,
-          if (partCols.isEmpty) table.schema() else dataOnly)
+        VersionedLake.indexStagedEntries(spark, lakeDir, addedEntries,
+          if (partCols.isEmpty) table.schema() else dataOnly,
+          op.snap.bloomCols)
       }
       try {
         VersionedLake.publish(spark, lakeDir,

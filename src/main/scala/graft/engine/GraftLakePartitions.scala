@@ -144,10 +144,11 @@ object GraftLakePartitions {
     * COW or partition DELETE that removed every row): data columns only
     * (partition values live in dir names), at the null-partition entry
     * — on a flat lake (`cols` empty) the data dir itself. The carrier is
-    * indexed like every staged dir ([[VersionedLake.indexStagedDir]],
-    * with the lake's declared `blooms`): its zero-row stats lines keep
-    * stats-pruned rewrites from counting it as intersecting, and the
-    * metadata-only aggregates covered. Returns the entry. */
+    * indexed like every staged entry ([[VersionedLake
+    * .indexStagedEntries]], with the lake's declared `blooms`): its
+    * zero-row stats lines keep stats-pruned rewrites from counting it as
+    * intersecting, and the metadata-only aggregates covered. Returns the
+    * entry. */
   private[engine] def seedEmpty(spark: SparkSession, lakeDir: String,
       dataDir: String, fullSchema: StructType,
       cols: Seq[StructField], blooms: Seq[String]): String = {
@@ -158,7 +159,8 @@ object GraftLakePartitions {
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       dataOnly).repartition(1)
       .write.mode("append").parquet(s"$lakeDir/$entry")
-    VersionedLake.indexStagedDir(spark, lakeDir, entry, dataOnly, blooms)
+    VersionedLake.indexStagedEntries(spark, lakeDir, Seq(entry), dataOnly,
+      blooms)
     entry
   }
 

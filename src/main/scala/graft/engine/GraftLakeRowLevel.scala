@@ -384,7 +384,7 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
         GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
           info.schema(), Nil, snap.bloomCols)
       } else
-        VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
+        VersionedLake.indexStagedEntries(spark, lakeDir, Seq(dataDir),
           info.schema(), snap.bloomCols)
       val v = publishScanned(spark, Seq(dataDir))
       // opt-in row-level CDF: persist this commit's EXACT changes
@@ -419,8 +419,8 @@ final class GraftLakeCowWrite(op: GraftLakeRowLevelOperation,
         val dataOnly = org.apache.spark.sql.types.StructType(
           info.schema().filterNot(fl =>
             partCols.exists(_.name.equalsIgnoreCase(fl.name))))
-        entries.foreach(e => VersionedLake.indexStagedDir(spark, lakeDir, e,
-          dataOnly, snap.bloomCols))
+        VersionedLake.indexStagedEntries(spark, lakeDir, entries, dataOnly,
+          snap.bloomCols)
       }
       val v = publishScanned(spark, entries)
       if (snap.cdf)

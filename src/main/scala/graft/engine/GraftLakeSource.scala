@@ -1716,10 +1716,10 @@ final class GraftLakeWrite(
       if (partCols.nonEmpty) { commitPartitioned(spark); return }
       if (mode == "replace") { commitReplace(spark); return }
       // every DML commit is auto-indexed (numeric range stats + the
-      // lake's declared bloom column, VersionedLake.indexStagedDir) —
-      // INSERT'd data is immediately skippable through the same
+      // lake's declared bloom columns, VersionedLake.indexStagedEntries)
+      // — INSERT'd data is immediately skippable through the same
       // sidecar paths as library-indexed commits
-      VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
+      VersionedLake.indexStagedEntries(spark, lakeDir, Seq(dataDir),
         info.schema(), snap.bloomCols)
       VersionedLake.publish(spark, lakeDir, Commit(Seq(dataDir),
         replaceAll = mode == "overwrite",
@@ -1762,7 +1762,8 @@ final class GraftLakeWrite(
           dataDir, info.schema(), partCols, snap.bloomCols))
       }
       def indexAll(es: Seq[String]): Unit =
-        VersionedLake.indexStagedEntries(spark, snap, es, dataOnly)
+        VersionedLake.indexStagedEntries(spark, lakeDir, es, dataOnly,
+          snap.bloomCols)
       val declared = Declared(Some(tableSchema.json))
       mode match {
         case "append" | "overwrite" =>
@@ -1884,8 +1885,8 @@ final class GraftLakeWrite(
           dataDir)(_.filter(not(pred <=> lit(true))))
       // sidecars AFTER the survivor append so they cover every file in
       // the published dir (new data and survivors alike)
-      VersionedLake.indexStagedDir(spark, lakeDir, dataDir, tableSchema,
-        cur.bloomCols)
+      VersionedLake.indexStagedEntries(spark, lakeDir, Seq(dataDir),
+        tableSchema, cur.bloomCols)
       publishOver(spark, cur, touched, Seq(dataDir))
     }
     override def abort(msgs: Array[WriterCommitMessage]): Unit = {

@@ -134,12 +134,11 @@ final class GraftLakeStagedTable(ident: Identifier, lakeDir: String,
           override def commit(msgs: Array[WriterCommitMessage]): Unit = {
             innerBatch.commit(msgs)
             if (partCols.isEmpty)
-              VersionedLake.indexStagedDir(spark, lakeDir, dataDir,
-                stSchema, bloomProp)
-            else GraftLakePartitions.stagedEntries(spark, lakeDir,
-              dataDir, partCols.length).foreach(e =>
-              VersionedLake.indexStagedDir(spark, lakeDir, e,
-                dataOnlySchema, bloomProp))
+              VersionedLake.indexStagedEntries(spark, lakeDir,
+                Seq(dataDir), stSchema, bloomProp)
+            else VersionedLake.indexStagedEntries(spark, lakeDir,
+              GraftLakePartitions.stagedEntries(spark, lakeDir, dataDir,
+                partCols.length), dataOnlySchema, bloomProp)
           }
           override def abort(msgs: Array[WriterCommitMessage]): Unit =
             innerBatch.abort(msgs)

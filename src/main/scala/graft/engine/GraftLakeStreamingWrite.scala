@@ -178,7 +178,8 @@ final class GraftLakeStreamingWrite(snap: Snapshot, schema: StructType,
     val entries: Seq[String] =
       if (partCols.isEmpty) Seq(dataDir)
       else kept.map(m => s"$dataDir/${m.partSubpath}").distinct.sorted
-    VersionedLake.indexStagedEntries(spark, snap, entries, dataOnly(stamped))
+    VersionedLake.indexStagedEntries(spark, lakeDir, entries,
+      dataOnly(stamped), snap.bloomCols)
     // the declaration carries the tip's schema forward merged with
     // THIS WRITE'S ([[VersionedLake.CommitSchema.Carried]] — computed
     // per CAS attempt, so a racing writer's new column is never

@@ -1,9 +1,12 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
-/** `file://` FileSystem with permission-chmod suppressed.
+/** `file://` FileSystem with permission-chmod suppressed and an exclusive
+  * create-new (see `create`).
   *
   * Without the native hadoop library (JNI `NativeIO`), every
   * `RawLocalFileSystem` create/mkdir that carries an `FsPermission`
@@ -38,6 +41,45 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
     * root would be reported as its target — out of contract here. */
   override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus =
     getFileStatus(f)
+
+  /** Exclusive create. `RawLocalFileSystem.create` with overwrite=false
+    * checks `exists` and then opens, so two racing creators of one name
+    * both succeed, the later replacing the earlier's bytes — two
+    * publishers would both claim one manifest version and one commit
+    * would vanish. With overwrite=false the open is preceded by an
+    * atomic create-new of the name, at the same step (after the parent
+    * `mkdirs`), so exactly one racer gets it and the others fail as if
+    * they had lost the `exists` check. */
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable)
+      : FSDataOutputStream = exclusively(!overwrite)(super.create(f,
+    overwrite, bufferSize, replication, blockSize, progress))
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    exclusively(!overwrite)(super.create(f, permission, overwrite,
+      bufferSize, replication, blockSize, progress))
+
+  private val exclusive = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
+  private def exclusively[T](on: Boolean)(body: => T): T = {
+    val was = exclusive.get
+    exclusive.set(on)
+    try body finally exclusive.set(was)
+  }
+
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+      permission: FsPermission): java.io.OutputStream = {
+    if (exclusive.get && !append)
+      try java.nio.file.Files.createFile(pathToFile(f).toPath)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+            s"File already exists: $f")
+      }
+    super.createOutputStreamWithMode(f, append, permission)
+  }
 }
 
 class GraftLocalFileSystem

@@ -742,20 +742,13 @@ object VersionedLake {
     val spark = df.sparkSession
     val f = fs(spark, dir)
     val dataDir = s"d-$tag"
-    // O(1) replay check: a marker per published tag, written AFTER the
-    // manifest publish. Without it every commit would scan the whole
-    // manifest history for membership — O(versions) per commit,
-    // quadratic over a long-running stream's life. The marker can only
-    // UNDER-report (crash between publish and marker write), so a
-    // marker miss falls back to the exact membership scan — which in
-    // that rare case finds the tag in the newest manifests and still
-    // exits early. With delta manifests, "ever published" is decided
-    // from RAW lines (`+d-tag` in the publishing delta, bare in a full
-    // snapshot) plus the oldest retained version's RESOLVED live set —
-    // a dir added before the retained window and still live appears
-    // there (dirs are never re-added after a drop: names are minted
-    // per publish), so no per-version resolution is needed.
-    if (tagPublished(spark, dir, tag)) None
+    // Replay check without a manifest read on first delivery: a marker
+    // per published tag, written AFTER the manifest publish, and the
+    // tag's own data dir. Neither on disk means never published, so
+    // only a dir without a marker (a crash between publish and marker
+    // write) pays the exact membership walk ([[tagPublished]]), which
+    // in that rare case finds the tag in the newest manifests.
+    if (tagPublished(spark, dir, tag, addsDir = true)) None
     else {
       f.delete(new Path(s"$dir/$dataDir"), true) // orphan from a crash
       val (staged, schema) =
@@ -768,15 +761,27 @@ object VersionedLake {
     }
   }
 
-  /** True iff `tag` was ever published at `dir` — the O(1) `_tags/`
-    * marker check plus the exact manifest-membership fallback (the
-    * marker can only UNDER-report; see [[commitTagged]]'s analysis).
-    * Membership covers all three publish shapes a tagged commit can
-    * take: a full-manifest `d-tag` line, a delta `+d-tag` add, and a
-    * `#dv tag` marker (a pure-delete merge-on-read batch adds no data
-    * dir — its tag lives only in the vector binding). */
+  /** True iff `tag` was ever published at `dir`: its `_tags/` marker,
+    * else exact manifest membership (the marker can only UNDER-report;
+    * see [[commitTagged]]). Membership covers all three publish shapes
+    * a tagged commit can take: a full-manifest `d-tag` line, a delta
+    * `+d-tag` add, and a `#dv tag` marker (a pure-delete merge-on-read
+    * batch adds no data dir — its tag lives only in the vector
+    * binding). It reads the raw lines of every retained manifest,
+    * O(retained versions), so `addsDir` — the tag's commit always adds
+    * its `d-<tag>` dir ([[commitTagged]]) — skips it when that dir is
+    * not on disk either: a retained manifest names only dirs [[vacuum]]
+    * kept. A dir without a marker (a crash between publish and marker)
+    * still walks.
+    *
+    * With delta manifests, "ever published" is decided from RAW lines
+    * (`+d-tag` in the publishing delta, bare in a full snapshot) plus
+    * the oldest retained version's RESOLVED live set — a dir added
+    * before the retained window and still live appears there (dirs are
+    * never re-added after a drop: names are minted per publish), so no
+    * per-version resolution is needed. */
   private[graft] def tagPublished(spark: SparkSession, dir: String,
-      tag: String): Boolean = {
+      tag: String, addsDir: Boolean = false): Boolean = {
     val f = fs(spark, dir)
     val dataDir = s"d-$tag"
     // partitioned entries are `d-tag/c=v` — the tag's identity is the
@@ -784,6 +789,7 @@ object VersionedLake {
     def carries(e: String): Boolean =
       e == dataDir || e.startsWith(s"$dataDir/")
     f.exists(new Path(s"$dir/_tags/$tag")) ||
+      (!addsDir || f.exists(new Path(s"$dir/$dataDir"))) &&
       versionRange(spark, dir).exists { case (lo, hi) =>
         manifestEntries(spark, dir, lo).exists(carries) ||
           (lo to hi).reverseIterator.exists { v =>
@@ -824,10 +830,11 @@ object VersionedLake {
   /** The tagged writer's DEDUP BASELINE: the newest version whose live
     * set does not carry `tag` — i.e. the writer's pre-batch snapshot,
     * replay-stable ([[commitTagged]]'s companion read). The common
-    * case (tag never published — every FIRST delivery of a batch) is
-    * answered O(1): the `_tags/` marker misses, [[tagPublished]]'s
-    * exact membership fallback confirms, and the baseline is simply
-    * the tip. Only a genuine REPLAY pays the walk back from the tip.
+    * case (tag never published — every FIRST delivery of a batch) reads
+    * no manifest: neither the `_tags/` marker nor the tag's data dir
+    * exists ([[tagPublished]]), and the baseline is simply the
+    * tip. Only a genuine REPLAY, or a crash between publish and marker,
+    * pays a walk.
     * The previous shape at every call site —
     * `versions(dir).reverse.find(!readManifestTags(_).contains(tag))`
     * — paid a full `_manifests` listing plus a resolved manifest read
@@ -836,7 +843,7 @@ object VersionedLake {
     * between three metadata RPCs and a directory scan per batch. */
   def baselineVersionFor(spark: SparkSession, dir: String, tag: String)
       : Option[Int] =
-    if (!tagPublished(spark, dir, tag)) tip(spark, dir)
+    if (!tagPublished(spark, dir, tag, addsDir = true)) tip(spark, dir)
     else versionRange(spark, dir).flatMap { case (lo, hi) =>
       (lo to hi).reverseIterator.find(v =>
         !readManifestTags(spark, dir, v).contains(tag))
@@ -1280,7 +1287,8 @@ object VersionedLake {
     * [[Lake.recoverCrashedSwap]], which versioning makes unnecessary). */
   def compactVersions(spark: SparkSession, dir: String,
       codec: String = "snappy", statsCols: Seq[String] = Seq.empty,
-      bloomCol: Option[String] = None): Int =
+      bloomCol: Option[String] = None): Int = {
+    import org.apache.spark.sql.functions.col
     // pass statsCols / bloomCol on an indexed lake or the compacted dir
     // has no sidecars and the metadata-only paths (readSkipping /
     // statsAggregate / readBloomProbe) silently degrade to scans after
@@ -1289,8 +1297,15 @@ object VersionedLake {
     // carrying both SHOULD) be requested together — one data write,
     // two sidecars. layoutOnly: the rewrite preserves every row, so
     // streams and changes() skip this version instead of refusing it.
-    compactFullSnapshot(spark, resolveTip(spark, dir), statsCols, bloomCol,
-      codec)(identity)
+    val snap = resolveTip(spark, dir)
+    // a partitioned lake rewrites as ONE dynamic-partition job (never one
+    // job per partition), range-partitioned so each task holds whole
+    // partitions; entries stay partition leaves
+    val keys = snap.partCols.map(c => col(c.name))
+    compactFullSnapshot(spark, snap, statsCols, bloomCol, codec)(df =>
+      if (keys.isEmpty) df
+      else df.repartitionByRange(livePartitions(snap), keys: _*))
+  }
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance op):
     * coalesce only the data dirs whose total bytes fall below
@@ -1330,8 +1345,7 @@ object VersionedLake {
     val outFiles = math.max(1L, merged.map(bytesOf).sum / (128L << 20)).toInt
     val staged = rewriteEntries(spark, snap, merged,
       codec = codec)(_.coalesce(outFiles))
-    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
-      bloomCol.toSeq)
+    writeSidecars(spark, dir, staged.unindexed, statsCols, bloomCol.toSeq)
     publish(spark, dir, layoutCommit(merged, staged.entries, snap.version))
   }
 
@@ -1355,92 +1369,59 @@ object VersionedLake {
       bloomCol: Option[String] = None, codec: String = "snappy"): Int = {
     import org.apache.spark.sql.functions.col
     val snap = resolveTip(spark, dir)
-    if (snap.partCols.nonEmpty)
-      return compactZOrderPartitioned(spark, snap, aCol, bCol, nFiles,
-        bits, bloomCol, codec)
-    // codec threads through like every other commit entry point — the
-    // z-order rewrite is the LARGEST rewrite a lake ever does, the
-    // worst place to silently swap the caller's compression policy.
-    // layoutOnly: sortWithinPartitions over a range repartition is a
-    // row-preserving permutation — streaming consumers skip it.
+    // on a PARTITIONED lake, z-order runs WITHIN each partition: rows
+    // never cross a partition boundary (partition values are directory
+    // names), so each output file covers a small (a, b) rectangle INSIDE
+    // its partition — the Delta OPTIMIZE ZORDER BY shape
+    Seq(aCol, bCol).foreach(c =>
+      require(!snap.partCols.exists(_.name.equalsIgnoreCase(c)),
+        s"z-order dimension $c is a PARTITION column — constant within " +
+          "every leaf, nothing to cluster; pick data columns"))
+    // ONE job for the whole lake, not one per partition: range-partition
+    // by (partition cols, z) so each task holds contiguous (partition, z)
+    // blocks, and the dynamic-partition writer lays the leaves out.
+    // `nFiles` is PER PARTITION. codec threads through like every other
+    // commit entry point — the z-order rewrite is the LARGEST rewrite a
+    // lake ever does. layoutOnly: sortWithinPartitions over a range
+    // repartition is a row-preserving permutation — streaming consumers
+    // skip it.
+    val keys = snap.partCols.map(c => col(c.name)) :+ col("_z")
     compactFullSnapshot(spark, snap, Seq(aCol, bCol), bloomCol, codec)(
       _.withColumn("_z", Lake.zValue(col(aCol), col(bCol), bits))
-        .repartitionByRange(nFiles, col("_z"))
-        .sortWithinPartitions(col("_z"))
+        .repartitionByRange(math.max(1, nFiles) * livePartitions(snap),
+          keys: _*)
+        .sortWithinPartitions(keys: _*)
         .drop("_z"))
   }
 
-  /** Z-order WITHIN each partition of a partitioned lake: every
-    * partition's live entries rewrite into one fresh leaf under a
-    * single data dir, rows clustered by the Morton interleave of the
-    * two DATA dimensions — each output file then covers a small
-    * (a, b) rectangle INSIDE its partition, so after directory
-    * partitioning is spent on the first filter column, range probes on
-    * the second and third still skip files (the Delta OPTIMIZE ZORDER
-    * BY shape). Rows never cross a partition boundary — the entries-
-    * are-partition-leaves invariant every pruning path depends on
-    * holds by construction; a CROSS-partition interleave is
-    * structurally impossible (partition values are directory names)
-    * and is exactly what this deliberately does not attempt. `nFiles`
-    * is PER PARTITION. Layout-only, conflict-checked, one atomic
-    * commit for the whole lake. */
-  private def compactZOrderPartitioned(spark: SparkSession, snap: Snapshot,
-      aCol: String, bCol: String, nFiles: Int, bits: Int,
-      bloomCol: Option[String], codec: String): Int = {
-    import org.apache.spark.sql.functions.col
-    val (dir, partCols, observed) = (snap.dir, snap.partCols, snap.entries)
-    Seq(aCol, bCol).foreach(c =>
-      require(!partCols.exists(_.name.equalsIgnoreCase(c)),
-        s"z-order dimension $c is a PARTITION column — constant within " +
-          "every leaf, nothing to cluster; pick data columns"))
-    val dataDir = newDataDir()
-    // ONE job for the whole lake, not one per partition (a 1,000-day
-    // lake must not run 1,000 sequential rewrites): range-partition by
-    // (partition cols, z) so each task holds contiguous (partition, z)
-    // blocks, and let the dynamic-partition writer lay the hive leaves
-    // out — `nFiles` stays PER PARTITION, so the range width is
-    // nFiles × live partitions. The DSv2 read reconstructs partition
-    // values from the manifest entry names.
-    val nParts = math.max(1,
-      observed.map(_.split('/').drop(1).mkString("/")).distinct.length)
-    val keys = partCols.map(c => col(c.name)) :+ col("_z")
-    // readAt applies deletion vectors and id-matches mapped lakes;
-    // withMappedIds re-stamps the field ids into the rewrite
-    withMappedIds(snapshotAt(spark, snap, None)
-        .withColumn("_z", Lake.zValue(col(aCol), col(bCol), bits))
-        .repartitionByRange(math.max(1, nFiles) * nParts, keys: _*)
-        .sortWithinPartitions(keys: _*)
-        .drop("_z"), snap)
-      .write.option("compression", codec)
-      .partitionBy(partCols.map(_.name): _*)
-      .parquet(s"$dir/$dataDir")
-    // an empty lake keeps a schema carrier live
-    val staged = stagedOrSeed(spark, snap, dataDir, schemaOf(spark, snap))
-    // ONE batched sidecar build for every leaf — the sidecar phase
-    // must not reintroduce the O(partitions)-sequential-jobs term the
-    // single-job rewrite removed
-    writeSidecarsBatch(spark, dir, staged.unindexed, Seq(aCol, bCol),
+  /** The full-snapshot rewrite shared by [[compactVersions]] and
+    * [[compactZOrder]]: rewrite the tip's whole live set through
+    * `cluster` ([[rewriteEntries]]), index it ([[writeSidecars]]) and
+    * publish the replacement CONFLICT-CHECKED ([[layoutCommit]]) — the
+    * new manifest drops exactly the OBSERVED dirs, so a concurrent
+    * append that lands during the (potentially long) rewrite is carried
+    * forward by the CAS retry instead of being silently discarded by a
+    * blind overwrite; a concurrent rewrite of an observed dir refuses
+    * loudly. The layout marker is therefore always TRUE of the published
+    * commit: rows(new) == rows(observed), and any concurrent append's
+    * rows survive beside it. An empty lake keeps a schema carrier
+    * live. */
+  private def compactFullSnapshot(spark: SparkSession, snap: Snapshot,
+      statsCols: Seq[String], bloomCol: Option[String], codec: String)(
+      cluster: DataFrame => DataFrame): Int = {
+    val staged = rewriteEntries(spark, snap, snap.entries, codec = codec,
+      bloomCol = bloomCol)(cluster)
+    writeSidecars(spark, snap.dir, staged.unindexed, statsCols,
       bloomCol.toSeq)
-    publish(spark, dir,
-      layoutCommit(observed, staged.entries, snap.version)).get
+    publish(spark, snap.dir,
+      layoutCommit(snap.entries, staged.entries, snap.version)).get
   }
 
-  /** The full-snapshot rewrite shared by [[compactVersions]] and
-    * [[compactZOrder]]: observe the tip's live set, rewrite its rows
-    * (optionally re-clustered), and publish the replacement
-    * CONFLICT-CHECKED — the new manifest drops exactly the OBSERVED
-    * dirs, so a concurrent append that lands during the (potentially
-    * long) rewrite is carried forward by the CAS retry instead of
-    * being silently discarded by a blind overwrite; a concurrent
-    * rewrite of an observed dir refuses loudly. The layout marker is
-    * therefore always TRUE of the published commit: rows(new) ==
-    * rows(observed), and any concurrent append's rows survive beside
-    * it. */
-  // (The round-16 refusal helpers requireUnpartitionedLake /
-  // requireNotMappedLake are gone: library commits stage through the
-  // lake's partition spec ([[stageForCommit]]), and every survivor
-  // rewrite goes through [[rewriteEntries]] — id-matched on mapped
-  // lakes, DV-filtered on deletion-vector lakes.)
+  /** The number of distinct partitions live in `snap` (1 on a flat
+    * lake). */
+  private def livePartitions(snap: Snapshot): Int =
+    math.max(1,
+      snap.entries.map(_.split('/').drop(1).mkString("/")).distinct.length)
 
   /** Field-id stamping for library commits on a COLUMN-MAPPING lake:
     * the id-matching reader only binds files whose footers carry the
@@ -1513,59 +1494,10 @@ object VersionedLake {
     * rewrite must carry, and lose them. */
   private[engine] def rewriteEntries(spark: SparkSession, snap: Snapshot,
       entries: Seq[String], dataDir: String = newDataDir(),
-      codec: String = "snappy")(step: DataFrame => DataFrame): Staged =
+      codec: String = "snappy", bloomCol: Option[String] = None)(
+      step: DataFrame => DataFrame): Staged =
     writeStaged(withMappedIds(step(snapshotAt(spark, snap, Some(entries))),
-      snap), snap, dataDir, codec)
-
-  private def compactFullSnapshot(spark: SparkSession, snap: Snapshot,
-      statsCols: Seq[String], bloomCol: Option[String], codec: String)(
-      cluster: DataFrame => DataFrame): Int = {
-    if (snap.partCols.nonEmpty)
-      return compactFullSnapshotPartitioned(spark, snap, statsCols,
-        bloomCol, codec)(cluster)
-    val dir = snap.dir
-    val dataDir = newDataDir()
-    // the snapshot relation routes through the DSv2 seam: deletion
-    // vectors apply (the rewrite materializes them) and column-mapping
-    // lakes read by field id; withMappedIds re-stamps the ids
-    val w = withMappedIds(cluster(snapshotAt(spark, snap, None)), snap)
-      .write.option("compression", codec)
-    bloomCol.fold(w)(c =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      .parquet(s"$dir/$dataDir")
-    if (statsCols.nonEmpty) writeStatsFor(spark, dir, dataDir, statsCols)
-    bloomCol.foreach(c => writeBloomFor(spark, dir, dataDir, c))
-    publish(spark, dir,
-      layoutCommit(snap.entries, Seq(dataDir), snap.version)).get
-  }
-
-  /** Full-snapshot rewrite of a PARTITIONED lake: every partition's
-    * live rows rewrite into one fresh leaf set under a single data
-    * dir, as ONE dynamic-partition job (never one job per partition);
-    * entries stay partition leaves, sidecars build batched. */
-  private def compactFullSnapshotPartitioned(spark: SparkSession,
-      snap: Snapshot, statsCols: Seq[String], bloomCol: Option[String],
-      codec: String)(cluster: DataFrame => DataFrame): Int = {
-    import org.apache.spark.sql.functions.col
-    val (dir, partCols, observed) = (snap.dir, snap.partCols, snap.entries)
-    val dataDir = newDataDir()
-    val keys = partCols.map(c => col(c.name))
-    val nParts = math.max(1,
-      observed.map(_.split('/').drop(1).mkString("/")).distinct.length)
-    val w = withMappedIds(cluster(snapshotAt(spark, snap, None))
-        .repartitionByRange(nParts, keys: _*), snap)
-      .write.option("compression", codec)
-      .partitionBy(partCols.map(_.name): _*)
-    bloomCol.fold(w)(c =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      .parquet(s"$dir/$dataDir")
-    // an empty lake keeps a schema carrier live
-    val staged = stagedOrSeed(spark, snap, dataDir, schemaOf(spark, snap))
-    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
-      bloomCol.toSeq)
-    publish(spark, dir,
-      layoutCommit(observed, staged.entries, snap.version)).get
-  }
+      snap), snap, dataDir, codec, bloomCol)
 
   // ---- row-level change-data-feed sidecars ------------------------------
   //
@@ -1806,8 +1738,8 @@ object VersionedLake {
       .distinct.sorted
     if (touched.isEmpty) return None
     val staged = rewriteEntries(spark, snap, touched, codec = codec)(identity)
-    indexStagedEntries(spark, snap, staged.unindexed,
-      snap.dataColumns(schemaOf(spark, snap)))
+    indexStagedEntries(spark, snap.dir, staged.unindexed,
+      snap.dataColumns(schemaOf(spark, snap)), snap.bloomCols)
     publish(spark, dir, layoutCommit(touched, staged.entries, snap.version))
   }
 
@@ -1851,8 +1783,8 @@ object VersionedLake {
       if (affected.isEmpty) Seq.empty
       else {
         val staged = rewriteEntries(spark, snap, affected)(identity)
-        indexStagedEntries(spark, snap, staged.unindexed,
-          snap.dataColumns(schemaOf(spark, snap)))
+        indexStagedEntries(spark, snap.dir, staged.unindexed,
+          snap.dataColumns(schemaOf(spark, snap)), snap.bloomCols)
         staged.entries
       }
     val entries =
@@ -2710,8 +2642,7 @@ object VersionedLake {
     val spark = df.sparkSession
     val (staged, schema) = stageForCommit(df, resolveForCommit(spark, dir),
       newDataDir(), codec, bloomCol)
-    writeSidecarsBatch(spark, dir, staged.unindexed, statsCols,
-      bloomCol.toSeq)
+    writeSidecars(spark, dir, staged.unindexed, statsCols, bloomCol.toSeq)
     publish(spark, dir, Commit(staged.entries,
       replaceAll = mode == "overwrite",
       layoutOnly = layoutOnly, schema = CommitSchema.Carried(schema))).get
@@ -2730,7 +2661,7 @@ object VersionedLake {
 
   /** Declare `c` as A bloom-indexed column of the lake: every
     * subsequent SQL/streaming commit writes a per-file bloom sidecar
-    * over it ([[indexStagedDir]]), so point lookups prune on
+    * over it ([[indexStagedEntries]]), so point lookups prune on
     * DML-written data exactly like on [[commitWithBloom]] data. The
     * policy is MULTI-COLUMN — repeated calls (or `'bloom'='a,b'` at
     * CREATE) accumulate, one sidecar section per column, and each
@@ -2760,41 +2691,22 @@ object VersionedLake {
   def bloomIndexCols(spark: SparkSession, dir: String): Seq[String] =
     resolveTip(spark, dir).bloomCols
 
-  /** First declared bloom column (legacy single-column view). */
-  def bloomIndexCol(spark: SparkSession, dir: String): Option[String] =
-    bloomIndexCols(spark, dir).headOption
-
-  /** Sidecar indexing for a freshly-staged SQL/streaming commit dir:
-    * min/max range stats for every numeric column (SQL writers have no
-    * commitWithStats to opt into, so everything range-skippable is
-    * indexed by default) PLUS a bloom over the lake's declared index
-    * column when present and in this write's schema — the write-path
-    * parity that keeps DML-written and library-written data equally
-    * prunable. Stats lift from footers (metadata read per file); the
-    * bloom is one narrow read-back aggregation of the staged files. */
-  private[engine] def indexStagedDir(spark: SparkSession, dir: String,
-      dataDir: String, schema: org.apache.spark.sql.types.StructType,
-      declaredBloom: Seq[String]): Unit = {
-    val numericCols = GraftLakeDataSource.numericCols(schema)
-    if (numericCols.nonEmpty) writeStatsFor(spark, dir, dataDir, numericCols)
-    // `declaredBloom` is the lake's [[Snapshot.bloomCols]] — or, for a
-    // staged CTAS, whose `_index` file only lands at
-    // commitStagedChanges, its `bloom` property. MULTI-COLUMN: one
-    // sidecar carrying every declared column's bloom
-    val blooms = declaredBloom.distinct.filter(schema.fieldNames.contains)
-    if (blooms.nonEmpty) writeBloomsFor(spark, dir, dataDir, blooms)
-  }
-
-  /** [[indexStagedDir]] for a MULTI-ENTRY staged commit (partitioned
-    * INSERT, streaming epoch into a partitioned lake): one batched
-    * sidecar build for all entries ([[writeSidecarsBatch]]) instead of
-    * one driver iteration per partition leaf. */
-  private[engine] def indexStagedEntries(spark: SparkSession,
-      snap: Snapshot, entries: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Unit =
-    writeSidecarsBatch(spark, snap.dir, entries,
+  /** The SQL/streaming index policy over freshly staged `entries`:
+    * min/max range stats for every numeric column of `schema` (SQL
+    * writers have no commitWithStats to opt into, so everything
+    * range-skippable is indexed by default) PLUS a bloom over each
+    * `declaredBloom` column the schema holds — the write-path parity
+    * that keeps DML-written and library-written data equally prunable.
+    * `declaredBloom` is the lake's [[Snapshot.bloomCols]] — or, for a
+    * staged CTAS, whose `_index` file only lands at
+    * commitStagedChanges, its `bloom` property. Written by
+    * [[writeSidecars]]. */
+  private[engine] def indexStagedEntries(spark: SparkSession, dir: String,
+      entries: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      declaredBloom: Seq[String]): Unit =
+    writeSidecars(spark, dir, entries,
       GraftLakeDataSource.numericCols(schema),
-      snap.bloomCols.distinct.filter(schema.fieldNames.contains))
+      declaredBloom.distinct.filter(schema.fieldNames.contains))
 
   /** First line of every stats sidecar written since an all-null column
     * chunk stopped yielding the range 0/0 ([[statsLinesOfFile]]). An
@@ -2864,35 +2776,19 @@ object VersionedLake {
     } finally reader.close()
   }
 
-  /** Footer-stats pass for one data dir (shared by [[commitWithStats]],
-    * [[deleteRange]]'s rewrite, and the DSv2 DML commit — the stats are
-    * LIFTED from the parquet footers the write already produced, so
-    * indexing costs one metadata read per file, never a data pass): per
-    * (file, statsCol) one line `file \t col \t min \t max \t rows`. */
-  private[engine] def writeStatsFor(spark: SparkSession, dir: String,
-      dataDir: String, statsCols: Seq[String]): Unit = {
-    val f = fs(spark, dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val lines = f.listStatus(new Path(s"$dir/$dataDir")).toSeq
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .flatMap(file => statsLinesOfFile(file, statsCols, conf))
-    val statsOut = f.create(new Path(s"$dir/_stats/$dataDir.stats"), true)
-    try statsOut.write((StatsHeader +: lines).mkString("\n")
-      .getBytes("UTF-8"))
-    finally statsOut.close()
-    ()
-  }
-
-  /** BATCHED sidecar build for a multi-entry commit (partitioned
-    * INSERT / streaming epoch / OPTIMIZE / z-order): the footer-stats
-    * pass runs as ONE distributed job over every (entry, file) pair —
-    * not one driver loop iteration per entry — and each bloom column
-    * is ONE read over all entries' files, split back per entry by
-    * `input_file_name`. A 1,000-partition z-order's sidecar phase is
-    * O(1) jobs, not O(partitions) sequential footer walks. Per-entry
-    * sidecar FILES still land (the read side probes them by entry),
-    * but those are tiny driver-side metadata writes. */
-  private[engine] def writeSidecarsBatch(spark: SparkSession,
+  /** The one sidecar writer: for each staged entry, a stats sidecar
+    * `_stats/<entry>.stats` ([[StatsHeader]], then one line per
+    * (file, statsCol) LIFTED from the parquet footers the write already
+    * produced — one metadata read per file, never a data pass) and a
+    * bloom sidecar `_bloom/<entry>.bloom` (one fixed-length line per
+    * (file, bloomCol)). The footer pass reads on the driver when the
+    * commit indexes one entry or at most four files, and otherwise runs
+    * as ONE distributed job over every (entry, file) pair; each bloom
+    * column is ONE read over all entries' files, split back per entry
+    * by `input_file_name` — so a 1,000-partition z-order's sidecar phase
+    * is O(1) jobs, not O(partitions) sequential footer walks. The
+    * per-entry sidecar FILES are tiny driver-side metadata writes. */
+  private[engine] def writeSidecars(spark: SparkSession,
       dir: String, entries: Seq[String], statsCols: Seq[String],
       bloomCols: Seq[String]): Unit = {
     if (entries.isEmpty || (statsCols.isEmpty && bloomCols.isEmpty))
@@ -2907,8 +2803,9 @@ object VersionedLake {
         fps.map(p => (e, p.toString)) }
       val grouped: Map[String, Seq[String]] =
         if (pairs.isEmpty) Map.empty
-        else if (pairs.length <= 4) {
-          // few files: driver-local beats a job's scheduling overhead
+        else if (entries.length == 1 || pairs.length <= 4) {
+          // one entry or few files: driver-local beats a job's
+          // scheduling overhead
           val conf = spark.sessionState.newHadoopConf()
           pairs.groupBy(_._1).map { case (e, ps) =>
             e -> ps.flatMap(p =>
@@ -2957,10 +2854,13 @@ object VersionedLake {
         val lines = bloomCols.distinct.flatMap { c =>
           val have = byEntryCol.getOrElse((e, c), Seq.empty)
           val covered = have.map(_.takeWhile(_ != '\t')).toSet
-          // keyless files (zero rows / all-null keys) get the explicit
-          // all-zero bitmap — same contract as bloomLinesFor
-          have ++ names.filterNot(covered).sorted.map(n =>
-            s"$n\t$c\t${"0" * (BloomBits / 4)}")
+          // part files that contributed NO positions (zero rows, or
+          // all-null keys) get an explicit all-zero bitmap: they can
+          // never satisfy a point probe and must prune, where a MISSING
+          // line would admit them forever — the analogue of the stats
+          // pass's explicit empty range for zero-row files
+          (have ++ names.filterNot(covered).map(n =>
+            s"$n\t$c\t${"0" * (BloomBits / 4)}")).sorted
         }
         val out = f.create(new Path(s"$dir/_bloom/$e.bloom"), true)
         try out.write(lines.mkString("\n").getBytes("UTF-8"))
@@ -2970,8 +2870,13 @@ object VersionedLake {
     ()
   }
 
-  /** One distributed pass computing bloom lines for `keyCol` over many
-    * entry dirs at once; rows come back tagged (entry, col, lines). */
+  /** The bloom read-back for `keyCol` over many entry dirs at once: the
+    * bit positions fold into ONE position set per file EXECUTOR-side
+    * (groupBy file + distinct positions), so the driver collects exactly
+    * one row per part file (≤ m ints each) — never the raw (file,
+    * position) pairs, which on a many-thousand-file commit would be
+    * orders of magnitude more driver memory than the 1 KiB/file sidecar
+    * produced. Rows come back tagged (entry, col, lines). */
   private def bloomLinesGrouped(spark: SparkSession, paths: Seq[String],
       keyCol: String, entryOfUri: Map[String, String])
       : Seq[(String, String, Seq[String])] = {
@@ -2979,6 +2884,9 @@ object VersionedLake {
       explode, input_file_name, sort_array}
     val pos = spark.read.option("mergeSchema", "true")
       .parquet(paths: _*)
+      // NULL keys carry no bloom membership (a point probe is an
+      // equality, which a NULL never satisfies); without the filter a
+      // null md5 position would NPE the driver-side bitset fold
       .filter(col(keyCol).isNotNull)
       .select(input_file_name().as("f"),
         col(keyCol).cast("string").as("kv"))
@@ -2992,6 +2900,11 @@ object VersionedLake {
       val line = {
         val bits = new java.util.BitSet(BloomBits)
         r.getSeq[Int](1).foreach(bits.set)
+        // FIXED-length bitmap (BitSet.toByteArray trims trailing zero
+        // bytes): with padding, a truncated sidecar line has the wrong
+        // length and is dropped by the reader — degrade to reading the
+        // file — where a trimmed format would misread truncation as a
+        // legitimately sparse bloom and silently skip matching files
         val arr = java.util.Arrays.copyOf(bits.toByteArray, BloomBits / 8)
         s"${new Path(full).getName}\t$keyCol\t${arr
           .map("%02x".format(_)).mkString}"
@@ -3393,8 +3306,8 @@ object VersionedLake {
         return tipV
     }
     val staged = rewriteEntries(spark, snap, touched)(keep)
-    indexStagedEntries(spark, snap, staged.unindexed,
-      snap.dataColumns(schema))
+    indexStagedEntries(spark, snap.dir, staged.unindexed,
+      snap.dataColumns(schema), snap.bloomCols)
     val v = publish(spark, dir, rewriteCommit(snap, touched,
       staged.entries)).get
     // opt-in row-level CDF: the deleted rows ARE the net diff of
@@ -3440,8 +3353,8 @@ object VersionedLake {
       if (touched.isEmpty) replaced
       else rewriteEntries(spark, snap, touched, dataDir)(
         _.filter(col(c).isNull || !col(c).isin(values: _*)))
-    indexStagedEntries(spark, snap, staged.unindexed,
-      snap.dataColumns(schema))
+    indexStagedEntries(spark, snap.dir, staged.unindexed,
+      snap.dataColumns(schema), snap.bloomCols)
     publish(spark, dir, rewriteCommit(snap, touched, staged.entries)).get
   }
 
@@ -3524,76 +3437,6 @@ object VersionedLake {
       mode: String = "append", codec: String = "snappy"): Int =
     commitIndexed(df, dir, Seq.empty, Some(keyCol), mode, codec)
 
-  /** Bloom sidecar pass for one data dir: the bit positions fold into
-    * ONE position set per file EXECUTOR-side (groupBy file + distinct
-    * positions), so the driver collects exactly one row per part file
-    * (≤ m ints each), matching [[writeStatsFor]]'s one-line-per-file
-    * boundary — never the raw (file, position) pairs, which on a
-    * many-thousand-file commit would be orders of magnitude more
-    * driver memory than the 1 KiB/file sidecar produced. */
-  private def writeBloomFor(spark: SparkSession, dir: String,
-      dataDir: String, keyCol: String): Unit =
-    writeBloomsFor(spark, dir, dataDir, Seq(keyCol))
-
-  /** Bloom sidecar for one data dir over SEVERAL key columns: one
-    * section of lines per column in the SAME sidecar file (lines carry
-    * the column name; readers filter), so a multi-column policy never
-    * overwrites one column's index with another's. */
-  private[engine] def writeBloomsFor(spark: SparkSession, dir: String,
-      dataDir: String, keyCols: Seq[String]): Unit = {
-    val lines = keyCols.distinct.flatMap(c =>
-      bloomLinesFor(spark, dir, dataDir, c))
-    val out = fs(spark, dir)
-      .create(new Path(s"$dir/_bloom/$dataDir.bloom"), true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    ()
-  }
-
-  private def bloomLinesFor(spark: SparkSession, dir: String,
-      dataDir: String, keyCol: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{array, col, collect_set,
-      explode, input_file_name, sort_array}
-    val pos = spark.read.parquet(s"$dir/$dataDir")
-      // NULL keys carry no bloom membership (a point probe is an
-      // equality, which a NULL never satisfies); without the filter a
-      // null md5 position would NPE the driver-side bitset fold
-      .filter(col(keyCol).isNotNull)
-      .select(input_file_name().as("f"),
-        col(keyCol).cast("string").as("kv"))
-      .select(col("f"), explode(array((0 until BloomHashes).map(j =>
-        bloomPos(col("kv"), j, BloomBits)): _*)).as("p"))
-      .groupBy(col("f"))
-      .agg(sort_array(collect_set(col("p"))).as("ps"))
-      .collect() // bounded: one row per file, ≤ m positions each
-    val f = fs(spark, dir)
-    val withKeys = pos.toSeq
-      .map(r => new Path(r.getString(0)).getName -> r.getSeq[Int](1))
-    // part files that contributed NO positions (zero rows, or all-null
-    // keys) get an explicit all-zero bitmap: they can never satisfy a
-    // point probe and must prune, where a MISSING line would admit
-    // them forever — the analogue of writeStatsFor's explicit empty
-    // range for zero-row files
-    val covered = withKeys.map(_._1).toSet
-    val keyless = f.listStatus(new Path(s"$dir/$dataDir")).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      .filterNot(covered).map(_ -> Seq.empty[Int])
-    (withKeys ++ keyless)
-      .sortBy(_._1)
-      .map { case (name, ps) =>
-        val bits = new java.util.BitSet(BloomBits)
-        ps.foreach(bits.set)
-        // FIXED-length bitmap (BitSet.toByteArray trims trailing zero
-        // bytes): with padding, a truncated sidecar line has the wrong
-        // length and is dropped by the reader — degrade to reading the
-        // file — where a trimmed format would misread truncation as a
-        // legitimately sparse bloom and silently skip matching files
-        val full = java.util.Arrays.copyOf(bits.toByteArray, BloomBits / 8)
-        val hex = full.map("%02x".format(_)).mkString
-        s"$name\t$keyCol\t$hex"
-      }
-  }
-
   /** Bloom lines of one data dir for `c`: file → BitSet. Malformed
     * lines are dropped, not thrown — same degrade-to-read contract as
     * [[statsFor]] (a file without a parseable bloom is always read). */
@@ -3605,7 +3448,7 @@ object VersionedLake {
   private def bloomSidecar(spark: SparkSession, dir: String, d: String)
       : Map[String, Map[String, java.util.BitSet]] =
     sidecar(spark, dir, "bloom", d) { a =>
-      // exact-length contract (see writeBloomFor): anything else is a
+      // exact-length contract (see bloomLinesGrouped): anything else is a
       // torn line, and a wrong-length bitmap must degrade to reading
       // the file, never to a false skip
       if (a.length != 3 || a(2).length != BloomBits / 4) None

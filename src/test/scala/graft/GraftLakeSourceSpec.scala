@@ -312,7 +312,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       "WHERE id >= 100 AND id < 200")
     spark.sql(s"INSERT INTO $cat.b SELECT * FROM glbp_src WHERE id >= 200")
     val dir = s"$root/b"
-    assert(VersionedLake.bloomIndexCol(spark, dir).contains("tag"),
+    assert(VersionedLake.bloomIndexCols(spark, dir).headOption.contains("tag"),
       "the CTAS must persist the declared bloom policy")
     val total = VersionedLake.readLatest(spark, dir).inputFiles.length
     val probe = spark.read.format("graftlake").load(dir)
@@ -915,7 +915,7 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     // dir carries a bloom sidecar (write-path parity, q200 shape)
     assert(spark.sql("CALL glake_proc.set_index('t', 'id')")
       .head().getString(0) == "id")
-    assert(VersionedLake.bloomIndexCol(spark, dir).contains("id"))
+    assert(VersionedLake.bloomIndexCols(spark, dir).headOption.contains("id"))
     // compact with a stats index: one live dir, data intact, new version
     val cv = spark.sql("CALL glake_proc.compact('t', 'snappy', 'id')")
       .head().getInt(0)

@@ -187,6 +187,35 @@ class SnapshotResolutionSpec extends AnyFunSuite {
     assert(VersionedLake.readLatest(spark, dir).count() == 10L)
   }
 
+  test("a first delivery of a tag reads no manifest; a replay, and a " +
+      "tag whose marker was lost after its publish, still no-op") {
+    RecordingFileSystem.install(spark)
+    val dir = "recfs://" + tempDir("snapres-tags") + "/lake"
+    def batch(c: Int) = spark.range(c * 10L, c * 10L + 10, 1, 1).toDF("id")
+    (0 until 40).foreach(c => VersionedLake.commitTagged(batch(c), dir, s"b$c"))
+    // the tip's manifest is resolved once by any commit new to it
+    VersionedLake.readLatest(spark, dir)
+    var published: Option[Int] = None
+    val fresh = record {
+      published = VersionedLake.commitTagged(batch(40), dir, "b40") }
+    info(s"fresh tag on a 40-commit lake: $fresh")
+    assert(published.contains(41))
+    assert(fresh.manifestOpens.isEmpty, s"a fresh tag walks: $fresh")
+    var base: Option[Int] = None
+    val baseline = record {
+      base = VersionedLake.baselineVersionFor(spark, dir, "b41") }
+    assert(base.contains(41))
+    assert(baseline.manifestOpens.isEmpty, s"a fresh baseline walks: $baseline")
+    // replays: by marker, and by the walk when only the dir is left
+    assert(VersionedLake.commitTagged(batch(40), dir, "b40").isEmpty)
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/_tags/b7")
+    assert(marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(marker, false))
+    assert(VersionedLake.commitTagged(batch(7), dir, "b7").isEmpty)
+    assert(VersionedLake.baselineVersionFor(spark, dir, "b7").contains(7))
+    assert(VersionedLake.readLatest(spark, dir).count() == 410L)
+  }
+
   test("registries and raw manifest lines are read only by the resolver, " +
       "their writers and the manifest walks") {
     import scala.jdk.CollectionConverters._

@@ -121,6 +121,29 @@ class VersionedLakeSpec extends AnyFunSuite {
       s"version $v should hold exactly ${v * 10} rows"))
   }
 
+  test("the engine's local file system creates a name without overwrite " +
+      "exclusively: of four threads racing for one fresh name, one wins") {
+    import org.apache.hadoop.fs.Path
+    val root = tempDir("vlake-excl")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try (0 until 300).foreach { t =>
+      val p = new Path(s"$root/m$t")
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val wins = (0 until 4).map(w => pool.submit(
+        new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean = {
+            go.await()
+            try { val out = fs.create(p, false); out.write(w); out.close(); true }
+            catch { case _: java.io.IOException => false }
+          }
+        }))
+      go.countDown()
+      val n = wins.count(_.get)
+      assert(n == 1, s"$p created by $n writers")
+    } finally pool.shutdown()
+  }
+
   test("commitTagged: replays no-op, a crash-orphaned data dir is " +
       "rewritten, and exactly one version ever references the tag") {
     import spark.implicits._
@@ -337,6 +360,34 @@ class VersionedLakeSpec extends AnyFunSuite {
       writers)
     assert(lines.forall { case (at, l) => !l.contains("manifestPath(") ||
       at.contains("VersionedLake.scala") })
+  }
+
+  test("one sidecar writer: exactly one function creates `_stats/` and " +
+      "`_bloom/` sidecars, and the per-dir indexers and the partitioned " +
+      "compaction twins are gone") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    // a create whose path names a sidecar dir, on one line
+    val sidecarCreate = """.*create\(.*/_(stats|bloom)/.*""".r
+    val gone = (Seq("writeStatsFor", "writeBloomFor", "writeBloomsFor",
+      "bloomLinesFor", "indexStagedDir", "compactFullSnapshotPartitioned",
+      "compactZOrderPartitioned").map(n => s"\\b$n\\b") :+
+      "\\bbloomIndexCol\\(").map(_.r)
+    val creators = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        var cur = ""
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (l, i) =>
+          l match { case member(n) => cur = n; case _ => () }
+          gone.foreach(g =>
+            assert(g.findFirstIn(l).isEmpty, s"$p:${i + 1}: $l"))
+          if (sidecarCreate.matches(l)) Some(s"${p.getFileName}#$cur")
+          else None
+        }
+      }.toSet
+    assert(creators == Set("VersionedLake.scala#writeSidecars"), creators)
   }
 
   test("tip resolution: the hint-checkpointed tip equals the listed " +
