@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * pruned to the key column); the winner rows then resolve against the
   * changelog-sized touched-key set and the untouched rows union back
   * unmoved. The winner pick itself is a streaming `row_number` over the
-  * changelog only. Composed with the lake layer ([[Lake.upsert]]'s
-  * partition-pruned rewrite), only base partitions containing changed
-  * keys are read at all. The no-Exchange-on-base shape is a failing
+  * changelog only. Composed with the lake layer (a copy-on-write SQL
+  * `MERGE INTO` on a partitioned graftlake table, which rewrites only
+  * the partitions its group filter admits), only base partitions
+  * containing changed keys are read at all. The no-Exchange-on-base shape is a failing
   * test (PlanAuditSpec "Cdc.merge never shuffles the base"). The
   * broadcasts are size-guarded: a batch with more distinct keys than
   * `maxBroadcastKeys` (a bulk load, not a changelog) drops the hints

@@ -672,6 +672,14 @@ final class GraftLakeCatalog
     val mapped = mappingProp(properties)
     val dv = dvProp(properties)
     requireDvCompatible(dv, partCols, mapped)
+    // every property is validated BEFORE anything is written: a rejected
+    // DDL must leave no version (and no table) behind
+    val (dvMaxRatio, dvMaxPending) =
+      (dvMaxRatioProp(properties), dvMaxPendingProp(properties))
+    val blooms = bloomProp(properties, columns)
+    blooms.foreach(c => require(!partCols.exists(_.name == c),
+      s"bloom table property names partition column '$c' — " +
+        "partition pruning already answers point lookups on it"))
     val declared =
       if (mapped) GraftLakeMapping.assignIds(toStruct(columns))
       else toStruct(columns)
@@ -679,10 +687,11 @@ final class GraftLakeCatalog
     // must yield one winner and one clean error, never a retried append
     // that unions their schemas/data. On a partitioned lake the schema
     // carrier lives at the null partition (an empty frame has no
-    // partition values); the spec registry lands only AFTER the create
-    // wins — a lost-race loser must not plant its spec
+    // partition values), indexed with the declared blooms; the spec
+    // registry lands only AFTER the create wins — a lost-race loser
+    // must not plant its spec
     val entry = GraftLakePartitions.seedEmpty(spark, dir,
-      VersionedLake.newDataDir(), declared, partCols, Nil)
+      VersionedLake.newDataDir(), declared, partCols, blooms)
     if (VersionedLake.publish(spark, dir, Commit(Seq(entry),
         replaceAll = true, schema = Declared(Some(declared.json)),
         expect = Expect.First)).isEmpty)
@@ -690,14 +699,10 @@ final class GraftLakeCatalog
         .TableAlreadyExistsException(ident)
     if (partCols.nonEmpty) GraftLakePartitions.set(spark, dir, partCols)
     if (mapped) GraftLakeMapping.record(spark, dir, declared)
-    if (dv) VersionedLake.setDeletionVectors(spark, dir,
-      dvMaxRatioProp(properties), dvMaxPendingProp(properties))
-    bloomProp(properties, columns).foreach { c =>
-      require(!partCols.exists(_.name == c),
-        s"bloom table property names partition column '$c' — " +
-          "partition pruning already answers point lookups on it")
-      VersionedLake.setBloomIndex(spark, dir, c) // accumulates per col
-    }
+    if (dv) VersionedLake.setDeletionVectors(spark, dir, dvMaxRatio,
+      dvMaxPending)
+    // accumulates per column
+    blooms.foreach(VersionedLake.setBloomIndex(spark, dir, _))
     if (cdfProp(properties)) VersionedLake.setChangeDataFeed(spark, dir)
     loadTable(ident)
   }

@@ -33,22 +33,22 @@ object IngestQueries {
   private def scratchRoot: String = graft.Sessions.scratchRoot
 
   // ---- staged lake fixtures (bench-setup split) ---------------------------
-  // q62/q93 mutate a lake they first have to build; the build is the
-  // operator's INPUT, so it is factored out as QuerySpec.benchSetup —
-  // untimed in the bench — while the builders stage it themselves when
-  // absent (Verify/tests call only the builder). Both operators are
-  // idempotent over their own output (re-compacting a compacted lake and
-  // re-applying the same upsert batch change nothing), so "stage only
-  // when absent" is safe within the per-PID scratch root.
+  // q62/q93 rewrite a versioned lake they first have to build; the build
+  // is the operator's INPUT, so it is factored out as
+  // QuerySpec.benchSetup — untimed in the bench — while the builders
+  // stage it themselves when absent (Verify/tests call only the builder).
+  // Both operators are idempotent over their own output (compactSmall
+  // publishes nothing once each partition holds one entry, and
+  // re-applying the same MERGE batch rewrites the same rows), so "stage
+  // only when absent" is safe within the per-PID scratch root.
   //
   // The staged check is a _STAGED completion marker ([[Staging]]), not
-  // bare Lake.exists: a compact/upsert that throws mid-mutation leaves
-  // a half-mutated lake that exists() would hand to a same-JVM retry
-  // as "already staged". The marker is written only after staging
-  // completes and dropped when a mutation fails, so the retry
-  // restages from source.
+  // bare Lake.exists: a staging run that dies half-way leaves a lake
+  // that exists() would hand to a same-JVM retry as "already staged".
+  // The operators need no restage when they fail: a versioned commit
+  // publishes version N+1 or leaves the lake at version N.
 
-  import Staging.{ensureStaged, mutateOrRestage}
+  import Staging.ensureStaged
 
   private def compactLakePath(dir: String): String =
     s"$scratchRoot/compact_lake_${new java.io.File(dir).getName}"
@@ -60,24 +60,31 @@ object IngestQueries {
         year(col("ts")).as("Year"), month(col("ts")).as("Month"),
         dayofmonth(col("ts")).as("Day"))
 
+  /** A fresh versioned lake at `lake`, partitioned by Year/Month/Day
+    * like the K1 lake, holding each of `batches` as one commit. */
+  private def stagePartitionedLake(s: org.apache.spark.sql.SparkSession,
+      lake: String, batches: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    Lake.delete(s, lake)
+    GraftLakePartitions.set(s, lake, Lake.PartitionCols.map(c =>
+      org.apache.spark.sql.types.StructField(c,
+        org.apache.spark.sql.types.IntegerType)))
+    batches.foreach(VersionedLake.commit(_, lake))
+  }
+
   private def stageCompactLake(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val lake = compactLakePath(dir)
-    Lake.delete(s, lake)
     val ev = eventsForLake(s, dir)
-    (0 until 4).foreach(b =>
-      Lake.append(ev.filter(pmod(col("event_id"), lit(4)) === b), lake))
+    stagePartitionedLake(s, compactLakePath(dir),
+      (0 until 4).map(b => ev.filter(pmod(col("event_id"), lit(4)) === b)))
   }
 
   private def upsertLakePath(dir: String): String =
     s"$scratchRoot/upsert_lake_${new java.io.File(dir).getName}"
 
   private def stageUpsertLake(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val lake = upsertLakePath(dir)
-    Lake.delete(s, lake)
-    Lake.append(eventsForLake(s, dir).drop("user_id"), lake)
-  }
+      dir: String): Unit =
+    stagePartitionedLake(s, upsertLakePath(dir),
+      Seq(eventsForLake(s, dir).drop("user_id")))
 
   private val A = EegFixture.specA
   private val B = EegFixture.specB
@@ -235,16 +242,18 @@ object IngestQueries {
         |       count(*) AS n
         |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin) {
       (s, dir) =>
-      // Small-file compaction ([[Lake.compact]]): the events table lands
-      // in 4 incremental appends (ingest fragmentation), the lake is
-      // rewritten to ≈1 file per partition, and per-partition accounting
-      // must still equal a recount from the raw table — compaction is a
-      // LAYOUT change, never a data change. File-count collapse itself
-      // is asserted in LakeSpec (not SQL-expressible).
+      // Small-file compaction as a versioned commit
+      // ([[VersionedLake.compactSmall]]): the events table lands in 4
+      // incremental commits (ingest fragmentation), each partition's
+      // entries coalesce into one, and per-partition accounting must
+      // still equal a recount from the raw table — compaction is a
+      // LAYOUT change, never a data change. Once every partition holds
+      // one entry the compaction publishes nothing. File-count collapse
+      // itself is asserted in LakeSpec (not SQL-expressible).
       val lake = compactLakePath(dir)
       ensureStaged(lake)(stageCompactLake(s, dir))
-      mutateOrRestage(lake)(Lake.compact(s, lake, targetRowsPerFile = 10000000L))
-      Lake.partitionCounts(s, lake)
+      VersionedLake.compactSmall(s, lake, Long.MaxValue)
+      Lake.partitionCounts(VersionedLake.readLatest(s, lake), lake)
     }.withBenchSetup((s, dir) =>
       ensureStaged(compactLakePath(dir))(stageCompactLake(s, dir))),
 
@@ -327,22 +336,34 @@ object IngestQueries {
         |       ROUND(SUM(value), 2) AS total_value
         |FROM final GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin) {
       (s, dir) =>
-      // Keyed upsert ([[Lake.upsert]], MERGE semantics): the events lake
-      // gets a batch that UPDATES every event_id ≡ 0 (mod 7) (value
-      // +1000, same key+partition → replaces) and INSERTS shifted copies
-      // of ≡ 0 (mod 13) (new keys → appended). Per-partition accounting
-      // must equal the oracle's reconstruction — a doubled update (old
-      // row surviving), a lost insert, or a clobbered untouched row all
-      // break the hash.
+      // Keyed upsert as one copy-on-write SQL MERGE INTO commit
+      // ([[GraftLakeRowLevelOperation]]): the events lake gets a batch
+      // that UPDATES every event_id ≡ 0 (mod 7) (value +1000, same
+      // key+partition → replaces) and INSERTS shifted copies of ≡ 0
+      // (mod 13) (new keys → appended). Keys match per partition, null
+      // partitions included. Per-partition accounting must equal the
+      // oracle's reconstruction — a doubled update (old row surviving),
+      // a lost insert, or a clobbered untouched row all break the hash.
       val lake = upsertLakePath(dir)
       ensureStaged(lake)(stageUpsertLake(s, dir))
       val ev = eventsForLake(s, dir).drop("user_id")
-      val batch = ev.filter(col("event_id") % 7 === 0)
+      ev.filter(col("event_id") % 7 === 0)
         .withColumn("value", col("value") + 1000)
         .unionByName(ev.filter(col("event_id") % 13 === 0)
           .withColumn("event_id", col("event_id") + 10000000L))
-      mutateOrRestage(lake)(Lake.upsert(batch, lake, "event_id"))
-      val acct = Lake.read(s, lake)
+        .createOrReplaceTempView("upsert_batch_q93")
+      s.conf.set("spark.sql.catalog.glake_q93",
+        classOf[GraftLakeCatalog].getName)
+      s.conf.set("spark.sql.catalog.glake_q93.root",
+        new java.io.File(lake).getParent)
+      s.sql(
+        s"""MERGE INTO glake_q93.`${new java.io.File(lake).getName}` AS t
+           |USING upsert_batch_q93 AS b ON t.event_id = b.event_id
+           |  AND t.Year <=> b.Year AND t.Month <=> b.Month
+           |  AND t.Day <=> b.Day
+           |WHEN MATCHED THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      val acct = VersionedLake.readLatest(s, lake)
         .groupBy(col("Year"), col("Month"), col("Day"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
         .orderBy(col("Year"), col("Month"), col("Day"))
@@ -360,21 +381,21 @@ object IngestQueries {
         |       CAST(count(*) AS BIGINT) AS n,
         |       ROUND(SUM(value), 2) AS total_value
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-      // Z-order rewrite ([[Lake.writeZordered]]) is a LAYOUT change,
-      // never a data change: events rewritten clustered on
-      // (user_id, event_id%256) must re-aggregate identically to the
-      // raw table. The multi-dimension min/max collapse that makes the
-      // layout worth paying for is measured in LakeSpec (per-file
-      // ranges vs a single-column sort).
+      // Z-order compaction ([[VersionedLake.compactZOrder]]) is a
+      // LAYOUT commit, never a data change: events rewritten clustered
+      // on (user_id, event_id%256) must re-aggregate identically to the
+      // raw table. The lake is rebuilt per run (v1 the commit, v2 the
+      // z-order), so repetitions add no versions. The multi-dimension
+      // min/max collapse that makes the layout worth paying for is
+      // measured in LakeSpec (per-file ranges vs a single-column sort).
       val lake = s"$scratchRoot/zorder_lake_${new java.io.File(dir).getName}"
-      Tables.table(s, dir, "events")
+      Lake.delete(s, lake)
+      VersionedLake.commit(Tables.table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           pmod(col("user_id"), lit(256)).cast("int").as("_za"),
-          pmod(col("event_id"), lit(256)).cast("int").as("_zb"))
-        .transform(df => {
-          Lake.writeZordered(df, lake, "_za", "_zb", nFiles = 8, bits = 8)
-          Lake.read(s, lake)
-        })
+          pmod(col("event_id"), lit(256)).cast("int").as("_zb")), lake)
+      VersionedLake.compactZOrder(s, lake, "_za", "_zb", nFiles = 8, bits = 8)
+      VersionedLake.readLatest(s, lake)
         .groupBy(pmod(col("event_id"), lit(16)).as("bucket"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("total_value"))

@@ -1,8 +1,11 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 
 /** The reference's one stated cost rule — "avoid full scans: partition
   * the data and query only matching partitions" (reference
@@ -17,14 +20,36 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * i.e. a scan that would list and read every partition directory of a
   * partitioned lake. Unpartitioned tables (nothing to prune — e.g.
   * small dims) and paths outside the guard are untouched, and the walk
-  * descends into AQE's wrapped plans. The check inspects ONLY plan
-  * metadata; it never runs the query.
+  * descends into AQE's wrapped plans. File scans are both V1
+  * (`FileSourceScanExec`) and DSv2 (`BatchScanExec` over a `FileScan`,
+  * which is how a partitioned or deletion-vector graftlake snapshot
+  * reads). The check inspects ONLY plan metadata; it never runs the
+  * query.
   */
 object ScanGuard {
 
-  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+  /** One file scan as the guard sees it: the roots it lists, its
+    * partition columns, the partition filters it carries (static and
+    * dynamic) and the data columns it reads. */
+  private final case class Scanned(roots: Seq[Path], partCols: Seq[String],
+      partFilters: Seq[Expression], dataCols: Int) {
+    def under(guardedPath: String): Boolean = {
+      val guard = new Path(guardedPath).toUri.getPath
+      roots.exists(_.toUri.getPath.startsWith(guard))
+    }
+  }
+
+  private def fileScans(p: SparkPlan): Seq[Scanned] = p match {
     case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-    case s: FileSourceScanExec => Seq(s)
+    case s: FileSourceScanExec =>
+      Seq(Scanned(s.relation.location.rootPaths,
+        s.relation.partitionSchema.fieldNames.toSeq, s.partitionFilters,
+        s.requiredSchema.size))
+    case b: BatchScanExec if b.scan.isInstanceOf[FileScan] =>
+      val f = b.scan.asInstanceOf[FileScan]
+      Seq(Scanned(f.fileIndex.rootPaths,
+        f.fileIndex.partitionSchema.fieldNames.toSeq,
+        f.partitionFilters ++ b.runtimeFilters, f.readDataSchema.size))
     case other =>
       (other.children ++ other.subqueries).flatMap(fileScans)
   }
@@ -33,17 +58,12 @@ object ScanGuard {
     * `guardedPath`: every file scan rooted there whose relation has
     * partition columns must carry at least one partition filter. */
   def requirePruned(df: DataFrame, guardedPath: String): Unit = {
-    val guard = new org.apache.hadoop.fs.Path(guardedPath).toUri.getPath
-    val offenders = fileScans(df.queryExecution.executedPlan).filter { s =>
-      val partitioned = s.relation.partitionSchema.nonEmpty
-      val underGuard = s.relation.location.rootPaths
-        .exists(_.toUri.getPath.startsWith(guard))
-      partitioned && underGuard && s.partitionFilters.isEmpty
-    }
+    val offenders = fileScans(df.queryExecution.executedPlan).filter(s =>
+      s.partCols.nonEmpty && s.under(guardedPath) && s.partFilters.isEmpty)
     require(offenders.isEmpty,
       s"full scan of partitioned data under $guardedPath — add a filter " +
-        s"on ${offenders.map(_.relation.partitionSchema.fieldNames.mkString("/"))
-          .distinct.mkString(", ")} (reference README.md:29-31 policy)")
+        s"on ${offenders.map(_.partCols.mkString("/")).distinct
+          .mkString(", ")} (reference README.md:29-31 policy)")
   }
 
   /** The other half of the policy — "derive wide once, scan narrow
@@ -57,15 +77,11 @@ object ScanGuard {
     * (catastrophic at 6,037 data columns / 100 TB). */
   def requireNarrow(df: DataFrame, guardedPath: String,
       maxDataCols: Int = 2): Unit = {
-    val guard = new org.apache.hadoop.fs.Path(guardedPath).toUri.getPath
-    val offenders = fileScans(df.queryExecution.executedPlan).filter { s =>
-      val underGuard = s.relation.location.rootPaths
-        .exists(_.toUri.getPath.startsWith(guard))
-      underGuard && s.requiredSchema.size > maxDataCols
-    }
+    val offenders = fileScans(df.queryExecution.executedPlan).filter(s =>
+      s.under(guardedPath) && s.dataCols > maxDataCols)
     require(offenders.isEmpty,
       s"wide scan of guarded lake under $guardedPath — reads " +
-        s"${offenders.map(_.requiredSchema.size).max} data columns " +
+        s"${offenders.map(_.dataCols).max} data columns " +
         s"(> $maxDataCols); project only what the query needs " +
         "(reference README.md:29-31 policy, narrow-scan half)")
   }

@@ -9,11 +9,8 @@ package graft.engine
   *    to `path` is absent, and write the marker only after `build`
   *    completes — a build that dies half-way leaves no marker, so the
   *    next attempt restages (builders delete their target first).
-  *    The marker sits NEXT to the fixture dir, not inside it: in-place
-  *    rewrites (compact) replace the dir's contents.
-  *  - [[mutateOrRestage]]: run an in-place mutation of a staged
-  *    fixture; on failure drop the marker so the next same-JVM attempt
-  *    rebuilds from source instead of mutating a half-mutated fixture.
+  *    The marker sits NEXT to the fixture dir, not inside it: a
+  *    builder deletes the dir it rebuilds.
   */
 object Staging {
 
@@ -25,14 +22,6 @@ object Staging {
       build
       java.nio.file.Files.createFile(marker(path))
       ()
-    }
-
-  def mutateOrRestage[T](path: String)(body: => T): T =
-    try body
-    catch {
-      case e: Throwable =>
-        java.nio.file.Files.deleteIfExists(marker(path))
-        throw e
     }
 
   /** Publish `df` as ONE plain parquet file `root/name.parquet` via

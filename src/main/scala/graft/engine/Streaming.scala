@@ -208,8 +208,10 @@ object Streaming {
     * winner-key set (see [[Cdc.merge]] — broadcast semi/anti, the base
     * side map-only; full-outer cannot broadcast in Spark 4.1.2, so the
     * split is what keeps a 100 TB base from shuffling per micro-batch)
-    * and one manifest CAS; at lake scale the overwrite commit becomes
-    * [[Lake.upsert]]'s partition-pruned rewrite, same semantics. */
+    * and one manifest CAS; at lake scale the overwrite commit becomes a
+    * copy-on-write SQL `MERGE INTO` on a partitioned graftlake table,
+    * which rewrites only the partitions holding changed keys, same
+    * semantics. */
   def cdcApplyVersioned(changes: DataFrame, root: String,
       checkpoint: String, keyCol: String, seqCol: String, opCol: String,
       payloadCols: Seq[String]): Unit = {

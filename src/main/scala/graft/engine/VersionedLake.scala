@@ -1283,8 +1283,8 @@ object VersionedLake {
   /** Rewrite the current live set as ONE data directory and publish it
     * as a new version (small-file compaction as a commit, not a swap:
     * older versions keep reading their own manifests, so there is no
-    * rename window and nothing to recover — compare
-    * [[Lake.recoverCrashedSwap]], which versioning makes unnecessary). */
+    * rename window and nothing to recover: a crash before the manifest
+    * CAS leaves the lake at its old version). */
   def compactVersions(spark: SparkSession, dir: String,
       codec: String = "snappy", statsCols: Seq[String] = Seq.empty,
       bloomCol: Option[String] = None): Int = {

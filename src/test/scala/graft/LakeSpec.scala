@@ -1,18 +1,56 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{IntegerType, StructField}
 import graft.engine._
 
 /** Regression for reference defect D1 (sparkle-v9.py:128-138): the
   * reference unioned the existing lake with each new batch and appended
   * the union, duplicating all pre-existing rows on every ingest. Our
   * writer appends only the new batch — row accounting must be exactly
-  * additive across repeated ingests. */
+  * additive across repeated ingests.
+  *
+  * The K1 lake is append-only; its in-place rewrites (compaction,
+  * keyed upsert, Z-order) are versioned commits on a lake partitioned
+  * the same way, and are checked here on that path. */
 class LakeSpec extends AnyFunSuite {
   import TestSpark.{spark, tempDir}
 
   private val A = EegFixture.specA
   private val B = EegFixture.specB
+
+  /** `dir` declared as a versioned lake partitioned by Year/Month/Day,
+    * the K1 layout. */
+  private def versionedK1(dir: String): String = {
+    GraftLakePartitions.set(spark, dir, Lake.PartitionCols.map(c =>
+      StructField(c, IntegerType)))
+    dir
+  }
+
+  /** The live entries of the versioned lake at `dir`. */
+  private def live(dir: String): Seq[String] =
+    VersionedLake.manifestEntries(spark, dir, VersionedLake.tip(spark, dir).get)
+
+  /** Keyed upsert of `batch` into the versioned lake at `dir`: one
+    * copy-on-write SQL MERGE matching `id` per partition, null-safe,
+    * through a catalog rooted at the lake's parent (a catalog keeps the
+    * root it was first loaded with, so each root gets its own). */
+  private def upsert(batch: DataFrame, dir: String): Unit = {
+    val root = new java.io.File(dir).getParentFile
+    val cat = "lakespec_" + root.getName.replaceAll("\\W", "_")
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root.getPath)
+    batch.createOrReplaceTempView("lakespec_batch")
+    spark.sql(
+      s"""MERGE INTO $cat.`${new java.io.File(dir).getName}` AS t
+         |USING lakespec_batch AS b ON t.id = b.id AND t.Year <=> b.Year
+         |  AND t.Month <=> b.Month AND t.Day <=> b.Day
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    ()
+  }
 
   test("repeated ingestBatch is additive — no D1 union duplication") {
     val root = tempDir("lake-d1")
@@ -106,31 +144,31 @@ class LakeSpec extends AnyFunSuite {
 
   test("compact collapses small files per partition, data-identical") {
     import spark.implicits._
-    val lake = s"${tempDir("lake-compact")}/lake"
-    // 8 small appends × 2 days: incremental-ingest fragmentation
+    val lake = versionedK1(s"${tempDir("lake-compact")}/lake")
+    // 8 small commits × 2 days: incremental-ingest fragmentation
     (0 until 8).foreach { b =>
-      Lake.append((0 until 250).map(i =>
+      VersionedLake.commit((0 until 250).map(i =>
         (b * 1000L + i, s"p${b}_$i", 2024, 5, 1 + (i % 2)))
         .toDF("id", "payload", "Year", "Month", "Day"), lake)
     }
-    def files(): Seq[java.nio.file.Path] = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(lake)).iterator()
-        .asScala.filter(_.toString.endsWith(".parquet")).toSeq
-    }
-    def snapshot() = Lake.read(spark, lake)
+    def files(): Seq[String] = live(lake).flatMap(e =>
+      new java.io.File(s"$lake/$e").list().toSeq.filter(_.endsWith(".parquet")))
+    def snapshot() = VersionedLake.readLatest(spark, lake)
       .select("id", "payload", "Year", "Month", "Day")
       .collect().map(_.toSeq).toSet
     val before = snapshot()
     assert(files().size >= 16, s"fixture not fragmented: ${files().size}")
 
-    Lake.compact(spark, lake, targetRowsPerFile = 1000L)
-    // 1000 rows per partition / 1000 target → 1 file per day (2 total);
-    // allow the salt-in-same-task merge slack of the docs, not more
-    assert(files().size <= 4, s"still fragmented: ${files().size} files")
+    assert(VersionedLake.compactSmall(spark, lake, Long.MaxValue).isDefined)
+    // 8 entries per day coalesce into one entry of one file per day
+    assert(live(lake).size == 2 && files().size == 2,
+      s"still fragmented: ${live(lake)}, ${files().size} files")
     assert(snapshot() == before, "compaction changed data")
     // still a partitioned lake: pruning keeps working after the rewrite
-    assert(Lake.read(spark, lake).filter("Day = 2").count() == 1000)
+    assert(VersionedLake.readLatest(spark, lake).filter("Day = 2").count()
+      == 1000)
+    // a compacted lake publishes nothing: repeated runs converge
+    assert(VersionedLake.compactSmall(spark, lake, Long.MaxValue).isEmpty)
   }
 
   test("append codec option: snappy vs gzip file suffixes, identical read-back") {
@@ -170,10 +208,9 @@ class LakeSpec extends AnyFunSuite {
       ((i * 7919) % 256, (i * 104729) % 256, i.toLong))
       .toDF("a", "b", "payload")
 
-    def perFileRanges(dir: String): Seq[(Long, Long)] = {
+    def perFileRanges(df: DataFrame): Seq[(Long, Long)] = {
       import org.apache.spark.sql.functions.{input_file_name, max, min}
-      spark.read.parquet(dir)
-        .groupBy(input_file_name())
+      df.groupBy(input_file_name())
         .agg((max("a") - min("a")).as("ra"), (max("b") - min("b")).as("rb"))
         .collect().map(r => (r.getInt(1).toLong, r.getInt(2).toLong)).toSeq
     }
@@ -181,10 +218,12 @@ class LakeSpec extends AnyFunSuite {
 
     data.repartitionByRange(8, data("a")).sortWithinPartitions("a")
       .write.parquet(s"$root/by_a")
-    Lake.writeZordered(data, s"$root/zorder", "a", "b", nFiles = 8, bits = 8)
+    val zorder = s"$root/zorder"
+    VersionedLake.commit(data, zorder)
+    VersionedLake.compactZOrder(spark, zorder, "a", "b", nFiles = 8, bits = 8)
 
-    val byA = perFileRanges(s"$root/by_a")
-    val z = perFileRanges(s"$root/zorder")
+    val byA = perFileRanges(spark.read.parquet(s"$root/by_a"))
+    val z = perFileRanges(VersionedLake.readLatest(spark, zorder))
     // sort-by-a: a clusters (range ~32) but b stays full-width (~255)
     assert(avg(byA.map(_._1)) < 64, s"by_a a-ranges: $byA")
     assert(avg(byA.map(_._2)) > 200, s"by_a b-ranges: $byA")
@@ -192,10 +231,10 @@ class LakeSpec extends AnyFunSuite {
     assert(avg(z.map(_._1)) < 160, s"zorder a-ranges: $z")
     assert(avg(z.map(_._2)) < 160, s"zorder b-ranges: $z")
     // layout only — the data itself is unchanged
-    assert(spark.read.parquet(s"$root/zorder").agg(
+    assert(VersionedLake.readLatest(spark, zorder).agg(
       org.apache.spark.sql.functions.sum("payload")).head().getLong(0)
       == (0L until 20000L).sum)
-    assert(spark.read.parquet(s"$root/zorder").count() == 20000)
+    assert(VersionedLake.readLatest(spark, zorder).count() == 20000)
   }
 
   test("schema evolution: mergeSchema unions old and new file schemas, old rows null-filled") {
@@ -216,47 +255,46 @@ class LakeSpec extends AnyFunSuite {
 
   test("upsert replaces matched keys, inserts new, leaves untouched partitions' files alone") {
     import spark.implicits._
-    val lake = s"${tempDir("lake-upsert")}/lake"
-    Lake.append(Seq(
+    val lake = versionedK1(s"${tempDir("lake-upsert")}/lake")
+    // id stats let the MERGE's runtime group filter skip the entries
+    // that can hold no batch key
+    VersionedLake.commitWithStats(Seq(
       (1L, 10.0, 2024, 7, 1), (2L, 20.0, 2024, 7, 1),
       (3L, 30.0, 2024, 7, 2))
-      .toDF("id", "v", "Year", "Month", "Day"), lake)
-    def day2Files() = Option(new java.io.File(s"$lake/Year=2024/Month=7/Day=2")
-      .listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val before = day2Files()
+      .toDF("id", "v", "Year", "Month", "Day"), lake, Seq("id"))
+    def day2Entries() = live(lake).filter(_.endsWith("/Day=2")).toSet
+    val before = day2Entries()
+    assert(before.size == 1)
 
     // batch touches ONLY day 1: update id 1, insert id 9
-    Lake.upsert(Seq((1L, 11.0, 2024, 7, 1), (9L, 90.0, 2024, 7, 1))
-      .toDF("id", "v", "Year", "Month", "Day"), lake, "id")
+    upsert(Seq((1L, 11.0, 2024, 7, 1), (9L, 90.0, 2024, 7, 1))
+      .toDF("id", "v", "Year", "Month", "Day"), lake)
 
-    val rows = Lake.read(spark, lake).select("id", "v")
+    def rows() = VersionedLake.readLatest(spark, lake).select("id", "v")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rows == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 9L -> 90.0))
-    // dynamic overwrite must not have rewritten the untouched partition
-    assert(day2Files() == before, "untouched partition was rewritten")
+    assert(rows() == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 9L -> 90.0))
+    // the rewrite must not have replaced the untouched partition's entry
+    assert(day2Entries() == before, "untouched partition was rewritten")
 
-    // an EMPTY batch is a no-op: no partitions match, nothing is
-    // rewritten, nothing cached stays behind (the degenerate-input path
-    // builds a lit(false) predicate and an empty replacement slice)
-    val allBefore = Lake.read(spark, lake).orderBy("id")
-      .collect().map(_.toSeq).toSeq
-    Lake.upsert(Seq.empty[(Long, Double, Int, Int, Int)]
-      .toDF("id", "v", "Year", "Month", "Day"), lake, "id")
-    assert(Lake.read(spark, lake).orderBy("id")
-      .collect().map(_.toSeq).toSeq == allBefore)
+    // an EMPTY batch is a no-op: no row changes, nothing cached stays
+    // behind
+    val allBefore = rows()
+    upsert(Seq.empty[(Long, Double, Int, Int, Int)]
+      .toDF("id", "v", "Year", "Month", "Day"), lake)
+    assert(rows() == allBefore)
+    assert(day2Entries() == before)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("null partition values survive mergeAppend dedup, upsert, and compact") {
     // null Year/Month/Day lands under __HIVE_DEFAULT_PARTITION__; ===
-    // never matches null, so before the null-safe predicates this slice
-    // was silently DUPLICATED by mergeAppend redelivery, its survivors
-    // DELETED by upsert's dynamic overwrite, and its rows DROPPED
-    // entirely by compact's size join — all unrecoverable after the swap.
+    // never matches null, so without null-safe predicates this slice is
+    // silently DUPLICATED by mergeAppend redelivery, and an upsert or a
+    // compaction that matched partitions with === would lose its rows.
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    val lake = s"${tempDir("lake-nullpart")}/lake"
+    val root = tempDir("lake-nullpart")
+    val lake = s"$root/lake"
     val none = Option.empty[Int]
     // mixed lake: a real partition plus null-partition rows (an all-null
     // lake is unreadable anyway — partition inference yields VOID)
@@ -268,63 +306,58 @@ class LakeSpec extends AnyFunSuite {
     Lake.mergeAppend(batch, lake, "id")
     Lake.mergeAppend(batch, lake, "id") // redelivery must be a no-op
     assert(Lake.read(spark, lake).count() == 3)
-    // upsert: update id 2, keep id 3 as survivor of the null partition
-    Lake.upsert(batch.filter(col("id") === 2).withColumn("v", lit(22.0)),
-      lake, "id")
-    val afterUpsert = Lake.read(spark, lake).select("id", "v")
+    // the rewrites, on the versioned K1 lake: two commits leave the null
+    // partition with two entries
+    val vlake = versionedK1(s"$root/vlake")
+    VersionedLake.commit(batch, vlake)
+    VersionedLake.commit(Seq((4L, 40.0, none, none, none))
+      .toDF("id", "v", "Year", "Month", "Day"), vlake)
+    def rows() = VersionedLake.readLatest(spark, vlake).select("id", "v")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(afterUpsert == Map(1L -> 10.0, 2L -> 22.0, 3L -> 30.0))
-    Lake.compact(spark, lake, targetRowsPerFile = 1000L)
-    val afterCompact = Lake.read(spark, lake).select("id", "v")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(afterCompact == afterUpsert, "compact lost the null partition")
+    val committed = Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0)
+    assert(VersionedLake.compactSmall(spark, vlake, Long.MaxValue).isDefined,
+      "the null partition's entries did not coalesce")
+    assert(rows() == committed, "compact lost the null partition")
+    // upsert: update id 2, keep ids 3 and 4 as survivors of the null
+    // partition
+    upsert(batch.filter(col("id") === 2).withColumn("v", lit(22.0)), vlake)
+    assert(rows() == committed + (2L -> 22.0), "upsert lost a null-partition row")
   }
 
   test("compact preserves schema-evolved columns (merged read, not one footer)") {
     import spark.implicits._
-    val lake = s"${tempDir("lake-evolve-compact")}/lake"
-    Lake.append(Seq((1L, 10.0, 2024, 7, 1))
+    val lake = versionedK1(s"${tempDir("lake-evolve-compact")}/lake")
+    VersionedLake.commit(Seq((1L, 10.0, 2024, 7, 1))
       .toDF("id", "v", "Year", "Month", "Day"), lake)
-    Lake.append(Seq((2L, 20.0, "new", 2024, 7, 2))
+    VersionedLake.commit(Seq((2L, 20.0, "new", 2024, 7, 1))
       .toDF("id", "v", "w", "Year", "Month", "Day"), lake)
-    Lake.compact(spark, lake, targetRowsPerFile = 1000L)
-    val rows = Lake.read(spark, lake, mergeSchema = true)
+    assert(VersionedLake.compactSmall(spark, lake, Long.MaxValue).isDefined)
+    assert(live(lake).size == 1)
+    val rows = VersionedLake.readLatest(spark, lake)
       .select("id", "w").collect()
       .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(rows == Map(1L -> None, 2L -> Some("new")),
       "compaction dropped an evolved column")
   }
 
-  test("read/append recover a lake stranded at _old by a crash mid-compact-swap") {
-    import spark.implicits._
-    val lake = s"${tempDir("lake-recover")}/lake"
-    Lake.append((0 until 100).map(i => (i.toLong, 2024, 6, 1 + (i % 2)))
-      .toDF("id", "Year", "Month", "Day"), lake)
-
-    // simulate a crash between compact's two renames: live dir moved
-    // aside, replacement never arrived
-    def strand(): Unit = {
-      val fs = new org.apache.hadoop.fs.Path(lake)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.rename(new org.apache.hadoop.fs.Path(lake),
-        new org.apache.hadoop.fs.Path(s"${lake}_old")))
-    }
-
-    strand()
-    assert(Lake.read(spark, lake).count() == 100) // read auto-recovers
-    assert(!new java.io.File(s"${lake}_old").exists())
-
-    // a WRITER arriving first must also restore before appending, or the
-    // old data would be stranded while a parallel lake grows at the name
-    strand()
-    Lake.append((100 until 110).map(i => (i.toLong, 2024, 6, 1 + (i % 2)))
-      .toDF("id", "Year", "Month", "Day"), lake)
-    assert(Lake.read(spark, lake).count() == 110)
-
-    // mergeAppend on a stranded lake still dedups against restored keys
-    strand()
-    Lake.mergeAppend((0 until 120).map(i => (i.toLong, 2024, 6, 1 + (i % 2)))
-      .toDF("id", "Year", "Month", "Day"), lake, "id")
-    assert(Lake.read(spark, lake).count() == 120) // 110 restored + 10 new
+  test("one way to rewrite a lake: main code holds no directory-swap " +
+      "rewrite, and Lake renames nothing") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val gone = (Seq("recoverCrashedSwap", "_swap_owner", "_compacting",
+      "_old\"", "writeZordered", "mutateOrRestage")
+      .map(java.util.regex.Pattern.quote) :+
+      """\bLake\.(compact|upsert)\b""").map(_.r)
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).foreach { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.foreach { case (l, i) =>
+          gone.foreach(g =>
+            assert(g.findFirstIn(l).isEmpty, s"$p:${i + 1}: $l"))
+        }
+      }
+    val lake = Files.readString(root.resolve("graft/engine/Lake.scala"))
+    assert(!lake.contains("rename("), "Lake.scala renames a path")
   }
 }

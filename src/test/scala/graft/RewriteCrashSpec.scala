@@ -8,13 +8,16 @@ import graft.engine._
 
 /** Crash points of every library publish policy: a checked survivor
   * rewrite (library `deleteRange`, unpartitioned SQL overwrite-by-
-  * filter), an absorbed append (`commitTagged`) and a layout-only
-  * checked commit (`compactSmall`) run once per filesystem step
+  * filter, a copy-on-write SQL MERGE on a partitioned lake), an absorbed
+  * append (`commitTagged`) and a layout-only checked commit
+  * (`compactSmall`, flat and partitioned) run once per filesystem step
   * k = 1..N of the commit, with the k-th mutating call (create, rename,
   * delete, mkdirs) failing. After each crash a fresh reader sees exactly
   * version V or V+1 with that version's rows, and repairing torn
   * manifests then retrying the operation converges on the committed
-  * answer — for the tagged append, by publishing it exactly once. */
+  * answer — for the tagged append, by publishing it exactly once. The
+  * partitioned MERGE and compaction are the commits of the keyed upsert
+  * and small-file compaction of the K1 lake (q93, q62). */
 class RewriteCrashSpec extends AnyFunSuite {
   import TestSpark.{spark, tempDir}
 
@@ -28,9 +31,24 @@ class RewriteCrashSpec extends AnyFunSuite {
     dir
   }
 
-  /** A fresh copy of [[base]] at `to`, addressed through `crashfs`. */
-  private def copyOfBase(to: String): String = {
-    val src = Paths.get(base)
+  /** The same 30 rows over 3 commits on a lake partitioned by
+    * `p = id % 2`: two partition entries per commit. */
+  private lazy val partitionedBase: String = {
+    val dir = tempDir("rwcrash-pbase") + "/lake"
+    GraftLakePartitions.set(spark, dir, Seq(
+      org.apache.spark.sql.types.StructField("p",
+        org.apache.spark.sql.types.IntegerType)))
+    (0 until 3).foreach(c => VersionedLake.commitWithStats(
+      spark.range(c * 10L, c * 10L + 10L)
+        .selectExpr("id", "id * 10 AS v", "CAST(id % 2 AS INT) AS p")
+        .coalesce(1), dir, Seq("id")))
+    dir
+  }
+
+  /** A fresh copy of `from` ([[base]] by default) at `to`, addressed
+    * through `crashfs`. */
+  private def copyOfBase(to: String, from: String = base): String = {
+    val src = Paths.get(from)
     Files.walk(src).forEach { p =>
       val q = Paths.get(to).resolve(src.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(q)
@@ -122,6 +140,41 @@ class RewriteCrashSpec extends AnyFunSuite {
       "readable with the same rows, and the retried compaction converges") {
     val root = tempDir("rwcrash-compact")
     val n = enumerate(k => copyOfBase(s"$root/k$k"), before) { dir =>
+      VersionedLake.compactSmall(spark, dir, 1L << 20, statsCols = Seq("id"))
+      ()
+    }
+    info(s"$n crash points")
+  }
+
+  test("partitioned SQL MERGE: a crash at any filesystem step leaves v3 " +
+      "or v4 readable with its rows, and repair plus retry converge") {
+    val root = tempDir("rwcrash-merge")
+    spark.conf.set("spark.sql.catalog.rwcrash_pm",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.rwcrash_pm.root", s"crashfs://$root")
+    // updates two rows and inserts one, all in partition p = 0
+    spark.sql("SELECT * FROM VALUES (12L, -12L, 0), (14L, -14L, 0), " +
+      "(30L, 300L, 0) AS s(id, v, p)").createOrReplaceTempView("rwcrash_src")
+    val after = (before.filterNot { case (i, _) => i == 12 || i == 14 } ++
+      Seq((12L, -12L), (14L, -14L), (30L, 300L))).sorted
+    val n = enumerate(k => copyOfBase(s"$root/t$k", partitionedBase),
+        after) { dir =>
+      spark.sql(
+        s"""MERGE INTO rwcrash_pm.`${dir.split('/').last}` AS t
+           |USING rwcrash_src AS s ON t.id = s.id AND t.p <=> s.p
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      ()
+    }
+    info(s"$n crash points")
+  }
+
+  test("partitioned compactSmall: a crash at any filesystem step leaves " +
+      "v3 or v4 readable with the same rows, and the retried compaction " +
+      "converges") {
+    val root = tempDir("rwcrash-pcompact")
+    val n = enumerate(k => copyOfBase(s"$root/k$k", partitionedBase),
+        before) { dir =>
       VersionedLake.compactSmall(spark, dir, 1L << 20, statsCols = Seq("id"))
       ()
     }

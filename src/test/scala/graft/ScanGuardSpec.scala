@@ -6,7 +6,8 @@ import graft.engine._
 
 /** The no-full-scan policy as a runtime check: partitioned lake scans
   * without a partition predicate are rejected; pruned scans, data-only
-  * filters on unguarded paths, and unpartitioned tables pass. */
+  * filters on unguarded paths, and unpartitioned tables pass — on V1
+  * file scans and on the DSv2 scans of a partitioned graftlake. */
 class ScanGuardSpec extends AnyFunSuite {
   import TestSpark.{spark, tempDir}
 
@@ -84,5 +85,40 @@ class ScanGuardSpec extends AnyFunSuite {
     // unguarded paths stay untouched whatever their width
     ScanGuard.requireNarrow(
       Lake.read(spark, s"$root/lake"), s"$root/other", maxDataCols = 0)
+  }
+
+  test("DSv2 file scans are guarded: an unfiltered read of a partitioned " +
+      "graftlake table is rejected, a filtered one passes, and " +
+      "requireNarrow counts the DSv2 read schema") {
+    val groot = tempDir("scanguard-glake")
+    spark.conf.set("spark.sql.catalog.sguard",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.sguard.root", groot)
+    spark.sql("CREATE TABLE sguard.t (id BIGINT, v DOUBLE, w DOUBLE, " +
+      "m INT) PARTITIONED BY (m)")
+    spark.sql("INSERT INTO sguard.t SELECT id, id * 1.0, id * 2.0, " +
+      "CAST(id % 3 AS INT) FROM range(0, 30)")
+    val dir = s"$groot/t"
+    val t = spark.table("sguard.t")
+    assert(t.queryExecution.executedPlan.toString.contains("BatchScan"),
+      "the partitioned read no longer plans a DSv2 scan")
+    val e = intercept[IllegalArgumentException](
+      ScanGuard.requirePruned(t, dir))
+    assert(e.getMessage.contains("filter on m"), e.getMessage)
+    ScanGuard.requirePruned(t.filter("m = 1"), dir)
+    // the library snapshot read plans the same scan
+    intercept[IllegalArgumentException](ScanGuard.requirePruned(
+      VersionedLake.readLatest(spark, dir).select(col("v")), dir))
+    ScanGuard.requirePruned(
+      VersionedLake.readLatest(spark, dir).filter(col("m") === 2), dir)
+    // narrow: per-partition accounting reads no data column, a
+    // one-column sum reads one, the full width is rejected
+    ScanGuard.requireNarrow(t.groupBy(col("m")).count(), dir,
+      maxDataCols = 0)
+    ScanGuard.requireNarrow(t.groupBy(col("m")).agg(sum(col("v"))), dir,
+      maxDataCols = 1)
+    val wide = intercept[IllegalArgumentException](
+      ScanGuard.requireNarrow(t, dir, maxDataCols = 2))
+    assert(wide.getMessage.contains("reads 3 data columns"), wide.getMessage)
   }
 }

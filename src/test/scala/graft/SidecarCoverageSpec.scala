@@ -15,7 +15,8 @@ import graft.engine._
   * followed by a check of every entry it made live: a stats sidecar that
   * opens with the stats header and holds one line per parquet file and
   * indexed numeric column, and a bloom sidecar with one fixed-length line
-  * per file and bloom column. Zero-row schema carriers are included. */
+  * per file and bloom column. Zero-row schema carriers are included,
+  * the plain CREATE TABLE one too. */
 class SidecarCoverageSpec extends AnyFunSuite {
   import TestSpark.{spark, tempDir}
 
@@ -166,5 +167,41 @@ class SidecarCoverageSpec extends AnyFunSuite {
 
   test("every commit kind indexes each entry it adds: partitioned lake") {
     everyCommitKind("part", partitioned = true)
+  }
+
+  private def withCatalog(name: String): String = {
+    val root = tempDir(s"scov-$name")
+    spark.conf.set(s"spark.sql.catalog.$name",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    root
+  }
+
+  test("CREATE TABLE indexes its schema carrier with the declared bloom " +
+      "column: flat and partitioned lake") {
+    val root = withCatalog("scov_create")
+    Seq("flat" -> "", "part" -> "PARTITIONED BY (g) ").foreach {
+      case (t, partition) =>
+        val stats =
+          if (partition.isEmpty) Seq("id", "v", "g") else Seq("id", "v")
+        assert(indexed(s"CREATE TABLE ($t)", s"$root/$t", stats)(spark.sql(
+          s"CREATE TABLE scov_create.$t (id BIGINT, key STRING, v DOUBLE, " +
+            s"g INT) ${partition}TBLPROPERTIES ('bloom' = 'key')")) == 0)
+    }
+  }
+
+  test("a rejected CREATE TABLE leaves no version under the table dir") {
+    val root = withCatalog("scov_reject")
+    Seq(
+      "typo" -> "TBLPROPERTIES ('bloom' = 'typo')",
+      "partbloom" -> "PARTITIONED BY (g) TBLPROPERTIES ('bloom' = 'g')",
+      "dvpending" -> ("TBLPROPERTIES ('deletion_vectors' = 'true', " +
+        "'dv_max_pending' = '0')")).foreach { case (t, tail) =>
+      val e = intercept[IllegalArgumentException](spark.sql(
+        s"CREATE TABLE scov_reject.$t (id BIGINT, key STRING, g INT) $tail"))
+      info(s"$t: ${e.getMessage}")
+      assert(VersionedLake.versions(spark, s"$root/$t").isEmpty,
+        s"the rejected CREATE of $t published a version")
+    }
   }
 }
