@@ -34,10 +34,11 @@ import org.apache.spark.sql.functions._
   * changelog-sized touched-key set and the untouched rows union back
   * unmoved. The winner pick itself is a streaming `row_number` over the
   * changelog only. Composed with the lake layer (a copy-on-write SQL
-  * `MERGE INTO` on a partitioned graftlake table, which rewrites only
-  * the partitions its group filter admits), only base partitions
-  * containing changed keys are read at all. The no-Exchange-on-base shape is a failing
-  * test (PlanAuditSpec "Cdc.merge never shuffles the base"). The
+  * `MERGE INTO` on a partitioned graftlake table, whose runtime group
+  * filter admits a partition by its values, no sidecar needed), only
+  * base partitions holding changed keys are rewritten. The
+  * no-Exchange-on-base shape is a failing test (PlanAuditSpec
+  * "Cdc.merge never shuffles the base"). The
   * broadcasts are size-guarded: a batch with more distinct keys than
   * `maxBroadcastKeys` (a bulk load, not a changelog) drops the hints
   * and lets the planner shuffle — identical results, no forced

@@ -25,10 +25,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    which for a delete would silently resurrect its rows — dir-in
   *    or dir-out is the only safe granularity);
   *  - Spark's runtime group filtering (the same V2 hook as join-driven
-  *    pruning) probes the stats/bloom sidecars with the MATCHING rows'
-  *    key sets, so only dirs that can contain matches are read and
-  *    rewritten — the Delta/Iceberg copy-on-write shape where a
-  *    KB-sized merge source touches one dir of a 100 TB lake;
+  *    pruning) checks the MATCHING rows' key sets against each entry's
+  *    partition values and its stats/bloom sidecars, so only dirs that
+  *    can contain matches are read and rewritten — the Delta/Iceberg
+  *    copy-on-write shape where a KB-sized merge source touches one dir
+  *    of a 100 TB lake;
   *  - the WRITE stages parquet through Spark's committer and publishes
   *    one manifest version replacing exactly the scanned dirs
   *    ([[VersionedLake.refuseConflicts]]) — atomic, time
@@ -175,18 +176,21 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
   private def entryOf(parent: org.apache.hadoop.fs.Path): String =
     probe.entryOf(parent)
 
-  /** The sidecar-indexed attributes (most selective first, capped):
-    * Spark's row-level runtime group filtering builds ONE pruning
-    * subquery PER declared attribute (single-column IN sets — each
-    * translates through the V2 runtime-filter path, which only
-    * accepts plain column children), and [[partitions]] intersects
-    * them (`ins.forall`): a dir survives only if it can hold a key of
-    * EVERY arriving set, so a MERGE keyed on two indexed dimensions
+  /** The partition columns, then the sidecar-indexed data columns
+    * (most selective first), capped: Spark's row-level runtime group
+    * filtering builds ONE pruning subquery PER declared attribute
+    * (single-column IN sets — each translates through the V2
+    * runtime-filter path, which only accepts plain column children),
+    * and [[partitions]] intersects them (`ins.forall`): a dir survives
+    * only if it can hold a key of EVERY arriving set, so a MERGE keyed
+    * on two indexed dimensions
     * prunes on both — sound over-approximation per dimension (every
     * matching row's value is in its IN set; a dir pruned by any
     * dimension cannot contain a match).
     *
-    * Ranked MOST SELECTIVE first by the sidecars themselves, not
+    * Partition columns come first: each entry's partition values
+    * decide them without IO, sidecars or not. Data columns are ranked
+    * MOST SELECTIVE first by the sidecars themselves, not
     * declaration order: a bloom-indexed column is a point-lookup
     * structure (best); for stats columns the score is the average
     * fraction of the column's global span each file's [min, max]
@@ -204,26 +208,24 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
     val sample = op.snapshotDirs.toSeq.sorted.take(16)
     val indexed = VersionedLake.indexedCols(base.sparkSession, op.snap.dir,
       sample).toSet
+    val parts = readPartitionSchema.fields.filter(f =>
+      GraftLakeFileIndex.runtimeProbeable(f.dataType))
     val candidates = readDataSchema.fields.filter(f =>
       indexed(f.name) && GraftLakeFileIndex.runtimeProbeable(f.dataType))
-    if (candidates.isEmpty) Array.empty
-    else {
-      def score(c: String): Double =
-        if (sample.exists(d => probe.bloom(d, c).nonEmpty)) 0.0
+    def score(c: String): Double =
+      if (sample.exists(d => probe.bloom(d, c).nonEmpty)) 0.0
+      else {
+        val ranges = sample.flatMap(d => probe.stats(d, c).values)
+          .filter(r => r._3 > 0 && r._1 <= r._2)
+        if (ranges.isEmpty) 1.0
         else {
-          val ranges = sample.flatMap(d => probe.stats(d, c).values)
-            .filter(r => r._3 > 0 && r._1 <= r._2)
-          if (ranges.isEmpty) 1.0
-          else {
-            val span = ranges.map(_._2).max - ranges.map(_._1).min
-            if (!(span > 0) || span.isInfinite) 1.0 // constant/degenerate
-            else ranges.map(r => (r._2 - r._1) / span).sum / ranges.length
-          }
+          val span = ranges.map(_._2).max - ranges.map(_._1).min
+          if (!(span > 0) || span.isInfinite) 1.0 // constant/degenerate
+          else ranges.map(r => (r._2 - r._1) / span).sum / ranges.length
         }
-      candidates.sortBy(f => score(f.name)).take(3).map(f =>
-        org.apache.spark.sql.connector.expressions.Expressions
-          .column(f.name))
-    }
+      }
+    (parts ++ candidates.sortBy(f => score(f.name))).take(3).map(f =>
+      org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
   }
 
   override def filterAttributes()

@@ -2854,9 +2854,14 @@ private[engine] final class SidecarProbe(spark: SparkSession,
     val renders = values.flatMap(render(_))
     // a partition column decides from the MANIFEST ENTRY's value
     // segment alone (runtime/dynamic partition pruning, zero IO);
-    // only fully-rendered value sets may prune
-    if (renders.length == values.length)
-      partitionAdmit(p.getParent, c, renders).foreach(a => return a)
+    // only fully-rendered value sets may prune, a null rendering as
+    // the null-partition segment (a null-safe MERGE key matches it)
+    val segments = values.flatMap(v =>
+      if (v == null) Some(org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      else render(v))
+    if (segments.length == values.length)
+      partitionAdmit(p.getParent, c, segments).foreach(a => return a)
     // a decimal value (a DECIMAL column's V1 filter value) never meets
     // the stats: parquet records such a column's min/max unscaled, and
     // sidecars written before that was known hold those lines

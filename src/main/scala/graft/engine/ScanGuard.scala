@@ -47,9 +47,15 @@ object ScanGuard {
         s.requiredSchema.size))
     case b: BatchScanExec if b.scan.isInstanceOf[FileScan] =>
       val f = b.scan.asInstanceOf[FileScan]
-      Seq(Scanned(f.fileIndex.rootPaths,
-        f.fileIndex.partitionSchema.fieldNames.toSeq,
-        f.partitionFilters ++ b.runtimeFilters, f.readDataSchema.size))
+      val partCols = f.fileIndex.partitionSchema.fieldNames.toSeq
+      // a DSv2 scan takes runtime filters on data columns too; only
+      // those on partition columns prune partitions
+      val partRuntime = b.runtimeFilters.filter { e =>
+        e.references.nonEmpty && e.references.forall(a =>
+          partCols.exists(_.equalsIgnoreCase(a.name)))
+      }
+      Seq(Scanned(f.fileIndex.rootPaths, partCols,
+        f.partitionFilters ++ partRuntime, f.readDataSchema.size))
     case other =>
       (other.children ++ other.subqueries).flatMap(fileScans)
   }

@@ -11,6 +11,9 @@ package graft.engine
   *    next attempt restages (builders delete their target first).
   *    The marker sits NEXT to the fixture dir, not inside it: a
   *    builder deletes the dir it rebuilds.
+  *  - [[restage]]: build afresh even when staged — the bench setup of
+  *    a query whose timed body rewrites its fixture, so every timed
+  *    run rewrites the same input.
   */
 object Staging {
 
@@ -23,6 +26,11 @@ object Staging {
       java.nio.file.Files.createFile(marker(path))
       ()
     }
+
+  def restage(path: String)(build: => Unit): Unit = {
+    java.nio.file.Files.deleteIfExists(marker(path))
+    ensureStaged(path)(build)
+  }
 
   /** Publish `df` as ONE plain parquet file `root/name.parquet` via
     * write-to-stage + atomic rename — the drop-folder fixture shape

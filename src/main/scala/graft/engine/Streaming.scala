@@ -210,7 +210,8 @@ object Streaming {
     * split is what keeps a 100 TB base from shuffling per micro-batch)
     * and one manifest CAS; at lake scale the overwrite commit becomes a
     * copy-on-write SQL `MERGE INTO` on a partitioned graftlake table,
-    * which rewrites only the partitions holding changed keys, same
+    * which rewrites only the partitions holding changed keys (its
+    * runtime group filter admits a partition by its values), same
     * semantics. */
   def cdcApplyVersioned(changes: DataFrame, root: String,
       checkpoint: String, keyCol: String, seqCol: String, opCol: String,

@@ -256,12 +256,12 @@ class LakeSpec extends AnyFunSuite {
   test("upsert replaces matched keys, inserts new, leaves untouched partitions' files alone") {
     import spark.implicits._
     val lake = versionedK1(s"${tempDir("lake-upsert")}/lake")
-    // id stats let the MERGE's runtime group filter skip the entries
-    // that can hold no batch key
-    VersionedLake.commitWithStats(Seq(
+    // no sidecars: the partition values alone must keep the MERGE off
+    // the entries no batch row can reach
+    VersionedLake.commit(Seq(
       (1L, 10.0, 2024, 7, 1), (2L, 20.0, 2024, 7, 1),
       (3L, 30.0, 2024, 7, 2))
-      .toDF("id", "v", "Year", "Month", "Day"), lake, Seq("id"))
+      .toDF("id", "v", "Year", "Month", "Day"), lake)
     def day2Entries() = live(lake).filter(_.endsWith("/Day=2")).toSet
     val before = day2Entries()
     assert(before.size == 1)
@@ -319,9 +319,13 @@ class LakeSpec extends AnyFunSuite {
       "the null partition's entries did not coalesce")
     assert(rows() == committed, "compact lost the null partition")
     // upsert: update id 2, keep ids 3 and 4 as survivors of the null
-    // partition
+    // partition; the real partition's entry is not rewritten
+    val realEntry = live(vlake).filter(_.endsWith("/Day=1")).toSet
     upsert(batch.filter(col("id") === 2).withColumn("v", lit(22.0)), vlake)
     assert(rows() == committed + (2L -> 22.0), "upsert lost a null-partition row")
+    assert(VersionedLake.readLatest(spark, vlake).count() == 4,
+      "upsert duplicated a null-partition row")
+    assert(live(vlake).filter(_.endsWith("/Day=1")).toSet == realEntry)
   }
 
   test("compact preserves schema-evolved columns (merged read, not one footer)") {

@@ -121,4 +121,42 @@ class ScanGuardSpec extends AnyFunSuite {
       ScanGuard.requireNarrow(t, dir, maxDataCols = 2))
     assert(wide.getMessage.contains("reads 3 data columns"), wide.getMessage)
   }
+
+  test("a DSv2 runtime filter counts as partition pruning only on a " +
+      "partition column: a join on a data column is rejected") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val groot = tempDir("scanguard-glake-dpp")
+    spark.conf.set("spark.sql.catalog.sguard_dpp",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.sguard_dpp.root", groot)
+    spark.sql("CREATE TABLE sguard_dpp.t (id BIGINT, v DOUBLE, m INT) " +
+      "PARTITIONED BY (m)")
+    spark.sql("INSERT INTO sguard_dpp.t SELECT id, id * 1.0, " +
+      "CAST(id % 3 AS INT) FROM range(0, 300)")
+    val dir = s"$groot/t"
+    val dim = spark.range(0, 100).toDF("k").filter("k < 3")
+    def runtimeRefs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      plan.collect { case b: BatchScanExec => b.runtimeFilters }.flatten
+        .flatMap(_.references.map(_.name))
+    }
+    // dynamic pruning on the data column v plants a runtime filter on
+    // v, which prunes no partition
+    val onData = spark.table("sguard_dpp.t")
+      .join(dim, col("v") === col("k").cast("double"), "left_semi")
+    assert(runtimeRefs(onData) == Seq("v"),
+      "no runtime filter on the data column: the case is not exercised")
+    val e = intercept[IllegalArgumentException](
+      ScanGuard.requirePruned(onData, dir))
+    assert(e.getMessage.contains("filter on m"), e.getMessage)
+    // the same join on the partition column passes
+    val onPart = spark.table("sguard_dpp.t")
+      .join(dim, col("m") === col("k").cast("int"), "left_semi")
+    assert(runtimeRefs(onPart) == Seq("m"))
+    ScanGuard.requirePruned(onPart, dir)
+  }
 }
