@@ -21,9 +21,13 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType,
   StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** MERGE-ON-READ row-level operations — SQL `UPDATE` / `MERGE INTO` /
-  * rich-predicate `DELETE` on a deletion-vector lake as DELTA writes
+  * every `DELETE` that drops no whole manifest entry (all but the
+  * truncate and a partition-decidable delete, which stay manifest-only
+  * in [[GraftLakeTable.deleteWhere]]) on a deletion-vector lake as
+  * DELTA writes
   * (Spark's [[org.apache.spark.sql.connector.write.SupportsDelta]]
   * seam, the Delta-Lake/Iceberg "position delete" design point):
   *
@@ -49,9 +53,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Serializable like the COW publish: the touched entries must still
   * be live, no dir the snapshot never saw may have appeared (it could
-  * hold rows matching the operation's condition), and no concurrent
-  * DV commit may have landed after the scan (its positions could
-  * overlap). Conflicts refuse loudly; the caller retries.
+  * hold rows matching the operation's condition), and a concurrent DV
+  * commit is adjudicated by its positions
+  * ([[VersionedLake.mergeOnReadCommit]]: disjoint ones serialize, a
+  * DELETE subtracts a concurrent pure delete's, any other overlap is a
+  * lost update). Conflicts refuse loudly; the caller retries.
   *
   * Scope: EVERY deletion-vector lake. PARTITIONED: rewritten and
   * inserted rows route through the dynamic-partition writer into hive
@@ -298,7 +304,7 @@ final class GraftLakeDeltaScan(
     new GraftLakeDeltaReaderFactory(withIdx,
       base.readDataSchema.length, innerTypes, metaCols,
       1 + snap.partCols.length + 1,
-      new GraftLakeSerializableConf(base.hadoopConf))
+      new SerializableConfiguration(base.hadoopConf))
   }
 }
 
@@ -313,7 +319,7 @@ final class GraftLakeDeltaScan(
 private[engine] final class GraftLakeDeltaReaderFactory(
     withIdx: PartitionReaderFactory, dataLen: Int,
     innerTypes: Array[DataType], metaCols: Seq[String], segs: Int,
-    conf: GraftLakeSerializableConf)
+    conf: SerializableConfiguration)
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(p: InputPartition): Boolean =
@@ -618,7 +624,7 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
         innerBatch.map(_.createBatchWriterFactory(p)), stageDir,
         idSchema.fieldIndex(GraftLakeDeltaOp.FileCol),
         idSchema.fieldIndex(GraftLakeDeltaOp.PosCol),
-        new GraftLakeSerializableConf(SparkSession.active
+        new SerializableConfiguration(SparkSession.active
           .sessionState.newHadoopConf()),
         // a REPLAY's tasks write NOTHING: commit() will no-op anyway,
         // and inert writers mean no committer (of ANY algorithm —
@@ -719,21 +725,34 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
           if (partCols.isEmpty) table.schema() else dataOnly,
           op.snap.bloomCols)
       }
-      try {
-        VersionedLake.publish(spark, lakeDir,
-          VersionedLake.mergeOnReadCommit(spark, lakeDir,
-            op.observedVersion, op.snapshotDirs, touched, addedEntries,
-            if (winners.isEmpty) None else Some(stage), uuid,
-            Some(table.schema().json)))
-      } catch { case e: Throwable =>
-        // a refused publish leaves NOTHING bound: drop the stagings so
-        // they cannot be mistaken for live state (the change dir is
-        // unbound without the manifest marker, but cheap to remove)
-        f.delete(stage, true)
-        f.delete(staged, true)
-        f.delete(new Path(s"$lakeDir/_changes/dv-$uuid"), true)
-        throw e
-      }
+      val changeDir = new Path(s"$lakeDir/_changes/dv-$uuid")
+      // a DELETE's publish subtracts positions a concurrent pure delete
+      // already deleted, then re-derives the change rows from the rest
+      val restageChanges =
+        if (op.command() != RowLevelOperation.Command.DELETE) None
+        else Some { () =>
+          f.delete(changeDir, true)
+          stageChangeRows(spark, f, addedEntries, touchedPairs)
+        }
+      val published =
+        try {
+          VersionedLake.publish(spark, lakeDir,
+            VersionedLake.mergeOnReadCommit(spark, lakeDir,
+              op.observedVersion, op.snapshotDirs, touched, addedEntries,
+              if (winners.isEmpty) None else Some(stage), uuid,
+              Some(table.schema().json), restageChanges))
+        } catch { case e: Throwable =>
+          // a refused publish leaves NOTHING bound: drop the stagings so
+          // they cannot be mistaken for live state (the change dir is
+          // unbound without the manifest marker, but cheap to remove)
+          f.delete(stage, true)
+          f.delete(staged, true)
+          f.delete(changeDir, true)
+          throw e
+        }
+      // concurrent deletes already deleted every row: nothing published,
+      // and the publish check removed the stagings
+      if (published.isEmpty) return
       // PUBLISH BARRIER: the manifest now references this write's
       // artifacts. Anything below (marker write, DV-bound upkeep) may
       // still fail and bubble into Spark's commit-failure → abort()
@@ -782,8 +801,7 @@ final class GraftLakeDeltaWrite(op: GraftLakeDeltaOperation,
       // COLUMN-MAPPING lakes: the pre-image scan must read BY FIELD ID
       // (a name-matched read would null renamed columns out of
       // pre-rename files and the change feed would ship corrupted
-      // pre-images) — declared schema on a derived fieldId session,
-      // the deleteVectors pattern
+      // pre-images) — declared schema on a derived fieldId session
       val (prs, declaredOpt) =
         if (!mapped) (spark, None)
         else {
@@ -883,7 +901,7 @@ private final class GraftLakeDeltaWriterFactory(
     dataFactory: Option[org.apache.spark.sql.connector.write
       .DataWriterFactory],
     stageDir: String, idFileAt: Int, idPosAt: Int,
-    conf: GraftLakeSerializableConf, noop: Boolean = false)
+    conf: SerializableConfiguration, noop: Boolean = false)
   extends DeltaWriterFactory {
 
   override def createWriter(pid: Int, tid: Long)
@@ -985,7 +1003,7 @@ private object GraftLakeDeltaWriterFactory {
   /** One task's positions part, written SORTED by (entry, file, pos)
     * so the task-side predicate-pushed sidecar reads
     * ([[GraftLakeDvScan.loadPositions]]) skip foreign keys' pages —
-    * the same layout contract as the metadata DELETE path. */
+    * the layout every positions sidecar keeps. */
   def writePosPart(p: Path,
       posBuf: java.util.HashMap[String, LongBuf],
       conf: org.apache.hadoop.conf.Configuration): Unit = {

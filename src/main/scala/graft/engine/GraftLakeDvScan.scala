@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.{DataType, Decimal, LongType,
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch,
   ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Scan-side application of deletion vectors (see [[VersionedLake]]'s
   * DV section for the commit protocol). The mechanics ride Spark's own
@@ -53,9 +54,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * enforces global name uniqueness across data dirs, and partition
   * leaves legitimately repeat names across entries.
   *
-  * Used by both the snapshot scan ([[GraftLakeParquetScan]]) and the
-  * COW rewrite scan ([[GraftLakeCowScan]]) — the rewrite MUST apply
-  * vectors or a MERGE would write deleted rows back as survivors. */
+  * Used by the snapshot scan ([[GraftLakeParquetScan]]); the
+  * merge-on-read row-level scan ([[GraftLakeDeltaScan]]) isolates and
+  * loads positions the same way. */
 private[engine] object GraftLakeDvScan {
 
   /** Last `n` `/`-separated segments of `path` — the relative
@@ -127,13 +128,14 @@ private[engine] object GraftLakeDvScan {
   /** Task-side position load for ONE file: scan exactly the sidecar
     * part files the ref names, with an `entry = E AND file = F`
     * parquet filter (row-group stats + dictionary pages skip foreign
-    * keys — the DV delete writes sidecars SORTED by (entry, file,
+    * keys — every positions part is written SORTED by (entry, file,
     * pos), so a key clusters in few row groups). Cost: O(this file's
     * positions + skipped-footer overhead), independent of the lake's
     * pending-position backlog. Positions are unique by the commit
-    * protocol (a DV delete anti-joins every earlier vector before
-    * publishing); sorting happens here so the readers can binary-
-    * search regardless of how the sidecar rows interleaved. */
+    * protocol (a row-level scan applies every earlier vector, and a
+    * DELETE's publish subtracts concurrent deletes' positions);
+    * sorting happens here so the readers can binary-search regardless
+    * of how the sidecar rows interleaved. */
   def loadPositions(ref: GraftLakeDvRef,
       conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
     import org.apache.parquet.filter2.predicate.FilterApi
@@ -247,7 +249,7 @@ private[engine] object GraftLakeDvScan {
       base.readDataSchema.length,
       ((base.readDataSchema.fields :+ rowIdx) ++
         base.readPartitionSchema.fields).map(_.dataType),
-      new GraftLakeSerializableConf(base.hadoopConf))
+      new SerializableConfiguration(base.hadoopConf))
   }
 }
 
@@ -257,24 +259,6 @@ private[engine] object GraftLakeDvScan {
   * receive: O(bytes of a few paths) per vectored file. */
 private[graft] final case class GraftLakeDvRef(entry: String,
     file: String, parts: Seq[String], count: Long)
-
-/** Hadoop `Configuration` is not `Serializable`; this minimal wrapper
-  * (the standard Spark idiom) ships it inside the reader factory so
-  * tasks can open their own sidecar parts. */
-private[engine] final class GraftLakeSerializableConf(
-    @transient private var conf: org.apache.hadoop.conf.Configuration)
-  extends Serializable {
-  def value: org.apache.hadoop.conf.Configuration = conf
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(in)
-  }
-}
 
 /** A [[FilePartition]] holding exactly one DV-carrying file and the
   * sidecar reference to that file's deleted positions — the task-side
@@ -289,7 +273,7 @@ private[engine] final class GraftLakeDvFilePartition(index: Int,
 private[engine] final class GraftLakeDvReaderFactory(
     plain: PartitionReaderFactory, withIdx: PartitionReaderFactory,
     idxAt: Int, fullTypes: Array[DataType],
-    conf: GraftLakeSerializableConf)
+    conf: SerializableConfiguration)
   extends PartitionReaderFactory {
 
   // Uniform across partitions (Spark's scan exec refuses mixed

@@ -37,9 +37,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    a scanned dir fails the publish loudly instead of duplicating or
   *    resurrecting rows.
   *
-  * Ranges the sidecars can prove empty still take the cheaper
-  * metadata-only delete: Spark prefers `SupportsDelete.deleteWhere`
-  * when every predicate translates, and falls back here otherwise. */
+  * Lakes without deletion vectors only: a DV lake's row-level SQL is
+  * merge-on-read ([[GraftLakeDeltaOperation]]). A DELETE whose
+  * predicate [[GraftLakeTable.canDeleteWhere]] accepts (the truncate, a
+  * partition-decidable delete, one numeric interval) never gets here:
+  * Spark prefers that metadata commit and plans this rewrite
+  * otherwise. */
 final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     spark: SparkSession, private[engine] val snap: Snapshot,
     cmd: RowLevelOperation.Command)
@@ -57,13 +60,10 @@ final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     * anchor (no concurrent DV commit may land after it). */
   private[engine] def observedVersion: Int = version
 
-  /** Deletion vectors applying to the scanned snapshot: the COW scan
-    * MUST apply them, or the rewrite would write deleted rows back as
-    * survivors. The rewrite thereby MATERIALIZES the touched dirs'
-    * vectors away. */
-  private[engine] val dvRefs: Map[String, GraftLakeDvRef] =
-    if (!snap.dvEnabled) Map.empty
-    else VersionedLake.dvRefs(spark, lakeDir, version)
+  // a rewrite that ignored vectors would write deleted rows back as
+  // survivors; DV lakes route to the merge-on-read operation instead
+  require(!snap.dvEnabled,
+    s"copy-on-write row-level operation on deletion-vector lake $lakeDir")
 
   @volatile private[engine] var scannedDirs: Set[String] = snapshotDirs
 
@@ -258,14 +258,8 @@ final class GraftLakeCowScan(op: GraftLakeRowLevelOperation,
       }
     op.scannedDirs =
       kept.flatMap(_.files).map(f => entryOf(f.toPath.getParent)).toSet
-    // DV-carrying files read alone so the reader can bind positions
-    GraftLakeDvScan.isolate(kept, op.dvRefs)
+    kept
   }
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    if (op.dvRefs.isEmpty) super.createReaderFactory()
-    else GraftLakeDvScan.readerFactory(this)
 }
 
 /** Projects incoming rows down to the write schema's width by keeping

@@ -5,8 +5,8 @@ import VersionedLake.{Commit, Expect}
 import VersionedLake.CommitSchema.Declared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast,
-  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
-  LessThanOrEqual, Literal}
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet,
+  LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.LocalScan
@@ -1191,7 +1191,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
 
   /** Whether row-level SQL routes MERGE-ON-READ: EVERY deletion-vector
     * lake — flat, partitioned, and column-mapped — publishes UPDATE /
-    * MERGE / rich-predicate DELETE as positions sidecar + small append
+    * MERGE / DELETE as positions sidecar + small append
     * ([[GraftLakeDeltaOperation]]; mapped lakes id-match the scan and
     * overlay field ids on the staged rewrite). Copy-on-write remains
     * for lakes without vectors. */
@@ -1207,10 +1207,10 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
     if (deltaCapable) GraftLakeDeltaOp.metadataColumns
     else Array.empty
 
-  /** SQL `MERGE INTO` / `UPDATE` / rich-predicate `DELETE`: on EVERY
-    * deletion-vector lake — flat, partitioned, column-mapped —
-    * MERGE-ON-READ ([[GraftLakeDeltaOperation]]
-    * — O(changed rows) written, zero data rewritten); otherwise
+  /** SQL `MERGE INTO` / `UPDATE` / a `DELETE` that [[canDeleteWhere]]
+    * refuses: on EVERY deletion-vector lake — flat, partitioned,
+    * column-mapped — MERGE-ON-READ ([[GraftLakeDeltaOperation]] —
+    * O(changed rows) written, zero data rewritten); otherwise
     * group-based copy-on-write ([[GraftLakeRowLevelOperation]]):
     * Spark rewrites each into read-groups → mutate rows → replace-
     * groups, with the sidecars pruning unaffected dirs at runtime. */
@@ -1227,53 +1227,31 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
           snap, info.command())
     }
 
-  /** SQL `DELETE FROM` as a versioned commit. The pushed conjuncts
-    * must compose into ONE closed numeric interval on ONE column (or
-    * the always-true truncate) — exactly what
-    * [[VersionedLake.deleteRange]] executes as a stats-pruned
-    * rewrite-survivors commit: untouched data dirs are carried by
-    * manifest reference (zero IO), only intersecting dirs rewrite, a
-    * no-match delete publishes nothing, and history stays time-
-    * travelable. Anything the interval can't express (OR, IN,
-    * predicates on two columns, string columns, float ranges
-    * unbounded above — NaN orders above +Inf in Spark) reports
-    * `canDeleteWhere = false`, and Spark falls back to the group-based
-    * copy-on-write path ([[GraftLakeRowLevelOperation]]) — exact for
-    * every predicate, still one atomic version, just without the
-    * metadata-only shortcut. */
+  /** SQL `DELETE FROM` as a metadata commit, for the shapes that need
+    * no row-level scan: the always-true truncate, a partition-decidable
+    * delete on a partitioned lake (whole entries drop by manifest
+    * reference), and — on a lake WITHOUT deletion vectors — one closed
+    * numeric interval on one column, which [[VersionedLake.deleteRange]]
+    * executes as a stats-pruned rewrite-survivors commit (untouched data
+    * dirs carried by manifest reference, a no-match delete publishes
+    * nothing). Anything else reports `canDeleteWhere = false` and Spark
+    * plans the row-level operation instead: on a deletion-vector lake
+    * the merge-on-read DELETE ([[GraftLakeDeltaOperation]] — positions
+    * sidecar, zero data rewritten), otherwise the group-based
+    * copy-on-write rewrite ([[GraftLakeRowLevelOperation]]) — exact for
+    * every predicate, still one atomic version. Intervals refuse what
+    * they cannot express exactly (OR, IN, two columns, strings, float
+    * ranges unbounded above — NaN orders above +Inf in Spark). */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
     val partCols = snap.partCols
-    if (partCols.isEmpty)
-      // the metadata-delete survivor rewrite id-matches on mapped
-      // lakes (VersionedLake.rewriteEntries) and the DV position scan
-      // reads through the declared schema, so neither path excludes
-      // column mapping anymore. A DELETION-VECTOR lake takes this
-      // path for EVERY exactly-replayable predicate: the delete
-      // records positions, no rewrite.
-      GraftLakeDelete.translate(schema(), filters).isDefined ||
-        (snap.dvEnabled &&
-          filters.forall(f =>
-            GraftLakeDelete.toColumn(schema(), f).isDefined))
-    else {
-      // partitioned lakes take the metadata path for partition-
-      // decidable predicates (whole entries drop by manifest
-      // reference). On a DELETION-VECTOR lake, data-column predicates
-      // ALSO stay metadata-scale: partition conjuncts prune entries,
-      // the rest records positions — the Y/M/D-lake GDPR shape. A
-      // filter mixing partition and data references (an OR across the
-      // two) fits neither split and takes the COW rewrite. Everything
-      // else: copy-on-write, which is partition-aware.
-      val translatable = filters.forall(f =>
-        GraftLakeDelete.toColumn(schema(), f).isDefined)
-      val partNames = partCols.map(_.name).toSet
-      def unmixed = filters.forall { f =>
-        val refs = f.references
-        refs.forall(partNames.contains) || !refs.exists(partNames.contains)
-      }
-      translatable &&
-        (GraftLakePartitions.partitionDecidable(filters, partCols) ||
-          (snap.dvEnabled && filters.nonEmpty && unmixed))
+    if (partCols.nonEmpty)
+      filters.forall(f => GraftLakeDelete.toColumn(schema(), f).isDefined) &&
+        GraftLakePartitions.partitionDecidable(filters, partCols)
+    else GraftLakeDelete.translate(schema(), filters) match {
+      case Some(GraftLakeDelete.Truncate) => true
+      case Some(_: GraftLakeDelete.Range) => !snap.dvEnabled
+      case None => false
     }
   }
 
@@ -1342,75 +1320,7 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     val partCols = snap.partCols
     if (partCols.nonEmpty) {
-      if (GraftLakePartitions.partitionDecidable(filters, partCols)) {
-        deleteWherePartitioned(filters, partCols)
-        return
-      }
-      // DV on a PARTITIONED lake (canDeleteWhere gated: DV enabled,
-      // translatable, no partition/data-mixed filter): partition
-      // conjuncts prune candidate ENTRIES from their names — an entry
-      // where they are FALSE or NULL holds no matching row — and the
-      // position scan runs over the survivors with the FULL predicate
-      // (the partitioned scan reconstructs partition columns), so the
-      // delete writes O(matched positions) and reads O(candidate
-      // files), never O(lake)
-      import org.apache.spark.sql.functions.lit
-      val partNames = partCols.map(_.name).toSet
-      val (partF, dataF) =
-        filters.partition(_.references.forall(partNames.contains))
-      def toCol(fs: Array[org.apache.spark.sql.sources.Filter]) =
-        fs.toSeq.map(f => GraftLakeDelete.toColumn(schema(), f)
-          .getOrElse(throw new IllegalStateException(
-            s"untranslatable filter $f")))
-          .reduceOption(_ && _).getOrElse(lit(true))
-      val cur = VersionedLake.current(spark, snap)
-      val snapshot = cur.entries
-      val candidates =
-        if (partF.isEmpty) snapshot
-        else GraftLakePartitions.entriesWhere(spark, snapshot, partCols,
-          toCol(partF))._1
-      if (candidates.isEmpty) return
-      // range/point file pruning only from DATA-column conjuncts —
-      // stats/bloom sidecars cover data columns; partition columns
-      // were already spent on the entry split
-      val bound = GraftLakeDelete.translate(schema(), dataF) match {
-        case Some(GraftLakeDelete.Range(c, lo, hi)) => Some((c, lo, hi))
-        case _ => None
-      }
-      val points = dataF.toSeq.collect {
-        case org.apache.spark.sql.sources.EqualTo(c, v) => (c, Seq(v))
-        case org.apache.spark.sql.sources.In(c, vs) => (c, vs.toSeq)
-      }
-      VersionedLake.deleteVectors(spark, cur, toCol(filters), bound,
-        points, entriesOverride = Some(candidates))
-      return
-    }
-    // DELETION-VECTOR lakes: any exactly-replayable predicate becomes
-    // a positions sidecar — O(deleted rows) written, zero dirs
-    // rewritten (truncate stays the cheaper manifest overwrite). A
-    // one-interval condition still bounds the position SCAN through
-    // the stats sidecars.
-    if (snap.dvEnabled && filters.nonEmpty &&
-        !GraftLakeDelete.translate(schema(), filters)
-          .contains(GraftLakeDelete.Truncate)) {
-      import org.apache.spark.sql.functions.lit
-      val pred = filters.toSeq
-        .map(f => GraftLakeDelete.toColumn(schema(), f).getOrElse(
-          throw new IllegalStateException(s"untranslatable filter $f")))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val bound = GraftLakeDelete.translate(schema(), filters) match {
-        case Some(GraftLakeDelete.Range(c, lo, hi)) => Some((c, lo, hi))
-        case _ => None
-      }
-      // point-lookup conjuncts prune the POSITION SCAN at file level
-      // through the stats + bloom sidecars — a 100 TB key-set delete
-      // reads the files that can hold the keys, not the lake
-      val points = filters.toSeq.collect {
-        case org.apache.spark.sql.sources.EqualTo(c, v) => (c, Seq(v))
-        case org.apache.spark.sql.sources.In(c, vs) => (c, vs.toSeq)
-      }
-      VersionedLake.deleteVectors(spark, VersionedLake.current(spark, snap),
-        pred, bound, points)
+      deleteWherePartitioned(filters, partCols)
       return
     }
     GraftLakeDelete.translate(schema(), filters) match {
@@ -1432,10 +1342,10 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
       case None => throw new UnsupportedOperationException(
         // defensive: unreachable through SQL — Spark consults
         // canDeleteWhere first and routes untranslatable predicates to
-        // the copy-on-write rewrite instead
+        // the row-level operation instead
         "graftlake metadata DELETE supports one numeric range on one " +
-          "column (or no WHERE); richer predicates take the " +
-          "copy-on-write path")
+          "column (or no WHERE); richer predicates take the row-level " +
+          "path")
     }
   }
 }
@@ -2756,7 +2666,8 @@ final class GraftLakeFileIndex(spark: SparkSession, snap: Snapshot,
       .groupBy(_._1).toSeq.map { case (c, ws) =>
         (c, ws.map(_._2).max, ws.map(_._3).min) }
     val points = GraftLakeFileIndex.pointPredicates(dataFilters)
-    if (ranges.isEmpty && points.isEmpty) base
+    val ins = GraftLakeFileIndex.inPredicates(dataFilters)
+    if (ranges.isEmpty && points.isEmpty && ins.isEmpty) base
     else {
       // sidecars looked up once per (data dir, column), not per file
       val admitIn = base.flatMap(_.files.map(_.getPath.getParent)).distinct
@@ -2774,7 +2685,8 @@ final class GraftLakeFileIndex(spark: SparkSession, snap: Snapshot,
             })
         }.toMap
       base.map(pd => pd.copy(files = pd.files.filter(fs =>
-        admitIn(fs.getPath.getParent)(fs.getPath.getName))))
+        admitIn(fs.getPath.getParent)(fs.getPath.getName) &&
+          ins.forall { case (c, vs) => probe.admitAnyOf(fs.getPath, c, vs) })))
     }
   }
 }
@@ -2945,6 +2857,21 @@ object GraftLakeFileIndex {
            DoubleType | StringType => true
       case _ => false
     }
+  }
+
+  /** IN-list filters on a [[runtimeProbeable]] column — `In` over
+    * literals, or the `InSet` the optimizer folds a long list into — as
+    * the (column, values) pairs [[SidecarProbe.admitAnyOf]] takes: the
+    * static face of the runtime IN filter, so a key-set DELETE's
+    * row-level scan reads only the files that can hold a key. */
+  private[engine] def inPredicates(filters: Seq[Expression])
+      : Seq[(String, Seq[Any])] = filters.flatMap {
+    case In(a: Attribute, list) if runtimeProbeable(a.dataType) &&
+        list.forall(_.isInstanceOf[Literal]) =>
+      Some((a.name, list.map(_.asInstanceOf[Literal].value)))
+    case InSet(a: Attribute, hset) if runtimeProbeable(a.dataType) =>
+      Some((a.name, hset.toSeq))
+    case _ => None
   }
 
   /** Bloom probe positions per equality filter. The hashed rendering

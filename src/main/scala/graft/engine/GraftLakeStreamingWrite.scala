@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.{OutputWriter,
   OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** `writeStream.format("graftlake")` — each micro-batch one versioned
   * commit, exactly-once under epoch replay (Delta's streaming-sink
@@ -120,7 +121,7 @@ final class GraftLakeStreamingWrite(snap: Snapshot, schema: StructType,
     val fileSchema = dataOnly(stamped)
     val owf = new ParquetFileFormat()
       .prepareWrite(spark, job, options, fileSchema)
-    val conf = new SerializableHadoopConf(job.getConfiguration)
+    val conf = new SerializableConfiguration(job.getConfiguration)
     if (partCols.isEmpty)
       new GraftLakeStreamingWriterFactory(owf, conf, stageDir, qid,
         fileSchema)
@@ -208,7 +209,7 @@ final class GraftLakeStreamingWrite(snap: Snapshot, schema: StructType,
   * committer — visibility is decided by the driver's rename+publish,
   * not by file placement. */
 private[engine] final class GraftLakeStreamingWriterFactory(
-    owf: OutputWriterFactory, conf: SerializableHadoopConf,
+    owf: OutputWriterFactory, conf: SerializableConfiguration,
     stageDir: String, qid: String, schema: StructType)
   extends StreamingDataWriterFactory {
 
@@ -241,7 +242,7 @@ private[engine] final class GraftLakeStreamingWriterFactory(
   * parser ([[GraftLakePartitions.valuesOf]]) reads them back
   * byte-for-byte. */
 private[engine] final class GraftLakePartitionedStreamingWriterFactory(
-    owf: OutputWriterFactory, conf: SerializableHadoopConf,
+    owf: OutputWriterFactory, conf: SerializableConfiguration,
     stageDir: String, qid: String, fullSchema: StructType,
     fileSchema: StructType, partNames: Seq[String], zoneId: String)
   extends StreamingDataWriterFactory {
@@ -364,19 +365,3 @@ private[graft] final case class GraftLakeStagedFile(path: String,
   * attempt staged. */
 private[graft] final case class GraftLakePartFilesMessage(
     files: Seq[GraftLakeStagedFile]) extends WriterCommitMessage
-
-/** Hadoop `Configuration` over Java serialization (the conf carries the
-  * parquet write settings `prepareWrite` installed; Spark's own wrapper
-  * for this is `private[spark]`). */
-private[engine] final class SerializableHadoopConf(
-    @transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}

@@ -3549,9 +3549,9 @@ object IngestQueries {
 
   /** q223's fixture: the full-width ingest committed WITH per-file
     * Time stats sidecars, the DV registry enabled, and the Time < 20
-    * band vectored away through the SQL DELETE's interval path (the
-    * stats sidecars bound its position scan) — wide schema, lake
-    * seam, stats and vectors composed in one table. */
+    * band vectored away by a merge-on-read SQL DELETE (its pushed
+    * interval prunes the row-level scan through the stats sidecars) —
+    * wide schema, lake seam, stats and vectors composed in one table. */
   private def stageWideDvLake(s: org.apache.spark.sql.SparkSession)
       : Unit = {
     val lake = wideDvLakePath

@@ -880,10 +880,9 @@ object VersionedLake {
   //                              since the scan
   //   merge-on-read   Next       [[mergeOnReadCommit]]:     retry; sidecar
   //                              footprint adjudication,    renamed forward
-  //                              32-attempt cap
-  //   DV delete       Next       [[deleteVectors]]: re-     retry; attempt's
-  //                              subtract interleaved       sidecar unbound
-  //                              vectors
+  //                              32-attempt cap; a DELETE
+  //                              subtracts concurrent pure
+  //                              deletes' positions
   //   create          First      none                       None: nothing
   //                                                         published
   //   replace         After(v)   tip must still be v        refused (CME)
@@ -1633,9 +1632,9 @@ object VersionedLake {
   // keep the manifest-only whole-leaf drop; data-column deletes vector
   // within the candidate leaves) AND with column mapping (the position
   // scans read by field id on mapped lakes — see [[rewriteEntries]] and
-  // the deleteVectors mapped branch). UPDATE/MERGE/rich-predicate DELETE
-  // on any DV lake take the SupportsDelta merge-on-read path
-  // ([[GraftLakeDeltaOperation]]).
+  // [[GraftLakeDeltaOperation]]). UPDATE, MERGE and every DELETE that
+  // drops no whole manifest entry take the SupportsDelta merge-on-read
+  // path on any DV lake ([[GraftLakeDeltaOperation]]).
 
   def setDeletionVectors(spark: SparkSession, dir: String,
       maxRatio: Option[Double] = None,
@@ -1948,9 +1947,9 @@ object VersionedLake {
     (st.getPath.getName, st.getModificationTime, st.getLen)
 
   /** The positions sidecar's FIXED layout (every writer emits exactly
-    * this triple — [[GraftLakeDeltaOp.writePosPart]] and the metadata
-    * DELETE path) — passed to every sidecar read so none pays a
-    * footer-inference job. */
+    * this triple — [[GraftLakeDeltaWriterFactory.writePosPart]] and
+    * the DELETE subtraction in [[mergeOnReadCommit]]) — passed to every
+    * sidecar read so none pays a footer-inference job. */
   private[engine] val DvSidecarSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("entry",
@@ -2105,236 +2104,13 @@ object VersionedLake {
       .drop("__dv_fp", "__dv_p")
   }
 
-  /** SQL DELETE on a DV lake: record positions, rewrite nothing.
-    * Returns the published version, or None when no live row matched.
-    * Serializable: the touched dirs must still be live at the CAS (a
-    * concurrent rewrite carried the rows as survivors — refusing
-    * loudly beats losing the delete); rows an earlier vector already
-    * deleted are excluded, so change events never double-report. */
-  /** Position-scan FILE pruning for a DV delete: dirs bound by a
-    * one-interval condition through the stats sidecars, then files
-    * bound by every point-lookup conjunct through stats ranges AND the
-    * bloom sidecars ([[SidecarProbe.admitAnyOf]] — conservative: a
-    * file is skipped only when it provably holds no matching row, so
-    * skipping loses no positions). THE 100 TB point-delete shape: the
-    * scan cost is O(files that can match the keys), never O(lake). */
-  private[graft] def dvPruneFiles(spark: SparkSession, snap: Snapshot,
-      snapshot: Seq[String],
-      rangeBound: Option[(String, Double, Double)],
-      pointLookups: Seq[(String, Seq[Any])]): Seq[(String, Path)] = {
-    val dirs = rangeBound match {
-      case Some((c, lo, hi)) =>
-        if (lo <= hi) dirsIntersecting(spark, snap.dir, snapshot, c, lo, hi)
-        else Seq.empty
-      case None => snapshot
-    }
-    val probe = new SidecarProbe(spark, snap)
-    dirs.flatMap { d =>
-      dataFiles(spark, snap.dir, d)
-        .filter(p => pointLookups.forall { case (c, vs) =>
-          probe.admitAnyOf(p, c, vs) })
-        .map(p => (d, p))
-    }
-  }
-
-  private[engine] def deleteVectors(spark: SparkSession, snap: Snapshot,
-      pred: org.apache.spark.sql.Column,
-      rangeBound: Option[(String, Double, Double)],
-      pointLookups: Seq[(String, Seq[Any])] = Seq.empty,
-      entriesOverride: Option[Seq[String]] = None): Option[Int] = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val (dir, tipV, snapshot, partCols) =
-      (snap.dir, snap.version, snap.entries, snap.partCols)
-    val f = fs(spark, dir)
-    // partition-pruned candidate entries (a partitioned DELETE's
-    // partition conjuncts) — still CAS-anchored against the snapshot
-    val scanEntries = entriesOverride.getOrElse(snapshot)
-    val pruned = dvPruneFiles(spark, snap, scanEntries, rangeBound,
-      pointLookups)
-    if (pruned.isEmpty) return None
-    // serializable anchor: the dirs whose files we record positions
-    // for must still be live at the CAS
-    val touched = pruned.map(_._1).distinct
-    def withDvCols(df: DataFrame): DataFrame = df
-      .withColumn("__dv_fp", col("_metadata.file_path"))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    // the FULL manifest entry (`d-x` flat, `d-x/c=v/…` partitioned) —
-    // vacuum's liveness check and the (entry, file, pos) key both
-    // need it. `_metadata.file_path` is URL-ENCODED (SparkPath), so
-    // the entry is NOT derivable from it by string surgery (a value
-    // like `New York` surfaces as `New%20York` and would mismatch the
-    // manifest form forever); instead each pruned file's qualified
-    // URI maps back to its MANIFEST-FORM (entry, file) through a
-    // driver-built broadcast lookup — exact, O(candidate files).
-    val lkRows = pruned.flatMap { case (e, p) =>
-      encodedForms(f, p).map(q => (q, e, p.getName)) }
-    import spark.implicits._
-    val lkDf = lkRows.toDF("__dv_fp", "__dv_entry", "__dv_file")
-    // COLUMN-MAPPING lakes: the position scan must read BY FIELD ID
-    // (a name-matched read would null renamed columns out of
-    // pre-rename files and the predicate would silently MISS their
-    // rows) — declared schema on a derived session whose conf enables
-    // field-id reads (the path-based read re-sets the per-read option
-    // from SQLConf, and the caller's session must not change)
-    val (prs, declaredOpt) =
-      if (!snap.mapped) (spark, None)
-      else {
-        val declared = snap.declared
-          .getOrElse(throw new IllegalStateException(
-            s"column-mapping lake $dir has no declared schema at its " +
-              "tip — cannot id-match the DV position scan"))
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        (s2, Some(declared))
-      }
-    def rawScan(paths: Seq[String], basePath: Option[String]): DataFrame = {
-      val r0 = declaredOpt.fold(
-        prs.read.option("mergeSchema", "true"))(sch =>
-        // full declared schema: data columns id-match from footers,
-        // partition columns fill from the `c=v` dir names (typed by
-        // the declaration, no inference)
-        prs.read.schema(org.apache.spark.sql.types.StructType(
-          sch.filter(f => basePath.isDefined ||
-            !partCols.exists(_.name.equalsIgnoreCase(f.name))))))
-      basePath.fold(r0)(bp => r0.option("basePath", bp))
-        .parquet(paths: _*)
-    }
-    // partitioned lakes: partition values live in dir names, not file
-    // bytes — read per data dir with basePath so Spark reconstructs
-    // the `c=v` columns (cast to DECLARED types), or the predicate
-    // could not see them and the change sidecar would ship partial
-    // rows. Union width = touched data dirs, not partitions.
-    val scan0 =
-      if (partCols.isEmpty)
-        withDvCols(rawScan(pruned.map(_._2.toString), None))
-      else pruned.groupBy(_._1.takeWhile(_ != '/')).toSeq.sortBy(_._1)
-        .map { case (dd, ps) =>
-          val df = rawScan(ps.map(_._2.toString), Some(s"$dir/$dd"))
-          withDvCols(partCols.foldLeft(df)((d, c) =>
-            d.withColumn(c.name, col(c.name).cast(c.dataType))))
-        }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // LEFT join so a path-form mismatch cannot silently DROP deletes
-    // (an inner join would exclude matched rows whose reported
-    // spelling is absent from encodedForms — on an exotic filesystem
-    // that is a silent partial DELETE); the null check after the
-    // cache refuses loudly instead
-    val matched0 = scan0.filter(pred <=> lit(true))
-      .join(broadcast(lkDf), Seq("__dv_fp"), "left")
-    // broadcast the prior/interleaved vector frames only when their
-    // bytes are provably small (memoized sidecar sizes) — at 100 TB a
-    // pending-position backlog must not be forced driver-side per
-    // DELETE; past the gate the anti-join stays shuffle-side for AQE
-    def dvHint(frame: DataFrame): DataFrame =
-      if (dvSidecarBytes(spark, dir, tipV) <= DvBroadcastMaxBytes)
-        broadcast(frame)
-      else frame
-    val matched = dvFrame(spark, dir, tipV) match {
-      case None => matched0
-      case Some(old) =>
-        matched0.join(dvHint(old.select(
-          col("entry").as("__dv_entry"), col("file").as("__dv_file"),
-          col("pos").as("__dv_pos"))),
-          Seq("__dv_entry", "__dv_file", "__dv_pos"), "left_anti")
-    }
-    val m = matched.cache()
-    var cur = m
-    try {
-      if (m.isEmpty) return None
-      require(m.filter(col("__dv_entry").isNull).limit(1).count() == 0,
-        s"DV delete on $dir matched rows whose reported file path " +
-          "has no encoded form in the pruned-file lookup — refusing " +
-          "loudly rather than silently skipping their deletes " +
-          "(filesystem path-spelling mismatch; extend encodedForms)")
-      val uuid = java.util.UUID.randomUUID.toString.replace("-", "")
-        .take(12)
-      // the exact deleted rows, staged BEFORE the publish under the
-      // uuid the marker will bind — changes()/CDF replay is atomic
-      // with the commit (the post-publish v<N> sidecar CDF writes
-      // elsewhere is best-effort; here it must not be)
-      val changeDir = s"$dir/_changes/dv-$uuid"
-      m.drop("__dv_fp", "__dv_entry", "__dv_file", "__dv_pos")
-        .withColumn("_change_type", lit("delete"))
-        .write.parquet(changeDir)
-      // vectors already subtracted from `cur` reach up to this version
-      // — a CONCURRENT DV DELETE changes no dirs, so the `gone` check
-      // cannot see it; without re-subtracting its positions, both
-      // commits would publish overlapping vectors and the change
-      // sidecar would re-report rows the interleaved commit already
-      // deleted (duplicate delete events for CDF consumers)
-      var subtractedTo = tipV
-      // the previous attempt's positions sidecar: a lost race leaves it
-      // under the winner's version name — unbind it
-      var attemptSidecar = Option.empty[Path]
-      val committed = publish(spark, dir, Commit(dv = Some(uuid),
-        check = { at =>
-          attemptSidecar.foreach(f.delete(_, true))
-          attemptSidecar = None
-          val gone = touched.toSet.diff(at.live.toSet)
-          if (gone.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"deletion-vector conflict on $dir: dirs " +
-                s"${gone.mkString(", ")} were rewritten after this " +
-                "DELETE scanned them (the rewrite carried the rows as " +
-                "survivors) — retry against the new snapshot")
-          val interleaved = dvSidecars(spark, dir, at.tip.get)
-            .filter(_._1 > subtractedTo)
-          if (interleaved.nonEmpty) {
-            val nv = spark.read
-              .parquet(interleaved.map(_._2.getPath.toString): _*)
-              .select(col("entry").as("__dv_entry"),
-                col("file").as("__dv_file"),
-                col("pos").as("__dv_pos"))
-            val next0 = cur.join(
-              if (dvSidecarBytes(spark, dir, at.tip.get) <=
-                DvBroadcastMaxBytes) broadcast(nv) else nv,
-              Seq("__dv_entry", "__dv_file", "__dv_pos"), "left_anti")
-              .cache()
-            if (cur ne m) cur.unpersist()
-            cur = next0
-            subtractedTo = at.tip.get
-          }
-          // every matched row was deleted by the interleaved commit(s):
-          // nothing left to publish
-          if (interleaved.nonEmpty && cur.isEmpty) {
-            f.delete(new Path(changeDir), true)
-            false
-          } else {
-            if (interleaved.nonEmpty)
-              cur.drop("__dv_fp", "__dv_entry", "__dv_file", "__dv_pos")
-                .withColumn("_change_type", lit("delete"))
-                .write.mode("overwrite").parquet(changeDir)
-            // SORTED by (entry, file, pos): each vectored file's
-            // positions cluster into few row groups with tight stats, so
-            // the task-side predicate-pushed sidecar read
-            // ([[GraftLakeDvScan.loadPositions]]) skips foreign keys'
-            // pages instead of decoding the whole backlog per task
-            val sidecar = new Path(s"$dir/_deletes/v${at.next}-$uuid")
-            f.delete(sidecar, true) // our own stale attempt (uuid-unique)
-            cur.select(col("__dv_entry").as("entry"),
-              col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-              .sort("entry", "file", "pos").write.parquet(sidecar.toString)
-            attemptSidecar = Some(sidecar)
-            true
-          }
-        }))
-      // dv_max_ratio maintenance contract: the commit that pushes
-      // pending positions past the bound pays the (scoped) rewrite
-      committed.foreach(_ => enforceDvBound(spark, dir))
-      committed
-    } finally {
-      if (cur ne m) cur.unpersist()
-      m.unpersist()
-      ()
-    }
-  }
-
   /** The MERGE-ON-READ row-level commit ([[GraftLakeDeltaWrite]]):
     * ONE version that appends `added` (the UPDATE/MERGE's rewritten +
     * inserted rows) and binds the staged positions sidecar via the
     * `#dv` marker (the delete half) — O(changed rows) bytes, zero
-    * data rewritten. Either half may be absent: positions-only is the
-    * pure-DELETE shape ([[deleteVectors]]' commit form), adds-only is
-    * an insert-only MERGE (plain checked append, no marker).
+    * data rewritten. Either half may be absent: positions-only is a
+    * SQL DELETE, adds-only is an insert-only MERGE (plain checked
+    * append, no marker).
     *
     * Concurrency: the write was computed from a scan that already
     * happened and cannot absorb an arbitrary interleaving by looping,
@@ -2350,9 +2126,16 @@ object VersionedLake {
     * set screen first — O(touched files) metadata — then an exact
     * position semi-join only when entries overlap), and its appended
     * dirs are tolerated in the fresh-dir check. OVERLAPPING positions
-    * still refuse loudly (the concurrent commit deleted/rewrote a row
-    * this operation also acts on — a lost update; the rewritten rows
-    * are already staged and cannot be unpicked without a rescan).
+    * refuse loudly (the concurrent commit deleted/rewrote a row this
+    * operation also acts on — a lost update; the rewritten rows are
+    * already staged and cannot be unpicked without a rescan) — except
+    * for a DELETE (`restageChanges` given) against a concurrent PURE
+    * delete (a `#dv` commit adding no entry): both agree the rows are
+    * gone, so the shared positions are subtracted from the staged
+    * sidecar, `restageChanges` re-derives the change rows from what
+    * is left (no delete event is reported twice), and when nothing is
+    * left the commit publishes nothing and removes its stagings (the
+    * positions and `_changes/dv-<uuid>`).
     * Isolation: position-disjoint commits against a concurrent pure
     * DELETE serialize exactly; against a concurrent UPDATE/MERGE the
     * rows IT appended are not re-scanned against our condition —
@@ -2368,7 +2151,8 @@ object VersionedLake {
   private[graft] def mergeOnReadCommit(spark: SparkSession, dir: String,
       observedV: Int, snapshot: Set[String], touched: Seq[String],
       added: Seq[String], stagedPos: Option[Path], uuid: String,
-      schemaDdl: Option[String]): Commit = {
+      schemaDdl: Option[String],
+      restageChanges: Option[() => Unit]): Commit = {
     require(stagedPos.nonEmpty || added.nonEmpty,
       "a merge-on-read commit needs positions or added entries")
     val f = fs(spark, dir)
@@ -2393,6 +2177,32 @@ object VersionedLake {
       }
       throw new java.util.ConcurrentModificationException(msg)
     }
+    // a DELETE overlapping concurrent pure deletes: keep only the
+    // positions they did not delete, back on the stage path (what the
+    // change-row re-staging reads) and SORTED like every sidecar; false
+    // (and no staging left) when they deleted every one
+    def keepUndeleted(theirs: Seq[String]): Boolean = {
+      val (cur, orig) = (sidecarAt.get, stagedPos.get)
+      val rest = new Path(s"$orig.rest")
+      f.delete(rest, true) // our own stale attempt (uuid-unique)
+      val left = readDvParquet(spark, Seq(cur.toString))
+        .join(readDvParquet(spark, theirs), Seq("entry", "file", "pos"),
+          "left_anti")
+      val kept = !left.isEmpty
+      if (kept)
+        left.sort("entry", "file", "pos").write.parquet(rest.toString)
+      f.delete(cur, true)
+      if (kept) {
+        if (!f.rename(rest, orig))
+          throw new java.io.IOException(s"failed to restage DV sidecar $orig")
+        sidecarAt = stagedPos
+        restageChanges.get()
+      } else {
+        sidecarAt = None
+        f.delete(new Path(s"$dir/_changes/dv-$uuid"), true)
+      }
+      kept
+    }
     Commit(added, dv = stagedPos.map(_ => uuid),
       schema = CommitSchema.Declared(schemaDdl), check = { at =>
       attempts += 1
@@ -2402,40 +2212,42 @@ object VersionedLake {
           "cannot outrun; retry the operation")
       val prevTip = at.tip.getOrElse(
         throw new IllegalStateException(s"no versions published at $dir"))
+      // sidecars of concurrent pure deletes overlapping ours
+      val alreadyDeleted = Seq.newBuilder[String]
       ((adjudicatedTo + 1) to prevTip).foreach { k =>
         val lines = readManifestLines(spark, dir, k)
         dvUuidOf(lines).foreach { u =>
+          val theirSidecar = s"$dir/_deletes/v$k-$u"
+          // its appended dirs (rewritten/inserted rows) are tolerated
+          // in the fresh-dir screen below
+          val theirAdds = parseManifest(lines)._1 match {
+            case Left((adds, _)) => adds
+            case Right(_) => Seq.empty
+          }
+          toleratedAdds ++= theirAdds
           // concurrent row-level commit: tolerable iff its delete
           // footprint provably cannot overlap ours
           val overlapCandidates =
             sidecarAt.nonEmpty && ourEntries.nonEmpty && {
-              val theirEntries = readDvParquet(spark,
-                Seq(s"$dir/_deletes/v$k-$u"))
+              val theirEntries = readDvParquet(spark, Seq(theirSidecar))
                 .select("entry").distinct().collect()
                 .map(_.getString(0)).toSet
               theirEntries.exists(ourEntries)
             }
-          if (overlapCandidates) {
-            // exact check, shuffle-side (never per-row on the driver):
-            // O(both commits' changed rows)
-            val ours = readDvParquet(spark,
-              Seq(sidecarAt.get.toString))
-              .select("entry", "file", "pos")
-            val theirs = readDvParquet(spark,
-              Seq(s"$dir/_deletes/v$k-$u"))
-              .select("entry", "file", "pos")
-            if (ours.join(theirs, Seq("entry", "file", "pos"),
-                "left_semi").limit(1).count() > 0)
+          // exact check, shuffle-side (never per-row on the driver):
+          // O(both commits' changed rows)
+          if (overlapCandidates &&
+              readDvParquet(spark, Seq(sidecarAt.get.toString))
+                .join(readDvParquet(spark, Seq(theirSidecar)),
+                  Seq("entry", "file", "pos"), "left_semi")
+                .limit(1).count() > 0) {
+            if (restageChanges.nonEmpty && theirAdds.isEmpty)
+              alreadyDeleted += theirSidecar
+            else
               refuse(s"merge-on-read conflict on $dir: row-level " +
                 s"commit v$k deleted or rewrote positions this " +
                 "operation also acts on (a lost update); retry " +
                 "against the new snapshot")
-          }
-          // its appended dirs (rewritten/inserted rows) are tolerated
-          // in the fresh-dir screen below
-          parseManifest(lines)._1 match {
-            case Left((adds, _)) => toleratedAdds ++= adds
-            case Right(_) => ()
           }
         }
       }
@@ -2453,6 +2265,8 @@ object VersionedLake {
             "were appended by a concurrent commit after this " +
             "operation's snapshot — they may hold rows matching the " +
             "operation's condition; retry against the new snapshot")
+      val absorbed = alreadyDeleted.result()
+      val publishable = absorbed.isEmpty || keepUndeleted(absorbed)
       sidecarAt.foreach { cur =>
         val tgt = new Path(s"$dir/_deletes/v${at.next}-$uuid")
         if (cur != tgt) {
@@ -2463,7 +2277,7 @@ object VersionedLake {
           sidecarAt = Some(tgt)
         }
       }
-      true
+      publishable
     })
   }
 
@@ -2812,7 +2626,7 @@ object VersionedLake {
               statsLinesOfFile(new Path(p._2), statsCols, conf))
           }
         } else {
-          val sconf = new SerializableHadoopConf(
+          val sconf = new org.apache.spark.util.SerializableConfiguration(
             spark.sessionState.newHadoopConf())
           val cols = statsCols
           spark.sparkContext
@@ -3154,9 +2968,8 @@ object VersionedLake {
   /** Of `dirs`, those the stats sidecars CANNOT clear of [lo, hi] on
     * `c` — conservative: a dir with no stats, a file with no recorded
     * range, or an empty dir all count as intersecting. Driver-side
-    * metadata only; the range bound of [[entriesTouched]] and of the
-    * DV position scan ([[dvPruneFiles]]). */
-  private[engine] def dirsIntersecting(spark: SparkSession, dir: String,
+    * metadata only; the range bound of [[entriesTouched]]. */
+  private def dirsIntersecting(spark: SparkSession, dir: String,
       dirs: Seq[String], c: String, lo: Double, hi: Double): Seq[String] = {
     dirs.filter { d =>
       val stats = statsFor(spark, dir, d, c)
@@ -3292,9 +3105,10 @@ object VersionedLake {
     if (countsKnown) {
       val touchedRows = touched.map(d =>
         statsFor(spark, dir, d, c).values.map(_._3).sum).sum
-      // exact by protocol: a DV delete anti-joins every earlier vector
-      // before publishing, so no (entry, file, pos) repeats across
-      // sidecars and the ref counts sum to live positions
+      // exact by protocol: a row-level scan applies every earlier
+      // vector and a DELETE's publish subtracts concurrent deletes, so
+      // no (entry, file, pos) repeats across sidecars and the ref
+      // counts sum to live positions
       val ts = touched.toSet
       val dvPending =
         if (!snap.dvEnabled) 0L

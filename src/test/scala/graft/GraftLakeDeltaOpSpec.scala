@@ -462,7 +462,7 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
       val e = intercept[java.util.ConcurrentModificationException] {
         VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
           spark, dir, observed, snapshot.toSet, snapshot, Seq("d-bogus"),
-          None, "abcdef123456", None))
+          None, "abcdef123456", None, None))
       }
       assert(e.getMessage.contains("appended by a concurrent commit"))
       // a concurrent ROW-LEVEL commit is ADJUDICATED by footprint:
@@ -487,7 +487,7 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
       val e2 = intercept[java.util.ConcurrentModificationException] {
         VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
           spark, dir, observed2, snap2.toSet, snap2, Seq.empty,
-          Some(overlapStage), "abcdef123457", None))
+          Some(overlapStage), "abcdef123457", None, None))
       }
       assert(e2.getMessage.contains("lost update"), e2.getMessage)
       assert(f.exists(overlapStage),
@@ -505,11 +505,122 @@ class GraftLakeDeltaOpSpec extends AnyFunSuite {
       val tipBefore = VersionedLake.tip(spark, dir).get
       val committed = VersionedLake.publish(spark, dir,
         VersionedLake.mergeOnReadCommit(spark, dir, observed2, snap2.toSet,
-          snap2, Seq.empty, Some(disjointStage), "abcdef123458", None)).get
+          snap2, Seq.empty, Some(disjointStage), "abcdef123458", None,
+          None)).get
       assert(committed == tipBefore + 1,
         "disjoint-position row-level commits must auto-serialize")
       // both vectors applied: ids 1,2,3 (theirs) + 501,502,503 (ours)
       assert(spark.table(s"$cat.t").count() == 1100 - 6)
+    }
+  }
+
+  test("a DELETE's publish subtracts a concurrent pure delete's " +
+      "overlapping positions and re-stages its change rows; overlap " +
+      "with a concurrent UPDATE stays a lost update; a fully " +
+      "overlapped DELETE publishes nothing and leaves no staging") {
+    import spark.implicits._
+    val root = tempDir("gldop-absorb")
+    val dir = s"$root/t"
+    withCatalog(root) { cat =>
+      spark.sql(s"CREATE TABLE $cat.t TBLPROPERTIES " +
+        "('deletion_vectors'='true') AS " +
+        "SELECT id, CAST(id AS DOUBLE) AS v FROM range(0, 1000)")
+      val f = fsOf(dir)
+      val observed = VersionedLake.tip(spark, dir).get
+      val snap = VersionedLake.manifestEntries(spark, dir, observed)
+      // every row's address at the observed version, for staging
+      // positions and deriving change rows the way the delta write does
+      spark.sql(s"SELECT id, __graft_file AS fkey, __graft_pos AS pos " +
+        s"FROM $cat.t")
+        .selectExpr("id", "substring_index(fkey, '/', 1) AS entry",
+          "substring_index(fkey, '/', -1) AS file", "pos")
+        .write.parquet(s"$root/addr")
+      val addr = spark.read.parquet(s"$root/addr")
+      def stage(uuid: String, ids: Seq[Long])
+          : org.apache.hadoop.fs.Path = {
+        val p = s"$dir/_deletes/stage-$uuid"
+        addr.filter(col("id").isin(ids: _*))
+          .select("entry", "file", "pos").coalesce(1).write.parquet(p)
+        new org.apache.hadoop.fs.Path(p)
+      }
+      def changeRows(uuid: String, stagePath: org.apache.hadoop.fs.Path)
+          : Unit = {
+        val out = new org.apache.hadoop.fs.Path(s"$dir/_changes/dv-$uuid")
+        f.delete(out, true)
+        spark.read.parquet(stagePath.toString)
+          .join(addr, Seq("entry", "file", "pos")).select("id")
+          .withColumn("_change_type", lit("delete"))
+          .write.parquet(out.toString)
+      }
+      def publish(uuid: String, p: org.apache.hadoop.fs.Path): Option[Int] = {
+        changeRows(uuid, p)
+        VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
+          spark, dir, observed, snap.toSet, snap, Seq.empty, Some(p), uuid,
+          None, Some(() => changeRows(uuid, p))))
+      }
+      def sidecarOf(uuid: String): Seq[String] =
+        f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_deletes"))
+          .map(_.getPath.getName).filter(_.matches(s"v\\d+-$uuid")).toSeq
+
+      // 1. overlap with a concurrent PURE delete: the rest publishes
+      val ours = stage("a1b2c3d4e5f6", 10L until 20L)
+      spark.sql(s"DELETE FROM $cat.t WHERE id IN " +
+        (15L until 25L).mkString("(", ",", ")"))
+      val v1 = publish("a1b2c3d4e5f6", ours)
+      assert(v1.contains(observed + 2),
+        "the DELETE must publish the positions left after subtraction")
+      val bound = f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_deletes"))
+        .map(_.getPath).filter(_.getName.startsWith("v")).map(_.toString)
+      assert(bound.length == 2)
+      val all = spark.read.parquet(bound.toSeq: _*)
+        .select("entry", "file", "pos")
+      assert(all.count() == 15 && all.distinct().count() == 15,
+        "no position may be published twice")
+      val fed = spark.read.parquet(s"$dir/_changes/dv-a1b2c3d4e5f6")
+        .select("id").as[Long].collect().sorted.toSeq
+      assert(fed == (10L until 15L),
+        "the change rows must be re-staged without the absorbed rows")
+      assert(spark.table(s"$cat.t").count() == 1000 - 15)
+
+      // 2. the same overlap with a concurrent UPDATE: a lost update,
+      // and the sidecar goes back on its stage path
+      val observedU = VersionedLake.tip(spark, dir).get
+      val snapU = VersionedLake.manifestEntries(spark, dir, observedU)
+      val oursU = {
+        val p = s"$dir/_deletes/stage-b1b2c3d4e5f6"
+        spark.sql(s"SELECT __graft_file AS fkey, __graft_pos AS pos " +
+          s"FROM $cat.t WHERE id >= 30 AND id < 40")
+          .selectExpr("substring_index(fkey, '/', 1) AS entry",
+            "substring_index(fkey, '/', -1) AS file", "pos")
+          .coalesce(1).write.parquet(p)
+        new org.apache.hadoop.fs.Path(p)
+      }
+      spark.sql(s"UPDATE $cat.t SET v = -1.0 WHERE id >= 35 AND id < 45")
+      val e = intercept[java.util.ConcurrentModificationException] {
+        VersionedLake.publish(spark, dir, VersionedLake.mergeOnReadCommit(
+          spark, dir, observedU, snapU.toSet, snapU, Seq.empty, Some(oursU),
+          "b1b2c3d4e5f6", None, Some(() => ())))
+      }
+      assert(e.getMessage.contains("lost update"), e.getMessage)
+      assert(f.exists(oursU) && sidecarOf("b1b2c3d4e5f6").isEmpty,
+        "a refusal must leave the sidecar on its stage path")
+      f.delete(oursU, true)
+
+      // 3. every position already deleted concurrently: nothing is
+      // published and no staging is left
+      val tipBefore = VersionedLake.tip(spark, dir).get
+      val gone = stage("c1b2c3d4e5f6", 50L until 55L)
+      spark.sql(s"DELETE FROM $cat.t WHERE id >= 50 AND id < 60")
+      assert(publish("c1b2c3d4e5f6", gone).isEmpty,
+        "a fully overlapped DELETE must publish nothing")
+      assert(VersionedLake.tip(spark, dir).contains(tipBefore + 1))
+      assert(!f.exists(gone) && sidecarOf("c1b2c3d4e5f6").isEmpty &&
+        !f.exists(new org.apache.hadoop.fs.Path(
+          s"$dir/_deletes/stage-c1b2c3d4e5f6.rest")) &&
+        !f.exists(new org.apache.hadoop.fs.Path(
+          s"$dir/_changes/dv-c1b2c3d4e5f6")),
+        "no staging may be left behind")
+      assert(spark.table(s"$cat.t").count() == 1000 - 25)
     }
   }
 

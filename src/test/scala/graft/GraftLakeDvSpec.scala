@@ -257,19 +257,52 @@ class GraftLakeDvSpec extends AnyFunSuite {
       spark.sql(s"INSERT INTO $cat.t " +
         "SELECT /*+ REPARTITION(8, skey) */ * FROM gldv_prune_src " +
         "WHERE id >= 2000")
-      val dir = s"$root/t"
-      val tip = VersionedLake.tip(spark, dir).get
-      val snapshot = VersionedLake.manifestEntries(spark, dir, tip)
-      val snap = VersionedLake.resolve(spark, dir, tip)
-      val all = VersionedLake.dvPruneFiles(spark, snap, snapshot, None,
-        Seq.empty)
-      val probedFiles = VersionedLake.dvPruneFiles(spark, snap, snapshot,
-        None, Seq(("skey", Seq("k7", "k3105"))))
-      assert(probedFiles.nonEmpty && probedFiles.length < all.length,
+      val all = GraftLakeDataSource.filesRead(spark.table(s"$cat.t"))
+      // capture the DELETE's executed delta-write plan — commands return
+      // no DataFrame handle to walk
+      @volatile var captured
+          : Option[org.apache.spark.sql.execution.SparkPlan] = None
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit =
+          if (qe.executedPlan.getClass.getSimpleName
+              .startsWith("WriteDelta"))
+            captured = Some(qe.executedPlan)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        spark.sql(s"DELETE FROM $cat.t WHERE skey IN ('k7', 'k3105')")
+        org.apache.spark.graft.ListenerBusFlush.waitUntilEmpty(
+          spark.sparkContext, 120000)
+      } finally spark.listenerManager.unregister(listener)
+      import org.apache.spark.sql.execution.SparkPlan
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive
+          .QueryStageExec => walk(q.plan)
+        case other =>
+          other +: (other.children ++ other.subqueries).flatMap(walk)
+      }
+      val probedFiles = walk(captured.getOrElse(
+        fail("listener captured no delta-write plan"))).collect {
+        case b: org.apache.spark.sql.execution.datasources.v2
+          .BatchScanExec if b.scan.isInstanceOf[GraftLakeDeltaScan] =>
+          b.scan.asInstanceOf[GraftLakeDeltaScan].planInputPartitions()
+            .map {
+              case fp: org.apache.spark.sql.execution.datasources
+                .FilePartition => fp.files.length
+              case _ => 0
+            }.sum
+      }.sum
+      assert(probedFiles > 0 && probedFiles < all,
         s"bloom must file-prune the position scan " +
-          s"(${probedFiles.length} of ${all.length})")
+          s"($probedFiles of $all)")
       // and the pruned delete is still EXACT
-      spark.sql(s"DELETE FROM $cat.t WHERE skey IN ('k7', 'k3105')")
       val t = spark.table(s"$cat.t")
       assert(t.count() == 3998)
       assert(t.filter(col("skey").isin("k7", "k3105")).count() == 0)

@@ -8,7 +8,8 @@ import graft.engine._
 
 /** Crash points of every library publish policy: a checked survivor
   * rewrite (library `deleteRange`, unpartitioned SQL overwrite-by-
-  * filter, a copy-on-write SQL MERGE on a partitioned lake), an absorbed
+  * filter, a copy-on-write SQL MERGE on a partitioned lake), a
+  * merge-on-read SQL DELETE on a deletion-vector lake, an absorbed
   * append (`commitTagged`) and a layout-only checked commit
   * (`compactSmall`, flat and partitioned) run once per filesystem step
   * k = 1..N of the commit, with the k-th mutating call (create, rename,
@@ -70,7 +71,8 @@ class RewriteCrashSpec extends AnyFunSuite {
     * the retry must also leave the tip at v4: a commit the crash
     * already published is not published again. */
   private def enumerate(lakeAt: Int => String, after: Seq[(Long, Long)],
-      exactlyOnce: Boolean = false)(op: String => Unit): Int = {
+      exactlyOnce: Boolean = false,
+      invariant: String => Unit = _ => ())(op: String => Unit): Int = {
     CrashingFileSystem.install(spark)
     val clean = lakeAt(0)
     val (n, err) = CrashingFileSystem.run(0)(op(clean))
@@ -84,9 +86,11 @@ class RewriteCrashSpec extends AnyFunSuite {
       assert(t == 3 || t == 4, s"step $k/$n ($crash): tip v$t")
       assert(rows(dir) == (if (t == 3) before else after),
         s"step $k/$n ($crash): rows of v$t")
+      invariant(dir)
       VersionedLake.repairTornManifests(spark, dir, staleMs = 0L)
       op(dir)
       assert(rows(dir) == after, s"step $k/$n ($crash): retry did not converge")
+      invariant(dir)
       if (exactlyOnce)
         assert(VersionedLake.tip(spark, dir).contains(4),
           s"step $k/$n ($crash): the retry published again")
@@ -118,6 +122,37 @@ class RewriteCrashSpec extends AnyFunSuite {
     val n = enumerate(k => copyOfBase(s"$root/t$k"), after) { dir =>
       replacement.writeTo(s"rwcrash.${dir.split('/').last}")
         .overwrite(col("id") >= 12 && col("id") <= 15)
+    }
+    info(s"$n crash points")
+  }
+
+  test("merge-on-read SQL DELETE on a deletion-vector lake: a crash at " +
+      "any filesystem step leaves v3 or v4 readable with its rows, no " +
+      "unbound sidecar applies, and repair plus retry converge") {
+    val root = tempDir("rwcrash-dv")
+    spark.conf.set("spark.sql.catalog.rwcrash_dv",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.rwcrash_dv.root", s"crashfs://$root")
+    val keys = Set(12L, 14L, 25L)
+    val after = before.filterNot { case (i, _) => keys(i) }
+    val n = enumerate(k => {
+        val dir = copyOfBase(s"$root/t$k")
+        VersionedLake.setDeletionVectors(spark, dir)
+        dir
+      }, after,
+      // exactly the published version's positions apply: none at v3,
+      // the three deleted rows once at v4 (a crashed attempt's
+      // sidecar never binds)
+      invariant = { dir =>
+        val t = VersionedLake.tip(spark, dir).get
+        val applied = VersionedLake.dvRefs(spark, dir, t).values
+          .map(_.count).sum
+        assert(applied == (if (t == 3) 0L else keys.size.toLong),
+          s"v$t applies $applied positions")
+      }) { dir =>
+      spark.sql(s"DELETE FROM rwcrash_dv.`${dir.split('/').last}` " +
+        s"WHERE id IN (${keys.mkString(", ")})")
+      ()
     }
     info(s"$n crash points")
   }

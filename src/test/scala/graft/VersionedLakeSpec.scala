@@ -390,6 +390,31 @@ class VersionedLakeSpec extends AnyFunSuite {
     assert(creators == Set("VersionedLake.scala#writeSidecars"), creators)
   }
 
+  test("one merge-on-read DELETE writer: the metadata DV delete and its " +
+      "file pruner are gone, and only the delta writer factory writes " +
+      "positions parts") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val gone = Seq("deleteVectors", "dvPruneFiles").map(n => s"\\b$n\\b".r)
+    // the top-level class/object each line belongs to
+    val topLevel = """^(?:[\w\[\]]+ )*(?:class|object|trait) (\w+).*""".r
+    val writers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        var cur = ""
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (l, i) =>
+          l match { case topLevel(n) => cur = n; case _ => () }
+          gone.foreach(g =>
+            assert(g.findFirstIn(l).isEmpty, s"$p:${i + 1}: $l"))
+          if (l.contains("writePosPart(")) Some(s"${p.getFileName}#$cur")
+          else None
+        }
+      }.toSet
+    assert(writers == Set("GraftLakeDeltaOp.scala#GraftLakeDeltaWriterFactory"),
+      writers)
+  }
+
   test("tip resolution: the hint-checkpointed tip equals the listed " +
       "tip under publishes, hint loss, torn/stale hints, and vacuum") {
     import spark.implicits._
