@@ -1,7 +1,12 @@
 package graft.engine
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,7 +15,7 @@ import org.apache.spark.sql.types._
   * a header row, converted to an enriched, date-partitioned columnar table.
   *
   * Semantics implemented (with reference sites):
-  *  - S4 header probe: `read.csv(...).limit(8).collect()(7)` (sparkle-v9.py:92-93)
+  *  - S4 header probe: record 8, read by [[readPreamble]] (sparkle-v9.py:92-93)
   *  - S1 explicit header-derived schema (sparkle-v9.py:100-102) — but typed
   *    per the gen_schema.py:5-14 rules rather than v9's all-double defect D2
   *  - preamble parse with trim, v5 semantics (sparkle-v5.py:65-84) — real
@@ -28,9 +33,9 @@ import org.apache.spark.sql.types._
   * shuffle-free declarative plan per file — Catalyst keeps it in one
   * codegen'd stage and the partitioned write splits files without a
   * shuffle. Preamble rows are dropped by a null-predicate on the typed
-  * read (declarative, executor-side), not a driver `collect`; the only
-  * driver reads are the 7/8-row bounded probes (LimitPushDown stops the
-  * scan early). At 6,039 columns codegen falls back gracefully
+  * read (declarative, executor-side), not a driver `collect`; the one
+  * driver read, [[readPreamble]], starts no Spark job, so a drop ingests
+  * in one job. At 6,039 columns codegen falls back gracefully
   * (spark.sql.codegen.maxFields) — covered by the wide-fixture test.
   */
 object Ingest {
@@ -124,28 +129,42 @@ object Ingest {
 
   // ---- probes -------------------------------------------------------------
 
-  /** S4: read the first 8 rows and take row 8 as the header
-    * (sparkle-v9.py:92-93). The schemaless read derives the column count
-    * from the first line, which is why the format pads every preamble row
-    * to full width. LimitPushDown bounds the scan to 8 rows. */
-  def probeHeader(spark: SparkSession, path: String): Seq[String] = {
-    val rows = spark.read.option("header", "false").csv(path).limit(8).collect()
-    require(rows.length >= 8, s"$path: fewer than 8 rows — not preamble-CSV")
-    rows(7).toSeq.map(v => Option(v).map(_.toString.trim).getOrElse(""))
+  /** S4 + P9: the header (record 8, sparkle-v9.py:92-93) and trimmed
+    * key/value metadata (records 1-7, sparkle-v5.py:65-84) of one drop,
+    * read on the driver with no Spark job: the first 8 records, through
+    * the line reader (BOM, codec, line separator) and tokenizer of the
+    * executor-side CSV scan and under its rules. Whitespace-only lines
+    * are not records; the header takes the first record's width
+    * (truncated or padded with ""), the column count a schemaless read
+    * derives, which is why the format pads every preamble row. */
+  def readPreamble(spark: SparkSession, path: String): (Seq[String], PreambleMeta) = {
+    val opts = new CSVOptions(Map.empty[String, String], false,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val lines = new HadoopFileLinesReader(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(p), 0, p.getFileSystem(conf).getFileStatus(p).getLen),
+      opts.lineSeparatorInRead, conf)
+    val records = try {
+      val parser = new CsvParser(opts.asParserSettings)
+      CSVExprUtils.filterCommentAndEmpty(
+          lines.map(t => new String(t.getBytes, 0, t.getLength, opts.charset)), opts)
+        .take(8).map(parser.parseLine(_).toSeq).toVector
+    } finally lines.close()
+    require(records.length >= 8, s"$path: fewer than 8 rows — not preamble-CSV")
+    def cell(r: Seq[String], i: Int) = r.lift(i).flatMap(Option(_)).map(_.trim)
+    val header = records(0).indices.map(cell(records(7), _).getOrElse(""))
+    val kv = records.take(7).flatMap(r => cell(r, 0).map(_ -> cell(r, 1).getOrElse("")))
+    (header, PreambleMeta.fromMap(kv.toMap))
   }
 
-  /** S4 + P9: parse the key/value preamble (rows 1-6) with a 2-column
-    * schema and `limit(7)`, trimming values — v5 semantics
-    * (sparkle-v5.py:65-84). */
-  def parsePreamble(spark: SparkSession, path: String): PreambleMeta = {
-    val kv = spark.read.schema(kvSchema).csv(path).limit(7).collect()
-      .flatMap { r =>
-        Option(r.getString(0)).map { k =>
-          k.trim -> Option(r.getString(1)).map(_.trim).getOrElse("")
-        }
-      }.toMap
-    PreambleMeta.fromMap(kv)
-  }
+  /** S4: the header row of [[readPreamble]]. */
+  def probeHeader(spark: SparkSession, path: String): Seq[String] =
+    readPreamble(spark, path)._1
+
+  /** S4 + P9: the preamble metadata of [[readPreamble]]. */
+  def parsePreamble(spark: SparkSession, path: String): PreambleMeta =
+    readPreamble(spark, path)._2
 
   // ---- schema -------------------------------------------------------------
 
@@ -274,12 +293,11 @@ object Ingest {
 
   // ---- full pipeline --------------------------------------------------------
 
-  /** One file: probe → schema → typed read → preamble drop → enrichment →
+  /** One file: preamble → schema → typed read → preamble drop → enrichment →
     * time derivation. Returns the lake-ready DataFrame (lazy plan; nothing
     * materializes until the caller writes). */
   def ingestFile(spark: SparkSession, path: String): DataFrame = {
-    val headers = probeHeader(spark, path)
-    val meta = parsePreamble(spark, path)
+    val (headers, meta) = readPreamble(spark, path)
     val raw = readCsv(spark, path, rawReadSchema(headers))
     deriveTime(enrich(dropPreambleRows(raw), meta))
   }

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object IngestQueries {
 
-  /** Fixed fixture root: the DuckDB oracle runs in a separate process
-    * after Verify, so paths must be absolute and stable. */
-  val FixRoot = "/tmp/graft_fixtures"
+  /** Fixture root, absolute and stable because the DuckDB oracle reads
+    * it after Verify, and one per checkout (keyed on the working
+    * directory) so two checkouts can verify side by side. */
+  val FixRoot = f"/tmp/graft_fixtures-${System.getProperty("user.dir").hashCode}%08x"
 
   /** Per-PID root for lakes the queries BUILD AND MUTATE in place
     * (compact / upsert / z-order): unlike the write-once oracle

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine._
 
 class IngestSpec extends AnyFunSuite {
-  import TestSpark.{spark, tempDir}
+  import TestSpark.{jobsDuring, spark, tempDir}
 
   private val A = EegFixture.specA
 
@@ -26,6 +26,117 @@ class IngestSpec extends AnyFunSuite {
     val h = Ingest.probeHeader(spark, path)
     assert(h == EegFixture.headers(A))
     assert(h.take(2) == Seq("ClockDateTime", "Time"))
+  }
+
+  /** The Spark probes `readPreamble` replaced, kept here as the parity
+    * reference: a schemaless `limit(8)` read for the header and a
+    * `kvSchema` `limit(7)` read for the metadata. */
+  private def sparkProbe(path: String): (Seq[String], Ingest.PreambleMeta) = {
+    val rows = spark.read.option("header", "false").csv(path).limit(8).collect()
+    require(rows.length >= 8, s"$path: fewer than 8 rows — not preamble-CSV")
+    val header = rows(7).toSeq.map(v => Option(v).map(_.toString.trim).getOrElse(""))
+    val kv = spark.read.schema(Ingest.kvSchema).csv(path).limit(7).collect()
+      .flatMap { r =>
+        Option(r.getString(0)).map { k =>
+          k.trim -> Option(r.getString(1)).map(_.trim).getOrElse("")
+        }
+      }.toMap
+    (header, Ingest.PreambleMeta.fromMap(kv))
+  }
+
+  private def writeBytes(dir: String, name: String, bytes: Array[Byte]): String = {
+    val p = java.nio.file.Paths.get(dir, name)
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.write(p, bytes)
+    p.toString
+  }
+
+  private def writeLines(dir: String, name: String, lines: Seq[String],
+      sep: String = "\n", bom: Boolean = false): String =
+    writeBytes(dir, name, (if (bom) Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte)
+      else Array.emptyByteArray) ++ lines.mkString("", sep, sep).getBytes("UTF-8"))
+
+  private val preamble = Seq(
+    "File,p.csv,,,", "PatientName,Alice Smith,,,", "PatientID,P-1,,,",
+    "PatientBirthDate,1980/2/3,,,", "TestDate,2019/7/15,,,",
+    "TestTime,13:5:42,,,", ",,Group 1,,")
+  private val header = "ClockDateTime,Time,I1_1,I1_2,I1_3"
+  private val data = Seq("15631.488,0,0.5,0.25,0.125")
+
+  test("readPreamble matches the Spark probes on every preamble shape") {
+    val dir = tempDir("ing-parity")
+    val gz = {
+      val bos = new java.io.ByteArrayOutputStream
+      val z = new java.util.zip.GZIPOutputStream(bos)
+      z.write((preamble ++ (header +: data)).mkString("", "\n", "\n").getBytes("UTF-8"))
+      z.close()
+      writeBytes(dir, "gzip.csv.gz", bos.toByteArray)
+    }
+    val fixtures = Seq(
+      EegFixture.write(dir, A),
+      writeLines(dir, "quoted.csv", preamble.updated(1,
+        "PatientName,\"Smith, Alice\",,,").updated(2,
+        "\" PatientID \",P-1,,,") ++ (header +: data)),
+      writeLines(dir, "blank.csv", preamble.take(2) ++ Seq("", "   ") ++
+        preamble.drop(2) ++ (header +: data)),
+      writeLines(dir, "crlf.csv", preamble ++ (header +: data), sep = "\r\n"),
+      writeLines(dir, "bom.csv", preamble ++ (header +: data), bom = true),
+      writeLines(dir, "wide_header.csv", Seq("File,w.csv,,",
+        "PatientName", "PatientID,P-2", "PatientBirthDate,1980/2/3",
+        "TestDate", "TestTime,1:2:3", ",") ++ (header +: data)),
+      writeLines(dir, "narrow_header.csv", preamble ++
+        ("ClockDateTime,Time" +: data)),
+      writeLines(dir, "empty_key.csv", preamble.updated(3,
+        "\"\",1980/2/3,,,").updated(4, ",2019/7/15,,,") ++ (header +: data)),
+      gz)
+    fixtures.foreach { f =>
+      assert(Ingest.readPreamble(spark, f) == sparkProbe(f), f)
+    }
+    val (quotedHeader, quoted) = Ingest.readPreamble(spark, fixtures(1))
+    assert(quoted.patientName == "Smith, Alice" && quoted.patientId == "P-1")
+    assert(quotedHeader == header.split(",").toSeq)
+    assert(Ingest.readPreamble(spark, fixtures(2))._2.patientId == "P-1")
+    assert(Ingest.readPreamble(spark, fixtures(4))._2.file == "p.csv")
+    val (wideHeader, wide) = Ingest.readPreamble(spark, fixtures(5))
+    assert(wideHeader == Seq("ClockDateTime", "Time", "I1_1", "I1_2"))
+    assert(wide.patientName == "" && wide.patientId == "P-2")
+    assert(Ingest.readPreamble(spark, fixtures(6))._1 ==
+      Seq("ClockDateTime", "Time", "", "", ""))
+    val emptyKey = Ingest.readPreamble(spark, fixtures(7))._2
+    assert(emptyKey.patientBirthDate == "" && emptyKey.testDate == "")
+
+    val short = writeLines(dir, "short.csv", preamble)
+    val want = intercept[IllegalArgumentException](sparkProbe(short)).getMessage
+    assert(intercept[IllegalArgumentException](
+      Ingest.readPreamble(spark, short)).getMessage == want)
+  }
+
+  test("the preamble is read with no Spark job; one drop ingests in one job") {
+    import org.apache.spark.sql.functions.col
+    val root = tempDir("ing-jobs")
+    val path = writeLines(s"$root/in", "drop.csv", preamble ++ Seq(header,
+      "15631.488,0,0.5,0.25,0.125",
+      "15632.352,1,1.5,1.25,1.125",
+      "15632.388,2,2.5,2.25,2.125"))
+    assert(jobsDuring(Ingest.probeHeader(spark, path))._2 == 0)
+    assert(jobsDuring(Ingest.parsePreamble(spark, path))._2 == 0)
+    val (files, jobs) = jobsDuring(Ingest.ingestBatch(spark, s"$root/in",
+      s"$root/lake", s"$root/reg", s"$root/done"))
+    assert(files.map(f => f.substring(f.lastIndexOf('/') + 1)) == Seq("drop.csv"))
+    assert(jobs == 1)
+    // 15631.488 * 1e5 s = 2019-07-15 00:00:00 UTC; +86,400 s; +90,000 s
+    val got = Lake.read(spark, s"$root/lake")
+      .select(col("Time"), col("I1_3"), col("Timestamp").cast("string"),
+        col("Year"), col("Month"), col("Day"), col("PatientName"),
+        col("PatientID"), col("PatientBirthDate").cast("string"),
+        col("TestDate").cast("string"), col("TestTime"))
+      .orderBy(col("Time")).collect().map(_.toSeq).toSeq
+    def row(t: Double, v: Double, ts: String, day: Int) = Seq[Any](t, v, ts,
+      2019, 7, day, "Alice Smith", "P-1", "1980-02-03", "2019-07-15", "13:5:42")
+    assert(got == Seq(
+      row(0, 0.125, "2019-07-15 00:00:00", 15),
+      row(1, 1.125, "2019-07-16 00:00:00", 16),
+      row(2, 2.125, "2019-07-16 01:00:00", 16)))
   }
 
   test("ingestFile: preamble dropped, enrichment typed, time derived") {

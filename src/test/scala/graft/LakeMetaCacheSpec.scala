@@ -9,30 +9,10 @@ import graft.engine._
   * job and re-plan from the cache, and no cached listing or sidecar
   * outlives a lake deleted and re-created at the same path. */
 class LakeMetaCacheSpec extends AnyFunSuite {
-  import TestSpark.{spark, tempDir}
+  import TestSpark.{jobsDuring, spark, tempDir}
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-
-  private def drain(): Unit =
-    org.apache.spark.graft.ListenerBusFlush.waitUntilEmpty(
-      spark.sparkContext, 120000)
-
-  /** Jobs started while `body` runs, counted by a listener after the
-    * bus drained. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    drain()
-    spark.sparkContext.addSparkListener(l)
-    try { val r = body; drain(); (r, n.get) }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("snapshot reads of a 40-dir lake plan without a listing job, and " +
       "a second plan of the same version is served from the cache") {

@@ -9,4 +9,22 @@ object TestSpark {
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Jobs started while `body` runs, counted by a listener after the
+    * bus drained. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    def drain(): Unit = org.apache.spark.graft.ListenerBusFlush.waitUntilEmpty(
+      spark.sparkContext, 120000)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    drain()
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; drain(); (r, n.get) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }
