@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Lake maintenance as SQL stored procedures (Spark 4's
   * `ProcedureCatalog`), completing the "every lake capability
   * reachable from SQL" seam: reads go through the `graftlake` format /
-  * catalog, DML through [[GraftLakeWrite]]/[[GraftLakeDelete]], and
+  * catalog, DML through [[GraftLakeWrite]]/[[GraftLakeTable]], and
   * the LIFECYCLE operations — history, vacuum, compaction, Z-order —
   * through `CALL`:
   *

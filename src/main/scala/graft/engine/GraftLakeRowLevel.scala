@@ -14,11 +14,13 @@ import org.apache.spark.sql.execution.datasources.{FilePartition,
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Group-based copy-on-write row-level operations for the lake: SQL
-  * `MERGE INTO`, `UPDATE`, and `DELETE` with predicates the metadata
-  * path ([[GraftLakeDelete]]) cannot express. Spark's rewrite rules
-  * turn each into a ReplaceData plan — read the affected GROUPS, apply
-  * the mutation rowwise, write the groups back — and this connector
-  * maps "group" to the manifest's replacement unit, the data dir:
+  * `MERGE INTO`, `UPDATE`, and a `DELETE` whose predicate Spark cannot
+  * push to the table whole (`user_id % 7 = 3`; every other DELETE is
+  * the metadata commit of [[GraftLakeTable.canDeleteWhere]]). Spark's
+  * rewrite rules turn each into a ReplaceData plan — read the affected
+  * GROUPS, apply the mutation rowwise, write the groups back — and this
+  * connector maps "group" to the manifest's replacement unit, the data
+  * dir:
   *
   *  - the operation SCAN reads whole dirs (no file-level static
   *    pruning: a file pruned out of the scan is a file NOT replaced,
@@ -39,10 +41,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Lakes without deletion vectors only: a DV lake's row-level SQL is
   * merge-on-read ([[GraftLakeDeltaOperation]]). A DELETE whose
-  * predicate [[GraftLakeTable.canDeleteWhere]] accepts (the truncate, a
-  * partition-decidable delete, one numeric interval) never gets here:
-  * Spark prefers that metadata commit and plans this rewrite
-  * otherwise. */
+  * predicate [[GraftLakeTable.canDeleteWhere]] accepts (every filter
+  * pushed whole with an exact replay) never gets here: Spark prefers
+  * that metadata commit ([[VersionedLake.replaceWhere]]) and plans
+  * this rewrite otherwise. */
 final class GraftLakeRowLevelOperation(table: GraftLakeTable,
     spark: SparkSession, private[engine] val snap: Snapshot,
     cmd: RowLevelOperation.Command)

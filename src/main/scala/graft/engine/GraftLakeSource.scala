@@ -393,7 +393,7 @@ object GraftLakeDataSource {
   * stage parquet and swing the same manifest CAS as
   * [[VersionedLake.commit]] (see [[GraftLakeWrite]]), and
   * `DELETE FROM` runs the stats-pruned survivor rewrite
-  * ([[GraftLakeDelete]]). Creation is SQL-first-class too:
+  * ([[VersionedLake.replaceWhere]]). Creation is SQL-first-class too:
   * `CREATE TABLE` publishes a schema-bearing empty version 1, and
   * CTAS / `REPLACE TABLE AS SELECT` are ATOMIC through the
   * `StagingTableCatalog` seam ([[GraftLakeStagedTable]] — data staged
@@ -1227,63 +1227,26 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
           snap, info.command())
     }
 
-  /** SQL `DELETE FROM` as a metadata commit, for the shapes that need
-    * no row-level scan: the always-true truncate, a partition-decidable
-    * delete on a partitioned lake (whole entries drop by manifest
-    * reference), and — on a lake WITHOUT deletion vectors — one closed
-    * numeric interval on one column, which [[VersionedLake.deleteRange]]
-    * executes as a stats-pruned rewrite-survivors commit (untouched data
-    * dirs carried by manifest reference, a no-match delete publishes
-    * nothing). Anything else reports `canDeleteWhere = false` and Spark
-    * plans the row-level operation instead: on a deletion-vector lake
-    * the merge-on-read DELETE ([[GraftLakeDeltaOperation]] — positions
+  /** SQL `DELETE FROM` as a metadata commit
+    * ([[VersionedLake.replaceWhere]], staging nothing) for every
+    * condition that reaches the table whole: each pushed filter has an
+    * exact replay ([[GraftLakeDelete.toColumn]]) and survives Spark's
+    * V1 conversion faithfully ([[faithfulToV1]]). A condition on
+    * partition columns only, or none (the truncate), drops whole entries
+    * by manifest reference; any other rewrites the survivors of the
+    * entries the sidecars cannot clear, and a no-match delete publishes
+    * nothing. On a deletion-vector lake only the whole-entry drop is
+    * taken. Everything else reports `canDeleteWhere = false` and Spark
+    * plans the row-level operation: the merge-on-read DELETE on a
+    * deletion-vector lake ([[GraftLakeDeltaOperation]]: positions
     * sidecar, zero data rewritten), otherwise the group-based
-    * copy-on-write rewrite ([[GraftLakeRowLevelOperation]]) — exact for
-    * every predicate, still one atomic version. Intervals refuse what
-    * they cannot express exactly (OR, IN, two columns, strings, float
-    * ranges unbounded above — NaN orders above +Inf in Spark). */
+    * copy-on-write rewrite ([[GraftLakeRowLevelOperation]]) for a
+    * predicate Spark cannot push (`user_id % 7 = 3`). */
   override def canDeleteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
-    val partCols = snap.partCols
-    if (partCols.nonEmpty)
-      filters.forall(f => GraftLakeDelete.toColumn(schema(), f).isDefined) &&
-        GraftLakePartitions.partitionDecidable(filters, partCols)
-    else GraftLakeDelete.translate(schema(), filters) match {
-      case Some(GraftLakeDelete.Truncate) => true
-      case Some(_: GraftLakeDelete.Range) => !snap.dvEnabled
-      case None => false
-    }
-  }
-
-  /** Whole-partition DELETE: every entry whose partition values make
-    * the predicate TRUE is dropped BY MANIFEST REFERENCE — zero data
-    * IO, the O(metadata) retention shape directory partitioning
-    * exists for. Exact catalyst evaluation of the predicate over the
-    * entry values (all rows of an entry share them); entries where it
-    * is FALSE or NULL survive whole. */
-  private def deleteWherePartitioned(
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      partCols: Seq[org.apache.spark.sql.types.StructField]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val pred = filters.toSeq
-      .map(f => GraftLakeDelete.toColumn(schema(), f).getOrElse(
-        throw new IllegalStateException(s"untranslatable filter $f")))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val cur = VersionedLake.current(spark, snap)
-    val snapshot = cur.entries
-    val (touched, kept) =
-      GraftLakePartitions.entriesWhere(spark, snapshot, partCols, pred)
-    if (touched.isEmpty) return // no partition matches: no new version
-    // a delete emptying the lake still needs a schema carrier
-    val added =
-      if (kept.nonEmpty) Seq.empty[String]
-      else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
-        VersionedLake.newDataDir(), schema(), partCols, cur.bloomCols))
-    VersionedLake.publish(spark, lakeDir, Commit(added, touched.toSet,
-      schema = Declared(Some(schema().json)), check = VersionedLake
-        .refuseConflicts(touched.toSet, Some(snapshot.toSet))))
-    ()
-  }
+      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
+    filters.forall(f => GraftLakeDelete.toColumn(schema(), f).isDefined) &&
+      (!snap.dvEnabled ||
+        GraftLakePartitions.partitionDecidable(filters, snap.partCols))
 
   /** GUARD against Spark's lossy V2→V1 predicate bridge:
     * `PredicateUtils.toV1` converts `OR(a, b)` with an untranslatable
@@ -1318,60 +1281,31 @@ final class GraftLakeTable(tableName: String, spark: SparkSession,
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val partCols = snap.partCols
-    if (partCols.nonEmpty) {
-      deleteWherePartitioned(filters, partCols)
-      return
-    }
-    GraftLakeDelete.translate(schema(), filters) match {
-      case Some(GraftLakeDelete.Truncate) =>
-        // manifest-level truncate: one empty-but-schema-bearing commit
-        // (SPARK-23271 writes a footer-only file), so the tip is an
-        // empty table and every prior version stays readable
-        VersionedLake.publish(spark, lakeDir, Commit(Seq(GraftLakePartitions
-          .seedEmpty(spark, lakeDir, VersionedLake.newDataDir(), schema(),
-            Nil, snap.bloomCols)), replaceAll = true,
-          schema = Declared(Some(schema().json))))
-        ()
-      case Some(GraftLakeDelete.Range(c, lo, hi)) =>
-        if (lo <= hi) {
-          VersionedLake.deleteRange(spark, VersionedLake.current(spark, snap),
-            c, lo, hi)
-          ()
-        } // empty interval: nothing can match — publish nothing
-      case None => throw new UnsupportedOperationException(
-        // defensive: unreachable through SQL — Spark consults
-        // canDeleteWhere first and routes untranslatable predicates to
-        // the row-level operation instead
-        "graftlake metadata DELETE supports one numeric range on one " +
-          "column (or no WHERE); richer predicates take the row-level " +
-          "path")
-    }
+    VersionedLake.replaceWhere(spark, snap, filters.toSeq, Nil,
+      VersionedLake.newDataDir())
+    ()
   }
 }
 
-/** Pushed-filter → delete-interval translation for [[GraftLakeTable]].
-  * Deliberately exact-or-refuse: every accepted shape provably deletes
-  * the SAME rows as catalyst would (NULLs never match a range in
-  * either engine; strict bounds become the adjacent representable
-  * double; integral literals beyond 2^52 are refused because the
-  * interval compares as double and would round). The one systematic
-  * divergence is NaN: Spark orders NaN above +Infinity, so `c > v`
-  * with no upper bound MATCHES NaN in catalyst but no closed [lo, hi]
-  * interval can — ranges unbounded above on float/double columns are
-  * therefore not translated (they take the copy-on-write path, which
-  * evaluates the predicate exactly) rather than silently keeping NaN
-  * rows. */
+/** Pushed V1 filters, as the conditional rewrites read them: the exact
+  * catalyst replay of a condition ([[toColumn]]), and the one closed
+  * interval the conjuncts on one numeric column compose into
+  * ([[translate]]), the stats bound of [[VersionedLake.entriesTouched]].
+  * The interval is exact-or-refuse, so it never clears an entry holding
+  * a row the condition matches: NULLs never match a range in either
+  * engine; strict bounds become the adjacent representable double;
+  * integral literals beyond 2^52 are refused because the interval
+  * compares as double and would round. The one systematic divergence
+  * is NaN: Spark orders NaN above +Infinity, so `c > v` with no upper
+  * bound MATCHES NaN in catalyst but no closed [lo, hi] interval can —
+  * ranges unbounded above on float/double columns are therefore not
+  * translated and bound nothing. */
 private[engine] object GraftLakeDelete {
   // the file imports catalyst's expressions of the same names; the
   // V1 pushdown filters need explicit qualification
   import org.apache.spark.sql.{sources => sf}
   import org.apache.spark.sql.sources.Filter
   import org.apache.spark.sql.types._
-
-  sealed trait Action
-  case object Truncate extends Action
-  final case class Range(col: String, lo: Double, hi: Double) extends Action
 
   private val MaxExactLong = 1L << 52
 
@@ -1427,16 +1361,10 @@ private[engine] object GraftLakeDelete {
     rec(f)
   }
 
+  /** The interval `(column, lo, hi)` the `conjuncts` compose into, if
+    * they are all bounds on one numeric top-level column. */
   def translate(schema: StructType,
-      filters: Array[Filter]): Option[Action] = {
-    def flatten(f: Filter): Seq[Filter] = f match {
-      case sf.And(a, b) => flatten(a) ++ flatten(b)
-      case other => Seq(other)
-    }
-    val conjuncts = filters.toSeq.flatMap(flatten)
-      .filterNot(_.isInstanceOf[sf.AlwaysTrue])
-    if (conjuncts.isEmpty) return Some(Truncate)
-
+      conjuncts: Seq[Filter]): Option[(String, Double, Double)] = {
     def numericTopLevel(a: String): Boolean =
       schema.fields.exists(f => f.name == a && (f.dataType match {
         case ByteType | ShortType | IntegerType | LongType |
@@ -1466,7 +1394,7 @@ private[engine] object GraftLakeDelete {
         Some((a, Double.NegativeInfinity, Double.PositiveInfinity))
       case _ => None
     }
-    if (bounds.exists(_.isEmpty)) return None
+    if (bounds.isEmpty || bounds.exists(_.isEmpty)) return None
     val bs = bounds.flatten
     val col = bs.head._1
     if (!bs.forall(_._1 == col) || !numericTopLevel(col)) return None
@@ -1474,7 +1402,7 @@ private[engine] object GraftLakeDelete {
     val hi = bs.map(_._3).min
     // NaN divergence (see scaladoc): refuse unbounded-above floats
     if (floating(col) && hi.isPosInfinity) return None
-    Some(Range(col, lo, hi))
+    Some((col, lo, hi))
   }
 }
 
@@ -1489,14 +1417,12 @@ private[engine] object GraftLakeDelete {
   * atomic versioned commit: rows matching the condition are deleted,
   * the new data appended, published together as a single manifest swap.
   * The condition is evaluated EXACTLY (the full pushed-filter algebra,
-  * [[GraftLakeDelete.toColumn]]). The dirs it rewrites are the ones
-  * [[VersionedLake.entriesTouched]] cannot clear — partition conjuncts
-  * by entry name, an interval by the stats sidecars, `=`/`IN` by stats
-  * and bloom — and their survivors go through the library's survivor
-  * rewrite ([[VersionedLake.rewriteEntries]]); every other live dir is
-  * carried by manifest reference, zero IO, the same selection and
-  * rewrite as [[VersionedLake.deleteRange]] and
-  * [[VersionedLake.replaceWhereIn]]. */
+  * [[GraftLakeDelete.toColumn]]) by the one conditional rewrite,
+  * [[VersionedLake.replaceWhere]], the commit of SQL `DELETE`,
+  * [[VersionedLake.deleteRange]] and [[VersionedLake.replaceWhereIn]]
+  * too: a partition condition swaps whole entries by manifest
+  * reference, any other rewrites only the survivors of the entries the
+  * sidecars cannot clear, and every other entry carries by reference. */
 final class GraftLakeWriteBuilder(table: GraftLakeTable, snap: Snapshot,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -1514,12 +1440,7 @@ final class GraftLakeWriteBuilder(table: GraftLakeTable, snap: Snapshot,
   // exact-or-refuse, consulted by Spark BEFORE overwrite(): a filter
   // shape toColumn cannot replay exactly surfaces as a clean analysis
   // error ("table does not support overwrite by filter"), never a
-  // wrong-rows commit. On a PARTITIONED lake a partition-decidable
-  // condition swaps whole partition entries by manifest reference
-  // (INSERT OVERWRITE ... PARTITION / the Y/M/D backfill shape, zero
-  // survivor IO); a data-column condition takes the partitioned COW
-  // path — only the partitions its partition-decidable conjuncts admit
-  // are rewritten, the rest carry by reference.
+  // wrong-rows commit
   override def canOverwrite(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     filters.forall(f =>
@@ -1531,10 +1452,7 @@ final class GraftLakeWriteBuilder(table: GraftLakeTable, snap: Snapshot,
     require(canOverwrite(filters),
       "graftlake overwrite-by-filter got an untranslatable condition " +
         s"(Spark should have consulted canOverwrite): ${filters.mkString(", ")}")
-    GraftLakeDelete.translate(table.schema(), filters) match {
-      case Some(GraftLakeDelete.Truncate) => truncate()
-      case _ => mode = "replace"; replaceCond = filters; this
-    }
+    mode = "replace"; replaceCond = filters; this
   }
 
   override def build(): org.apache.spark.sql.connector.write.Write = {
@@ -1628,8 +1546,15 @@ final class GraftLakeWrite(
     override def commit(msgs: Array[WriterCommitMessage]): Unit = {
       innerBatch.commit(msgs) // file committer: task temps -> staging dir
       val spark = SparkSession.active
+      if (mode == "replace") {
+        // the staged rows replace the rows the condition matches
+        VersionedLake.replaceWhere(spark, snap, replaceCond.toSeq,
+          if (partCols.isEmpty) Seq(dataDir)
+          else GraftLakePartitions.stagedEntries(spark, lakeDir, dataDir,
+            partCols.length), dataDir)
+        return
+      }
       if (partCols.nonEmpty) { commitPartitioned(spark); return }
-      if (mode == "replace") { commitReplace(spark); return }
       // every DML commit is auto-indexed (numeric range stats + the
       // lake's declared bloom columns, VersionedLake.indexStagedEntries)
       // — INSERT'd data is immediately skippable through the same
@@ -1642,168 +1567,28 @@ final class GraftLakeWrite(
       ()
     }
 
-    /** Partitioned commit: the dynamic-partition writer laid the staged
-      * rows out as `c=v` leaf dirs; publish one manifest entry per
-      * leaf, each with its own stats/bloom sidecars.
-      *
-      * A `replace` with a PARTITION-DECIDABLE condition swaps the
-      * matching partition entries by manifest reference with ZERO
-      * survivor IO (rows of an entry share its partition values, so
-      * the condition drops entries whole — INSERT OVERWRITE ...
-      * PARTITION, the Y/M/D backfill shape). A DATA-COLUMN condition
-      * takes the partitioned COW path: the rewrite set is the entries
-      * [[VersionedLake.entriesTouched]] cannot clear (a partition the
-      * condition's partition conjuncts falsify holds no matching row,
-      * nor does a file whose sidecars rule it out — both dropped at
-      * metadata cost); the surviving rows of the touched
-      * partitions rewrite INTO THE SAME partition leaves of the staged
-      * dir (partition boundaries never crossed — the entries-are-
-      * partition-leaves invariant holds by construction), every other
-      * partition carries by manifest reference. Both shapes enforce
-      * Delta's replaceWhere constraint: data written OUTSIDE the
-      * condition would silently duplicate rows beside the surviving
-      * partitions, so it is refused loudly — entry-level (free) when
-      * partition-decidable, one O(new data) scan otherwise. */
+    /** Partitioned append or overwrite: the dynamic-partition writer
+      * laid the staged rows out as `c=v` leaf dirs; publish one manifest
+      * entry per leaf, each with its own stats/bloom sidecars. A
+      * zero-row append publishes nothing; a zero-row overwrite publishes
+      * the schema carrier. */
     private def commitPartitioned(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.functions.{lit, not}
-      var entries = GraftLakePartitions.stagedEntries(spark, lakeDir,
+      val staged = GraftLakePartitions.stagedEntries(spark, lakeDir,
         dataDir, partCols.length)
-      val seeded = entries.isEmpty
-      val dataOnly = StructType(info.schema().filterNot(f =>
-        partCols.exists(_.name.equalsIgnoreCase(f.name))))
-      if (seeded) {
-        if (mode == "append") return // zero-row INSERT: publish nothing
-        entries = Seq(GraftLakePartitions.seedEmpty(spark, lakeDir,
-          dataDir, info.schema(), partCols, snap.bloomCols))
-      }
-      def indexAll(es: Seq[String]): Unit =
-        VersionedLake.indexStagedEntries(spark, lakeDir, es, dataOnly,
-          snap.bloomCols)
-      val declared = Declared(Some(tableSchema.json))
-      mode match {
-        case "append" | "overwrite" =>
-          if (!seeded) indexAll(entries)
-          VersionedLake.publish(spark, lakeDir, Commit(entries,
-            replaceAll = mode == "overwrite", schema = declared))
-          ()
-        case "replace" =>
-          val pred = replaceCond.toSeq
-            .map(f => GraftLakeDelete.toColumn(tableSchema, f).getOrElse(
-              throw new IllegalStateException(
-                s"untranslatable overwrite filter $f")))
-            .reduceOption(_ && _).getOrElse(lit(true))
-          val cur = VersionedLake.current(spark, snap)
-          val snapshot = cur.entries
-          if (GraftLakePartitions.partitionDecidable(replaceCond,
-              partCols)) {
-            // whole-partition swap. Constraint check is entry-level:
-            // every staged entry's partition values must satisfy the
-            // condition (the seeded zero-row carrier is exempt — it
-            // holds no rows to mis-place)
-            if (!seeded) {
-              val (_, outside) = GraftLakePartitions.entriesWhere(spark,
-                entries, partCols, pred)
-              require(outside.isEmpty,
-                "replaceWhere would write rows OUTSIDE the overwrite " +
-                  s"condition (partitions ${outside.map(
-                    _.dropWhile(_ != '/')).mkString(", ")}) — they " +
-                  "would duplicate beside the surviving partitions; " +
-                  "widen the condition or fix the written frame")
-            }
-            if (!seeded) indexAll(entries)
-            val (touched, _) = GraftLakePartitions.entriesWhere(spark,
-              snapshot, partCols, pred)
-            VersionedLake.publish(spark, lakeDir, Commit(entries,
-              touched.toSet, schema = declared, check = VersionedLake
-                .refuseConflicts(touched.toSet, Some(snapshot.toSet),
-                  Some(cur.version))))
-            ()
-          } else {
-            // partitioned COW: Delta's arbitrary replaceWhere. The
-            // survivors of the touched entries rewrite INTO the staged
-            // dir's own partition leaves ([[VersionedLake
-            // .rewriteEntries]]: deletion vectors applied, field ids
-            // matched and re-stamped). Three-valued logic: a row where
-            // the condition is NULL is not matched and must survive.
-            if (!seeded) {
-              val bad = GraftLakePartitions.readEntries(spark, lakeDir,
-                entries, partCols).filter(not(pred <=> lit(true))).count()
-              require(bad == 0L,
-                s"replaceWhere would write $bad rows that do NOT " +
-                  "satisfy the overwrite condition — they would " +
-                  "duplicate beside the surviving rows; widen the " +
-                  "condition or fix the written frame")
-            }
-            val touched = VersionedLake.entriesTouched(spark, cur,
-              snapshot, tableSchema, replaceCond.toSeq)
-            // sidecars AFTER the survivor append so they cover every
-            // file of every published leaf
-            val finalEntries =
-              if (touched.isEmpty) entries
-              else VersionedLake.rewriteEntries(spark, cur, touched,
-                dataDir)(_.filter(not(pred <=> lit(true)))).entries
-            indexAll(finalEntries)
-            publishOver(spark, cur, touched, finalEntries)
-          }
-      }
+      if (staged.isEmpty && mode == "append") return
+      val entries =
+        if (staged.nonEmpty) {
+          VersionedLake.indexStagedEntries(spark, lakeDir, staged,
+            snap.dataColumns(info.schema()), snap.bloomCols)
+          staged
+        } else Seq(GraftLakePartitions.seedEmpty(spark, lakeDir, dataDir,
+          info.schema(), partCols, snap.bloomCols))
+      VersionedLake.publish(spark, lakeDir, Commit(entries,
+        replaceAll = mode == "overwrite",
+        schema = Declared(Some(tableSchema.json))))
       ()
     }
 
-    /** The replaceWhere publish: `entries` replace the `touched` entries
-      * of `cur` (the tip it observed). Nothing touched is a plain
-      * append. Otherwise the commit is SERIALIZABLE
-      * ([[VersionedLake.refuseConflicts]]) — a concurrent rewrite of a
-      * touched entry, or an append landing after the survivor scan (it
-      * may hold rows matching the condition), is refused loudly for the
-      * caller to retry, the same call Delta/Iceberg's COW validation
-      * makes — and persists its row-level changes on a cdf lake. */
-    private def publishOver(spark: SparkSession, cur: Snapshot,
-        touched: Seq[String], entries: Seq[String]): Unit = {
-      val check: VersionedLake.Attempt => Boolean =
-        if (touched.isEmpty) _ => true
-        else VersionedLake.refuseConflicts(touched.toSet,
-          Some(cur.entries.toSet), Some(cur.version))
-      val v = VersionedLake.publish(spark, lakeDir, Commit(entries,
-        touched.toSet, schema = Declared(Some(tableSchema.json)),
-        check = check)).get
-      if (touched.nonEmpty && cur.cdf)
-        VersionedLake.writeChangeSidecar(spark, cur, v,
-          VersionedLake.cowChangeRows(spark, cur, touched, entries,
-            "REPLACE"))
-    }
-
-    /** replaceWhere commit: the staged dir already holds the new data
-      * (file committer landed above); rewrite the SURVIVORS of the
-      * condition-intersecting dirs into the same staged dir, then swap
-      * `tip \ touched + staged` in one manifest CAS. Pruning is
-      * metadata-only ([[VersionedLake.entriesTouched]]: stats and bloom
-      * sidecars) and conservative; dirs the sidecars cannot clear
-      * rewrite through the exact row filter.
-      * Publishes through [[publishOver]]. */
-    private def commitReplace(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.functions.{lit, not}
-      val pred = replaceCond
-        .map(f => GraftLakeDelete.toColumn(tableSchema, f).getOrElse(
-          throw new IllegalStateException( // canOverwrite gated this
-            s"untranslatable overwrite filter $f")))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val cur = VersionedLake.current(spark, snap)
-      val touched = VersionedLake.entriesTouched(spark, cur, cur.entries,
-        tableSchema, replaceCond.toSeq)
-      // survivors join the staged new data in its dir. Three-valued
-      // logic: a row where the condition is NULL is NOT matched — it
-      // must survive, so keep NOT(pred IS TRUE). On a DV lake, rows
-      // earlier vectors deleted are NOT survivors (the rewrite
-      // MATERIALIZES the touched dirs' vectors away)
-      if (touched.nonEmpty)
-        VersionedLake.rewriteEntries(spark, cur, touched,
-          dataDir)(_.filter(not(pred <=> lit(true))))
-      // sidecars AFTER the survivor append so they cover every file in
-      // the published dir (new data and survivors alike)
-      VersionedLake.indexStagedEntries(spark, lakeDir, Seq(dataDir),
-        tableSchema, cur.bloomCols)
-      publishOver(spark, cur, touched, Seq(dataDir))
-    }
     override def abort(msgs: Array[WriterCommitMessage]): Unit = {
       innerBatch.abort(msgs)
       val p = new Path(s"$lakeDir/$dataDir")

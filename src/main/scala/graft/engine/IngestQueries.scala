@@ -1060,15 +1060,15 @@ object IngestQueries {
         |       ROUND(SUM(value), 2) AS total_value
         |FROM base GROUP BY event_type
         |ORDER BY phase, event_type""".stripMargin) { (s, dir) =>
-      // SQL `DELETE FROM` as a versioned commit ([[GraftLakeDelete]]):
-      // the pushed range becomes VersionedLake.deleteRange — untouched
-      // dirs carried by manifest reference, only intersecting dirs
-      // rewritten, and a second DELETE whose range misses every file's
-      // stats proves itself a no-op WITHOUT publishing (the require
-      // below fails if it re-rewrote). Reading latest + VERSION AS OF 1
-      // pins both the survivor set (NULL-safe complement of the range)
-      // and the untouched pre-delete history against the oracle's
-      // from-raw re-derivation.
+      // SQL `DELETE FROM` as a versioned commit: the pushed range goes
+      // through VersionedLake.replaceWhere, the commit deleteRange
+      // makes too — untouched dirs carried by manifest reference, only
+      // intersecting dirs rewritten, and a second DELETE whose range
+      // misses every file's stats proves itself a no-op WITHOUT
+      // publishing (the require below fails if it re-rewrote). Reading
+      // latest + VERSION AS OF 1 pins both the survivor set (NULL-safe
+      // complement of the range) and the untouched pre-delete history
+      // against the oracle's from-raw re-derivation.
       val lake = s"$scratchRoot/del_lake_${new java.io.File(dir).getName}"
       Lake.delete(s, lake)
       val ev = Tables.table(s, dir, "events")
@@ -1255,7 +1255,7 @@ object IngestQueries {
         |ORDER BY phase, event_type""".stripMargin) { (s, dir) =>
       // SQL UPDATE (string LIKE predicate — no metadata shortcut
       // exists, so this IS the copy-on-write path) then a DELETE whose
-      // modulo predicate the range translation refuses, falling back
+      // modulo predicate Spark cannot push to the table, falling back
       // to the same COW machinery: two mutations, two versions, both
       // re-derived from raw by the oracle, pre-mutation snapshot
       // pinned via VERSION AS OF 1.

@@ -1053,10 +1053,11 @@ object VersionedLake {
     *  - an entry in `drops` left the tip — a concurrent compaction/
     *    delete/merge rewrote it, and its rows are baked into the adds, so
     *    publishing would duplicate or resurrect them;
-    *  - with `snapshot` (row-level DML only): an entry appeared that the
-    *    operation's snapshot never saw — a concurrent append may hold
-    *    rows MATCHING the operation's condition (a key a MERGE just
-    *    inserted, a row an UPDATE/DELETE should have touched). The
+    *  - with `snapshot` (row-level DML and [[replaceWhere]]): an entry
+    *    appeared that the operation's snapshot never saw — a concurrent
+    *    append may hold rows MATCHING the operation's condition (a key a
+    *    MERGE just inserted, a row an UPDATE/DELETE should have touched
+    *    or a replace should have replaced). The
     *    sidecars cannot prove it disjoint in general, so this is strict
     *    serializable (Delta/Iceberg's COW validation makes the same
     *    call). Compaction-style callers omit it: an appended entry they
@@ -1513,10 +1514,11 @@ object VersionedLake {
   // Cost at DML time is one netted diff over the CHANGED dirs only —
   // O(changed rows) extra write, the same trade Delta makes.
 
-  /** Opt this lake into row-level change capture: subsequent COW DML,
-    * deleteRange and replaceWhere commits persist their exact changed
-    * rows. Declared via `TBLPROPERTIES ('cdf' = 'true')` at CREATE or
-    * this call. */
+  /** Opt this lake into row-level change capture: subsequent COW DML
+    * and every survivor rewrite of [[replaceWhere]] (SQL DELETE and
+    * overwrite, [[deleteRange]], [[replaceWhereIn]]) persist their exact
+    * changed rows. Declared via `TBLPROPERTIES ('cdf' = 'true')` at
+    * CREATE or this call. */
   def setChangeDataFeed(spark: SparkSession, dir: String): Unit = {
     val out = fs(spark, dir).create(
       Snapshot.registryPath(dir, Snapshot.CdfReg), true)
@@ -2980,7 +2982,7 @@ object VersionedLake {
     }
   }
 
-  /** The entries of `live` a rewrite conditioned on `filters` (the
+  /** The live entries of `snap` a rewrite conditioned on `filters` (the
     * conjuncts of its delete or replace condition, over `schema`) must
     * touch: every other entry provably holds no row the condition makes
     * TRUE and carries by manifest reference. Each conjunct bounds the
@@ -2997,10 +2999,9 @@ object VersionedLake {
     *  - anything else bounds nothing.
     * Decimal columns never reach a sidecar here: they are neither
     * interval nor probe columns, since parquet records their ranges
-    * unscaled. Shared by [[deleteRange]], [[replaceWhereIn]] and the
-    * SQL overwrite-by-filter commits ([[GraftLakeWrite]]). */
-  private[engine] def entriesTouched(spark: SparkSession, snap: Snapshot,
-      live: Seq[String], schema: org.apache.spark.sql.types.StructType,
+    * unscaled. The rewrite set of [[replaceWhere]]. */
+  private def entriesTouched(spark: SparkSession, snap: Snapshot,
+      schema: org.apache.spark.sql.types.StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
     import org.apache.spark.sql.{sources => sf}
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -3014,12 +3015,12 @@ object VersionedLake {
         partCols.exists(_.name == r)))
     val byPartition =
       partF.flatMap(GraftLakeDelete.toColumn(schema, _)).reduceOption(_ && _)
-        .fold(live)(GraftLakePartitions.entriesWhere(spark, live, partCols,
-          _)._1)
+        .fold(snap.entries)(GraftLakePartitions.entriesWhere(spark,
+          snap.entries, partCols, _)._1)
     val ranges = dataF.groupBy(_.references.toSeq).toSeq.flatMap {
-      case (Seq(_), fs) => GraftLakeDelete.translate(schema, fs.toArray)
+      case (Seq(_), fs) => GraftLakeDelete.translate(schema, fs)
       case _ => None
-    }.collect { case GraftLakeDelete.Range(c, lo, hi) => (c, lo, hi) }
+    }
     if (ranges.exists(r => r._2 > r._3)) return Seq.empty
     // the values as the column's catalyst values, the form the probe
     // renders for the bloom; a value that does not cast, or a NaN the
@@ -3050,139 +3051,155 @@ object VersionedLake {
     }
   }
 
-  /** Targeted delete as a commit (the right-to-be-forgotten shape):
-    * remove every row with `c` in [lo, hi] by REWRITING ONLY the data
-    * dirs whose stats intersect the range ([[entriesTouched]]) —
-    * untouched dirs carry forward by reference, so the blast radius is
-    * the intersecting fraction, not the lake (at 100 TB the difference
-    * between a surgical rewrite and a full-table pass). Dirs without
-    * stats are conservatively rewritten. The survivors land in ONE new
-    * data dir ([[rewriteEntries]]; partition leaves kept), indexed by
-    * the DML policy ([[indexStagedEntries]]: numeric columns plus the
-    * lake's declared blooms), and the next manifest references
-    * untouched ∪ rewrite — published through the same CAS as every
-    * commit, CONFLICT-CHECKED: a concurrent APPEND that wins the CAS
-    * race is re-read and carried forward by the retry, while a
-    * concurrent rewrite of a touched dir (another delete, a
-    * compaction) fails the publish loudly instead of resurrecting its
-    * removed rows. Returns the new version, or the current one if
-    * nothing intersects (no-op, no new version). */
-  def deleteRange(spark: SparkSession, dir: String, c: String,
-      lo: Double, hi: Double): Int =
-    deleteRange(spark, resolveTip(spark, dir), c, lo, hi)
-
-  /** [[deleteRange]] on the snapshot `snap` — the tip the caller
-    * resolved. */
-  private[engine] def deleteRange(spark: SparkSession, snap: Snapshot,
-      c: String, lo: Double, hi: Double): Int = {
-    import org.apache.spark.sql.{sources => sf}
-    import org.apache.spark.sql.functions.col
-    val (dir, tipV) = (snap.dir, snap.version)
-    require(!snap.partCols.exists(_.name.equalsIgnoreCase(c)),
-      s"deleteRange on partition column '$c' — use the SQL partition " +
-        "DELETE (manifest-only) instead of a survivor rewrite")
-    val schema = schemaOf(spark, snap)
-    val touched = entriesTouched(spark, snap, snap.entries, schema,
-      Seq(sf.GreaterThanOrEqual(c, lo), sf.LessThanOrEqual(c, hi)))
-    if (touched.isEmpty) return tipV
-    // NULL-keyed rows are OUTSIDE any range — they must survive, and
-    // a bare !(range) would drop them (three-valued logic: !(NULL) is
-    // NULL, and Filter discards NULL). readSkipping has the matching
-    // property: a NULL never matches a probe but is never destroyed.
-    def keep(df: DataFrame): DataFrame =
-      df.filter(col(c).isNull || !(col(c) >= lo && col(c) <= hi))
-    // Min/max ranges cannot see a HOLE a previous delete left, so a
-    // repeated delete would re-rewrite the same dirs forever. When
-    // the touched dirs' stats record their exact row counts, one
-    // count of the survivors proves the delete removes nothing —
-    // no-op without a commit. On a DV lake the expected count nets
-    // out the touched files' LIVE vectored positions (footer counts
-    // include them; the survivor read does not).
-    val countsKnown = touched.forall { d =>
-      val stats = statsFor(spark, dir, d, c)
-      dataFiles(spark, dir, d).forall(p => stats.contains(p.getName))
+  /** The one conditional rewrite. Every live row of the tip ([[current]]
+    * of `snap`) that `cond` — pushed filters, conjoined and replayed
+    * exactly ([[GraftLakeDelete.toColumn]]) — makes TRUE is replaced by
+    * the rows `staged` under `dataDir` (none for a delete), in one
+    * version. SQL `DELETE`, `overwrite(cond)`, [[deleteRange]] and
+    * [[replaceWhereIn]] all commit through it:
+    *  1. a condition on no data column (partition columns only, or a
+    *     constant such as the truncate's) drops the entries whose
+    *     partition values make it TRUE whole, by manifest reference,
+    *     with zero data IO ([[GraftLakePartitions.entriesWhere]] over a
+    *     local frame, no Spark job);
+    *  2. any other condition touches the entries [[entriesTouched]]
+    *     cannot clear; their survivors, the rows where it is not TRUE
+    *     (NULL included), are rewritten into `dataDir`
+    *     ([[rewriteEntries]]: partition leaves kept, deletion vectors
+    *     applied), and every other entry carries by reference;
+    *  3. a delete whose touched entries' stats record every file's row
+    *     count first counts their survivors, and removing nothing is a
+    *     no-op: min/max ranges cannot see the hole an earlier delete
+    *     left, so a repeated delete would otherwise rewrite the same
+    *     entries forever. On a DV lake the expected count nets out the
+    *     touched files' live vectored positions;
+    *  4. a tip that would be left empty gets the zero-row schema carrier
+    *     ([[GraftLakePartitions.seedEmpty]]);
+    *  5. the new entries are indexed ([[indexStagedEntries]]) and
+    *     published with one check ([[refuseConflicts]]): a concurrent
+    *     rewrite of a touched entry, an entry appended after this
+    *     snapshot (it may hold rows the condition matches) and, when
+    *     survivors were rewritten on a DV lake, a vector since the scan
+    *     all refuse loudly, for the caller to retry;
+    *  6. a cdf lake persists the netted row changes of a survivor
+    *     rewrite ([[cowChangeRows]]).
+    * On a partitioned lake staged rows must satisfy the condition
+    * (Delta's replaceWhere constraint: rows outside it would duplicate
+    * beside the survivors), checked by entry name for a partition
+    * condition and by one scan of the staged rows otherwise. Returns the
+    * new version, or the tip when nothing changed. */
+  private[engine] def replaceWhere(spark: SparkSession, snap: Snapshot,
+      cond: Seq[org.apache.spark.sql.sources.Filter], staged: Seq[String],
+      dataDir: String): Int = {
+    import org.apache.spark.sql.functions.{lit, not}
+    val cur = current(spark, snap)
+    val (dir, partCols) = (cur.dir, cur.partCols)
+    val schema = schemaOf(spark, cur)
+    val pred = cond.map(f => GraftLakeDelete.toColumn(schema, f).getOrElse(
+        throw new IllegalArgumentException(s"no exact replay of filter $f")))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val whole = GraftLakePartitions.partitionDecidable(cond.toArray, partCols)
+    if (partCols.nonEmpty && staged.nonEmpty) {
+      if (whole) {
+        val (_, outside) =
+          GraftLakePartitions.entriesWhere(spark, staged, partCols, pred)
+        require(outside.isEmpty,
+          "replaceWhere would write rows OUTSIDE the overwrite condition " +
+            s"(partitions ${outside.map(_.dropWhile(_ != '/'))
+              .mkString(", ")}) — they would duplicate beside the " +
+            "surviving partitions; widen the condition or fix the " +
+            "written frame")
+      } else {
+        val bad = GraftLakePartitions.readEntries(spark, dir, staged,
+          partCols).filter(not(pred <=> lit(true))).count()
+        require(bad == 0L,
+          s"replaceWhere would write $bad rows that do NOT satisfy the " +
+            "overwrite condition — they would duplicate beside the " +
+            "surviving rows; widen the condition or fix the written frame")
+      }
     }
-    if (countsKnown) {
-      val touchedRows = touched.map(d =>
-        statsFor(spark, dir, d, c).values.map(_._3).sum).sum
+    val touched =
+      if (whole) GraftLakePartitions.entriesWhere(spark, cur.entries,
+        partCols, pred)._1
+      else entriesTouched(spark, cur, schema, cond)
+    val rewrite = !whole && touched.nonEmpty
+    def keep(df: DataFrame): DataFrame = df.filter(not(pred <=> lit(true)))
+    if (rewrite && staged.isEmpty) {
+      val rows = touched.flatMap { d =>
+        val byFile = statsSidecar(spark, dir, d)._2.values.flatten
+          .map { case (file, s) => file -> s._3 }.toMap
+        dataFiles(spark, dir, d).map(p => byFile.get(p.getName))
+      }
       // exact by protocol: a row-level scan applies every earlier
       // vector and a DELETE's publish subtracts concurrent deletes, so
       // no (entry, file, pos) repeats across sidecars and the ref
       // counts sum to live positions
       val ts = touched.toSet
-      val dvPending =
-        if (!snap.dvEnabled) 0L
-        else dvRefs(spark, dir, tipV).collect {
+      lazy val dvPending =
+        if (!cur.dvEnabled) 0L
+        else dvRefs(spark, dir, cur.version).collect {
           case (k, r) if ts(k.substring(0, k.lastIndexOf('/'))) => r.count
         }.sum
-      if (keep(snapshotAt(spark, snap, Some(touched))).count() ==
-          touchedRows - dvPending)
-        return tipV
+      if (rows.forall(_.nonEmpty) && keep(snapshotAt(spark, cur,
+          Some(touched))).count() == rows.flatten.sum - dvPending)
+        return cur.version
     }
-    val staged = rewriteEntries(spark, snap, touched)(keep)
-    indexStagedEntries(spark, snap.dir, staged.unindexed,
-      snap.dataColumns(schema), snap.bloomCols)
-    val v = publish(spark, dir, rewriteCommit(snap, touched,
-      staged.entries)).get
-    // opt-in row-level CDF: the deleted rows ARE the net diff of
-    // touched-vs-survivors (survivors cancel) — persist them so
-    // feeds deliver O(deleted rows), not the whole touched band
-    if (snap.cdf)
-      writeChangeSidecar(spark, snap, v,
-        cowChangeRows(spark, snap, touched, staged.entries, "DELETE"))
+    val survivors =
+      if (rewrite) rewriteEntries(spark, cur, touched, dataDir)(keep)
+      else Staged(Nil, seeded = false)
+    val added = (staged ++ survivors.entries).distinct
+    if (added.isEmpty && touched.isEmpty) return cur.version
+    indexStagedEntries(spark, dir, (staged ++ survivors.unindexed).distinct,
+      cur.dataColumns(schema), cur.bloomCols)
+    val adds =
+      if (added.nonEmpty || touched.size < cur.entries.size) added
+      else Seq(GraftLakePartitions.seedEmpty(spark, dir, dataDir, schema,
+        partCols, cur.bloomCols))
+    val v = publish(spark, dir, Commit(adds, touched.toSet,
+      check = refuseConflicts(touched.toSet, Some(cur.entries.toSet),
+        Some(cur.version).filter(_ => rewrite && cur.dvEnabled)))).get
+    if (rewrite && cur.cdf)
+      writeChangeSidecar(spark, cur, v, cowChangeRows(spark, cur, touched,
+        adds, if (staged.isEmpty) "DELETE" else "REPLACE"))
     v
   }
 
-  /** Targeted value-set overwrite — Delta's `replaceWhere` for an
-    * integer key: replace every live row with `c ∈ values` by
-    * `replacement`, rewriting ONLY the data dirs that can hold one of
-    * the values ([[entriesTouched]]); every other dir carries forward
-    * BY REFERENCE in the next manifest (the [[deleteRange]] machinery,
-    * generalized from a range predicate to a value set). This is the
-    * write half of incremental backfill: recompute the affected
-    * partitions, swap them in, leave the rest untouched. The
-    * replacement stages like a commit ([[stageForCommit]]) and the
-    * survivors of the touched dirs join it in the same data dir.
-    *
-    * NULL-keyed rows are outside every value set and survive
-    * (three-valued-logic convention shared with [[deleteRange]] /
-    * [[readSkipping]]). Dirs without stats are conservatively touched.
-    * Returns the committed version (the current tip when `values` is
-    * empty and `replacement` must also be empty by contract). */
-  def replaceWhereIn(spark: SparkSession, dir: String, c: String,
-      values: Seq[Long], replacement: DataFrame): Int = {
+  /** Targeted delete (the right-to-be-forgotten shape): [[replaceWhere]]
+    * of every row with `c` in [lo, hi], staging nothing. Only the
+    * entries whose stats intersect the range are rewritten (entries
+    * without stats conservatively), the rest carry by reference, so the
+    * blast radius is the intersecting fraction, not the lake; a range
+    * on a partition column drops whole entries. NULL-keyed rows are
+    * outside every range and survive. Returns the new version, or the
+    * current one when nothing matched. */
+  def deleteRange(spark: SparkSession, dir: String, c: String,
+      lo: Double, hi: Double): Int = {
     import org.apache.spark.sql.{sources => sf}
-    import org.apache.spark.sql.functions.col
-    val snap = resolveTip(spark, dir)
-    if (values.isEmpty) return snap.version
-    require(!snap.partCols.exists(_.name.equalsIgnoreCase(c)),
-      s"replaceWhereIn on partition column '$c' — use SQL INSERT " +
-        "OVERWRITE with a partition predicate (manifest-only swap)")
-    val schema = schemaOf(spark, snap)
-    val touched = entriesTouched(spark, snap, snap.entries, schema,
-      Seq(sf.In(c, values.toArray[Any])))
-    val dataDir = newDataDir()
-    val (replaced, _) = stageForCommit(replacement, snap, dataDir, "snappy")
-    val staged =
-      if (touched.isEmpty) replaced
-      else rewriteEntries(spark, snap, touched, dataDir)(
-        _.filter(col(c).isNull || !col(c).isin(values: _*)))
-    indexStagedEntries(spark, snap.dir, staged.unindexed,
-      snap.dataColumns(schema), snap.bloomCols)
-    publish(spark, dir, rewriteCommit(snap, touched, staged.entries)).get
+    replaceWhere(spark, resolveTip(spark, dir),
+      Seq(sf.GreaterThanOrEqual(c, lo), sf.LessThanOrEqual(c, hi)), Nil,
+      newDataDir())
   }
 
-  /** The commit of [[deleteRange]] and [[replaceWhereIn]]:
-    * `live(tip) \ touched ++ added`, checked — a concurrent rewrite of a
-    * touched dir (another delete, a compaction) is refused loudly, since
-    * its removed rows are baked into these survivors, and on a DV lake
-    * so is a vector landing after the survivor scan at `observed`.
-    * Concurrent APPENDS absorb through the CAS retry (they are not in
-    * `touched`). */
-  private[graft] def rewriteCommit(snap: Snapshot, touched: Seq[String],
-      added: Seq[String]): Commit =
-    Commit(added, touched.toSet, check = refuseConflicts(touched.toSet,
-      noDvSince = if (snap.dvEnabled) Some(snap.version) else None))
+  /** Targeted value-set overwrite — Delta's `replaceWhere` for an
+    * integer key: [[replaceWhere]] of every live row with `c ∈ values`
+    * by `replacement`, staged like a commit ([[stageForCommit]]). Only
+    * the entries that can hold one of the values are rewritten
+    * ([[entriesTouched]]); every other carries by reference. This is
+    * the write half of incremental backfill: recompute the affected
+    * partitions, swap them in, leave the rest untouched. NULL-keyed rows
+    * are outside every value set and survive. Returns the committed
+    * version (the current tip when `values` is empty and `replacement`
+    * must also be empty by contract). */
+  def replaceWhereIn(spark: SparkSession, dir: String, c: String,
+      values: Seq[Long], replacement: DataFrame): Int = {
+    val snap = resolveTip(spark, dir)
+    if (values.isEmpty) return snap.version
+    val dataDir = newDataDir()
+    val (staged, _) = stageForCommit(replacement, snap, dataDir, "snappy")
+    replaceWhere(spark, snap,
+      Seq(org.apache.spark.sql.sources.In(c, values.toArray[Any])),
+      staged.unindexed, dataDir)
+  }
 
   /** Parquet data files the TIP manifest references — the read tax a
     * scan pays per query, and the number maintenance must bound (the

@@ -48,6 +48,26 @@ class CdfSidecarSpec extends AnyFunSuite {
     assert(viaDiff.filter(col("op") === "insert").count() == 0)
   }
 
+  test("replaceWhereIn on a cdf lake persists its netted changes: the " +
+      "feed holds only the replaced keys and is served from the sidecar") {
+    import spark.implicits._
+    val dir = tempDir("cdf-rwi") + "/lake"
+    VersionedLake.commitWithStats(spark.range(0, 100)
+      .selectExpr("id", "id AS v").repartition(2), dir, Seq("id"))
+    VersionedLake.setChangeDataFeed(spark, dir)
+    val v = VersionedLake.replaceWhereIn(spark, dir, "id", Seq(10L, 60L),
+      Seq((10L, -10L), (60L, -60L)).toDF("id", "v"))
+    assert(VersionedLake.changeSidecarPath(spark, dir, v).nonEmpty,
+      "a cdf lake must persist replaceWhereIn's sidecar")
+    val feed = VersionedLake.changes(spark, dir, 1, v)
+    assert(feed.inputFiles.forall(_.contains("/_changes/")),
+      s"the feed must not rescan data dirs: ${feed.inputFiles.mkString(", ")}")
+    // the survivors of the rewritten dirs cancel: only the two keys
+    assert(feed.select("op", "id", "v").as[(String, Long, Long)].collect()
+      .sorted.toSeq == Seq(("delete", 10L, 10L), ("delete", 60L, 60L),
+        ("insert", 10L, -10L), ("insert", 60L, -60L)))
+  }
+
   test("a torn sidecar (no _SUCCESS) is treated as absent — changes() " +
       "falls back to the dir diff instead of reading a partial feed") {
     import spark.implicits._

@@ -9,13 +9,18 @@ import org.apache.hadoop.util.Progressable
 /** The engine's local file system under the `crashfs` scheme, counting
   * every mutating call (create, rename, delete, mkdirs) and failing the
   * k-th one with an IOException once armed — a crash at that step, for
-  * enumerating every step of a commit. The counter is process-wide: one
-  * armed operation at a time. */
+  * enumerating every step of a commit. It can also run a competing
+  * commit just before an operation creates its first manifest
+  * ([[CrashingFileSystem.interleave]]). The counter and the competitor
+  * are process-wide: one armed operation at a time. */
 class CrashingFileSystem extends graft.engine.GraftRawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
 
   private def step(what: String, p: Path): Unit = {
+    if (what == "create" && p.getName.matches("v\\d+") &&
+        p.getParent.getName == "_manifests")
+      Option(CrashingFileSystem.competitor.getAndSet(null)).foreach(_())
     val n = CrashingFileSystem.calls.incrementAndGet()
     if (n == CrashingFileSystem.failAt.get)
       throw new java.io.IOException(s"injected crash at step $n: $what $p")
@@ -55,6 +60,8 @@ class CrashingFileSystem extends graft.engine.GraftRawLocalFileSystem {
 object CrashingFileSystem {
   val calls = new AtomicInteger(0)
   val failAt = new AtomicInteger(0)
+  private val competitor =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
 
   /** Register the scheme on `spark`'s Hadoop configuration. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
@@ -71,5 +78,14 @@ object CrashingFileSystem {
       catch { case scala.util.control.NonFatal(e) => Some(e) }
       finally failAt.set(0)
     (calls.get, err)
+  }
+
+  /** Run `body` with `commit` run once, on the same thread, just before
+    * the first manifest create on a `crashfs` lake: a concurrent commit
+    * landing between `body`'s snapshot and its publish. */
+  def interleave(commit: => Unit)(body: => Unit): Unit = {
+    competitor.set(() => commit)
+    try body
+    finally competitor.set(null)
   }
 }

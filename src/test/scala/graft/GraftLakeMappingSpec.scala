@@ -249,8 +249,9 @@ class GraftLakeMappingSpec extends AnyFunSuite {
       assert(spark.sql(s"SELECT SUM(w) FROM $cat.m WHERE id >= 200")
         .head().getDouble(0) == 603.0,
         "library-committed rows must bind the renamed column by id")
-      // metadata DELETE routes to COW on mapped lakes (no id-less
-      // survivor rewrite) — and stays correct
+      // a metadata DELETE on a mapped lake rewrites its survivors by
+      // field id (the conditional rewrite, as deleteRange above) — and
+      // stays correct
       spark.sql(s"DELETE FROM $cat.m WHERE id >= 90")
       assert(spark.table(s"$cat.m").count() == 88)
       // the deleteRange survivor files predate the rename: their

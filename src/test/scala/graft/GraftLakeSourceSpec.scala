@@ -653,8 +653,8 @@ class GraftLakeSourceSpec extends AnyFunSuite {
     spark.sql("DELETE FROM glake_del.t WHERE id >= 1000")
     assert(VersionedLake.versions(spark, dir) == Seq(1, 2),
       "no-match DELETE published a version")
-    // shapes the metadata path can't express fall back to group-based
-    // copy-on-write (one versioned replace-commit each)
+    // a string condition and an OR of points take the same metadata
+    // commit, rewriting survivors exactly (one version each)
     spark.sql("DELETE FROM glake_del.t WHERE tag = 'a'")
     assert(VersionedLake.versions(spark, dir) == Seq(1, 2, 3))
     assert(spark.sql("SELECT tag FROM glake_del.t ORDER BY tag")

@@ -8,8 +8,9 @@ import graft.engine._
 
 /** Crash points of every library publish policy: a checked survivor
   * rewrite (library `deleteRange`, unpartitioned SQL overwrite-by-
-  * filter, a copy-on-write SQL MERGE on a partitioned lake), a
-  * merge-on-read SQL DELETE on a deletion-vector lake, an absorbed
+  * filter, a SQL DELETE by value, a copy-on-write SQL MERGE on a
+  * partitioned lake), a whole-entry partition DELETE, a merge-on-read
+  * SQL DELETE on a deletion-vector lake, an absorbed
   * append (`commitTagged`) and a layout-only checked commit
   * (`compactSmall`, flat and partitioned) run once per filesystem step
   * k = 1..N of the commit, with the k-th mutating call (create, rename,
@@ -152,6 +153,38 @@ class RewriteCrashSpec extends AnyFunSuite {
       }) { dir =>
       spark.sql(s"DELETE FROM rwcrash_dv.`${dir.split('/').last}` " +
         s"WHERE id IN (${keys.mkString(", ")})")
+      ()
+    }
+    info(s"$n crash points")
+  }
+
+  test("SQL DELETE by value on a plain lake (the one conditional " +
+      "rewrite): a crash at any filesystem step leaves v3 or v4 readable " +
+      "with its rows, and repair plus retry converge") {
+    val root = tempDir("rwcrash-in")
+    spark.conf.set("spark.sql.catalog.rwcrash_in",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.rwcrash_in.root", s"crashfs://$root")
+    val n = enumerate(k => copyOfBase(s"$root/t$k"),
+      before.filterNot { case (i, _) => Set(12L, 14L, 25L)(i) }) { dir =>
+      spark.sql(s"DELETE FROM rwcrash_in.`${dir.split('/').last}` " +
+        "WHERE id IN (12, 14, 25)")
+      ()
+    }
+    info(s"$n crash points")
+  }
+
+  test("partition-value SQL DELETE (whole entries dropped by manifest " +
+      "reference): a crash at any filesystem step leaves v3 or v4 " +
+      "readable with its rows, and repair plus retry converge") {
+    val root = tempDir("rwcrash-pdel")
+    spark.conf.set("spark.sql.catalog.rwcrash_pd",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.rwcrash_pd.root", s"crashfs://$root")
+    val n = enumerate(k => copyOfBase(s"$root/t$k", partitionedBase),
+        before.filter { case (i, _) => i % 2 == 0 }) { dir =>
+      spark.sql(s"DELETE FROM rwcrash_pd.`${dir.split('/').last}` " +
+        "WHERE p = 1")
       ()
     }
     info(s"$n crash points")

@@ -113,6 +113,43 @@ class RewriteParitySpec extends AnyFunSuite {
     }
   }
 
+  test("one conditional rewrite: GraftLakeSource.scala calls none of its " +
+      "pieces, and VersionedLake.replaceWhere alone selects the touched " +
+      "entries") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    // code lines only: scaladoc and comments may name the pieces
+    def code(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
+      .map(_.replaceAll("//.*", ""))
+      .filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*")
+      }
+    val sqlFace = code(root.resolve("graft/engine/GraftLakeSource.scala"))
+    Seq("entriesTouched(", "rewriteEntries(", "deleteRange(",
+        "GraftLakeDelete.translate(").foreach { c =>
+      val hits = sqlFace.filter(_.contains(c))
+      assert(hits.isEmpty, s"GraftLakeSource.scala calls $c\n" +
+        hits.mkString("\n"))
+    }
+    // the callers of entriesTouched, as file:member
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    val callers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        var cur = ""
+        code(p).flatMap { l =>
+          l match { case member(n) => cur = n; case _ => () }
+          if (!l.contains("entriesTouched(") ||
+              l.contains("def entriesTouched(")) None
+          else Some(s"${p.getFileName}:$cur")
+        }
+      }
+    assert(callers.toSet == Set("VersionedLake.scala:replaceWhere"),
+      callers)
+  }
+
   test("decimal columns: no stats line is written for them and lines " +
       "existing sidecars hold are ignored — statsAggregate and a DV " +
       "DELETE by value are exact") {

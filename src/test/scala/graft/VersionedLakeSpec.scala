@@ -306,28 +306,55 @@ class VersionedLakeSpec extends AnyFunSuite {
       "rows: a touched dir rewritten between scan and publish fails " +
       "the publish loudly") {
     import spark.implicits._
-    val dir = tempDir("vlake-del-race") + "/lake"
+    CrashingFileSystem.install(spark)
+    val dir = "crashfs://" + tempDir("vlake-del-race") + "/lake"
     VersionedLake.commitWithStats(
       spark.range(0, 100).toDF("id"), dir, Seq("id"))
     // delete A removes [10, 19]; before it can publish, delete B (a
     // full-speed competitor) removes [50, 59] — rewriting the SAME dir
     // A scanned. A's survivor set still contains 50..59: publishing it
-    // would resurrect B's deletion. Simulate the interleave by running
-    // B inside A's window: scan A's inputs first, then B commits.
-    val touched = VersionedLake.manifestEntries(spark, dir, 1)
-    val survivorsOfA = VersionedLake.readLatest(spark, dir)
-      .filter(!(col("id") >= 10 && col("id") <= 19))
-    survivorsOfA.write.parquet(s"$dir/d-race-a")
-    VersionedLake.deleteRange(spark, dir, "id", 50, 59) // B wins
+    // would resurrect B's deletion. B runs inside A's window, just
+    // before A creates its manifest.
     val e = intercept[java.util.ConcurrentModificationException](
-      // A's publish attempt with its stale touched set
-      VersionedLake.publish(spark, dir, VersionedLake.rewriteCommit(
-        VersionedLake.resolve(spark, dir, 1), touched, Seq("d-race-a"))))
+      CrashingFileSystem.interleave(
+        VersionedLake.deleteRange(spark, dir, "id", 50, 59))( // B wins
+        VersionedLake.deleteRange(spark, dir, "id", 10, 19)))
     assert(e.getMessage.contains("copy-on-write conflict"), e.getMessage)
     // B's delete survives; A's rows are NOT resurrected
     val ids0 = VersionedLake.readLatest(spark, dir)
       .select("id").as[Long].collect().sorted.toSeq
     assert(ids0 == ((0L until 50L) ++ (60L until 100L)))
+  }
+
+  test("a conditional rewrite refuses an append landing between its " +
+      "snapshot and its publish: library deleteRange and SQL DELETE IN") {
+    import spark.implicits._
+    CrashingFileSystem.install(spark)
+    val root = "crashfs://" + tempDir("vlake-del-append")
+    spark.conf.set("spark.sql.catalog.vlake_race",
+      classOf[GraftLakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.vlake_race.root", root)
+    Seq("lib", "sql").foreach { t =>
+      val dir = s"$root/$t"
+      VersionedLake.commitWithStats(
+        spark.range(0, 100).toDF("id"), dir, Seq("id"))
+      // the append may hold rows the condition matches (id 15 here)
+      val append = spark.range(10, 20).toDF("id").coalesce(1)
+      val e = intercept[java.util.ConcurrentModificationException](
+        CrashingFileSystem.interleave(
+          VersionedLake.commitWithStats(append, dir, Seq("id"))) {
+          if (t == "lib") VersionedLake.deleteRange(spark, dir, "id", 15, 15)
+          else spark.sql(s"DELETE FROM vlake_race.`$t` WHERE id IN (15, 99)")
+          ()
+        })
+      assert(e.getMessage.contains("appended by a concurrent commit"),
+        s"$t: ${e.getMessage}")
+      // the append published; the refused delete did not
+      assert(VersionedLake.tip(spark, dir).contains(2), t)
+      val ids = VersionedLake.readLatest(spark, dir)
+        .select("id").as[Long].collect().sorted.toSeq
+      assert(ids == ((0L until 100L) ++ (10L until 20L)).sorted, t)
+    }
   }
 
   test("one publish protocol: main code holds exactly one manifest CAS " +
